@@ -131,16 +131,9 @@ def xyz_to_child_index(xyz: np.ndarray, center: np.ndarray) -> np.ndarray:
     return np.sum(np.left_shift(test, np.array([2, 1, 0], dtype=np.int8)), axis=1)
 
 
-def child_index_for_node(xyz: np.ndarray, frame) -> np.ndarray:
+def child_index_for_node(xyz: np.ndarray, frame: NodeFrame) -> np.ndarray:
     """Child code with the quadtree z-trick (node.py:123-131): in quadtree
-    mode the comparison z is the aabb top so the z bit is always 0.
-    `frame` is a NodeFrame (or a legacy (2,3) aabb array)."""
-    if not isinstance(frame, NodeFrame):
-        aabb64 = np.asarray(frame, dtype=np.float64)
-        frame = NodeFrame(aabb=aabb64.astype(np.float32),
-                          center=((aabb64[0] + aabb64[1]) * 0.5).astype(np.float32),
-                          size=(aabb64[1] - aabb64[0]).astype(np.float32),
-                          spacing=0.0)
+    mode the comparison z is the aabb top so the z bit is always 0."""
     center = frame.center
     if subdivision_type(frame.size) == QUADTREE:
         center = np.array([center[0], center[1], frame.aabb[1][2]],
@@ -166,15 +159,10 @@ def xyz_to_key(xyz: np.ndarray, cell_count: np.ndarray, aabb_min: np.ndarray,
     return np.sum(a, axis=1).astype(np.int32)
 
 
-def cell_keys_for_node(xyz: np.ndarray, frame,
+def cell_keys_for_node(xyz: np.ndarray, frame: NodeFrame,
                        cell_count: int = GRID_INITIAL_CELL_COUNT) -> np.ndarray:
     """Grid cell keys for points inside a node (reference Grid constants:
     aabb_min f32, inv_aabb_size = 1/f32 size, points_grid.py:45-63)."""
-    if not isinstance(frame, NodeFrame):
-        aabb64 = np.asarray(frame, dtype=np.float64)
-        frame = NodeFrame(aabb=aabb64.astype(np.float32), center=None,
-                          size=(aabb64[1] - aabb64[0]).astype(np.float32),
-                          spacing=0.0)
     inv = np.float32(1.0) / frame.size
     counts = np.array([cell_count] * 3, dtype=np.int32)
     shift = int(cell_count - 1).bit_length()

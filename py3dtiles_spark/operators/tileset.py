@@ -12,18 +12,16 @@ Reference behavior being re-expressed (not ported):
 - subtrees whose JSON exceeds 100 000 chars spill to tileset.<name>.json
   and are referenced via content.uri (node.py:282-296)
 
-At sandbox scale the tiles table is tiny and `build_tileset_json`
-(driver-side, the same call the reference makes, convert.py:656) is the
-right physical plan. At 10^12 points the tiles table is ~5x10^7 rows
-(points / 20k split threshold) and a driver collect + single-threaded
-JSON build becomes the bottleneck — `build_tileset_json_distributed`
-is the scale path: the SAME recursion, partitioned at a fixed subtree
-depth k. Executors build each depth-k subtree's JSON (including the
->100KB spill rule) via applyInPandas; the driver composes only depths
-0..k-1 from the returned subtree stubs. Driver traffic is bounded by
-8^k stubs, each spill-bounded (~100KB), instead of the full tiles
-table; output is byte-identical to the driver-side build (pinned by
-tests/test_tileset.py::test_distributed_tileset_byte_identical).
+`build_tileset_json_distributed` is the emission path: the BVH recursion
+partitioned at a fixed subtree depth k. Executors build each depth-k
+subtree's JSON (including the >100KB spill rule) via applyInPandas; the
+driver composes only depths 0..k-1 from the returned subtree stubs.
+Driver traffic is bounded by 8^k stubs, each spill-bounded (~100KB),
+instead of the full tiles table (~5x10^7 rows at 10^12 points).
+`build_tileset_json` is the same recursion over a collected tiles table,
+single-threaded on the driver; it is the byte-identity oracle for the
+distributed build (tests/test_tileset.py::
+test_distributed_tileset_byte_identical), not a plan to run at scale.
 """
 
 from __future__ import annotations
@@ -159,7 +157,8 @@ def build_tileset_json(tiles_rows, root_aabb: np.ndarray, root_spacing: float,
                        spill_chars: Optional[int] = TILESET_JSON_SPILL_CHARS,
                        content_uri=lambda tid: f"r{tid}.pnts",
                        transform: Optional[list] = None) -> dict:
-    """Driver-side BVH assembly from collected tiles rows.
+    """Driver-side BVH assembly from collected tiles rows — the
+    byte-identity oracle for build_tileset_json_distributed.
 
     tiles_rows: iterable of Rows/dicts with tile_id, point_count,
     min_x..max_z. Returns {"tileset.json": <dict>, "tileset.<name>.json":
@@ -169,8 +168,8 @@ def build_tileset_json(tiles_rows, root_aabb: np.ndarray, root_spacing: float,
     (T(offset) . S(1/scale) . R^-1, reference convert.py:36-41,71) — build
     with functions.crs.tileset_transform.
 
-    At tile counts where collecting the tiles table to the driver is
-    itself a problem (10^7+ tiles), use build_tileset_json_distributed.
+    Production paths call build_tileset_json_distributed, which never
+    collects the tiles table; this form exists to pin its output.
     """
     info = {}
     for r in tiles_rows:
@@ -360,23 +359,3 @@ def root_overview(points_with_tiles: DataFrame, root_aabb, root_spacing,
     depth1 = points_with_tiles.filter(F.length("tile_id") == 1)
     return (depth1.withColumn("_ck", key)
             .groupBy("_ck").applyInPandas(accept_cell, schema=schema))
-
-
-def tileset_from_tiling(points_with_tiles: DataFrame, root_aabb, root_spacing,
-                        scale: float = 1.0, rollup: bool = True,
-                        distributed: bool = True):
-    """Convenience: assignments+xyz -> (tiles_df_after_rollup, tileset docs).
-
-    distributed=True (default) assembles subtree JSON executor-side —
-    identical bytes, and the driver never holds the tiles table."""
-    assignments = points_with_tiles
-    if rollup:
-        assignments = rollup_small_children(assignments)
-    tiles = build_tiles_df(assignments)
-    if distributed:
-        docs = build_tileset_json_distributed(tiles, root_aabb,
-                                              root_spacing, scale)
-    else:
-        docs = build_tileset_json(tiles.collect(), root_aabb, root_spacing,
-                                  scale)
-    return tiles, docs

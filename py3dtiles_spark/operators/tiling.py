@@ -8,29 +8,31 @@ build is a level-synchronous iteration (SURVEY.md §3.1 "Spark shape").
 Per level, exactly TWO jobs:
 
   1. routing: groupBy(tile_id).agg(count, bbox) — one row per live node,
-     fetched through a BOUNDED limit probe (r5): levels under
-     node_broadcast_rows route driver-side over O(cap) rows (pure-JVM
-     probe job, LocalRelation broadcast — the fast common case); over-cap
-     levels run the SAME rule as a distributed DataFrame plan
-     (_node_meta_df: native when() + an Arrow kernel for big-node rows)
-     and the driver sees just the <=4-row per-mode histogram. Modes:
-       leaf   count < 20000 or spacing floor  -> accept all (node.py:70-73)
-       local  count <= in_kernel_threshold    -> one task recurses the WHOLE
-              subtree (the reference's depth-limited pipelining,
-              node_process.py:82-90, taken to its limit: zero further
-              shuffles for that subtree)
-       cell   huge node -> fan out by LOD-grid cell: the acceptance test is
-              per-cell independent (points_grid.py:22-31 scans only the
-              same cell), so a hot node runs as 27+ parallel tasks instead
-              of serializing on one worker — the skew answer for megacity
-              cells at 10^12 docs.
-     and, for cell nodes, derives the float32 grid constants from the tile
-     name (stateless, points/utils.py:83-88).
+     fetched through a BOUNDED limit probe (r5). One vectorized function,
+     _route_nodes, maps those node aggregates to a mode per node, and for
+     cell nodes to the float32 grid constants derived from the tile name
+     (stateless, points/utils.py:83-88). Levels under node_broadcast_rows
+     call it driver-side on the probe rows (pure-JVM probe job,
+     LocalRelation broadcast — the fast common case); over-cap levels call
+     it on the executors through mapInPandas and the driver sees just the
+     <=4-row per-mode histogram. Modes:
+       leaf    count < 20000 or spacing floor -> accept all (node.py:70-73)
+       express big node whose bbox sits in ONE child octant (megacity
+               cluster) -> accept and descend in-task while it stays there
+       local   count <= local cutoff -> one task recurses the WHOLE
+               subtree (the reference's depth-limited pipelining,
+               node_process.py:82-90, taken to its limit: zero further
+               shuffles for that subtree)
+       cell    huge node -> fan out by LOD-grid cell: the acceptance test is
+               per-cell independent (points_grid.py:22-31 scans only the
+               same cell), so a hot node runs as 27+ parallel tasks instead
+               of serializing on one worker — the skew answer for megacity
+               cells at 10^12 docs.
 
   2. kernel: ONE shuffle on (tile_id, group_key) — group_key is the grid
      cell for 'cell' nodes (computed NATIVELY in float32 column arithmetic,
      bit-identical to the numpy kernel; no Python pre-pass) and 0 otherwise
-     — into ONE applyInPandas kernel handling all three modes, written ONCE
+     — into ONE applyInPandas kernel handling all four modes, written ONCE
      to parquet. That parquet is the per-level checkpoint: resumable,
      lineage-truncating; accepted rows and next-level forwards are both
      filters over it (no extra writes).
@@ -58,6 +60,7 @@ import os
 import shutil
 import tempfile
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -81,10 +84,10 @@ PENDING_SCHEMA = "point_id long, x float, y float, z float, tile_id string"
 KERNEL_SCHEMA = PENDING_SCHEMA + ", accepted boolean"
 ASSIGN_SCHEMA = "point_id long, tile_id string"
 
-# node_meta columns (produced by _node_meta_df): mn* grid aabb_min
-# (float32, reference Grid constant); s* cell_count * inv_aabb_size —
-# DOUBLE because the reference numba kernel promotes int32 * float32 to
-# float64 (distance.py:24-27)
+# node_meta as joined to pending (_route_nodes output minus cnt): mn* grid
+# aabb_min (float32, reference Grid constant); s* cell_count *
+# inv_aabb_size — DOUBLE because the reference numba kernel promotes
+# int32 * float32 to float64 (distance.py:24-27); zeros unless mode=cell
 _NODE_META_SCHEMA = ("tile_id string, mode string, "
                      "mnx float, mny float, mnz float, "
                      "sx double, sy double, sz double")
@@ -102,16 +105,15 @@ class TilingConfig:
     # instead of paying shuffle+Arrow plumbing for every remaining level.
     # The effective local cutoff is
     #   max(in_kernel_threshold,
-    #       min(local_hard_cap, level_points / (local_parallelism_factor *
-    #                                           defaultParallelism)))
-    # factor 1 (one local task's rows ~= one core's fair share) measured
-    # strictly better than 2 at 1.6M docs/skew: level count 5 -> 2 (megacity
-    # nodes resolve their whole chain in-task via express descent instead of
-    # shuffling every level) and 8-core wall time -23%. The hard cap bounds
-    # any single local task (a megacity node as one task = a multi-second
-    # straggler that caps scaling); nodes above it fan out per cell.
+    #       min(local_hard_cap, level_points / defaultParallelism))
+    # i.e. one local task's rows ~= one core's fair share, which measured
+    # strictly better than half of it at 1.6M docs/skew: level count 5 -> 2
+    # (megacity nodes resolve their whole chain in-task via express descent
+    # instead of shuffling every level) and 8-core wall time -23%. The hard
+    # cap bounds any single local task (a megacity node as one task = a
+    # multi-second straggler that caps scaling); nodes above it fan out per
+    # cell.
     local_hard_cap: int = 300_000
-    local_parallelism_factor: int = 1
     # parallelism used for the local-cutoff rule. None = the session's
     # defaultParallelism; set a fixed value to make the level plan
     # independent of the core count (identical plans across cluster sizes,
@@ -274,92 +276,49 @@ def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
     return kernel
 
 
-def _node_meta_rows(counts_rows, cfg: TilingConfig, root_aabb, root_spacing,
-                    local_cutoff: int):
-    """Driver-side routing for a BOUNDED node list (<= node_broadcast_rows,
-    fetched via the limit probe): per live node -> mode + grid constants
-    for cell nodes (aabb_min float32, scale = cell_count * inv_aabb_size
-    float64 — the reference kernel's exact promotion). Pure-JVM probe job
-    + O(cap) python beats the distributed plan's extra Arrow-UDF job by
-    ~35% flagship wall at sandbox scale (r5 A/B); _node_meta_df is the
-    SAME rule as a DataFrame plan for over-cap levels. Keep the two in
-    lockstep (the over-cap golden test pins their agreement)."""
-    spacing_floor = MIN_SPACING * cfg.scale
-    rows = []
-    for r in counts_rows:
-        tid, cnt = r["tile_id"], r["cnt"]
-        spacing = root_spacing * (0.5 ** len(tid))
-        if cnt < cfg.split_threshold or spacing <= spacing_floor:
-            rows.append((tid, "leaf", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-            continue
-        if cnt > cfg.in_kernel_threshold:
-            # clustered-node check: a node whose whole bbox maps into ONE
-            # child octant (megacity cluster) runs 'express' — accept AND
-            # descend in-task, one shuffle round for the entire hot chain
-            frame = node_frame(tid, root_aabb, root_spacing)
-            corners = np.array([[r["bx0"], r["by0"], r["bz0"]],
-                                [r["bx1"], r["by1"], r["bz1"]]],
-                               dtype=np.float32)
-            cd = child_index_for_node(corners, frame)
-            if cd[0] == cd[1]:
-                rows.append((tid, "express", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-                continue
-        if cnt <= local_cutoff:
-            rows.append((tid, "local", 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-        else:
-            frame = node_frame(tid, root_aabb, root_spacing)
-            inv = np.float32(1.0) / frame.size          # f32 (node.py:30)
-            scale = (np.array([cfg.cell_count] * 3, dtype=np.int32)
-                     * inv)                             # int32*f32 -> f64
-            rows.append((tid, "cell",
-                         float(frame.aabb[0][0]), float(frame.aabb[0][1]),
-                         float(frame.aabb[0][2]),
-                         float(scale[0]), float(scale[1]), float(scale[2])))
-    return rows
+def _route_nodes(pdf: pd.DataFrame, cfg: TilingConfig, root_aabb,
+                 root_spacing, local_cutoff: int) -> pd.DataFrame:
+    """The per-level routing rule: node aggregates (tile_id, cnt,
+    bx0..bz1) -> (tile_id, mode, mnx, mny, mnz, sx, sy, sz, cnt).
 
+      leaf     cnt < split_threshold or spacing <= floor -> accept all
+               (reference node.py:70-73)
+      express  big node (cnt > in_kernel_threshold) whose bbox sits in ONE
+               child octant (megacity cluster): accept AND descend in-task
+      local    cnt <= local_cutoff -> whole subtree in one task
+      cell     fan out per LOD-grid cell
 
-def _node_geom_udf(cfg: TilingConfig, root_aabb, root_spacing):
-    """Arrow-batched per-node geometry for the big-node rows only
-    (`need`=true, i.e. non-leaf with cnt > in_kernel_threshold): the
-    express single-child corner test plus the cell-grid constants
-    (aabb_min float32, scale = cell_count * inv_aabb_size float64 — the
-    reference kernel's exact promotion, node.py:30 / distance.py:24-27).
-    Node-count sized, never point-count sized."""
-    cell_count = cfg.cell_count
-    ra = np.asarray(root_aabb, dtype=np.float64)
-    rs = float(root_spacing)
-
-    @F.pandas_udf("express boolean, mnx float, mny float, mnz float, "
-                  "sx double, sy double, sz double")
-    def geom(tile_id: pd.Series, need: pd.Series,
-             bx0: pd.Series, by0: pd.Series, bz0: pd.Series,
-             bx1: pd.Series, by1: pd.Series,
-             bz1: pd.Series) -> pd.DataFrame:
-        n = len(tile_id)
-        out = {"express": np.zeros(n, dtype=bool),
-               "mnx": np.zeros(n, np.float32),
-               "mny": np.zeros(n, np.float32),
-               "mnz": np.zeros(n, np.float32),
-               "sx": np.zeros(n, np.float64),
-               "sy": np.zeros(n, np.float64),
-               "sz": np.zeros(n, np.float64)}
-        for i in np.flatnonzero(need.to_numpy()):
-            frame = node_frame(tile_id.iat[i], ra, rs)
-            corners = np.array([[bx0.iat[i], by0.iat[i], bz0.iat[i]],
-                                [bx1.iat[i], by1.iat[i], bz1.iat[i]]],
-                               dtype=np.float32)
-            cd = child_index_for_node(corners, frame)
-            if cd[0] == cd[1]:
-                out["express"][i] = True
-                continue
-            inv = np.float32(1.0) / frame.size          # f32 (node.py:30)
-            scale = (np.array([cell_count] * 3, dtype=np.int32)
-                     * inv)                             # int32*f32 -> f64
-            out["mnx"][i], out["mny"][i], out["mnz"][i] = frame.aabb[0]
-            out["sx"][i], out["sy"][i], out["sz"][i] = scale
-        return pd.DataFrame(out)
-
-    return geom
+    Cell nodes carry the reference Grid constants: mn* = aabb_min float32,
+    s* = cell_count * inv_aabb_size, int32 * float32 -> float64
+    (node.py:30, distance.py:24-27); other modes carry zeros. The leaf test
+    and mode choice are numpy over the whole batch; the name-fold geometry
+    runs only on the big-node rows. Node-count sized, never point-count."""
+    tids = pdf["tile_id"].to_numpy()
+    cnt = pdf["cnt"].to_numpy(dtype=np.int64)
+    n = len(pdf)
+    spacing = root_spacing * np.power(0.5, pdf["tile_id"].str.len()
+                                      .to_numpy(dtype=np.int64))
+    leaf = (cnt < cfg.split_threshold) | (spacing <= MIN_SPACING * cfg.scale)
+    express = np.zeros(n, dtype=bool)
+    mn = np.zeros((n, 3), dtype=np.float32)
+    sc = np.zeros((n, 3), dtype=np.float64)
+    bbox = pdf[["bx0", "by0", "bz0", "bx1", "by1", "bz1"]].to_numpy(
+        dtype=np.float32)
+    cells = np.full(3, cfg.cell_count, dtype=np.int32)
+    for i in np.flatnonzero(~leaf & (cnt > cfg.in_kernel_threshold)):
+        frame = node_frame(tids[i], root_aabb, root_spacing)
+        cd = child_index_for_node(bbox[i].reshape(2, 3), frame)
+        if cd[0] == cd[1]:
+            express[i] = True
+        elif cnt[i] > local_cutoff:
+            mn[i] = frame.aabb[0]
+            sc[i] = cells * (np.float32(1.0) / frame.size)
+    mode = np.select([leaf, express, cnt <= local_cutoff],
+                     ["leaf", "express", "local"], "cell")
+    return pd.DataFrame({
+        "tile_id": tids, "mode": mode,
+        "mnx": mn[:, 0], "mny": mn[:, 1], "mnz": mn[:, 2],
+        "sx": sc[:, 0], "sy": sc[:, 1], "sz": sc[:, 2], "cnt": cnt})
 
 
 def _local_cutoff(cfg: TilingConfig, est_total: Optional[int],
@@ -376,58 +335,8 @@ def _local_cutoff(cfg: TilingConfig, est_total: Optional[int],
     cutoff, so plans are bit-identical to the exact-total rule there."""
     if est_total is None:
         return cfg.in_kernel_threshold
-    den = max(1, cfg.local_parallelism_factor * parallelism)
     return max(cfg.in_kernel_threshold,
-               min(cfg.local_hard_cap, est_total // den))
-
-
-def _node_meta_df(counts: DataFrame, cfg: TilingConfig, root_aabb,
-                  root_spacing, local_cutoff: int) -> DataFrame:
-    """Distributed node routing: per live node -> mode (+ grid constants
-    for cell nodes). The r1-r4 engine collected the per-level node list to
-    the driver and rebuilt it row-by-row — fine at sandbox scale but the
-    reference master's State dict reborn: at 10^12 points a level can hold
-    ~5x10^7 live nodes. Here the routing is a DataFrame plan over the
-    (tile_id, cnt, bbox) aggregate:
-
-      leaf / local / cell         native when() over cnt + name-derived
-                                  spacing (pow(0.5, length(tile_id)))
-      express corner test +       Arrow kernel over ONLY the big-node rows
-      cell grid constants         (_node_geom_udf)
-
-    build_tiling fetches the result through a BOUNDED limit probe
-    (node_broadcast_rows); an over-cap level never reaches the driver.
-
-    Mode rule (identical to r4, reference node.py:70-73 +
-    node_process.py:82-90 generalized):
-      leaf     cnt < split_threshold or spacing <= floor -> accept all
-      express  big node whose bbox sits in ONE child octant
-      local    cnt <= local_cutoff -> whole subtree in one task
-      cell     fan out per LOD-grid cell
-    """
-    spacing_floor = float(MIN_SPACING * cfg.scale)
-    c = counts
-    spacing = (F.lit(float(root_spacing))
-               * F.pow(F.lit(0.5), F.length("tile_id")))
-    is_leaf = ((F.col("cnt") < int(cfg.split_threshold))
-               | (spacing <= F.lit(spacing_floor)))
-    need_geom = (~is_leaf) & (F.col("cnt") > int(cfg.in_kernel_threshold))
-
-    geom = _node_geom_udf(cfg, root_aabb, root_spacing)
-    c = c.withColumn("g", geom(
-        F.col("tile_id"), need_geom,
-        F.col("bx0"), F.col("by0"), F.col("bz0"),
-        F.col("bx1"), F.col("by1"), F.col("bz1")))
-    mode = (F.when(is_leaf, F.lit("leaf"))
-            .when(need_geom & F.col("g.express"), F.lit("express"))
-            .when(F.col("cnt") <= F.lit(int(local_cutoff)), F.lit("local"))
-            .otherwise(F.lit("cell")))
-    return c.select(
-        "tile_id", mode.alias("mode"), "cnt",
-        F.col("g.mnx").alias("mnx"), F.col("g.mny").alias("mny"),
-        F.col("g.mnz").alias("mnz"),
-        F.col("g.sx").alias("sx"), F.col("g.sy").alias("sy"),
-        F.col("g.sz").alias("sz"))
+               min(cfg.local_hard_cap, est_total // max(1, parallelism)))
 
 
 def _root_route_expr(root_aabb, root_spacing):
@@ -601,39 +510,42 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                            or spark.sparkContext.defaultParallelism)
             # BOUNDED probe: a level with <= node_broadcast_rows live nodes
             # (every sandbox level; most real levels) comes back whole from
-            # the ONE pure-JVM routing job — modes computed driver-side over
-            # the O(cap) rows (exact level_total, r4-identical plans), node
-            # list re-shipped as a LocalRelation broadcast (no broadcast-
-            # exchange job, no Arrow stage). Over-cap levels never reach the
-            # driver: _node_meta_df runs the SAME rule as a distributed plan,
-            # only the per-mode histogram is collected, and node_meta joins
-            # to pending by shuffle (a GB-sized node list has no business
-            # being broadcast anyway).
+            # the ONE pure-JVM routing job — _route_nodes runs driver-side
+            # over the O(cap) rows (exact level_total, r4-identical plans),
+            # node list re-shipped as a LocalRelation broadcast (no
+            # broadcast-exchange job, no Arrow stage). Over-cap levels never
+            # reach the driver: _route_nodes runs on the executors through
+            # mapInPandas, only the per-mode histogram is collected, and
+            # node_meta joins to pending by shuffle (a GB-sized node list
+            # has no business being broadcast anyway).
             cap = int(cfg.node_broadcast_rows)
             node_meta_full = None
-            # persisted so the over-cap path's _node_meta_df
-            # materialization reads the cached node rows instead of
-            # re-running the full groupBy over every pending point (the
-            # level's priciest pass); dropped right after the probe on
-            # the common path
+            # persisted so the over-cap path's routing pass reads the
+            # cached node rows instead of re-running the full groupBy over
+            # every pending point (the level's priciest pass); dropped
+            # right after the probe on the common path
             counts = counts.persist()
             probe = counts.limit(cap + 1).collect()
             broadcast_path = len(probe) <= cap
             if broadcast_path:
                 counts.unpersist()
                 n_in = int(sum(r["cnt"] for r in probe))
-                cutoff = _local_cutoff(cfg, n_in if n_in else None, parallelism)
-                meta_rows = (_node_meta_rows(probe, cfg, root_aabb,
-                                             root_spacing, cutoff)
-                             if n_in else [])
-                modes = {}
-                for _, mode, *_ in meta_rows:
-                    modes[mode] = modes.get(mode, 0) + 1
-                n_nodes = len(meta_rows)
+                cutoff = _local_cutoff(cfg, n_in or None, parallelism)
+                routed = _route_nodes(
+                    pd.DataFrame(probe, columns=counts.columns), cfg,
+                    root_aabb, root_spacing, cutoff)
+                modes = dict(Counter(routed["mode"]))
+                n_nodes = len(routed)
             else:
                 cutoff = _local_cutoff(cfg, est_total, parallelism)
-                node_meta_full = _node_meta_df(counts, cfg, root_aabb,
-                                               root_spacing, cutoff).persist()
+
+                def route(batches, cutoff=cutoff):
+                    for pdf in batches:
+                        yield _route_nodes(pdf, cfg, root_aabb,
+                                           root_spacing, cutoff)
+
+                node_meta_full = counts.mapInPandas(
+                    route, _NODE_META_SCHEMA + ", cnt long").persist()
                 stats_rows = (node_meta_full.groupBy("mode")
                               .agg(F.count("*").alias("nodes"),
                                    F.sum("cnt").alias("pts")).collect())
@@ -651,7 +563,10 @@ def build_tiling(spark: SparkSession, points: DataFrame,
 
             t0 = time.time()
             if broadcast_path:
-                node_meta = spark.createDataFrame(meta_rows, _NODE_META_SCHEMA)
+                node_meta = spark.createDataFrame(
+                    list(routed.drop(columns="cnt")
+                         .itertuples(index=False, name=None)),
+                    _NODE_META_SCHEMA)
                 tagged = pending.join(F.broadcast(node_meta), "tile_id")
             else:
                 tagged = pending.join(node_meta_full.drop("cnt"), "tile_id")
@@ -745,15 +660,11 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         # stale dirs from other runs can never leak in, no multi-root
         # partition discovery, and the pending halves of every level are
         # never even listed — the union reads exactly the finalized rows.
-        # Levels resumed from a pre-r4 FLAT checkpoint read the old way.
         parts = []
         for s in counters["levels"]:
-            out = os.path.join(ckpt, f"level={s['level']}", "out")
-            if _is_legacy_level_dir(out):
-                parts.append(spark.read.schema(KERNEL_SCHEMA).parquet(out)
-                             .filter("accepted")
-                             .select("point_id", "tile_id"))
-            elif os.path.isdir(p := os.path.join(out, "accepted=true")):
+            p = os.path.join(ckpt, f"level={s['level']}", "out",
+                             "accepted=true")
+            if os.path.isdir(p):
                 parts.append(spark.read.schema(PENDING_SCHEMA).parquet(p)
                              .select("point_id", "tile_id"))
         if parts:
@@ -775,24 +686,11 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                         checkpoint_dir=ckpt)
 
 
-def _is_legacy_level_dir(out_dir: str) -> bool:
-    """True when `out_dir` is a pre-r4 FLAT checkpoint (parquet files with
-    an `accepted` column, no hive accepted=*/ subdirs). Distinguishing it
-    from 'partitioned but fully-accepted' matters: treating a legacy dir
-    as 'no pending' would silently drop every prior level on resume."""
-    if (os.path.isdir(os.path.join(out_dir, "accepted=false"))
-            or os.path.isdir(os.path.join(out_dir, "accepted=true"))):
-        return False
-    return any(f.endswith(".parquet")
-               for f in os.listdir(out_dir)) if os.path.isdir(out_dir) else False
-
-
 def _read_pending(spark, out_dir: str) -> DataFrame:
-    """Pending rows of a level checkpoint. Hive layout (r4+): target the
-    accepted=false subdir directly — the finalized rows are never listed,
-    let alone scanned; a level where everything finalized has no such dir
-    (empty frame; the loop's next count pass then completes). Legacy flat
-    layout (resuming a pre-r4 checkpoint): full read + filter."""
+    """Pending rows of a level checkpoint: target the hive accepted=false
+    subdir directly — the finalized rows are never listed, let alone
+    scanned; a level where everything finalized has no such dir (empty
+    frame; the loop's next count pass then completes)."""
     if not os.path.isdir(out_dir):
         # a fully-accepted level HAS an out dir (with only accepted=true);
         # a missing dir means the checkpoint was never written — resuming
@@ -801,9 +699,6 @@ def _read_pending(spark, out_dir: str) -> DataFrame:
         raise FileNotFoundError(
             f"level checkpoint {out_dir} does not exist — wrong "
             "start_level / checkpoint_dir?")
-    if _is_legacy_level_dir(out_dir):
-        return (spark.read.schema(KERNEL_SCHEMA).parquet(out_dir)
-                .filter("NOT accepted").drop("accepted"))
     p = os.path.join(out_dir, "accepted=false")
     if not os.path.isdir(p):
         return spark.createDataFrame([], PENDING_SCHEMA)

@@ -16,6 +16,8 @@ import subprocess
 import sys
 import tempfile
 
+from scaling_gate import child_result
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
@@ -56,8 +58,8 @@ def run(cpus: int, n: int) -> dict:
         f.write(CHILD.replace("@@REPO@@", REPO))
         path = f.name
     out = subprocess.run([sys.executable, path, str(cpus), str(n)],
-                         capture_output=True, text=True, check=True)
-    return json.loads(out.stdout.strip().splitlines()[-1])
+                         capture_output=True, text=True)
+    return child_result(out)
 
 
 if __name__ == "__main__":

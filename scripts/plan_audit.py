@@ -301,11 +301,10 @@ def main():
     # must never collect the tiles table on the production paths. In
     # operators/tileset.py the only allowed collects are the distributed
     # assembly's two bounded ones — the <=8^k subtree-stub rows from the
-    # applyInPandas kernel and the <= sum(8^j, j<k) shallow tiles — plus
-    # the explicit small-scale fallback inside tileset_from_tiling
-    # (distributed=False branch). Every production call site (bench, CLI,
-    # plans/convert, plans/pipeline) must route through the distributed
-    # builder, i.e. contain no tiles.collect().
+    # applyInPandas kernel and the <= sum(8^j, j<k) shallow tiles. Every
+    # production call site (bench, CLI, plans/convert, plans/pipeline) must
+    # route through the distributed builder, i.e. contain no
+    # tiles.collect().
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     lines.append("## tileset_emit — bounded driver traffic")
     ts_path = os.path.join(repo, "py3dtiles_spark", "operators",
@@ -313,21 +312,14 @@ def main():
     with open(ts_path) as f:
         ts_src = f.read()
     tree = ast.parse(ts_src)
-    fn_ranges = [(n.name, n.lineno, max(getattr(n, "end_lineno", n.lineno),
-                                        n.lineno))
-                 for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
     ts_allowed, ts_bad = 0, []
     for node in ast.walk(tree):
         if (isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
                 and node.func.attr == "collect"):
             stmt = ast.get_source_segment(ts_src, node) or ""
-            enclosing = [nm for nm, a, b in fn_ranges
-                         if a <= node.lineno <= b]
             ok = (".applyInPandas(" in stmt                 # 8^k stubs
-                  or 'F.length("tile_id") < k' in stmt      # shallow tiles
-                  # documented small-scale fallback, off the scale path
-                  or "tileset_from_tiling" in enclosing)
+                  or 'F.length("tile_id") < k' in stmt)     # shallow tiles
             (ts_allowed := ts_allowed + 1) if ok else ts_bad.append(
                 (node.lineno, stmt.splitlines()[-1].strip()))
     for rel in ["bench.py", "py3dtiles_spark/__main__.py",

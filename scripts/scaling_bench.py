@@ -18,6 +18,8 @@ import subprocess
 import sys
 import tempfile
 
+from scaling_gate import child_result
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
@@ -79,8 +81,7 @@ def run_once(cpus: int, n_docs: int) -> dict:
     out = subprocess.run([sys.executable, path, str(cpus), str(n_docs)],
                          capture_output=True, text=True, timeout=1800,
                          env=env)
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
+    return child_result(out)
 
 
 def main():

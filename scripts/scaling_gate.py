@@ -102,6 +102,18 @@ print(json.dumps({"threads": th,
 """
 
 
+def child_result(out: subprocess.CompletedProcess) -> dict:
+    """The last JSON line a child script printed. A child that crashed or
+    printed no result raises with its return code and stderr tail."""
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
+    if out.returncode != 0 or not lines:
+        tail = "\n".join(out.stderr.splitlines()[-20:])
+        raise RuntimeError(f"child exited with code {out.returncode} and "
+                           f"{'a' if lines else 'no'} result; stderr tail:"
+                           f"\n{tail}")
+    return json.loads(lines[-1])
+
+
 def run_child(code: str, args: list[str]) -> dict:
     with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
         f.write(code.replace("@@REPO@@", REPO))
@@ -111,8 +123,7 @@ def run_child(code: str, args: list[str]) -> dict:
     out = subprocess.run([sys.executable, path] + args,
                          capture_output=True, text=True, timeout=3000,
                          env=env, cwd=REPO)
-    line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
+    return child_result(out)
 
 
 def main():

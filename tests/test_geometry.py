@@ -48,14 +48,14 @@ def test_child_index_truth_table():
     pts = np.array([[0.5, 0.5, 0.5], [1.5, 0.5, 0.5], [0.5, 1.5, 0.5],
                     [0.5, 0.5, 1.5], [1.5, 1.5, 1.5], [1.0, 1.0, 1.0]],
                    dtype=np.float32)
-    idx = G.child_index_for_node(pts, aabb)
+    idx = G.child_index_for_node(pts, G.node_frame("", aabb, 0.0))
     assert idx.tolist() == [0, 4, 2, 1, 7, 7]  # >= comparison: center -> 7
 
 
 def test_child_index_quadtree_z_bit_zero():
     aabb = np.array([[0, 0, 0], [10, 10, 1]], dtype=np.float32)
     pts = np.array([[7, 7, 0.99], [2, 2, 0.99]], dtype=np.float32)
-    idx = G.child_index_for_node(pts, aabb)
+    idx = G.child_index_for_node(pts, G.node_frame("", aabb, 0.0))
     assert idx.tolist() == [6, 0]  # z bit always 0 in quadtree mode
 
 
@@ -67,7 +67,8 @@ def test_xyz_to_key_clamps_and_packs():
                     [0.5, 0.5, 2.5],     # (0,0,2) -> 2<<4 = 32
                     [99.0, -99.0, 1.5]], # clamped -> (2,0,1) = 2 + 16
                    dtype=np.float32)
-    keys = G.cell_keys_for_node(pts, aabb, cell_count=3)
+    keys = G.cell_keys_for_node(pts, G.node_frame("", aabb, 0.0),
+                                cell_count=3)
     assert keys.tolist() == [0, 2, 8, 32, 18]
 
 
@@ -96,7 +97,7 @@ def test_accept_mask_per_cell_independent():
     aabb = np.array([[0, 0, 0], [3, 3, 3]], dtype=np.float32)
     # two near-identical points in DIFFERENT cells: both accepted
     pts = np.array([[0.99, 0.5, 0.5], [1.01, 0.5, 0.5]], dtype=np.float32)
-    keys = G.cell_keys_for_node(pts, aabb)
+    keys = G.cell_keys_for_node(pts, G.node_frame("", aabb, 0.0))
     assert keys[0] != keys[1]
     mask = G.accept_mask_for_cells(pts, keys, squared_spacing=4.0)
     assert mask.tolist() == [True, True]

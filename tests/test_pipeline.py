@@ -207,28 +207,20 @@ def test_zorder_layout_prunes_files(spark, tmp_path):
     assert touched(file_boxes(plain_out)) == n_files
 
 
-def test_read_pending_legacy_flat_checkpoint(spark, tmp_path):
-    """Resuming a pre-r4 FLAT level checkpoint (parquet files with an
-    `accepted` column, no hive subdirs) must read pending rows the old
-    way, not silently return empty — and the hive layout must still
-    target the accepted=false subdir."""
-    from py3dtiles_spark.operators.tiling import (
-        _is_legacy_level_dir, _read_pending)
+def test_read_pending_hive_checkpoint(spark, tmp_path):
+    """A level checkpoint is hive-partitioned by `accepted`: pending rows
+    come from the accepted=false subdir, and a fully-accepted level (no
+    such subdir) reads as empty rather than failing."""
+    from py3dtiles_spark.operators.tiling import _read_pending
     rows = [(i, float(i), 0.0, 0.0, "0", i % 2 == 0) for i in range(20)]
     df = spark.createDataFrame(
         rows, "point_id long, x float, y float, z float, "
               "tile_id string, accepted boolean")
-    legacy = str(tmp_path / "legacy_out")
-    df.write.parquet(legacy)
-    assert _is_legacy_level_dir(legacy)
-    pend = _read_pending(spark, legacy)
-    assert pend.count() == 10
-    assert "accepted" not in pend.columns
     hive = str(tmp_path / "hive_out")
     df.write.partitionBy("accepted").parquet(hive)
-    assert not _is_legacy_level_dir(hive)
-    assert _read_pending(spark, hive).count() == 10
-    # fully-accepted hive level: no accepted=false dir -> empty, no error
+    pend = _read_pending(spark, hive)
+    assert pend.count() == 10
+    assert "accepted" not in pend.columns
     alldone = str(tmp_path / "done_out")
     df.filter("accepted").write.partitionBy("accepted").parquet(alldone)
     assert _read_pending(spark, alldone).count() == 0

@@ -98,9 +98,9 @@ def test_resume_from_checkpoint(spark, tmp_path):
     cleanup_checkpoint(res)
 
 
-def test_express_mode_matches_replay(spark, tmp_path):
-    """A megacity-style node far above the local cutoff goes through the
-    'express' kernel (chain + spread re-emit) — must equal the replay."""
+def _megacity_cloud():
+    """Uniform flat cloud with 60% of its points in one tight cluster: the
+    hot node sits far above the local cutoff inside ONE child octant."""
     rng = np.random.default_rng(11)
     n = 30_000
     xyz = np.empty((n, 3), dtype=np.float32)
@@ -110,10 +110,19 @@ def test_express_mode_matches_replay(spark, tmp_path):
     hot = rng.random(n) < 0.6
     xyz[hot, 0] = 20.0 + rng.uniform(-0.01, 0.01, hot.sum())
     xyz[hot, 1] = 30.0 + rng.uniform(-0.01, 0.01, hot.sum())
-    ids = np.arange(n, dtype=np.int64)
+    return np.arange(n, dtype=np.int64), xyz
+
+
+_MEGACITY_CFG = dict(split_threshold=500, in_kernel_threshold=1000,
+                     local_hard_cap=2000)
+
+
+def test_express_mode_matches_replay(spark, tmp_path):
+    """A megacity-style node far above the local cutoff goes through the
+    'express' kernel (chain + spread re-emit) — must equal the replay."""
+    ids, xyz = _megacity_cloud()
     expected, _, _ = replay_tiling(ids, xyz, split_threshold=500)
-    cfg = TilingConfig(split_threshold=500, in_kernel_threshold=1000,
-                       local_hard_cap=2000,
+    cfg = TilingConfig(**_MEGACITY_CFG,
                        checkpoint_dir=str(tmp_path / "exp"))
     got, res = _engine_assignments(spark, ids, xyz, cfg)
     modes = [m for s in res.counters["levels"] for m in s["modes"]]
@@ -122,15 +131,25 @@ def test_express_mode_matches_replay(spark, tmp_path):
     cleanup_checkpoint(res)
 
 
-def test_distributed_routing_over_cap(spark, tmp_path):
+# the modes each cloud must route on over-cap levels; the megacity cloud
+# alone covers all four
+@pytest.mark.parametrize("cloud,cfg_kw,over_cap_modes", [
+    (lambda: ripple_cloud(30_000),
+     dict(split_threshold=2000, in_kernel_threshold=6000),
+     {"leaf", "cell"}),
+    (_megacity_cloud, _MEGACITY_CFG,
+     {"leaf", "local", "cell", "express"}),
+], ids=["ripple", "megacity"])
+def test_distributed_routing_over_cap(spark, tmp_path, cloud, cfg_kw,
+                                      over_cap_modes):
     """node_broadcast_rows below the live-node count forces the fully
-    distributed routing path (shuffled node_meta join, histogram-only
-    driver traffic) — must produce the exact same assignments as the
-    LocalRelation broadcast path."""
-    ids, xyz = ripple_cloud(30_000)
-    expected, _, _ = replay_tiling(ids, xyz, split_threshold=2000)
-    cfg = TilingConfig(split_threshold=2000, in_kernel_threshold=6000,
-                       node_broadcast_rows=2,
+    distributed routing path (_route_nodes through mapInPandas, shuffled
+    node_meta join, histogram-only driver traffic) — must produce the
+    exact same assignments as the replay."""
+    ids, xyz = cloud()
+    expected, _, _ = replay_tiling(ids, xyz,
+                                   split_threshold=cfg_kw["split_threshold"])
+    cfg = TilingConfig(**cfg_kw, node_broadcast_rows=2,
                        checkpoint_dir=str(tmp_path / "overcap"))
     got, res = _engine_assignments(spark, ids, xyz, cfg)
     exp = {int(i): t for i, t in zip(ids, expected)}
@@ -138,6 +157,9 @@ def test_distributed_routing_over_cap(spark, tmp_path):
     assert not mismatches, f"{len(mismatches)} mismatches, e.g. " \
                            f"{list(mismatches.items())[:5]}"
     assert res.counters["points_assigned"] == len(ids)
+    routed = {m for lv in res.counters["levels"]
+              if lv["nodes"] > cfg.node_broadcast_rows for m in lv["modes"]}
+    assert over_cap_modes <= routed, res.counters["levels"]
     cleanup_checkpoint(res)
 
 
@@ -161,54 +183,3 @@ def test_resume_missing_level_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="does not exist"):
         build_tiling(spark, df,
                      TilingConfig(checkpoint_dir=str(ckpt)), resume=True)
-
-
-def test_node_meta_df_matches_driver_rules(spark):
-    """The distributed routing plan (_node_meta_df) and the driver-side
-    rules (_node_meta_rows) must agree node-for-node — mode AND cell grid
-    constants — on a randomized node population covering all four modes."""
-    import numpy as np
-    import pandas as pd
-    from py3dtiles_spark.operators.tiling import (
-        TilingConfig, _local_cutoff, _node_meta_df, _node_meta_rows)
-
-    rng = np.random.default_rng(13)
-    root_aabb = np.array([[0.0, 0.0, 0.0], [64.0, 64.0, 32.0]])
-    root_spacing = 0.25
-    cfg = TilingConfig(split_threshold=2000, in_kernel_threshold=6000,
-                       local_hard_cap=50_000)
-    rows = []
-    for i in range(120):
-        depth = int(rng.integers(0, 6))
-        tid = "".join(str(d) for d in rng.integers(0, 8, depth))
-        cnt = int(rng.choice([50, 1999, 2000, 5999, 6001, 30_000,
-                              60_000, 400_000]))
-        # half the big nodes get a tight bbox (single-child -> express)
-        lo = rng.uniform(0, 60, 3)
-        hi = lo + (rng.uniform(0.01, 0.2, 3) if rng.random() < 0.5
-                   else rng.uniform(20, 40, 3))
-        rows.append((tid, cnt, *lo.astype(np.float32),
-                     *np.minimum(hi, 64).astype(np.float32)))
-    pdf = pd.DataFrame(rows, columns=["tile_id", "cnt", "bx0", "by0",
-                                      "bz0", "bx1", "by1", "bz1"])
-    pdf = pdf.drop_duplicates("tile_id")
-    total = int(pdf["cnt"].sum())
-    cutoff = _local_cutoff(cfg, total, 8)
-
-    counts = spark.createDataFrame(pdf)
-    got = {r["tile_id"]: r for r in _node_meta_df(
-        counts, cfg, root_aabb, root_spacing, cutoff).collect()}
-    exp_rows = _node_meta_rows(
-        [r._asdict() if hasattr(r, "_asdict") else dict(r)
-         for r in pdf.to_dict("records")],
-        cfg, root_aabb, root_spacing, cutoff)
-    assert len(got) == len(exp_rows)
-    modes_seen = set()
-    for tid, mode, mnx, mny, mnz, sx, sy, sz in exp_rows:
-        g = got[tid]
-        assert g["mode"] == mode, (tid, g["mode"], mode)
-        modes_seen.add(mode)
-        if mode == "cell":
-            assert (g["mnx"], g["mny"], g["mnz"]) == (mnx, mny, mnz), tid
-            assert (g["sx"], g["sy"], g["sz"]) == (sx, sy, sz), tid
-    assert {"leaf", "local", "cell", "express"} <= modes_seen
