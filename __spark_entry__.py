@@ -16,6 +16,7 @@ Convention shared by both sides so value-hashes line up:
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -39,6 +40,19 @@ def _geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _byte_size(value: str) -> int:
+    """A Spark byte-size string as bytes: `134217728`, `128m`, `128mb`,
+    `128MiB`, `1g`, `512b` (binary units, like Spark's own parser)."""
+    m = re.fullmatch(r"\s*(\d+)\s*(?:([kmgtp])(?:i?b)?|b)?\s*",
+                     value.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) << _BYTE_SHIFT[m.group(2) or ""]
+
+
 def _par(df: DataFrame) -> DataFrame:
     """Scale-adaptive scan-parallelism floor (guide §2.2/§6, r7). The
     driver testdata tables are SINGLE-row-group parquet files, so the
@@ -58,8 +72,8 @@ def _par(df: DataFrame) -> DataFrame:
 
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                   "134217728"))
+    max_split = _byte_size(spark.conf.get(
+        "spark.sql.files.maxPartitionBytes", "134217728"))
     files = df.inputFiles()
     paths = [f[len("file:"):] if f.startswith("file:") else f
              for f in files]

@@ -680,7 +680,10 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         # reference invariant: every point read is written (convert.py:652)
         assigned = assignments.count()
         counters["points_assigned"] = assigned
-        assert assigned == counters["points_total"], counters
+        if assigned != counters["points_total"]:
+            raise RuntimeError(
+                f"tiling assigned {assigned} points but read "
+                f"{counters['points_total']} (checkpoint dir {ckpt})")
     return TilingResult(assignments=assignments, root_aabb=root_aabb,
                         root_spacing=root_spacing, counters=counters,
                         checkpoint_dir=ckpt)

@@ -6,6 +6,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the sys.path entry this package is imported from: a directory, or the
+# zip that spark-submit --py-files put on the driver's path
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "py3dtiles-spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -14,6 +18,21 @@ def get_spark(app_name: str = "py3dtiles-spark", cpus: int | None = None,
     On a real cluster these configs ride through spark-submit; AQE handles
     runtime coalescing/skew. Arrow is mandatory: every kernel is an
     Arrow-batched pandas UDF (input_hint: no per-row Python).
+
+    Two configs shape the Python workers:
+
+    - `spark.python.daemon.module` is `py3dtiles_spark.worker_daemon`. Spark
+      puts `pyspark.zip`, the py4j zip and the spark-core jar on the
+      workers' path, and pyspark calls `importlib.invalidate_caches()` on
+      every task, which makes each cached zipimporter re-read its archive's
+      directory (about 0.2 s per task). The daemon drops the archives the
+      workers do not need before pyspark loads, then runs the stock
+      `pyspark.daemon` (see that module).
+    - `spark.executorEnv.PYTHONPATH` holds this package's import root (the
+      checkout, or the `--py-files` zip under spark-submit). The daemon
+      module must be importable before any task ships py-files, and the
+      level kernels need the package on the workers anyway, so workers
+      start from any working directory without PYTHONPATH set.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
@@ -74,5 +93,7 @@ def get_spark(app_name: str = "py3dtiles-spark", cpus: int | None = None,
         .config("spark.driver.extraJavaOptions", java_opts)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.python.daemon.module", "py3dtiles_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
         .getOrCreate()
     )

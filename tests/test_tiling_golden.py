@@ -183,3 +183,25 @@ def test_resume_missing_level_raises(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="does not exist"):
         build_tiling(spark, df,
                      TilingConfig(checkpoint_dir=str(ckpt)), resume=True)
+
+
+def test_lost_accepted_rows_raise_on_resume(spark, tmp_path):
+    """The written==read invariant is a raised error, not a bare assert
+    (python -O would strip it): a level whose finalized rows vanished
+    between runs fails the resumed build by name."""
+    import re
+    import shutil
+
+    ids, xyz = ripple_cloud(8_000)
+    ckpt = tmp_path / "lost"
+    cfg = TilingConfig(split_threshold=1500, in_kernel_threshold=3000,
+                       checkpoint_dir=str(ckpt))
+    df = _points_df(spark, ids, xyz)
+    res = build_tiling(spark, df, cfg)
+    assert res.counters["points_assigned"] == len(ids)
+    accepted = ckpt / "level=0" / "out" / "accepted=true"
+    assert accepted.is_dir()
+    shutil.rmtree(accepted)
+    msg = rf"read {len(ids)} .*{re.escape(str(ckpt))}"
+    with pytest.raises(RuntimeError, match=msg):
+        build_tiling(spark, df, cfg, resume=True)
