@@ -262,24 +262,30 @@ def node_boxes(assigned: DataFrame) -> DataFrame:
 
 
 def _vt_nodes_from_rows(rows) -> dict:
-    """(level, cell_x, cell_y) -> z-up bbox union, from either
-    node_boxes() rows (bx0..bz1) or raw assigned feature rows (min_x..)."""
+    """node_boxes() rows -> {(level, cell_x, cell_y): z-up box}; the box
+    list is grown in place by _vt_tile_json's child union."""
     nodes: dict = {}
     for r in rows:
         d = r.asDict() if hasattr(r, "asDict") else dict(r)
         key = (int(d["level"]), int(d["cell_x"]), int(d["cell_y"]))
-        box = nodes.setdefault(key, [math.inf, math.inf, math.inf,
-                                     -math.inf, -math.inf, -math.inf])
-        if "bx0" in d:      # pre-aggregated per-node union (z-up already)
-            zmin = [d["bx0"], d["by0"], d["bz0"]]
-            zmax = [d["bx1"], d["by1"], d["bz1"]]
-        else:
-            zmin = [d["min_x"], -d["max_z"], d["min_y"]]
-            zmax = [d["max_x"], -d["min_z"], d["max_y"]]
-        for i in range(3):
-            box[i] = min(box[i], zmin[i])
-            box[3 + i] = max(box[3 + i], zmax[i])
+        nodes[key] = [d["bx0"], d["by0"], d["bz0"],
+                      d["bx1"], d["by1"], d["bz1"]]
     return nodes
+
+
+def _vt_orphans(keys, present) -> list:
+    """Keys below level 0 whose parent cell is not in `present`: the
+    recursion from the level-0 roots never reaches them."""
+    return [key for key in keys if key[0] > 0 and
+            (key[0] - 1, key[1] >> 1, key[2] >> 1) not in present]
+
+
+def _raise_orphans(orphans: list) -> None:
+    if orphans:
+        raise ValueError(
+            f"quadtree node (level, cell_x, cell_y) = {min(orphans)} "
+            "has no parent node; node boxes must come from "
+            "node_boxes(assign_quadtree(...))")
 
 
 def _vt_tile_json(nodes: dict, key, geometric_error: float,
@@ -320,19 +326,9 @@ def _vt_tile_json(nodes: dict, key, geometric_error: float,
     return t
 
 
-def build_vector_tileset(assigned_rows, transform=None,
-                         geometric_error: float = 500.0) -> dict:
-    """Driver-side tileset.json for the quadtree (reference Node.to_tileset,
-    export.py:60-91): per-node bbox union of its features' z-up bboxes,
-    geometricError halving per level, refine 'add'.
-
-    Accepts either node_boxes() rows (bx0..bz1 — the scalable path: the
-    collect is node-count-sized) or raw assigned feature rows (min_x..:
-    convenience for small/in-test inputs). For node lists too large to
-    collect, use build_vector_tileset_distributed."""
-    nodes = _vt_nodes_from_rows(assigned_rows)
-    roots = [_vt_tile_json(nodes, k, geometric_error)
-             for k in sorted(nodes) if k[0] == 0]
+def _vt_root(roots: list, geometric_error: float, transform) -> dict:
+    """The tileset document over the level-0 tiles: root box = union of
+    their rounded boxes, plus the optional root transform."""
     root = {"asset": {"version": "1.0"},
             "geometricError": geometric_error,
             "root": {"boundingVolume": None, "geometricError": geometric_error,
@@ -352,6 +348,21 @@ def build_vector_tileset(assigned_rows, transform=None,
     if transform is not None:
         root["root"]["transform"] = [round(float(e), 3) for e in transform]
     return root
+
+
+def build_vector_tileset(box_rows, transform=None,
+                         geometric_error: float = 500.0) -> dict:
+    """Driver-side tileset.json for the quadtree (reference Node.to_tileset,
+    export.py:60-91) from collected node_boxes() rows: per-node z-up bbox
+    union, geometricError halving per level, refine 'add'. The
+    byte-identity oracle for build_vector_tileset_distributed, which
+    production paths use. Raises ValueError on a node whose parent cell
+    is absent."""
+    nodes = _vt_nodes_from_rows(box_rows)
+    _raise_orphans(_vt_orphans(nodes, nodes))
+    roots = [_vt_tile_json(nodes, k, geometric_error)
+             for k in sorted(nodes) if k[0] == 0]
+    return _vt_root(roots, geometric_error, transform)
 
 
 def build_vector_tileset_distributed(boxes: DataFrame, transform=None,
@@ -377,6 +388,8 @@ def build_vector_tileset_distributed(boxes: DataFrame, transform=None,
     order, so kernel-side assembly reproduces the monolithic bytes.
     Pick subtree_depth so 4^k >= cluster parallelism; inputs shallower
     than k degenerate to the plain driver-side build (same output).
+    Raises ValueError on a node whose parent cell is absent, like the
+    monolithic builder.
     """
     import json as _json
 
@@ -387,14 +400,20 @@ def build_vector_tileset_distributed(boxes: DataFrame, transform=None,
         raise ValueError("subtree_depth must be >= 1")
     ge = float(geometric_error)
 
-    def subtree_kernel(pdf):
+    def subtree_kernel(key, pdf):
+        # one row: the level-k subtree's document, or, when a node in it
+        # has no parent, that orphan's key with a null body (raising here
+        # would reach the caller as a PythonException)
         nodes = _vt_nodes_from_rows(pdf.to_dict("records"))
-        root_key = min(nodes)          # the level-k subtree root
-        assert root_key[0] == k, (root_key, k)
-        doc = _vt_tile_json(nodes, root_key, ge)
-        return _pd.DataFrame(
-            {"cell_x": [root_key[1]], "cell_y": [root_key[2]],
-             "body": [_json.dumps(doc)]})
+        root_key = (k, int(key[0]), int(key[1]))
+        orphans = _vt_orphans([n for n in nodes if n != root_key], nodes)
+        if orphans:
+            out_key, body = min(orphans), None
+        else:
+            out_key = root_key
+            body = _json.dumps(_vt_tile_json(nodes, root_key, ge))
+        return _pd.DataFrame({"level": [out_key[0]], "cell_x": [out_key[1]],
+                              "cell_y": [out_key[2]], "body": [body]})
 
     deep = boxes.filter(F.col("level") >= k)
     stub_rows = (deep
@@ -402,31 +421,19 @@ def build_vector_tileset_distributed(boxes: DataFrame, transform=None,
                                  f"cast(level - {k} as int))").alias("_sx"),
                           F.expr(f"shiftright(cell_y, "
                                  f"cast(level - {k} as int))").alias("_sy"))
-                 .applyInPandas(lambda key, pdf: subtree_kernel(pdf),
-                                schema="cell_x long, cell_y long, body string")
+                 .applyInPandas(subtree_kernel,
+                                schema="level long, cell_x long, cell_y long, "
+                                       "body string")
                  .collect())
-    overrides = {(k, int(r["cell_x"]), int(r["cell_y"])):
-                 _json.loads(r["body"]) for r in stub_rows}
+    stubs = {(int(r["level"]), int(r["cell_x"]), int(r["cell_y"])): r["body"]
+             for r in stub_rows}
+    orphans = [key for key, body in stubs.items() if body is None]
+    overrides = {key: _json.loads(body) for key, body in stubs.items()
+                 if body is not None}
 
     shallow = boxes.filter(F.col("level") < k).collect()
     nodes = _vt_nodes_from_rows(shallow)
+    _raise_orphans(orphans + _vt_orphans(list(nodes) + list(overrides), nodes))
     roots = [_vt_tile_json(nodes, key, ge, overrides)
              for key in sorted(nodes) if key[0] == 0]
-    root = {"asset": {"version": "1.0"},
-            "geometricError": ge,
-            "root": {"boundingVolume": None, "geometricError": ge,
-                     "refine": "add", "children": roots}}
-    mins = [math.inf] * 3
-    maxs = [-math.inf] * 3
-    for t in roots:
-        b = t["boundingVolume"]["box"]
-        for i in range(3):
-            mins[i] = min(mins[i], b[i] - b[3 + 4 * i])
-            maxs[i] = max(maxs[i], b[i] + b[3 + 4 * i])
-    center = [(mins[i] + maxs[i]) / 2 for i in range(3)]
-    half = [(maxs[i] - mins[i]) / 2 for i in range(3)]
-    root["root"]["boundingVolume"] = {"box": [round(v, 3) for v in (
-        center + [half[0], 0, 0, 0, half[1], 0, 0, 0, half[2]])]}
-    if transform is not None:
-        root["root"]["transform"] = [round(float(e), 3) for e in transform]
-    return root
+    return _vt_root(roots, ge, transform)

@@ -35,23 +35,6 @@ class PipelineResult:
     tiles: DataFrame
     tileset_docs: dict
     tiling: TilingResult
-    # north_rule lineage counters: cells encoded, PIP hits, tiles emitted
-    counters: dict = None
-
-    def collect_counters(self) -> dict:
-        """One aggregation pass over the outputs; merged with the tiler's
-        per-level manifests (points in/assigned, node modes, per-phase
-        seconds) which persist next to each level checkpoint."""
-        tiles_emitted, points = (self.tiles
-                                 .agg(F.count("*"), F.sum("point_count"))
-                                 .collect()[0])
-        self.counters = {
-            "cells_encoded": int(points or 0),   # one cell key per doc
-            "pip_hits": int(points or 0),        # every doc landed in a tile
-            "tiles_emitted": int(tiles_emitted),
-            **{k: v for k, v in self.tiling.counters.items()},
-        }
-        return self.counters
 
 
 def tile_pages(spark: SparkSession, pages: DataFrame,

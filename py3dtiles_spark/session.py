@@ -48,7 +48,7 @@ def get_spark(app_name: str = "py3dtiles-spark", cpus: int | None = None,
     if os.environ.get("SPARK_GRAFT_PRETOUCH") == "1":
         # r5: THP rides with pretouch — madvise'd huge pages cut the
         # pretouch cost 512x per page and gave +25% on JVM-native stages
-        # (BENCH.md r4 probe 3); bench.py/scaling_bench set PRETOUCH=1 so
+        # (BENCH.md r4 probe 3); bench.py, scaling_gate and perfbench set PRETOUCH=1 so
         # published numbers use this default. Kept opt-in for tests (a
         # fresh session per fixture would pay the full heap fault walk).
         java_opts = (f"-Xms{driver_mem} -XX:+AlwaysPreTouch "

@@ -6,18 +6,16 @@ byte lengths — proving a reference-library user can switch imports to
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 import pytest
 
+from conftest import needs_reference, reference_path
 from py3dtiles_spark.compat import (
     B3dm, Feature, GlTF, Pnts, TileContentReader, TriangleSoup)
 
-REF = os.environ.get("PY3DTILES_REF", "/root/reference")
-needs_ref = pytest.mark.skipif(not os.path.isdir(os.path.join(REF, "tests")),
-                               reason="reference fixtures unavailable")
-PNTS_RGB = os.path.join(REF, "tests", "pointCloudRGB.pnts")
+needs_ref = needs_reference("tests")
+PNTS_RGB = reference_path("tests", "pointCloudRGB.pnts")
 
 
 @needs_ref
@@ -93,14 +91,14 @@ def test_build_with_colors():
 def test_b3dm_reader_dragon():
     """Reference test_b3dm.py:13-25 verbatim."""
     tile = TileContentReader().read_file(
-        os.path.join(REF, "tests", "dragon_low.b3dm"))
+        reference_path("tests", "dragon_low.b3dm"))
     assert tile.header.version == 1.0
     assert tile.header.tile_byte_length == 47246
     assert tile.header.ft_json_byte_length == 20
     assert tile.header.ft_bin_byte_length == 0
     assert tile.header.bt_json_byte_length == 0
     assert tile.header.bt_bin_byte_length == 0
-    with open(os.path.join(REF, "tests", "dragon_low_gltf_header.json")) as f:
+    with open(reference_path("tests", "dragon_low_gltf_header.json")) as f:
         assert tile.body.glTF.header == json.load(f)
 
 
@@ -108,7 +106,7 @@ def test_b3dm_reader_dragon():
 def test_b3dm_build_building():
     """Reference test_b3dm.py:30-60 verbatim (TriangleSoup -> GlTF ->
     B3dm, 2952 bytes)."""
-    with open(os.path.join(REF, "tests", "building.wkb"), "rb") as f:
+    with open(reference_path("tests", "building.wkb"), "rb") as f:
         wkb = f.read()
     ts = TriangleSoup.from_wkb_multipolygon(wkb)
     arrays = [{
@@ -131,9 +129,9 @@ def test_b3dm_build_building():
 @needs_ref
 def test_b3dm_build_textured_square():
     """Reference test_b3dm.py:66-104 verbatim (textured, 1556 bytes)."""
-    with open(os.path.join(REF, "tests", "square.wkb"), "rb") as f:
+    with open(reference_path("tests", "square.wkb"), "rb") as f:
         wkb = f.read()
-    with open(os.path.join(REF, "tests", "squareUV.wkb"), "rb") as f:
+    with open(reference_path("tests", "squareUV.wkb"), "rb") as f:
         wkbuv = f.read()
     ts = TriangleSoup.from_wkb_multipolygon(wkb, [wkbuv])
     arrays = [{

@@ -9,15 +9,14 @@ import os
 import numpy as np
 import pytest
 
+from conftest import needs_reference, reference_path
 from py3dtiles_spark.functions.wkb import (
     make_wkb_multipolygon, parse_wkb_multipolygon, triangulate_polygon,
     triangles_to_arrays, wkb_to_triangles)
 from py3dtiles_spark.sources.b3dm import (
     b3dm_bytes, gltf_from_arrays, parse_b3dm)
 
-REF = os.environ.get("PY3DTILES_REF", "/root/reference")
-needs_ref = pytest.mark.skipif(not os.path.isdir(os.path.join(REF, "tests")),
-                               reason="reference fixtures unavailable")
+needs_ref = needs_reference("tests")
 
 
 def _square(z=0.0, s=10.0, x0=0.0, y0=0.0):
@@ -88,13 +87,13 @@ def test_triangle_orientation_follows_normal():
 @needs_ref
 def test_dragon_b3dm_read_golden():
     """Reference test_b3dm.py:13-25 header + glTF JSON goldens."""
-    with open(os.path.join(REF, "tests", "dragon_low.b3dm"), "rb") as f:
+    with open(reference_path("tests", "dragon_low.b3dm"), "rb") as f:
         d = parse_b3dm(f.read())
     assert d["tile_byte_length"] == 47246
     assert d["ft_json_byte_length"] == 20
     assert d["ft_bin_byte_length"] == 0
     assert d["bt_json_byte_length"] == 0
-    with open(os.path.join(REF, "tests", "dragon_low_gltf_header.json")) as f:
+    with open(reference_path("tests", "dragon_low_gltf_header.json")) as f:
         assert d["gltf_header"] == json.load(f)
 
 
@@ -102,7 +101,7 @@ def test_dragon_b3dm_read_golden():
 def test_building_wkb_to_b3dm_byte_golden():
     """Reference test_b3dm.py:30-60: building.wkb -> b3dm of exactly 2952
     bytes (same triangle count + byte layout as the reference encoder)."""
-    with open(os.path.join(REF, "tests", "building.wkb"), "rb") as f:
+    with open(reference_path("tests", "building.wkb"), "rb") as f:
         wkb = f.read()
     tris = wkb_to_triangles(wkb)
     pos, norm, bbox = triangles_to_arrays(tris)
@@ -122,7 +121,7 @@ def test_building_wkb_to_b3dm_byte_golden():
 
 @needs_ref
 def test_square_wkb_triangulation():
-    with open(os.path.join(REF, "tests", "square.wkb"), "rb") as f:
+    with open(reference_path("tests", "square.wkb"), "rb") as f:
         wkb = f.read()
     tris = wkb_to_triangles(wkb)
     assert len(tris) == 2
@@ -147,7 +146,7 @@ def _features_df(spark, n=100, seed=2):
 
 def test_quadtree_export_end_to_end(spark):
     from py3dtiles_spark.operators.export import (
-        assign_quadtree, build_b3dm_tiles, build_vector_tileset,
+        assign_quadtree, build_b3dm_tiles, build_vector_tileset, node_boxes,
         triangulate_features)
     feats = triangulate_features(_features_df(spark))   # weight passes through
     assert feats.count() == 100
@@ -174,7 +173,8 @@ def test_quadtree_export_end_to_end(spark):
         assert d["bt_json_byte_length"] > 0        # batch table with ids
         assert d["gltf_header"]["buffers"][0]["byteLength"] > 0
 
-    ts = build_vector_tileset(rows, transform=np.identity(4).flatten("F"))
+    ts = build_vector_tileset(node_boxes(assigned).collect(),
+                              transform=np.identity(4).flatten("F"))
     assert ts["root"]["children"]
     assert ts["root"]["refine"] == "add"
     child = ts["root"]["children"][0]
@@ -227,9 +227,9 @@ def test_textured_square_b3dm_byte_golden():
     UV triangles threaded through the triangulation indices, body layout
     positions|normals|uvs|batchids, texture/image/sampler JSON blocks."""
     from py3dtiles_spark.functions.wkb import data_triangles_to_array
-    with open(os.path.join(REF, "tests", "square.wkb"), "rb") as f:
+    with open(reference_path("tests", "square.wkb"), "rb") as f:
         wkb = f.read()
-    with open(os.path.join(REF, "tests", "squareUV.wkb"), "rb") as f:
+    with open(reference_path("tests", "squareUV.wkb"), "rb") as f:
         wkbuv = f.read()
     tris, (uvtris,) = wkb_to_triangles(wkb, associated=[wkbuv])
     pos, norm, _ = triangles_to_arrays(tris)
@@ -296,9 +296,9 @@ def test_export_cli_textured_parquet(spark, tmp_path):
     import json as _json
     from py3dtiles_spark.__main__ import main
 
-    with open(os.path.join(REF, "tests", "square.wkb"), "rb") as f:
+    with open(reference_path("tests", "square.wkb"), "rb") as f:
         wkb = f.read()
-    with open(os.path.join(REF, "tests", "squareUV.wkb"), "rb") as f:
+    with open(reference_path("tests", "squareUV.wkb"), "rb") as f:
         wkbuv = f.read()
     src = str(tmp_path / "tex.parquet")
     spark.createDataFrame(
@@ -332,17 +332,12 @@ def test_triangulate_features_rejects_precomputed_uvs(spark):
         triangulate_features(df)
 
 
-def test_vector_tileset_distributed_byte_identical(spark):
-    """r7: the distributed quadtree tileset assembly must reproduce the
-    monolithic driver-side builder BYTE for byte, on an input deep
-    enough (levels 0..4) that the subtree kernels actually run."""
-    import json
-
+def _deep_node_boxes(spark):
+    """node_boxes of 400 features, 320 in one hot 10x10 cluster: the
+    quadtree recurses to level >= 3, past subtree_depth=2."""
     from py3dtiles_spark.operators.export import (
-        assign_quadtree, build_vector_tileset,
-        build_vector_tileset_distributed, node_boxes, triangulate_features)
+        assign_quadtree, node_boxes, triangulate_features)
 
-    # one hot 10x10 cluster forces recursion well past subtree_depth=2
     rng = np.random.default_rng(7)
     rows = []
     for gid in range(400):
@@ -358,8 +353,19 @@ def test_vector_tileset_distributed_byte_identical(spark):
         spark.createDataFrame(rows, "geom_id long, wkb binary, weight double"))
     assigned = assign_quadtree(feats, weight_col="weight")
     assert assigned.agg({"level": "max"}).collect()[0][0] >= 3
+    return node_boxes(assigned).persist()
 
-    boxes = node_boxes(assigned).persist()
+
+def test_vector_tileset_distributed_byte_identical(spark):
+    """r7: the distributed quadtree tileset assembly must reproduce the
+    monolithic driver-side builder BYTE for byte, on an input deep
+    enough (levels 0..4) that the subtree kernels actually run."""
+    import json
+
+    from py3dtiles_spark.operators.export import (
+        build_vector_tileset, build_vector_tileset_distributed)
+
+    boxes = _deep_node_boxes(spark)
     mono = build_vector_tileset(boxes.collect(), transform=[1.0] * 16)
     for k in (1, 2, 3):
         dist = build_vector_tileset_distributed(boxes, transform=[1.0] * 16,
@@ -370,4 +376,31 @@ def test_vector_tileset_distributed_byte_identical(spark):
     dist = build_vector_tileset_distributed(boxes, transform=[1.0] * 16,
                                             subtree_depth=9)
     assert json.dumps(dist) == json.dumps(mono)
+    boxes.unpersist()
+
+
+@pytest.mark.parametrize("level", [1, 2])
+def test_vector_tileset_orphan_node_raises(spark, level):
+    """A node whose parent cell is absent would be silently dropped by
+    the recursion from the level-0 roots: both builders refuse it on the
+    driver, naming the node, at every subtree depth."""
+    import re
+
+    from py3dtiles_spark.operators.export import (
+        build_vector_tileset, build_vector_tileset_distributed)
+
+    boxes = _deep_node_boxes(spark)
+    rows = boxes.collect()
+    children = sorted((r.level, r.cell_x, r.cell_y) for r in rows
+                      if r.level == level + 1)
+    gone = (level, children[0][1] >> 1, children[0][2] >> 1)
+    cut = [r for r in rows if (r.level, r.cell_x, r.cell_y) != gone]
+    assert len(cut) == len(rows) - 1
+    named = re.escape(str(children[0]))
+    with pytest.raises(ValueError, match=named):
+        build_vector_tileset(cut)
+    cut_df = spark.createDataFrame(cut, boxes.schema)
+    for k in (1, 2):
+        with pytest.raises(ValueError, match=named):
+            build_vector_tileset_distributed(cut_df, subtree_depth=k)
     boxes.unpersist()

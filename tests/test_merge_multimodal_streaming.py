@@ -1,9 +1,6 @@
-import numpy as np
 import pytest
 
 from py3dtiles_spark.operators.merge import merge_tilesets, overview_sample
-from py3dtiles_spark.operators.multimodal import (
-    decode_image, image_features, resize_image, sample_frames, synth_media_df)
 from py3dtiles_spark.sources.pages import generate_pages
 from py3dtiles_spark.streaming.pipeline import run_stream_to_memory
 
@@ -56,22 +53,6 @@ def test_overview_sample_ratio_and_determinism(spark):
     assert abs(half - 5000) < 400       # capped at 0.5
 
 
-def test_multimodal_features_and_resize(spark):
-    media = synth_media_df(spark, 30)
-    feats = image_features(media).collect()
-    assert len(feats) == sum(1 for r in media.collect() if r.kind == "image")
-    assert all(0 <= r.mean_r <= 255 for r in feats)
-    # deterministic: same payload -> same features
-    again = image_features(media).collect()
-    assert sorted(map(tuple, feats)) == sorted(map(tuple, again))
-
-    small = resize_image(media, 4, 4).collect()
-    assert all(len(r.payload) == 4 * 4 * 3 for r in small)
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"xx", 2, 2, fake=False)
-
-
 def _png(w, h):
     import struct, zlib
     ihdr = struct.pack(">II5B", w, h, 8, 2, 0, 0, 0)
@@ -114,28 +95,6 @@ def test_probe_media_bytes_real_headers():
             w["duration_ms"]) == ("wav", 16000, 2, 1000)
     u = probe_media_bytes(b"\x00\x01\x02\x03 not media")
     assert u["format"] == "unknown" and u["width"] is None
-
-
-def test_probe_media_distributed(spark):
-    from py3dtiles_spark.operators.multimodal import probe_media
-    rows = [(0, bytearray(_png(32, 16))), (1, bytearray(_jpeg(8, 4))),
-            (2, bytearray(_wav(8000, 1, 8, 4000))), (3, bytearray(b"junk"))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r.media_id: r for r in probe_media(df).collect()}
-    assert (got[0].format, got[0].width, got[0].height) == ("png", 32, 16)
-    assert (got[1].format, got[1].width, got[1].height) == ("jpeg", 8, 4)
-    assert (got[2].format, got[2].sample_rate, got[2].duration_ms) == \
-        ("wav", 8000, 500)
-    assert got[3].format == "unknown"
-
-
-def test_sample_frames(spark):
-    media = synth_media_df(spark, 30)
-    frames = sample_frames(media, every_ms=1000)
-    per = frames.groupBy("media_id").count().collect()
-    durs = {r.media_id: r.duration_ms for r in media.collect()}
-    for r in per:
-        assert r["count"] == durs[r.media_id] // 1000 + (1 if durs[r.media_id] % 1000 else 0)
 
 
 def test_streaming_windowed_cell_counts(spark, tmp_path):
@@ -299,233 +258,6 @@ def test_dedup_stream_across_batches(spark, tmp_path):
     assert texts["u/a"] == "ta"            # FIRST record kept
 
 
-def test_decode_wav_and_audio_features(spark):
-    """The audio path is REAL (stdlib wave + numpy): synthesize PCM WAVs,
-    decode, and check the Arrow-batched features against numpy directly."""
-    import io
-    import wave
-
-    import numpy as np
-    import pandas as pd
-    from py3dtiles_spark.operators.multimodal import (
-        audio_features, decode_wav)
-
-    def make_wav(freq, rate=8000, secs=0.5, sw=2, nch=1, amp=0.5):
-        t = np.arange(int(rate * secs)) / rate
-        x = amp * np.sin(2 * np.pi * freq * t)
-        if sw == 2:
-            data = (x * 32767).astype("<i2")
-        else:
-            data = ((x * 127) + 128).astype(np.uint8)
-        frames = np.repeat(data[:, None], nch, axis=1).tobytes()
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(nch)
-            w.setsampwidth(sw)
-            w.setframerate(rate)
-            w.writeframes(frames)
-        return buf.getvalue()
-
-    wav_a = make_wav(440.0)                       # 16-bit mono
-    wav_b = make_wav(100.0, sw=1, nch=2)          # 8-bit stereo
-    x, rate = decode_wav(wav_a)
-    assert rate == 8000 and x.shape == (4000, 1)
-    # sine RMS = amp/sqrt(2)
-    assert abs(float(np.sqrt((x ** 2).mean())) - 0.5 / np.sqrt(2)) < 1e-3
-
-    media = spark.createDataFrame(pd.DataFrame({
-        "media_id": [0, 1, 2],
-        "kind": ["audio", "audio", "audio"],
-        "payload": [wav_a, wav_b, b"not a wav"]}))
-    rows = {r.media_id: r for r in audio_features(media).collect()}
-    assert rows[0].decode_ok and rows[1].decode_ok
-    assert not rows[2].decode_ok                  # lineage row retained
-    assert abs(rows[0].duration_s - 0.5) < 1e-9
-    assert rows[1].channels == 2 and rows[1].sample_rate == 8000
-    assert abs(rows[0].rms - 0.5 / 2 ** 0.5) < 1e-3
-    assert rows[0].peak <= 0.5 + 1e-6
-    # 440 Hz sine crosses zero ~2*440 times/sec -> zcr ~ 880/8000
-    assert abs(rows[0].zcr - 2 * 440 / 8000) < 0.01
-
-
-def test_decode_png_all_filter_types_roundtrip():
-    """Decoder's unfilter logic pinned against the independently-written
-    FORWARD filters in encode_png, for every filter type and channel
-    count (grey / grey+alpha / RGB / RGBA)."""
-    from py3dtiles_spark.operators.multimodal import decode_png, encode_png
-    rng = np.random.default_rng(7)
-    for ch in (1, 2, 3, 4):
-        img = rng.integers(0, 256, (13, 11, ch), dtype=np.uint8)
-        for ft in range(5):
-            out = decode_png(encode_png(img, filter_type=ft))
-            assert out.shape == (13, 11, ch), (ch, ft)
-            assert np.array_equal(out, img), (ch, ft)
-
-
-def test_decode_png_hand_computed_sub_filter():
-    """2x2 grey PNG with the Sub filter, unfiltered by hand:
-    row bytes [10, 20] -> recon [10, 30]; [200, 100] -> [200, 44]."""
-    import struct
-    import zlib
-    from py3dtiles_spark.operators.multimodal import (_PNG_MAGIC,
-                                                      decode_png)
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
-    raw = bytes([1, 10, 20]) + bytes([1, 200, 100])
-    png = (_PNG_MAGIC + chunk(b"IHDR", ihdr)
-           + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-    out = decode_png(png)
-    assert out[:, :, 0].tolist() == [[10, 30], [200, 44]]  # (200+100)%256
-
-
-def test_decode_png_rejects_unsupported():
-    from py3dtiles_spark.operators.multimodal import decode_png, encode_png
-    with pytest.raises(ValueError):
-        decode_png(b"not a png at all")
-    # 16-bit depth: flip the depth byte in a valid header
-    good = bytearray(encode_png(np.zeros((2, 2, 3), np.uint8)))
-    good[24] = 16                                 # IHDR depth byte
-    with pytest.raises(ValueError):
-        decode_png(bytes(good))
-
-
-def test_decode_image_real_png_channel_normalization():
-    """decode_image returns (h, w, 3) for every PNG channel count."""
-    from py3dtiles_spark.operators.multimodal import (decode_image,
-                                                      encode_png)
-    grey = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    out = decode_image(encode_png(grey), 4, 4)
-    assert out.shape == (4, 4, 3)
-    assert np.array_equal(out[:, :, 0], grey)
-    assert np.array_equal(out[:, :, 1], grey)
-    rgba = np.zeros((3, 3, 4), np.uint8)
-    rgba[..., 0] = 9
-    rgba[..., 3] = 200                            # alpha dropped
-    out = decode_image(encode_png(rgba), 3, 3)
-    assert out.shape == (3, 3, 3) and out[0, 0].tolist() == [9, 0, 0]
-
-
-def test_image_features_real_png_decode(spark):
-    """End-to-end: real PNG payloads through the Arrow-batched kernel —
-    a sine-gradient golden with known channel means, plus a corrupt
-    payload that must surface as a decode_ok=false lineage row."""
-    import pandas as pd
-
-    from py3dtiles_spark.operators.multimodal import encode_png
-
-    h = w = 16
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.zeros((h, w, 3), np.uint8)
-    img[..., 0] = (127.5 + 127.5 * np.sin(xx / 3.0)).astype(np.uint8)
-    img[..., 1] = (xx * 255 // (w - 1)).astype(np.uint8)   # ramp
-    img[..., 2] = 7
-    media = spark.createDataFrame(pd.DataFrame({
-        "media_id": [0, 1],
-        "kind": ["image", "image"],
-        "payload": [encode_png(img, filter_type=4), b"\x89PNG corrupt"],
-        "width": [w, w], "height": [h, h]}))
-    rows = {r.media_id: r for r in image_features(media, fake=False).collect()}
-    assert rows[0].decode_ok and not rows[1].decode_ok
-    assert abs(rows[0].mean_r - img[..., 0].mean()) < 1e-9
-    assert abs(rows[0].mean_g - img[..., 1].mean()) < 1e-9
-    assert abs(rows[0].mean_b - 7.0) < 1e-9
-    # resize on real pixels: nearest-neighbor of the constant channel
-    small = resize_image(media.filter("media_id = 0"), 4, 4,
-                         fake=False).collect()[0]
-    arr = np.frombuffer(small.payload, np.uint8).reshape(4, 4, 3)
-    assert (arr[..., 2] == 7).all()
-
-
-def _bmp(img, top_down=False):
-    """Independent BMP writer (BI_RGB 24-bit, 4-byte row padding)."""
-    import struct
-    h, w, _ = img.shape
-    row = (w * 3 + 3) & ~3
-    pad = b"\x00" * (row - w * 3)
-    body = b""
-    rows = img if top_down else img[::-1]
-    for r in rows:
-        body += r[:, ::-1].astype(np.uint8).tobytes() + pad   # BGR
-    hsign = -h if top_down else h
-    dib = struct.pack("<IiiHHIIiiII", 40, w, hsign, 1, 24, 0,
-                      row * h, 2835, 2835, 0, 0)
-    head = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 54)
-    return head + dib + body
-
-
-def test_decode_bmp_real_pixels():
-    """BMP decode pinned against an independently-written encoder, both
-    storage orders, padding-exercising width, plus rejects."""
-    from py3dtiles_spark.operators.multimodal import decode_bmp, decode_image
-    rng = np.random.default_rng(17)
-    img = rng.integers(0, 256, (5, 3, 3), dtype=np.uint8)   # w=3 -> pad
-    assert np.array_equal(decode_bmp(_bmp(img)), img)
-    assert np.array_equal(decode_bmp(_bmp(img, top_down=True)), img)
-    out = decode_image(_bmp(img), 3, 5)
-    assert out.shape == (5, 3, 3) and np.array_equal(out, img)
-    with pytest.raises(ValueError):
-        decode_bmp(b"BM" + b"\x00" * 10)                    # truncated
-    bad = bytearray(_bmp(img)); bad[30] = 1                 # RLE8
-    with pytest.raises(ValueError):
-        decode_bmp(bytes(bad))
-
-
-def test_decode_gif_hand_packed_codes():
-    """4x1 palette image whose LZW codes are hand-packed byte by byte:
-    min_code_size=2 -> clear=4, end=5, initial width 3. Codes
-    [4,0,1,2,3,5]: after the literals 1/2/3 the decoder's table holds
-    6,7,8 entries so width bumps to 4 before code 3 is read."""
-    import numpy as np
-    from py3dtiles_spark.operators.multimodal import decode_gif
-
-    # codes and widths: 4(3b) 0(3b) 1(3b) 2(3b) 3(4b) 5(4b) — the width
-    # grows to 4 when table length reaches 8 (after appending for '2')
-    bits = ""
-    for code, w in ((4, 3), (0, 3), (1, 3), (2, 3), (3, 4), (5, 4)):
-        bits += format(code, f"0{w}b")[::-1]       # LSB-first
-    data = bytearray()
-    for i in range(0, len(bits), 8):
-        data.append(sum(int(b) << k for k, b in enumerate(bits[i:i + 8])))
-    pal = bytes([10, 0, 0, 0, 20, 0, 0, 0, 30, 99, 99, 99])  # 4 colors
-    gif = (b"GIF89a" + bytes([4, 0, 1, 0, 0x81, 0, 0]) + pal
-           + b"\x2c" + bytes([0, 0, 0, 0, 4, 0, 1, 0, 0])
-           + bytes([2, len(data)]) + bytes(data) + b"\x00\x3b")
-    img = decode_gif(gif)
-    assert img.shape == (1, 4, 3)
-    assert img[0, 0].tolist() == [10, 0, 0]
-    assert img[0, 1].tolist() == [0, 20, 0]
-    assert img[0, 2].tolist() == [0, 0, 30]
-    assert img[0, 3].tolist() == [99, 99, 99]
-
-
-def test_decode_gif_roundtrip_and_interlace():
-    import numpy as np
-    from py3dtiles_spark.operators.multimodal import decode_gif, encode_gif
-
-    rng = np.random.default_rng(7)
-    for h, w, ncol in ((1, 1, 1), (3, 5, 4), (16, 9, 200), (8, 8, 256)):
-        colors = rng.integers(0, 256, size=(ncol, 3), dtype=np.uint8)
-        img = colors[rng.integers(0, ncol, size=(h, w))]
-        assert np.array_equal(decode_gif(encode_gif(img)), img)
-    img = rng.integers(0, 256, size=(11, 4, 3), dtype=np.uint8)
-    img = (img // 64) * 64                         # <=256 distinct colors
-    assert np.array_equal(decode_gif(encode_gif(img, interlace=True)), img)
-
-
-def test_decode_image_dispatches_gif():
-    import numpy as np
-    from py3dtiles_spark.operators.multimodal import decode_image, encode_gif
-
-    img = np.zeros((2, 2, 3), dtype=np.uint8)
-    img[0, 0] = (255, 0, 0)
-    out = decode_image(encode_gif(img), 2, 2)
-    assert out.shape == (2, 2, 3) and out[0, 0].tolist() == [255, 0, 0]
-
-
 def test_curate_stream_end_to_end(spark, tmp_path):
     """Streaming curation: token-floor gate, cross-batch content dedup,
     and per-record eval decontamination — duplicates in a LATER batch
@@ -572,198 +304,9 @@ def test_curate_stream_end_to_end(spark, tmp_path):
     assert all(r.n_tokens == 12 for r in rows)
 
 
-def test_jpeg_roundtrips_444_and_420():
-    """Baseline-JPEG codec is REAL (numpy Huffman + DCT): with flat
-    quant=1 tables the decoder must reproduce the encoder's input to
-    DCT-rounding tolerance — flat blocks exactly, 4:4:4 within +-2,
-    4:2:0 within chroma-averaging error on smooth images."""
-    import numpy as np
-    from py3dtiles_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    flat = np.full((8, 8, 3), 120, dtype=np.uint8)
-    assert np.array_equal(decode_jpeg(encode_jpeg(flat)), flat)
-
-    gy, gx = np.mgrid[0:13, 0:21]
-    smooth = np.stack([(gy * 9) % 256, (gx * 7) % 256,
-                       (gy * 3 + gx * 2) % 256], axis=2)
-    smooth = (smooth // 4 * 2 + 60).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(smooth))
-    assert out.shape == (13, 21, 3)
-    assert np.abs(out.astype(int) - smooth.astype(int)).max() <= 2
-
-    out420 = decode_jpeg(encode_jpeg(smooth, subsample=True))
-    assert out420.shape == (13, 21, 3)
-    assert np.abs(out420.astype(int) - smooth.astype(int)).max() <= 6
-
-    rng = np.random.default_rng(3)
-    noise = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(noise))
-    assert np.abs(out.astype(int) - noise.astype(int)).max() <= 3
-
-
-def test_jpeg_tolerates_fill_bytes():
-    """The spec allows any number of 0xFF fill bytes before a marker;
-    decoding must be identical with padding inserted before SOF0."""
-    import numpy as np
-    from py3dtiles_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    img = np.full((8, 8, 3), 77, dtype=np.uint8)
-    enc = encode_jpeg(img)
-    i = enc.index(b"\xff\xc0")
-    padded = enc[:i] + b"\xff\xff\xff" + enc[i:]
-    assert np.array_equal(decode_jpeg(padded), decode_jpeg(enc))
-
-
-def test_jpeg_rejects_progressive_and_bad_magic():
-    import struct
-
-    import numpy as np
-    import pytest
-    from py3dtiles_spark.operators.jpeg import decode_jpeg
-
-    with pytest.raises(ValueError, match="not a JPEG"):
-        decode_jpeg(b"nope")
-    sof2 = (b"\xff\xd8" + b"\xff\xc2"
-            + struct.pack(">H", 8) + struct.pack(">BHHB", 8, 8, 8, 1)
-            + b"\x01\x11\x00" + b"\xff\xd9")
-    with pytest.raises(ValueError, match="SOF0 only"):
-        decode_jpeg(sof2)
-
-
-def test_decode_image_dispatches_jpeg():
-    import numpy as np
-    from py3dtiles_spark.operators.jpeg import encode_jpeg
-    from py3dtiles_spark.operators.multimodal import decode_image
-
-    img = np.full((10, 6, 3), 0, dtype=np.uint8)
-    img[:, :, 1] = 200
-    out = decode_image(encode_jpeg(img), 6, 10)
-    assert out.shape == (10, 6, 3)
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_jpeg_restart_markers():
-    """DRI/RSTn path: encoder flushes + emits RSTn every N MCUs with DC
-    predictors reset; the decoder realigns and resets identically."""
-    import numpy as np
-    from py3dtiles_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    gy, gx = np.mgrid[0:24, 0:32]
-    img = ((gy * 5 + gx * 3) % 128 + 64).astype(np.uint8)
-    img = np.stack([img, img[::-1], img[:, ::-1]], axis=2)
-    enc = encode_jpeg(img, restart_interval=2)
-    assert b"\xff\xdd" in enc and b"\xff\xd0" in enc
-    out = decode_jpeg(enc)
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_image_features_real_codecs_distributed(spark):
-    """The Arrow kernel runs the REAL decoders for all four probed
-    formats in one distributed pass; features match numpy computed
-    directly on the source pixels (JPEG within codec tolerance)."""
-    import numpy as np
-    from py3dtiles_spark.operators.jpeg import encode_jpeg
-    from py3dtiles_spark.operators.multimodal import (
-        encode_gif, encode_png, image_features)
-
-    rng = np.random.default_rng(11)
-    img = (rng.integers(0, 64, size=(12, 9, 3), dtype=np.uint8) * 4)
-
-    payloads = [(0, bytearray(encode_png(img)), 9, 12),
-                (1, bytearray(encode_gif(img)), 9, 12),
-                (2, bytearray(encode_jpeg(img)), 9, 12),
-                (3, bytearray(_bmp(img)), 9, 12),
-                (4, bytearray(b"corrupt"), 1, 1)]
-    df = spark.createDataFrame(
-        [(i, p, w, h, "image", 0) for i, p, w, h in payloads],
-        "media_id long, payload binary, width long, height long, "
-        "kind string, duration_ms long")
-    got = {r.media_id: r for r in image_features(df, fake=False).collect()}
-    want = img.mean(axis=(0, 1))
-    for mid in (0, 1, 3):                      # lossless formats: exact
-        assert got[mid].decode_ok
-        assert np.allclose([got[mid].mean_r, got[mid].mean_g,
-                            got[mid].mean_b], want, atol=1e-9)
-    assert got[2].decode_ok                    # JPEG: codec tolerance
-    assert np.allclose([got[2].mean_r, got[2].mean_g, got[2].mean_b],
-                       want, atol=1.0)
-    assert got[4].decode_ok is False           # lineage row retained
-
-
-def test_jpeg_422_and_grayscale():
-    """The decoder's remaining sampling shapes: 4:2:2 (horizontal-only
-    chroma upsample) and single-component grayscale (Y replication),
-    each within codec tolerance of the source, grayscale also with
-    restart markers."""
-    import numpy as np
-    from py3dtiles_spark.operators.jpeg import decode_jpeg, encode_jpeg
-
-    gy, gx = np.mgrid[0:13, 0:21]
-    img = np.stack([(gy * 9) % 256, (gx * 7) % 256,
-                    (gy * 3 + gx * 2) % 256], axis=2)
-    img = (img // 4 * 2 + 60).astype(np.uint8)
-    out = decode_jpeg(encode_jpeg(img, subsample="422"))
-    assert out.shape == (13, 21, 3)
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 4
-
-    g = ((gy * 11 + gx * 5) % 200).astype(np.uint8)
-    want = np.repeat(g[:, :, None], 3, axis=2).astype(int)
-    out = decode_jpeg(encode_jpeg(g, grayscale=True))
-    assert np.abs(out.astype(int) - want).max() <= 1
-    out = decode_jpeg(encode_jpeg(g, grayscale=True, restart_interval=2))
-    assert np.abs(out.astype(int) - want).max() <= 1
-
-
-def test_jpeg_encoder_rejects_bad_params():
-    import numpy as np
-    import pytest
-    from py3dtiles_spark.operators.jpeg import encode_jpeg
-
-    img = np.zeros((8, 8, 3), dtype=np.uint8)
-    with pytest.raises(ValueError, match="quant"):
-        encode_jpeg(img, quant=256)
-    with pytest.raises(ValueError, match="quant"):
-        encode_jpeg(img, quant=300, grayscale=True)
-    with pytest.raises(ValueError, match="subsample"):
-        encode_jpeg(img, subsample="4:2:2")
-
-
-def test_truncated_gif_jpeg_raise_valueerror():
-    """ADVICE r6: truncated GIF/JPEG payloads must raise ValueError like
-    decode_png/decode_bmp, not leak IndexError/struct.error."""
-    import numpy as np
-    import pytest
-    from py3dtiles_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from py3dtiles_spark.operators.multimodal import decode_gif, encode_gif
-
-    img = np.zeros((8, 8, 3), dtype=np.uint8)
-    img[::2, :, 0] = 128
-    gif = encode_gif(img)
-    jpg = encode_jpeg(img, quant=1)
-    # full payloads round-trip
-    assert decode_gif(gif).shape == (8, 8, 3)
-    assert decode_jpeg(jpg).shape == (8, 8, 3)
-    # any truncation point either still decodes (e.g. only the trailer
-    # is gone) or raises ValueError — NEVER IndexError/struct.error
-    import struct as _struct
-    failures = 0
-    for payload, dec in ((gif, decode_gif), (jpg, decode_jpeg)):
-        for cut in range(6, len(payload)):
-            try:
-                dec(payload[:cut])
-            except ValueError:
-                failures += 1
-            except (IndexError, _struct.error) as e:  # pragma: no cover
-                raise AssertionError(
-                    f"{dec.__name__} leaked {type(e).__name__} "
-                    f"at cut={cut}") from e
-    assert failures > 0                       # truncation does get caught
-
-
 def test_curate_stream_eval_hash_guard(spark, tmp_path):
     """ADVICE r6: corpus-sized eval sets must be rejected instead of
     silently inflating every task's serialized plan."""
-    import pytest
     from py3dtiles_spark.streaming.pipeline import curate_stream
 
     ev = spark.createDataFrame(

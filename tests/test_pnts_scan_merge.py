@@ -7,6 +7,7 @@ import os
 
 import numpy as np
 
+from conftest import needs_reference, reference_path
 from py3dtiles_spark.sources.pnts import (
     decode_pnts, encode_pnts, name_to_relpath, relpath_to_name)
 
@@ -157,16 +158,14 @@ def test_decode_pnts_quantized_rgba_rtc():
     assert xyz_raw[0][0] == np.float32(100.0)
 
 
+@needs_reference("tests", "pointCloudRGB.pnts")
 def test_pnts_scan_reference_fixture(spark, tmp_path):
     """Golden: the reference's own pointCloudRGB.pnts (1000 points,
     RTC_CENTER, first feature colors per reference tests/test_pc.py:12-26)
     decodes through the distributed pnts_scan."""
     import shutil
-    src = "/root/reference/tests/pointCloudRGB.pnts"
-    if not os.path.exists(src):
-        import pytest
-        pytest.skip("reference fixture unavailable")
-    shutil.copy(src, str(tmp_path / "pointCloudRGB.pnts"))
+    shutil.copy(reference_path("tests", "pointCloudRGB.pnts"),
+                str(tmp_path / "pointCloudRGB.pnts"))
     from py3dtiles_spark.sources.pnts import pnts_scan
     rows = pnts_scan(spark, str(tmp_path)).collect()
     assert len(rows) == 1000

@@ -162,40 +162,6 @@ def test_polygon_cell_cover_is_superset_of_hits(ring, cell_deg):
         assert cell in cover
 
 
-@settings(max_examples=40, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(st.integers(min_value=1, max_value=25),
-       st.integers(min_value=1, max_value=25),
-       st.integers(min_value=1, max_value=16),
-       st.randoms(use_true_random=False))
-def test_gif_roundtrip_any_shape(h, w, ncol, rnd):
-    """encode_gif -> decode_gif is the identity for ANY image shape and
-    palette size <= 256 (the encoder twin is an independent forward
-    construction, so this exercises the real LZW decoder)."""
-    from py3dtiles_spark.operators.multimodal import decode_gif, encode_gif
-    rng = np.random.default_rng(rnd.randrange(2 ** 32))
-    colors = rng.integers(0, 256, size=(ncol, 3), dtype=np.uint8)
-    img = colors[rng.integers(0, ncol, size=(h, w))]
-    assert np.array_equal(decode_gif(encode_gif(img)), img)
-
-
-@settings(max_examples=25, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(st.integers(min_value=1, max_value=20),
-       st.integers(min_value=1, max_value=20),
-       st.randoms(use_true_random=False))
-def test_jpeg_quant1_roundtrip_tolerance(h, w, rnd):
-    """Baseline-JPEG with flat quant=1 tables reconstructs ANY image
-    shape within DCT-rounding tolerance (+-3): entropy coding and the
-    DCT/IDCT pair are lossless up to coefficient rounding."""
-    from py3dtiles_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    rng = np.random.default_rng(rnd.randrange(2 ** 32))
-    img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(img))
-    assert out.shape == img.shape
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 3
-
-
 @settings(max_examples=150, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 @given(st.binary(min_size=0, max_size=64))

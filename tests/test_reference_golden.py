@@ -18,6 +18,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from conftest import needs_reference, reference_path
 from py3dtiles_spark.operators.replay import assign_subtree
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
@@ -36,11 +37,7 @@ def _cloud_for(case):
     from py3dtiles_spark.sources.ripple import ripple_cloud
     if case == "ripple_las":
         from py3dtiles_spark.sources.las import las_summary, read_las_points
-        ref = os.environ.get("PY3DTILES_REF", "/root/reference")
-        path = os.path.join(ref, "tests", "ripple.las")
-        if not os.path.exists(path):
-            pytest.skip("reference ripple.las unavailable")
-        info = las_summary(path)
+        info = las_summary(reference_path("tests", "ripple.las"))
         hdr = info["headers"][0]
         xyz, _ = read_las_points(hdr, 0, hdr.point_count)
         root_aabb = info["aabb"] - info["avg_min"]
@@ -68,7 +65,9 @@ def _cloud_for(case):
     raise ValueError(case)
 
 
-CASES = ["ripple_las", "cloud60k_quadtree", "cloud60k_octree", "skew50k"]
+CASES = [pytest.param("ripple_las",
+                      marks=needs_reference("tests", "ripple.las")),
+         "cloud60k_quadtree", "cloud60k_octree", "skew50k"]
 
 
 @pytest.mark.parametrize("case", CASES)

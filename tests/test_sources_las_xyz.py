@@ -9,16 +9,15 @@ import tempfile
 import numpy as np
 import pytest
 
+from conftest import needs_reference, reference_path
 from py3dtiles_spark.functions.crs import (
     WGS84_A, geodetic_to_ecef, tileset_transform)
 from py3dtiles_spark.sources.las import (
     las_scan, las_summary, read_las_header, read_las_points)
 from py3dtiles_spark.sources.xyz import xyz_chunks, xyz_scan
 
-REF_LAS = os.path.join(os.environ.get("PY3DTILES_REF", "/root/reference"),
-                       "tests", "ripple.las")
-needs_ref = pytest.mark.skipif(not os.path.exists(REF_LAS),
-                               reason="reference ripple.las unavailable")
+REF_LAS = reference_path("tests", "ripple.las")
+needs_ref = needs_reference("tests", "ripple.las")
 
 
 @needs_ref
@@ -207,12 +206,10 @@ def test_convert_files_ecef_path(spark, tmp_path):
     assert max(xs) < 200
 
 
-REF_LCC_LAS = os.path.join(os.environ.get("PY3DTILES_REF", "/root/reference"),
-                           "tests", "fixtures", "without_srs.las")
+REF_LCC_LAS = reference_path("tests", "fixtures", "without_srs.las")
 
 
-@pytest.mark.skipif(not os.path.exists(REF_LCC_LAS),
-                    reason="reference fixture unavailable")
+@needs_reference("tests", "fixtures", "without_srs.las")
 def test_convert_files_lambert_cc_srs_in(spark, tmp_path):
     """The one reference conversion test the engine previously could not
     run (tests/test_convert.py:29-42): srs_in=3949 (RGF93/CC49, Lambert
