@@ -85,8 +85,7 @@ def main() -> None:
     # state a long-lived executor delivers, not JVM cold-start
     warm_pts = pages_as_points(generate_pages(spark, 30_000), skew=True)
     warm_ckpt = tempfile.mkdtemp()
-    build_tiling(spark, warm_pts,
-                 TilingConfig(checkpoint_dir=warm_ckpt, checkpoint="memory"))
+    build_tiling(spark, warm_pts, TilingConfig(checkpoint_dir=warm_ckpt))
     spark.catalog.clearCache()
     shutil.rmtree(warm_ckpt, ignore_errors=True)
 
@@ -100,22 +99,6 @@ def main() -> None:
     assert res.counters["points_assigned"] == BENCH_DOCS, res.counters
     timings["flagship_tiling"] = round(time.time() - t0, 3)
     extra["docs_per_sec"] = round(BENCH_DOCS / timings["flagship_tiling"], 1)
-
-    # same job on the in-memory checkpoint path (production local mode;
-    # the headline number above keeps the durable parquet-checkpoint
-    # methodology of r1/r2 for round-over-round comparability)
-    mem_ckpt = tempfile.mkdtemp()
-    t0 = time.time()
-    res_m = build_tiling(spark, points,
-                         TilingConfig(checkpoint_dir=mem_ckpt,
-                                      checkpoint="memory",
-                                      in_kernel_threshold=40_000))
-    assert res_m.counters["points_assigned"] == BENCH_DOCS
-    extra["flagship_memory_sec"] = round(time.time() - t0, 3)
-    extra["docs_per_sec_memory"] = round(
-        BENCH_DOCS / extra["flagship_memory_sec"], 1)
-    spark.catalog.clearCache()
-    shutil.rmtree(mem_ckpt, ignore_errors=True)
 
     sentinel["tileset_emit"] = _sentinel()
     t0 = time.time()

@@ -48,9 +48,16 @@ reborn (convert.py:217-239) — those levels stay distributed (shuffled
 node_meta join; only the per-mode histogram is collected for loop
 termination and the manifest).
 
-Counters (points in / nodes / modes / phase seconds per level) land in a
-manifest JSON per level; the written==read invariant of the reference
-(convert.py:652-653) is asserted on completion.
+One checkpoint path: level N writes its kernel output once to
+checkpoint_dir/level=N/out (hive-partitioned by `accepted`), then its
+counters (points in / nodes / modes / phase seconds) to
+level=N/_MANIFEST.json; meta.json holds the root geometry. A level is done
+only once its manifest exists, so resume=True restarts at the first level
+without one (a crash between a level's write and its manifest reruns that
+level). The input is cached for level 0 alone; every later level reads the
+previous level's parquet, and the final assignments are the union of the
+levels' accepted rows. The written==read invariant of the reference
+(convert.py:652-653) is checked on completion.
 """
 
 from __future__ import annotations
@@ -120,20 +127,10 @@ class TilingConfig:
     # required for apples-to-apples scaling measurements)
     plan_parallelism: Optional[int] = None
     max_levels: int = 32
+    # every level lands here as parquet (resumable, lineage-truncating):
+    # the level snapshot is the recovery unit and feeds the final
+    # assignment read. None = a fresh temporary directory.
     checkpoint_dir: Optional[str] = None
-    # "parquet": every level lands on storage (resumable, lineage-truncating
-    #   — the 100 TB default: at cluster scale the level snapshot IS the
-    #   recovery unit and feeds the final assignment read).
-    # "memory": per-level persist(MEMORY_AND_DISK) instead of parquet —
-    #   the classic Spark iterative-algorithm shape; no per-level file
-    #   round-trip (2x less I/O + page churn per level), but not resumable
-    #   across driver restarts. Right choice for ephemeral/benchmark runs.
-    checkpoint: str = "parquet"
-    # optional approximation for extreme scale: only the first N canonical
-    # points per (node, cell) run the sequential accept loop; the rest are
-    # forwarded as rejected. None = exact reference semantics.
-    grid_sample_cap: Optional[int] = None
-    cell_count: int = GRID_INITIAL_CELL_COUNT
     # levels whose routed node list fits in this many rows ride to the
     # executors as a LocalRelation broadcast (no extra job, no broadcast
     # exchange — the sandbox/common case); bigger levels NEVER reach the
@@ -173,7 +170,6 @@ def compute_root_aabb(points: DataFrame):
 def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
     """One grouped-map kernel for all three node modes. The group is
     (tile_id, group_key); `mode` rides as a column (constant per group)."""
-    cap = cfg.grid_sample_cap
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         mode = pdf["mode"].iat[0]
@@ -259,12 +255,7 @@ def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
         pdf = base.sort_values("point_id", kind="stable").reset_index(drop=True)
         frame = node_frame(tile_id, root_aabb, root_spacing)
         xyz = pdf[["x", "y", "z"]].to_numpy(dtype=np.float32)
-        sq = frame.spacing * frame.spacing
-        if cap is not None and len(pdf) > cap:
-            accept = np.zeros(len(pdf), dtype=bool)
-            accept[:cap] = sequential_accept(xyz[:cap], sq)
-        else:
-            accept = sequential_accept(xyz, sq)
+        accept = sequential_accept(xyz, frame.spacing * frame.spacing)
         out = pdf.copy()
         out["accepted"] = accept
         rej = ~accept
@@ -304,7 +295,7 @@ def _route_nodes(pdf: pd.DataFrame, cfg: TilingConfig, root_aabb,
     sc = np.zeros((n, 3), dtype=np.float64)
     bbox = pdf[["bx0", "by0", "bz0", "bx1", "by1", "bz1"]].to_numpy(
         dtype=np.float32)
-    cells = np.full(3, cfg.cell_count, dtype=np.int32)
+    cells = np.full(3, GRID_INITIAL_CELL_COUNT, dtype=np.int32)
     for i in np.flatnonzero(~leaf & (cnt > cfg.in_kernel_threshold)):
         frame = node_frame(tids[i], root_aabb, root_spacing)
         cd = child_index_for_node(bbox[i].reshape(2, 3), frame)
@@ -359,7 +350,7 @@ def _root_route_expr(root_aabb, root_spacing):
     return digit.cast("string")
 
 
-def _native_cell_key(cfg: TilingConfig):
+def _native_cell_key():
     """group_key as a native column expression mirroring the reference
     xyz_to_key promotion exactly (distance.py:24-32): the DOUBLE scale
     column (int32 cell_count * float32 inv -> f64) times the FLOAT
@@ -367,7 +358,7 @@ def _native_cell_key(cfg: TilingConfig):
     long and clamped, packed y<<s | z<<2s. Keeping the product in f64
     matches the numpy/numba kernel bit-for-bit on boundary points where a
     float32 product would round 0.99999997 up to 1.0."""
-    c = cfg.cell_count
+    c = GRID_INITIAL_CELL_COUNT
     shift = int(c - 1).bit_length()
 
     def axis(col, mn, sc):
@@ -390,9 +381,6 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     are dropped (join payload back on point_id afterwards).
     """
     cfg = cfg or TilingConfig()
-    memory_mode = cfg.checkpoint == "memory"
-    if memory_mode and resume:
-        raise ValueError("resume=True requires checkpoint='parquet'")
     ckpt = cfg.checkpoint_dir or tempfile.mkdtemp(prefix="tiling_ckpt_")
     os.makedirs(ckpt, exist_ok=True)
 
@@ -403,10 +391,10 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     )
 
     meta_path = os.path.join(ckpt, "meta.json")
+    resumed = resume and os.path.exists(meta_path)
     start_level = 0
     counters: dict = {"levels": []}
-    input_cached = None
-    if resume and os.path.exists(meta_path):
+    if resumed:
         with open(meta_path) as f:
             meta = json.load(f)
         root_aabb = np.array(meta["root_aabb"], dtype=np.float64)
@@ -425,14 +413,16 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         for d in os.listdir(ckpt):
             if d.startswith("level="):
                 shutil.rmtree(os.path.join(ckpt, d), ignore_errors=True)
-        # r7: persist the narrow input BEFORE the AABB pass — level 0
-        # consumes the upstream lineage three times (AABB agg, per-node
-        # counts, kernel pass); caching the 21 B/point narrow rows turns
-        # three source-scan/generation executions into one. Unpersisted
-        # before return.
+
+    if start_level == 0:
+        # persist the narrow input BEFORE the AABB pass — level 0 consumes
+        # the upstream lineage three times (AABB agg, per-node counts,
+        # kernel pass); caching the 21 B/point narrow rows turns three
+        # source-scan/generation executions into one. Released as soon as
+        # level 0's checkpoint is written: later levels read only parquet.
         from pyspark import StorageLevel
         narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
-        input_cached = narrow
+    if not resumed:
         if cfg.root_aabb is not None:
             root_aabb = np.asarray(cfg.root_aabb, dtype=np.float64)
             root_spacing = (float(cfg.root_spacing)
@@ -454,12 +444,6 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         # zero Python for the full-volume level — the cheapest possible
         # level 0 at 100 TB. The route expression re-evaluates per
         # consumer pass (cheap float compares), the cached input does not.
-        if input_cached is None:
-            # resume=True with meta.json present but no completed level:
-            # the fresh-run persist above was skipped — do it here
-            from pyspark import StorageLevel
-            narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
-            input_cached = narrow
         pending = narrow.withColumn("tile_id", _root_route_expr(root_aabb,
                                                                 root_spacing))
     else:
@@ -467,7 +451,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             spark, os.path.join(ckpt, f"level={start_level - 1}", "out"))
 
     kernel = _unified_kernel(cfg, root_aabb, root_spacing)
-    group_key = _native_cell_key(cfg)
+    group_key = _native_cell_key()
     # level-total estimate for the local cutoff: the previous level's
     # points_in (this level's input is a subset of it); on resume, the
     # last completed manifest. None (level 0 of a fresh run) -> the
@@ -475,7 +459,6 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     est_total = (counters["levels"][-1]["points_in"]
                  if counters["levels"] else None)
     complete = False
-    level_dfs: list[DataFrame] = []   # memory mode: persisted level outputs
 
     # kernel groups are CPU-heavy but byte-tiny (narrow rows): AQE's
     # byte-based partition coalescing would serialize them onto a few
@@ -589,31 +572,26 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                            .groupBy("tile_id", "gk")
                            .applyInPandas(kernel, schema=KERNEL_SCHEMA))
                 out_df = nonleaf.unionByName(leaf_rows)
-            if memory_mode:
-                from pyspark import StorageLevel
-                out_df = out_df.persist(StorageLevel.MEMORY_AND_DISK)
-                out_df.count()   # materialize the level
-                level_dfs.append(out_df)
-            else:
-                # hive-partition by `accepted`: ONE write, but the next
-                # level's NOT-accepted read partition-prunes the finalized
-                # rows away entirely and the final assignments union reads
-                # only accepted=true dirs — at deep levels (mostly-leaf
-                # output) this halves checkpoint read volume, which on a
-                # fault-bound host is wall-clock.
-                # r7 (guide §6): decouple kernel parallelism from output
-                # file count — the kernel fans out at shuffle width, but
-                # its output is n_in narrow rows (~40 B each); letting
-                # every kernel/leaf task open its own dynamic-partition
-                # writers produced ~200 KB-sized files per level and paid
-                # seconds of open/commit overhead. Repartition to a
-                # size-derived file count (128 MB target) first: locally
-                # 1-2 write tasks, petabyte levels thousands — never a
-                # constant tuned to either.
-                target_files = max(1, -(-n_in * 40 // (128 << 20)))
-                (out_df.repartition(target_files)
-                 .write.mode("overwrite").partitionBy("accepted")
-                 .parquet(os.path.join(lv_dir, "out")))
+            # hive-partition by `accepted`: ONE write, but the next level's
+            # NOT-accepted read partition-prunes the finalized rows away
+            # entirely and the final assignments union reads only
+            # accepted=true dirs — at deep levels (mostly-leaf output) this
+            # halves checkpoint read volume, which on a fault-bound host is
+            # wall-clock.
+            # r7 (guide §6): decouple kernel parallelism from output file
+            # count — the kernel fans out at shuffle width, but its output
+            # is n_in narrow rows (~40 B each); letting every kernel/leaf
+            # task open its own dynamic-partition writers produced
+            # ~200 KB-sized files per level and paid seconds of open/commit
+            # overhead. Repartition to a size-derived file count (128 MB
+            # target) first: locally 1-2 write tasks, petabyte levels
+            # thousands — never a constant tuned to either.
+            target_files = max(1, -(-n_in * 40 // (128 << 20)))
+            (out_df.repartition(target_files)
+             .write.mode("overwrite").partitionBy("accepted")
+             .parquet(os.path.join(lv_dir, "out")))
+            if level == 0:
+                narrow.unpersist()
             t_kernel = time.time() - t0
             if node_meta_full is not None:
                 node_meta_full.unpersist()
@@ -622,19 +600,15 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                         "nodes": n_nodes, "modes": modes,
                         "sec_counts": round(t_counts, 3),
                         "sec_kernel": round(t_kernel, 3)}
-            if not memory_mode:
-                with open(os.path.join(lv_dir, "_MANIFEST.json"), "w") as f:
-                    json.dump(lv_stats, f)
+            with open(os.path.join(lv_dir, "_MANIFEST.json"), "w") as f:
+                json.dump(lv_stats, f)
             counters["levels"].append(lv_stats)
 
             if modes.get("cell", 0) == 0 and modes.get("express", 0) == 0:
                 # leaf/local groups fully resolve their points — nothing forwards
                 complete = True
                 break
-            if memory_mode:
-                pending = out_df.filter("NOT accepted").drop("accepted")
-            else:
-                pending = _read_pending(spark, os.path.join(lv_dir, "out"))
+            pending = _read_pending(spark, os.path.join(lv_dir, "out"))
 
     finally:
         spark.conf.set(_coalesce_key, _coalesce_prev)
@@ -642,36 +616,25 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             spark.conf.unset(_limit_key)
         else:
             spark.conf.set(_limit_key, _limit_prev)
-    if input_cached is not None:
-        input_cached.unpersist()
-    if memory_mode:
-        assignments = spark.createDataFrame([], ASSIGN_SCHEMA)
-        if level_dfs:
-            from functools import reduce
-            # filter+project each cached level BEFORE the union: unioning
-            # the raw persisted frames defeats Spark's cache lookup for one
-            # branch (the level's Python kernel silently re-executes);
-            # narrowing per-branch keeps every InMemoryTableScan
-            assignments = reduce(DataFrame.unionByName, [
-                df.filter("accepted").select("point_id", "tile_id")
-                for df in level_dfs])
+        if start_level == 0:
+            # a no-op unless the build stopped before level 0's write
+            # (empty input, an error)
+            narrow.unpersist()
+    # explicit per-level accepted=true subdirs (not a level=* glob): stale
+    # dirs from other runs can never leak in, no multi-root partition
+    # discovery, and the pending halves of every level are never even
+    # listed — the union reads exactly the finalized rows.
+    parts = []
+    for s in counters["levels"]:
+        p = os.path.join(ckpt, f"level={s['level']}", "out", "accepted=true")
+        if os.path.isdir(p):
+            parts.append(spark.read.schema(PENDING_SCHEMA).parquet(p)
+                         .select("point_id", "tile_id"))
+    if parts:
+        from functools import reduce
+        assignments = reduce(DataFrame.unionByName, parts)
     else:
-        # explicit per-level accepted=true subdirs (not a level=* glob):
-        # stale dirs from other runs can never leak in, no multi-root
-        # partition discovery, and the pending halves of every level are
-        # never even listed — the union reads exactly the finalized rows.
-        parts = []
-        for s in counters["levels"]:
-            p = os.path.join(ckpt, f"level={s['level']}", "out",
-                             "accepted=true")
-            if os.path.isdir(p):
-                parts.append(spark.read.schema(PENDING_SCHEMA).parquet(p)
-                             .select("point_id", "tile_id"))
-        if parts:
-            from functools import reduce
-            assignments = reduce(DataFrame.unionByName, parts)
-        else:
-            assignments = spark.createDataFrame([], ASSIGN_SCHEMA)
+        assignments = spark.createDataFrame([], ASSIGN_SCHEMA)
 
     counters["points_total"] = (counters["levels"][0]["points_in"]
                                 if counters["levels"] else 0)

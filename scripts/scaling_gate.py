@@ -44,7 +44,8 @@ CHILD = r"""
 import json, os, sys, tempfile, time
 sys.path.insert(0, "@@REPO@@")
 from py3dtiles_spark.session import get_spark
-from py3dtiles_spark.operators.tiling import TilingConfig, build_tiling
+from py3dtiles_spark.operators.tiling import (TilingConfig, build_tiling,
+                                              cleanup_checkpoint)
 from py3dtiles_spark.sources.pages import generate_pages, pages_as_points
 from bench import _sentinel
 
@@ -58,23 +59,15 @@ def one_run():
     # SPARK_GRAFT_LOCAL_HARD_CAP bounds the largest sequential accept
     # task (default 300k); the SAME value applies to BOTH legs, so the
     # plans stay identical — it tunes task granularity, not the plan
-    # SPARK_GRAFT_GRID_SAMPLE_CAP bounds the per-(node,cell) sequential
-    # accept loop (TilingConfig.grid_sample_cap — the engine's documented
-    # extreme-scale approximation). Bounding it makes the run a
-    # CPU-bound variant whose largest sequential unit is constant in
-    # data size, isolating ENGINE scaling from the benchmark geometry's
-    # linearly-growing hot-cell term; default None = exact reference
-    # semantics. Applied identically to both legs either way.
-    _cap = os.environ.get("SPARK_GRAFT_GRID_SAMPLE_CAP")
     cfg = TilingConfig(checkpoint_dir=tempfile.mkdtemp(),
-                       plan_parallelism=8, checkpoint="memory",
-                       grid_sample_cap=int(_cap) if _cap else None,
+                       plan_parallelism=8,
                        local_hard_cap=int(os.environ.get(
                            "SPARK_GRAFT_LOCAL_HARD_CAP", "300000")))
     t0 = time.time()
     res = build_tiling(spark, points, cfg)
     dt = time.time() - t0
     assert res.counters["points_assigned"] == n_docs
+    cleanup_checkpoint(res)
     spark.catalog.clearCache()
     return dt
 

@@ -53,50 +53,6 @@ def test_overview_sample_ratio_and_determinism(spark):
     assert abs(half - 5000) < 400       # capped at 0.5
 
 
-def _png(w, h):
-    import struct, zlib
-    ihdr = struct.pack(">II5B", w, h, 8, 2, 0, 0, 0)
-    chunk = b"IHDR" + ihdr
-    return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", len(ihdr)) + chunk
-            + struct.pack(">I", zlib.crc32(chunk)))
-
-
-def _jpeg(w, h):
-    import struct
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 3) + b"\x00\x00"
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def _wav(rate, channels, bits, n_samples):
-    import struct
-    data = b"\x00" * (n_samples * channels * bits // 8)
-    fmt = struct.pack("<HHIIHH", 1, channels, rate,
-                      rate * channels * bits // 8,
-                      channels * bits // 8, bits)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_probe_media_bytes_real_headers():
-    """The header probe is REAL: handcrafted spec-valid containers parse
-    to exact dimensions / audio params with zero codec libraries."""
-    from py3dtiles_spark.operators.multimodal import probe_media_bytes
-    p = probe_media_bytes(_png(640, 480))
-    assert (p["format"], p["width"], p["height"]) == ("png", 640, 480)
-    j = probe_media_bytes(_jpeg(1024, 768))
-    assert (j["format"], j["width"], j["height"]) == ("jpeg", 1024, 768)
-    import struct
-    g = probe_media_bytes(b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 4)
-    assert (g["format"], g["width"], g["height"]) == ("gif", 320, 200)
-    w = probe_media_bytes(_wav(16000, 2, 16, 16000))   # exactly 1 second
-    assert (w["format"], w["sample_rate"], w["channels"],
-            w["duration_ms"]) == ("wav", 16000, 2, 1000)
-    u = probe_media_bytes(b"\x00\x01\x02\x03 not media")
-    assert u["format"] == "unknown" and u["width"] is None
-
-
 def test_streaming_windowed_cell_counts(spark, tmp_path):
     src = str(tmp_path / "stream_src")
     generate_pages(spark, 500).write.parquet(src)

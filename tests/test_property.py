@@ -160,26 +160,3 @@ def test_polygon_cell_cover_is_superset_of_hits(ring, cell_deg):
     for px, py in zip(mx[inside], my[inside]):
         cell = (int(np.floor(px / cell_deg)), int(np.floor(py / cell_deg)))
         assert cell in cover
-
-
-@settings(max_examples=150, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(st.binary(min_size=0, max_size=64))
-def test_probe_media_bytes_never_crashes(payload):
-    """The header probe must classify arbitrary bytes (including
-    truncated magic prefixes) without raising — undecodable inputs are
-    data, not errors, in a curation pipeline."""
-    from py3dtiles_spark.operators.multimodal import probe_media_bytes
-    out = probe_media_bytes(payload)
-    assert out["format"] in ("png", "jpeg", "gif", "bmp", "wav", "unknown")
-
-
-@settings(max_examples=150, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(st.sampled_from([b"\x89PNG\r\n\x1a\n", b"GIF89a", b"GIF87a",
-                        b"BM", b"\xff\xd8", b"RIFF"]),
-       st.binary(min_size=0, max_size=48))
-def test_probe_media_bytes_never_crashes_on_magic_prefix(magic, tail):
-    from py3dtiles_spark.operators.multimodal import probe_media_bytes
-    out = probe_media_bytes(magic + tail)
-    assert "format" in out

@@ -81,7 +81,7 @@ def test_replay_matches_reference(case):
     assert not mismatches, (len(mismatches), mismatches[:10])
 
 
-def test_engine_matches_reference_engine_side(spark):
+def test_engine_matches_reference_engine_side(spark, tmp_path):
     """Distributed engine vs the reference golden (one representative case;
     replay==engine is covered per-case above + in test_tiling_golden)."""
     case = "cloud60k_quadtree"
@@ -92,7 +92,7 @@ def test_engine_matches_reference_engine_side(spark):
         {"point_id": ids, "x": xyz[:, 0], "y": xyz[:, 1], "z": xyz[:, 2]}))
     res = build_tiling(spark, pts, TilingConfig(
         scale=scale, root_aabb=root_aabb, root_spacing=root_spacing,
-        in_kernel_threshold=10_000, checkpoint="memory"))
+        in_kernel_threshold=10_000, checkpoint_dir=str(tmp_path / "ckpt")))
     got = {r.point_id: r.tile_id for r in res.assignments.collect()}
     bad = [(i, expected[i], got[i]) for i in got if expected[i] != got[i]]
     assert not bad, (len(bad), bad[:10])

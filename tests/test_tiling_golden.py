@@ -75,26 +75,80 @@ def test_root_aabb_and_leaf_small_cloud(spark, tmp_path):
     cleanup_checkpoint(res)
 
 
-def test_resume_from_checkpoint(spark, tmp_path):
-    """Interrupt after level 0, resume, and still match the replay exactly
-    (the north_rule resumability requirement)."""
+# ripple cloud whose build runs three levels (cell, cell, leaf): a pinned
+# plan_parallelism keeps the local cutoff at in_kernel_threshold, so the
+# level-1 nodes fan out per cell instead of finishing in one task
+_THREE_LEVEL_CFG = dict(split_threshold=500, in_kernel_threshold=500,
+                        plan_parallelism=64)
+
+
+def _manifests(ckpt):
+    import json
+    return [json.loads(m.read_text())
+            for m in sorted(ckpt.glob("level=*/_MANIFEST.json"),
+                            key=lambda m: int(m.parent.name.split("=")[1]))]
+
+
+@pytest.mark.parametrize("crash_level", [0, 1, 2])
+def test_resume_from_checkpoint(spark, tmp_path, crash_level):
+    """Crash between level k's parquet write and its _MANIFEST.json
+    (manifests of levels >= k and directories of levels > k removed, level
+    k's parquet kept), resume, and still match the uninterrupted build and
+    the replay exactly (the north_rule resumability requirement). Every
+    completed level's manifest equals its counters entry."""
+    import shutil
+
     ids, xyz = ripple_cloud(20_000)
-    expected, _, _ = replay_tiling(ids, xyz, split_threshold=1500)
-
-    ckpt = str(tmp_path / "resume")
-    cfg1 = TilingConfig(split_threshold=1500, in_kernel_threshold=3000,
-                        checkpoint_dir=ckpt, max_levels=1)
+    expected, _, _ = replay_tiling(ids, xyz, split_threshold=500)
+    ckpt = tmp_path / "resume"
+    cfg = TilingConfig(**_THREE_LEVEL_CFG, checkpoint_dir=str(ckpt))
     df = _points_df(spark, ids, xyz)
-    partial = build_tiling(spark, df, cfg1)
-    assert not partial.counters["complete"]
+    full = build_tiling(spark, df, cfg)
+    levels = full.counters["levels"]
+    assert len(levels) >= 3 and full.counters["complete"]
+    assert _manifests(ckpt) == levels
+    uninterrupted = {r.point_id: r.tile_id
+                     for r in full.assignments.collect()}
 
-    cfg2 = TilingConfig(split_threshold=1500, in_kernel_threshold=3000,
-                        checkpoint_dir=ckpt)
-    res = build_tiling(spark, df, cfg2, resume=True)
+    for lv in levels[crash_level + 1:]:
+        shutil.rmtree(ckpt / f"level={lv['level']}")
+    crashed = ckpt / f"level={crash_level}"
+    (crashed / "_MANIFEST.json").unlink()
+    assert (crashed / "out").is_dir()
+
+    res = build_tiling(spark, df, cfg, resume=True)
     assert res.counters["complete"]
-    assert res.counters["levels"][0]["level"] == 0  # counters carried over
+    assert res.counters["levels"][:crash_level] == levels[:crash_level]
+    assert ([lv["level"] for lv in res.counters["levels"]]
+            == [lv["level"] for lv in levels])
+    assert _manifests(ckpt) == res.counters["levels"]
     got = {r.point_id: r.tile_id for r in res.assignments.collect()}
+    assert got == uninterrupted
     assert all(got[int(i)] == t for i, t in zip(ids, expected))
+    cleanup_checkpoint(res)
+
+
+def test_input_released_after_level_zero(spark, tmp_path, monkeypatch):
+    """The cached input serves level 0 only: by the time level 1 reads its
+    pending rows from parquet, no RDD the build persisted is left."""
+    from py3dtiles_spark.operators import tiling
+
+    jsc = spark.sparkContext._jsc
+    reads = []
+    read_pending = tiling._read_pending
+
+    def spy(spark_, out_dir):
+        reads.append(jsc.getPersistentRDDs().size())
+        return read_pending(spark_, out_dir)
+
+    monkeypatch.setattr(tiling, "_read_pending", spy)
+    ids, xyz = ripple_cloud(20_000)
+    df = _points_df(spark, ids, xyz)
+    before = jsc.getPersistentRDDs().size()
+    res = build_tiling(spark, df, TilingConfig(
+        **_THREE_LEVEL_CFG, checkpoint_dir=str(tmp_path / "release")))
+    assert reads and reads[0] == before, (before, reads)
+    assert jsc.getPersistentRDDs().size() == before
     cleanup_checkpoint(res)
 
 

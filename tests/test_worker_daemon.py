@@ -150,8 +150,8 @@ def test_workers_start_without_pythonpath(tmp_path):
 
         spark = get_spark("workers-no-pythonpath", cpus=2)
         points = pages_as_points(generate_pages(spark, 60_000))
-        res = build_tiling(spark, points, TilingConfig(checkpoint="memory",
-                                                       split_threshold=5000))
+        res = build_tiling(spark, points, TilingConfig(
+            checkpoint_dir={str(tmp_path / "ckpt")!r}, split_threshold=5000))
         print(json.dumps({{"assigned": res.counters["points_assigned"],
                            "total": res.counters["points_total"],
                            "modes": [m for lv in res.counters["levels"]
