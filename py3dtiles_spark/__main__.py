@@ -293,82 +293,49 @@ def main(argv=None) -> int:
         return 0
 
     # convert
-    from py3dtiles_spark.operators.tiling import TilingConfig, build_tiling
-    from py3dtiles_spark.operators.tileset import (
-        build_tiles_df, build_tileset_json_distributed,
-        rollup_small_children)
-    from py3dtiles_spark.sources.pages import generate_pages, pages_as_points
-
-    import time as _time
-    t_start = _time.time()
+    import time
+    from py3dtiles_spark.operators.tiling import TilingConfig
+    t_start = time.time()
     if args.overwrite and os.path.isdir(args.output):
-        import shutil as _shutil
-        _shutil.rmtree(args.output)
+        import shutil
+        shutil.rmtree(args.output)
 
-    ext = os.path.splitext((args.input or "").split(",")[0])[1].lower()
-    if ext in (".las", ".xyz"):
+    cfg = TilingConfig(split_threshold=args.split_threshold,
+                       checkpoint_dir=os.path.join(args.output, "checkpoint"))
+    paths = args.input.split(",") if args.input else []
+    if paths and os.path.splitext(paths[0])[1].lower() in (".las", ".xyz"):
         from py3dtiles_spark.plans.convert import convert_files
-        cfg = TilingConfig(split_threshold=args.split_threshold,
-                           checkpoint_dir=os.path.join(args.output, "checkpoint"))
-        res = convert_files(spark, args.input.split(","), out_dir=args.output,
+        res = convert_files(spark, paths, out_dir=args.output,
                             srs_in=args.srs_in, srs_out=args.srs_out,
                             fraction=args.fraction, cfg=cfg, rgb=args.rgb,
                             color_scale=args.color_scale,
-                            write_pnts=args.write_pnts)
-        print(json.dumps({"points": res.counters.get("points_assigned"),
-                          "levels": len(res.counters["levels"]),
-                          "tiles": res.tiles.count(),
-                          "root_scale": res.root_scale,
-                          "tileset_docs": list(res.tileset_docs)}))
-        if args.benchmark:
-            # reference benchmark line (convert.py:668-673):
-            # label,basenames,points,seconds
-            names = ",".join(os.path.basename(f)
-                             for f in args.input.split(","))
-            print(f"{args.benchmark},{names},"
-                  f"{res.counters.get('points_assigned')},"
-                  f"{round(_time.time() - t_start, 1)}")
-        _emit_graph(spark, graph_log_dir, args.output)
-        return 0
-
-    if args.n_docs:
-        points = pages_as_points(generate_pages(spark, args.n_docs),
-                                 skew=args.skew)
+                            write_pnts=args.write_pnts, resume=args.resume)
     else:
-        df = spark.read.parquet(args.input)
-        if "point_id" in df.columns:
-            points = df
+        from py3dtiles_spark.plans.pipeline import tile_points
+        from py3dtiles_spark.sources.pages import (
+            generate_pages, pages_as_points)
+        if args.n_docs:
+            points = pages_as_points(generate_pages(spark, args.n_docs),
+                                     skew=args.skew)
         else:
-            points = pages_as_points(df, skew=args.skew)
-
-    os.makedirs(args.output, exist_ok=True)
-    cfg = TilingConfig(split_threshold=args.split_threshold,
-                       checkpoint_dir=os.path.join(args.output, "checkpoint"))
-    res = build_tiling(spark, points, cfg, resume=args.resume)
-
-    assigned = points.join(res.assignments, "point_id")
-    assigned = rollup_small_children(assigned)
-    tiles = build_tiles_df(assigned)
-    # distributed assembly: spilled subtree docs are written executor-side
-    # straight into the output dir (None markers); the driver writes only
-    # the root-composition docs
-    docs = build_tileset_json_distributed(tiles, res.root_aabb,
-                                          res.root_spacing, cfg.scale,
-                                          output_dir=args.output)
-    for name, doc in docs.items():
-        if doc is None:
-            continue
-        with open(os.path.join(args.output, name), "w") as f:
-            json.dump(doc, f)
-    if args.write_pnts:
-        from py3dtiles_spark.sources.pnts import tiles_to_pnts_df, write_pnts_files
-        n = write_pnts_files(tiles_to_pnts_df(assigned.select(
-            "point_id", "x", "y", "z", "tile_id")), args.output)
-        print(f"wrote {n} pnts files")
-    print(json.dumps({"points": res.counters.get("points_assigned"),
-                      "levels": len(res.counters["levels"]),
-                      "tiles": tiles.count(),
-                      "tileset_docs": list(docs)}))
+            points = spark.read.parquet(args.input)
+            if "point_id" not in points.columns:
+                points = pages_as_points(points, skew=args.skew)
+        res = tile_points(spark, points, cfg, resume=args.resume,
+                          out_dir=args.output, write_pnts=args.write_pnts)
+    n_points = res.tiling.counters.get("points_assigned")
+    print(json.dumps({"points": n_points,
+                      "levels": len(res.tiling.counters["levels"]),
+                      "tiles": res.n_tiles,
+                      "root_scale": cfg.scale,
+                      "tileset_docs": list(res.tileset_docs)}))
+    if args.benchmark:
+        # reference benchmark line (convert.py:668-673):
+        # label,basenames,points,seconds
+        names = (",".join(os.path.basename(f) for f in paths)
+                 or f"{args.n_docs} docs")
+        print(f"{args.benchmark},{names},{n_points},"
+              f"{round(time.time() - t_start, 1)}")
     _emit_graph(spark, graph_log_dir, args.output)
     return 0
 

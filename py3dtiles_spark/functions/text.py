@@ -115,8 +115,8 @@ def _shingle_hashes(toks: Column, shingle_tokens: int) -> Column:
     """md5 hex of every `shingle_tokens`-token rolling window of `toks`
     (array<string>): sequence + slice + array_join + md5, all native.
     This is the PUBLIC fingerprint rule — its hex values are
-    oracle-visible (fingerprint(), streaming pipeline), so the hash
-    stays md5; operators that only COUNT windows use _shingle_hashes64."""
+    oracle-visible (fingerprint()), so the hash stays md5; operators that
+    only COUNT windows use _shingle_hashes64."""
     return _let(toks, lambda t: F.transform(
         _win_starts(t, shingle_tokens),
         lambda i: F.md5(F.array_join(F.slice(t, i, shingle_tokens),

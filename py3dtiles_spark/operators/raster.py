@@ -45,8 +45,7 @@ def explode_rect_cells(rects: DataFrame, cell_size: float,
     every other column passes through. Coverage rule: cell CENTER inside
     the rectangle (GDAL ALL_TOUCHED=FALSE analogue); empty ranges guarded
     (a rect thinner than a cell may cover nothing). Pure native and
-    stateless, so it composes into batch aggregation (rasterize_rects)
-    and streaming windowed rollups (windowed_raster_stream) alike."""
+    stateless, so it composes into any aggregation (rasterize_rects)."""
     kx0, kx1 = _cell_range(F.col(x0), F.col(x1), cell_size)
     ky0, ky1 = _cell_range(F.col(y0), F.col(y1), cell_size)
     empty = F.array().cast("array<long>")

@@ -328,21 +328,13 @@ def root_overview(points_with_tiles: DataFrame, root_aabb, root_spacing,
     import pandas as pd
     from py3dtiles_spark.functions.geometry import (
         GRID_INITIAL_CELL_COUNT, node_frame, sequential_accept)
+    from py3dtiles_spark.operators.tiling import grid_cell_key
 
     frame = node_frame("", root_aabb, root_spacing)
-    c = GRID_INITIAL_CELL_COUNT
-    inv = np.float32(1.0) / frame.size
-    scale = np.array([c] * 3, dtype=np.int32) * inv      # int32*f32 -> f64
-    shift = int(c - 1).bit_length()
-
-    def axis(col, mn, sc):
-        diff = (F.col(col).cast("float") - F.lit(float(mn)).cast("float"))
-        prod = F.lit(float(sc)) * diff.cast("double")
-        return F.least(F.greatest(prod.cast("long"), F.lit(0)), F.lit(c - 1))
-
-    key = (axis("x", frame.aabb[0][0], scale[0])
-           + F.shiftleft(axis("y", frame.aabb[0][1], scale[1]), shift)
-           + F.shiftleft(axis("z", frame.aabb[0][2], scale[2]), 2 * shift))
+    inv = np.float32(1.0) / frame.size     # int32 * f32 -> f64 below
+    scale = np.array([GRID_INITIAL_CELL_COUNT] * 3, dtype=np.int32) * inv
+    key = grid_cell_key([F.lit(float(v)) for v in frame.aabb[0]],
+                        [F.lit(float(v)) for v in scale])
 
     sq = (2.0 * float(root_spacing)) ** 2
     cols = ["point_id", "x", "y", "z"] + (["r", "g", "b"] if include_rgb else [])

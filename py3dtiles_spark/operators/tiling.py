@@ -350,26 +350,22 @@ def _root_route_expr(root_aabb, root_spacing):
     return digit.cast("string")
 
 
-def _native_cell_key():
-    """group_key as a native column expression mirroring the reference
-    xyz_to_key promotion exactly (distance.py:24-32): the DOUBLE scale
-    column (int32 cell_count * float32 inv -> f64) times the FLOAT
+def grid_cell_key(mn, sc):
+    """The reference xyz_to_key promotion (distance.py:24-32) as a native
+    column expression; `mn`/`sc` are per-axis Columns, literal or per-row:
+    the DOUBLE scale (int32 cell_count * float32 inv -> f64) times the FLOAT
     (xyz - aabb_min) difference widened to double (exact), truncated to
-    long and clamped, packed y<<s | z<<2s. Keeping the product in f64
+    long and clamped, packed x | y<<s | z<<2s. Keeping the product in f64
     matches the numpy/numba kernel bit-for-bit on boundary points where a
     float32 product would round 0.99999997 up to 1.0."""
     c = GRID_INITIAL_CELL_COUNT
     shift = int(c - 1).bit_length()
-
-    def axis(col, mn, sc):
-        diff = (F.col(col).cast("float") - F.col(mn).cast("float")).cast("float")
-        prod = F.col(sc) * diff.cast("double")
-        return F.least(F.greatest(prod.cast("long"), F.lit(0)), F.lit(c - 1))
-
-    key = (axis("x", "mnx", "sx")
-           + F.shiftleft(axis("y", "mny", "sy"), shift)
-           + F.shiftleft(axis("z", "mnz", "sz"), 2 * shift))
-    return F.when(F.col("mode") == "cell", key).otherwise(F.lit(0))
+    kx, ky, kz = (
+        F.least(F.greatest(
+            (s * (F.col(a).cast("float") - m.cast("float")).cast("double"))
+            .cast("long"), F.lit(0)), F.lit(c - 1))
+        for a, m, s in zip("xyz", mn, sc))
+    return kx + F.shiftleft(ky, shift) + F.shiftleft(kz, 2 * shift)
 
 
 def build_tiling(spark: SparkSession, points: DataFrame,
@@ -451,7 +447,10 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             spark, os.path.join(ckpt, f"level={start_level - 1}", "out"))
 
     kernel = _unified_kernel(cfg, root_aabb, root_spacing)
-    group_key = _native_cell_key()
+    # the grid key of cell-mode rows (node_meta's per-node mn*/s* terms)
+    group_key = F.when(F.col("mode") == "cell", grid_cell_key(
+        [F.col(c) for c in ("mnx", "mny", "mnz")],
+        [F.col(c) for c in ("sx", "sy", "sz")])).otherwise(F.lit(0))
     # level-total estimate for the local cutoff: the previous level's
     # points_in (this level's input is a subset of it); on resume, the
     # last completed manifest. None (level 0 of a fresh run) -> the

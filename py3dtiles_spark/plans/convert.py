@@ -9,38 +9,32 @@ Spark physical strategy:
 3. root_scale in {1, 0.1, 0.01} from base spacing (convert.py:428-435)
 4. distributed portion read with the affine chain baked in (S2)
 5. level-synchronous octree build (operators/tiling.py)
-6. rollup + tiles table + tileset.json with the root `transform` =
-   T(offset) . S(1/scale) . R^-1 (convert.py:36-41)
-7. optional pnts emission (executor-side files or parquet payload rows)
+6. points -> tileset plan (plans/pipeline.tile_points) with the root
+   `transform` = T(offset) . S(1/scale) . R^-1 (convert.py:36-41)
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from py3dtiles_spark.functions.crs import (
     ecef_alignment_rotation, geodetic_to_ecef, tileset_transform)
 from py3dtiles_spark.functions.geometry import compute_spacing
-from py3dtiles_spark.operators.tileset import (
-    build_tiles_df, build_tileset_json_distributed, rollup_small_children)
-from py3dtiles_spark.operators.tiling import TilingConfig, TilingResult, build_tiling
+from py3dtiles_spark.operators.tiling import TilingConfig
+from py3dtiles_spark.plans.pipeline import TiledPoints, tile_points
 from py3dtiles_spark.sources.las import las_scan, las_summary
 from py3dtiles_spark.sources.xyz import xyz_scan, xyz_summary
 
 
 @dataclass
-class ConvertResult:
-    tiles: DataFrame
-    tileset_docs: dict
-    tiling: TilingResult
-    offset: np.ndarray
-    root_scale: float
+class ConvertResult(TiledPoints):
+    offset: np.ndarray = None
+    root_scale: float = 1.0
     rotation: np.ndarray | None = None
-    counters: dict = field(default_factory=dict)
 
 
 def pick_root_scale(base_spacing: float) -> float:
@@ -57,7 +51,8 @@ def convert_files(spark: SparkSession, paths, out_dir: str | None = None,
                   rgb: bool = True, fraction: int = 100,
                   cfg: TilingConfig | None = None,
                   color_scale: float | None = None,
-                  write_pnts: bool = False) -> ConvertResult:
+                  write_pnts: bool = False,
+                  resume: bool = False) -> ConvertResult:
     """The reference `convert()` as a Spark plan. srs_out=4978 with
     srs_in=4326/4979 triggers the ECEF + alignment-rotation path;
     srs_in in {2154, 3942..3950} (Lambert conformal conic) additionally
@@ -157,57 +152,17 @@ def convert_files(spark: SparkSession, paths, out_dir: str | None = None,
             .cast("float").alias("z"),
             "r", "g", "b")
 
+    if not rgb:
+        points = points.drop("r", "g", "b")
     cfg = cfg or TilingConfig()
     cfg.scale = root_scale
     # exact reference parity: the tree folds from the header-derived
     # float64 aabb, not a float32 re-aggregation of the points
     cfg.root_aabb = root_aabb
     cfg.root_spacing = compute_spacing(root_aabb)
-    if out_dir and not cfg.checkpoint_dir:
-        cfg.checkpoint_dir = os.path.join(out_dir, "checkpoint")
-
-    narrow = points.select("point_id", "x", "y", "z")
-    tiling = build_tiling(spark, narrow, cfg)
-
-    assigned = points.join(tiling.assignments, "point_id")
-    assigned = rollup_small_children(assigned)
-    tiles = build_tiles_df(assigned)
-
-    transform = tileset_transform(avg_min, root_scale, rotation)
-    docs = build_tileset_json_distributed(tiles, tiling.root_aabb,
-                                          tiling.root_spacing,
-                                          scale=root_scale,
-                                          transform=transform,
-                                          output_dir=out_dir or None)
-    # the root's content is the 2x-spacing overview of its children
-    # (reference convert.py:44-66) — reference it even when pnts emission
-    # is skipped, matching the reference tileset shape
-    docs["tileset.json"]["root"]["content"] = {"uri": "r.pnts"}
-    if out_dir:
-        os.makedirs(out_dir, exist_ok=True)
-        import json
-        for name, doc in docs.items():
-            if doc is None:      # spilled subtree already written executor-side
-                continue
-            with open(os.path.join(out_dir, name), "w") as f:
-                json.dump(doc, f)
-        if write_pnts:
-            from py3dtiles_spark.operators.tileset import root_overview
-            from py3dtiles_spark.sources.pnts import (
-                tiles_to_pnts_df, write_pnts_files)
-            cols = ["point_id", "x", "y", "z", "tile_id"]
-            if rgb:
-                cols += ["r", "g", "b"]
-            write_pnts_files(
-                tiles_to_pnts_df(assigned.select(cols), include_rgb=rgb),
-                out_dir)
-            ov = root_overview(assigned.select(cols), tiling.root_aabb,
-                               tiling.root_spacing, include_rgb=rgb)
-            write_pnts_files(
-                tiles_to_pnts_df(ov.withColumn("tile_id", F.lit("")),
-                                 include_rgb=rgb),
-                out_dir)
-
-    return ConvertResult(tiles=tiles, tileset_docs=docs, tiling=tiling,
-                         offset=avg_min, root_scale=root_scale,
-                         rotation=rotation, counters=tiling.counters)
+    res = tile_points(spark, points, cfg, resume=resume,
+                      transform=tileset_transform(avg_min, root_scale,
+                                                  rotation),
+                      out_dir=out_dir, write_pnts=write_pnts)
+    return ConvertResult(**vars(res), offset=avg_min, root_scale=root_scale,
+                         rotation=rotation)

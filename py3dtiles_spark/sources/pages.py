@@ -16,7 +16,7 @@ hash join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 _VOCAB = [
     "the", "data", "web", "page", "crawl", "spark", "tile", "point", "cloud",
@@ -89,18 +89,20 @@ def geocode(pages: DataFrame, skew: bool = False) -> DataFrame:
     return pages.withColumn("x", lon).withColumn("y", lat).withColumn("z", elev)
 
 
-def pages_as_points(pages: DataFrame, skew: bool = False) -> DataFrame:
-    """Narrow (point_id, x, y, z) view for the tiler.
+def page_ids(pages: DataFrame) -> Column:
+    """The point_id of each page: the table's own unique surrogate key
+    (page_id) when present — REQUIRED at 10^12-doc scale, where a 64-bit url
+    hash would produce ~30k expected birthday collisions and break the
+    written==read invariant. The xxhash64(url) fallback is a convenience for
+    ad-hoc tables without a key column and is only collision-safe at test
+    scale (<~1e8 rows)."""
+    return (F.col("page_id").cast("long") if "page_id" in pages.columns
+            else F.xxhash64("url"))
 
-    point_id is the table's own unique surrogate key (page_id) when present
-    — REQUIRED at 10^12-doc scale, where a 64-bit url hash would produce
-    ~30k expected birthday collisions and break the written==read invariant.
-    The xxhash64(url) fallback is a convenience for ad-hoc tables without a
-    key column and is only collision-safe at test scale (<~1e8 rows)."""
-    geo = geocode(pages, skew=skew)
-    pid = (F.col("page_id").cast("long") if "page_id" in pages.columns
-           else F.xxhash64("url"))
-    return geo.select(
-        pid.alias("point_id"),
+
+def pages_as_points(pages: DataFrame, skew: bool = False) -> DataFrame:
+    """Narrow (point_id, x, y, z) view for the tiler."""
+    return geocode(pages, skew=skew).select(
+        page_ids(pages).alias("point_id"),
         F.col("x").cast("float"), F.col("y").cast("float"),
         F.col("z").cast("float"))

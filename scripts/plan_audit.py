@@ -329,6 +329,25 @@ def main():
             if "tiles.collect()" in f.read():
                 ts_bad.append((rel, "tiles.collect() at a production "
                                     "call site"))
+    # one points -> tileset plan: inside the engine only plans/pipeline.py
+    # (tile_points) runs the assembly, so copies of the tail cannot return
+    pkg = os.path.join(repo, "py3dtiles_spark")
+    for dirpath, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, repo)
+            if not name.endswith(".py") or rel == os.path.join(
+                    "py3dtiles_spark", "plans", "pipeline.py"):
+                continue
+            with open(path) as f:
+                calls = [n for n in ast.walk(ast.parse(f.read()))
+                         if isinstance(n, ast.Call)]
+            for node in calls:
+                callee = getattr(node.func, "id", None) or getattr(
+                    node.func, "attr", None)
+                if callee == "build_tileset_json_distributed":
+                    ts_bad.append((rel, node.lineno, "tileset assembly "
+                                   "outside plans/pipeline.py"))
     mark = "PASS" if not ts_bad else "FAIL"
     if ts_bad:
         failures += len(ts_bad)

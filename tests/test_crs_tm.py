@@ -177,7 +177,7 @@ def test_convert_files_utm_srs_in(spark, tmp_path):
 
     res = convert_files(spark, str(xyz), srs_in=32633, srs_out=4978,
                         out_dir=str(tmp_path / "out"), write_pnts=True)
-    assert res.counters["points_assigned"] == 400
+    assert res.tiling.counters["points_assigned"] == 400
     assert res.rotation is not None
     assert os.path.exists(str(tmp_path / "out" / "tileset.json"))
 

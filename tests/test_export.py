@@ -8,6 +8,7 @@ import os
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from conftest import needs_reference, reference_path
 from py3dtiles_spark.functions.wkb import (
@@ -398,9 +399,84 @@ def test_vector_tileset_orphan_node_raises(spark, level):
     assert len(cut) == len(rows) - 1
     named = re.escape(str(children[0]))
     with pytest.raises(ValueError, match=named):
-        build_vector_tileset(cut)
+        build_vector_tileset(_as_dicts(cut))
     cut_df = spark.createDataFrame(cut, boxes.schema)
     for k in (1, 2):
         with pytest.raises(ValueError, match=named):
             build_vector_tileset_distributed(cut_df, subtree_depth=k)
     boxes.unpersist()
+
+
+_BOX_SCHEMA = ("level int, cell_x long, cell_y long, bx0 double, by0 double, "
+               "bz0 double, bx1 double, by1 double, bz1 double, "
+               "n_features long")
+
+# a random sparse quadtree: every leaf path (level-0 cell, child quadrant
+# digits, box jitter) adds itself and all its ancestors, so the node set
+# is parent-closed by construction
+_leaf_paths = st.lists(
+    st.tuples(st.integers(0, 1), st.lists(st.integers(0, 3), max_size=4),
+              st.floats(0.0, 1.0)),
+    min_size=1, max_size=10)
+
+
+def _quadtree_rows(paths) -> list:
+    nodes = {}
+    for cx0, digits, jitter in paths:
+        key = (0, cx0, 0)
+        keys = [key]
+        for d in digits:
+            key = (key[0] + 1, key[1] * 2 + (d >> 1), key[2] * 2 + (d & 1))
+            keys.append(key)
+        for level, cx, cy in keys:
+            if (level, cx, cy) not in nodes:
+                size = 1000.0 / 2 ** level
+                x0, z0 = cx * size + jitter, cy * size + jitter * 0.5
+                nodes[(level, cx, cy)] = (
+                    level, cx, cy, x0, -3.0 - jitter, z0,
+                    x0 + size * (0.25 + jitter / 2), 1.0,
+                    z0 + size / 3, 1 + len(nodes))
+    return sorted(nodes.values())
+
+
+def _as_dicts(rows) -> list:
+    names = [f.split()[0] for f in _BOX_SCHEMA.split(", ")]
+    return [dict(zip(names, r)) for r in rows]
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(paths=_leaf_paths, data=st.data())
+def test_vector_tileset_random_sparse_quadtrees(spark, paths, data):
+    """Random sparse parent-closed trees: the distributed builder is
+    byte-identical to the monolithic one at subtree_depth 1-3, and with
+    one non-root parent dropped both raise a ValueError naming an
+    orphan."""
+    import re
+
+    from py3dtiles_spark.operators.export import (
+        build_vector_tileset, build_vector_tileset_distributed)
+
+    rows = _quadtree_rows(paths)
+    mono = json.dumps(build_vector_tileset(_as_dicts(rows)))
+    boxes = spark.createDataFrame(rows, _BOX_SCHEMA)
+    for k in (1, 2, 3):
+        assert json.dumps(build_vector_tileset_distributed(
+            boxes, subtree_depth=k)) == mono, f"subtree_depth={k}"
+
+    keys = {r[:3] for r in rows}
+    parents = sorted({(lv - 1, cx >> 1, cy >> 1) for lv, cx, cy in keys
+                      if lv >= 2})
+    if not parents:
+        return
+    gone = data.draw(st.sampled_from(parents), label="dropped parent")
+    orphan = min(k for k in keys
+                 if (k[0] - 1, k[1] >> 1, k[2] >> 1) == gone)
+    cut = [r for r in rows if r[:3] != gone]
+    named = re.escape(str(orphan))
+    with pytest.raises(ValueError, match=named):
+        build_vector_tileset(_as_dicts(cut))
+    cut_df = spark.createDataFrame(cut, _BOX_SCHEMA)
+    for k in (1, 2, 3):
+        with pytest.raises(ValueError, match=named):
+            build_vector_tileset_distributed(cut_df, subtree_depth=k)

@@ -53,69 +53,12 @@ def test_pipeline_skew_variant(spark, tmp_path):
     pages = generate_pages(spark, 3000)
     cfg = TilingConfig(split_threshold=400, in_kernel_threshold=1000,
                        checkpoint_dir=str(tmp_path / "skew"))
-    res = tile_pages(spark, pages, cfg, skew=True, build_json=False)
+    res = tile_pages(spark, pages, cfg, skew=True)
     assert res.tiling.counters["points_assigned"] == 3000
     # the tile histogram is skewed: megacity tiles are much hotter than the
     # uniform background, yet the run completes with exact counts
     counts = sorted(r.point_count for r in res.tiles.collect())
     assert counts[-1] > 3 * counts[len(counts) // 2]
-
-
-def test_sessionized_cell_activity_stateful(spark, tmp_path):
-    """applyInPandasWithState session windows keyed by spatial cell:
-    two availableNow runs against one checkpoint — the second batch's
-    watermark closes the first batch's sessions deterministically."""
-    import pandas as pd
-    from py3dtiles_spark.streaming.pipeline import (
-        cell_assignments_stream, sessionized_cell_activity,
-        stream_pages_from_files)
-
-    src = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-
-    def write_batch(name, t0, urls):
-        pdf = pd.DataFrame({
-            "url": urls,
-            "warc_ts": pd.Timestamp(t0),
-            "html": [b""] * len(urls),
-            "text": ["x"] * len(urls),
-            "lang": ["en"] * len(urls)})
-        spark.createDataFrame(pdf).write.parquet(str(src / name))
-
-    # batch A: one burst (urls hash wherever, we just need >=1 session)
-    write_batch("a.parquet", "2025-01-01 00:00:00",
-                [f"https://h/{i}" for i in range(50)])
-
-    out_dir = str(tmp_path / "out")
-
-    def run_once():
-        stream = stream_pages_from_files(spark, str(src) + "/*")
-        sess = sessionized_cell_activity(
-            cell_assignments_stream(stream), gap="30 minutes",
-            watermark="10 minutes")
-        q = (sess.writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-        return spark.read.schema(
-            "cell_id long, session_start timestamp, "
-            "session_end timestamp, docs long").parquet(out_dir)
-
-    out1 = run_once()
-    assert out1.count() == 0            # sessions still open
-
-    # batch B: 6 hours later — watermark passes every A-session's gap
-    write_batch("b.parquet", "2025-01-01 06:00:00",
-                [f"https://h/b{i}" for i in range(10)])
-    out2 = run_once()
-    rows = out2.collect()
-    assert len(rows) >= 1
-    assert all(r.docs >= 1 for r in rows)
-    assert all(r.session_end >= r.session_start for r in rows)
-    total_docs = sum(r.docs for r in rows)
-    assert total_docs == 50             # exactly batch A's records
 
 
 def test_salted_join_matches_plain(spark):

@@ -150,7 +150,7 @@ def test_convert_files_las_end_to_end(spark, tmp_path):
     from py3dtiles_spark.plans.convert import convert_files
     out = str(tmp_path / "tiles")
     res = convert_files(spark, REF_LAS, out_dir=out, write_pnts=True)
-    assert res.counters["points_assigned"] == 10201
+    assert res.tiling.counters["points_assigned"] == 10201
     assert res.root_scale == 1.0
     with open(os.path.join(out, "tileset.json")) as f:
         ts = json.load(f)
@@ -193,7 +193,7 @@ def test_convert_files_ecef_path(spark, tmp_path):
         for a, b, c in zip(lon, lat, h):
             f.write(f"{a:.8f} {b:.8f} {c:.3f}\n")
     res = convert_files(spark, str(path), srs_in=4326, srs_out=4978)
-    assert res.counters["points_assigned"] == 2000
+    assert res.tiling.counters["points_assigned"] == 2000
     assert res.rotation is not None
     assert res.root_scale == pytest.approx(0.01)   # ~13 km bbox -> 0.01 rule
     # after alignment + offset + scale the cloud is near the origin, flat
@@ -224,7 +224,7 @@ def test_convert_files_lambert_cc_srs_in(spark, tmp_path):
 
     res = convert_files(spark, REF_LCC_LAS, srs_in=3949, srs_out=4978,
                         out_dir=str(tmp_path / "out"), write_pnts=True)
-    assert res.counters["points_assigned"] == 10
+    assert res.tiling.counters["points_assigned"] == 10
     assert res.rotation is not None
     assert os.path.exists(str(tmp_path / "out" / "tileset.json"))
     assert os.path.exists(str(tmp_path / "out" / "r.pnts"))
@@ -260,3 +260,58 @@ def test_xyz_ragged_majority_vote(spark, tmp_path):
     assert xyz.shape == (3, 3)                   # majority = 6 cols
     assert rgb is not None and rgb.shape == (3, 3)
     assert rgb[0].tolist() == [10.0, 20.0, 30.0]
+
+
+def _sparse_cloud(path):
+    """A flat 100 x 100 XYZ cloud: 7,500 points in each of three quadrants
+    and 40 in the fourth, whose depth-1 tile rolls up into the root.
+    Returns the 40 points."""
+    rng = np.random.default_rng(11)
+    parts = [np.c_[rng.uniform(0, 50, (7500, 2)) + off,
+                   rng.uniform(0, 1, 7500)]
+             for off in ((0, 0), (50, 0), (0, 50))]
+    small = np.c_[rng.uniform(50.5, 99.5, (40, 2)), rng.uniform(0, 1, 40)]
+    np.savetxt(path, np.vstack(parts + [small]), fmt="%.4f")
+    return np.round(small, 4)
+
+
+def test_root_pnts_keeps_rolled_up_points(spark, tmp_path):
+    """r.pnts has one writer: the points of a depth-1 tile under 100
+    points belong to the root tile and sit in r.pnts next to the
+    overview instead of being overwritten by it."""
+    from py3dtiles_spark.plans.convert import convert_files
+    from py3dtiles_spark.sources.pnts import decode_pnts
+    small = _sparse_cloud(tmp_path / "sparse.xyz")
+    out = tmp_path / "out"
+    res = convert_files(spark, str(tmp_path / "sparse.xyz"),
+                        out_dir=str(out), write_pnts=True)
+    assert res.tiling.counters["points_assigned"] == 22540
+    ts = json.loads((out / "tileset.json").read_text())
+    assert ts["root"]["content"] == {"uri": "r.pnts"}
+    m = np.array(ts["root"]["transform"]).reshape(4, 4).T
+    local, _, _ = decode_pnts((out / "r.pnts").read_bytes())
+    world = local.astype(np.float64) @ m[:3, :3].T + m[:3, 3]
+    nearest = np.abs(world[None] - small[:, None]).max(axis=2).min(axis=1)
+    assert (nearest < 1e-3).all(), f"{(nearest >= 1e-3).sum()} of 40 missing"
+
+
+def test_cli_resume_xyz_keeps_checkpoint(spark, tmp_path):
+    """`convert --resume` on LAS/XYZ input resumes the completed build: the
+    second run rewrites neither meta.json nor a level manifest and gives
+    the same tileset.json."""
+    from py3dtiles_spark.__main__ import main
+    _sparse_cloud(tmp_path / "sparse.xyz")
+    out = tmp_path / "out"
+    argv = ["convert", "--input", str(tmp_path / "sparse.xyz"),
+            "--output", str(out), "--resume", "--cpus", "4"]
+    ckpt = [out / "checkpoint" / "meta.json",
+            out / "checkpoint" / "level=0" / "_MANIFEST.json"]
+
+    def state():
+        return ([(p.stat().st_mtime_ns, p.read_bytes()) for p in ckpt],
+                (out / "tileset.json").read_bytes())
+
+    assert main(argv) == 0
+    first = state()
+    assert main(argv) == 0
+    assert state() == first

@@ -188,3 +188,47 @@ def test_distributed_tileset_executor_write(spark, tmp_path):
                 assert json.dumps(mono[name]) == json.dumps(json.load(f))
         else:
             assert json.dumps(mono[name]) == json.dumps(dist[name])
+
+
+def test_root_overview_matches_numpy_replay(spark):
+    """root_overview == a numpy replay: the depth-1 rows grouped by the
+    root grid key (cell_keys_for_node), each cell accepted in
+    (tile_id, point_id) order at (2 * spacing)^2 (sequential_accept)."""
+    from py3dtiles_spark.functions.geometry import (
+        cell_keys_for_node, compute_spacing, node_frame, sequential_accept)
+    from py3dtiles_spark.operators.tileset import root_overview
+
+    rng = np.random.default_rng(23)
+    root_aabb = np.array([[-3.0, 2.0, 0.0], [7.0, 12.0, 10.0]])
+    spacing = compute_spacing(root_aabb)
+    # a uniform cloud and a dense clump (rows of every depth), then a
+    # depth-1 clump inside the max corner and, later in cell order, points
+    # on the corner itself: they fall in the corner clump's cell only
+    # because the grid index clamps
+    xyz = np.vstack([
+        rng.uniform(root_aabb[0], root_aabb[1], (1500, 3)),
+        rng.normal([2.0, 7.0, 5.0], 0.3, (1500, 3)),
+        rng.uniform(root_aabb[1] - 0.1, root_aabb[1], (50, 3)),
+        np.repeat(root_aabb[1:], 20, axis=0)]).astype(np.float32)
+    pid = rng.permutation(len(xyz)).astype(np.int64) * 7 + 3
+    tids = np.concatenate([
+        rng.choice(["", "3", "0", "5", "07", "5", "12"], 3000),
+        ["0"] * 50, ["5"] * 20])
+    df = spark.createDataFrame(
+        [(int(p), float(x), float(y), float(z), str(t))
+         for p, (x, y, z), t in zip(pid, xyz, tids)],
+        "point_id long, x float, y float, z float, tile_id string")
+
+    d1 = np.flatnonzero(np.char.str_len(tids.astype(str)) == 1)
+    keys = cell_keys_for_node(xyz[d1], node_frame("", root_aabb, spacing))
+    want = set()
+    for key in np.unique(keys):
+        cell = sorted(d1[keys == key], key=lambda i: (tids[i], pid[i]))
+        mask = sequential_accept(xyz[cell], (2.0 * spacing) ** 2)
+        want |= {int(pid[i]) for i, m in zip(cell, mask) if m}
+    assert 0 < len(want) < len(d1)
+
+    got = [r.point_id for r in
+           root_overview(df, root_aabb, spacing).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
