@@ -950,8 +950,7 @@ def q_tiling_invariants(spark, sf_dir):
 def q_s2_cells(spark, sf_dir):
     """North-rule "H3/S2 encode": geocoded docs bucketed into level-6 S2
     cells (unit sphere -> cube face -> quadratic ST -> Morton ij), pure
-    native expressions — zero Python, zero UDF; the Hilbert-ordered id
-    variant lives in functions/s2.s2_cell_id (numpy, Arrow-batch).
+    native expressions — zero Python, zero UDF.
     Uses the STAGED projection builder (with_s2_quad): the one-expression
     variant duplicated the trig subtree ~70x into a single codegen unit
     and ran 5.6x slower than geohash on the same input (r4 VERDICT)."""

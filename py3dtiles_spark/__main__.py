@@ -117,17 +117,20 @@ def main(argv=None) -> int:
     if args.cmd == "info":
         with open(args.path, "rb") as f:
             buf = f.read()
-        if buf[:4] == b"b3dm":
-            from py3dtiles_spark.sources.b3dm import parse_b3dm
-            d = parse_b3dm(buf)
-            print(json.dumps({k: d[k] for k in (
-                "tile_byte_length", "bt_json_byte_length", "glb_version")}))
-        else:
-            from py3dtiles_spark.sources.pnts import decode_pnts
-            xyz, rgb, ft = decode_pnts(buf)
-            print(json.dumps({"points_length": ft["POINTS_LENGTH"],
-                              "has_rgb": rgb is not None,
-                              "feature_table": ft}))
+        try:
+            if buf[:4] == b"b3dm":
+                from py3dtiles_spark.sources.b3dm import parse_b3dm
+                d = parse_b3dm(buf)
+                out = {k: d[k] for k in (
+                    "tile_byte_length", "bt_json_byte_length", "glb_version")}
+            else:
+                from py3dtiles_spark.sources.pnts import decode_pnts
+                _, rgb, ft = decode_pnts(buf)
+                out = {"points_length": ft["POINTS_LENGTH"],
+                       "has_rgb": rgb is not None, "feature_table": ft}
+        except ValueError as exc:
+            p.error(f"{args.path}: {exc}")
+        print(json.dumps(out))
         return 0
 
     from py3dtiles_spark.session import get_spark

@@ -57,17 +57,6 @@ def ecef_exprs(lon_col="x", lat_col="y", h_col="z") -> tuple[Column, Column, Col
             (n * (1.0 - WGS84_E2) + h) * sin_lat)
 
 
-def reproject_to_ecef(points, lon_col="x", lat_col="y", h_col="z"):
-    """DataFrame helper: replace (lon, lat, h) columns with ECEF meters."""
-    ex, ey, ez = ecef_exprs(lon_col, lat_col, h_col)
-    return (points.withColumn("_ex", ex).withColumn("_ey", ey)
-            .withColumn("_ez", ez)
-            .drop(lon_col, lat_col, h_col)
-            .withColumnRenamed("_ex", lon_col)
-            .withColumnRenamed("_ey", lat_col)
-            .withColumnRenamed("_ez", h_col))
-
-
 # ---------------------------------------------------------------- matrices --
 # Standard homogeneous-transform builders (textbook Rodrigues/affine forms;
 # same operations the reference takes from the vendored Gohlke

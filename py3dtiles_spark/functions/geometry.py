@@ -81,16 +81,6 @@ def split_aabb(aabb: np.ndarray, index: int, force_quadtree: bool = False) -> np
     return out
 
 
-def make_aabb_cubic(aabb: np.ndarray) -> np.ndarray:
-    """X7: stretch an AABB to a cube on its max axis (reference
-    points/utils.py:79-84; unused by the reference main path, kept for
-    API parity)."""
-    aabb = np.array(aabb, copy=True)
-    s = (aabb[1] - aabb[0]).max()
-    aabb[1] = aabb[0] + s
-    return aabb
-
-
 class NodeFrame(NamedTuple):
     """Float32 node constants exactly as the reference Node derives them
     from the float64 name-fold (node.py:28-31)."""

@@ -2,21 +2,17 @@
 
 Implements the S2 construction from the published s2geometry scheme
 (https://s2geometry.io/devguide/s2cell_hierarchy): unit sphere -> cube
-face (0-5) -> quadratic ST projection -> leaf (i, j) -> space-filling
-curve position. Two id variants:
+face (0-5) -> quadratic ST projection -> leaf (i, j) -> Morton
+curve position. One id:
 
-- **quad id** (`s2_quad_id_expr`): face << 2L | morton(i, j). Pure native
-  column expressions end to end (cos/sin/sqrt/floor/bit ops), zero
-  Python — the 100 TB bucketing path. Morton order preserves the
-  hierarchy (parent = id >> 2) and is exactly reproducible in ANSI SQL,
-  so this variant is DuckDB-oracle-checked by the driver gate.
-- **Hilbert cell id** (`s2_cell_id`): the classic S2 id layout
-  (3 face bits, 2k position bits per level, trailing sentinel bit) with
-  the position ordered by the S2 Hilbert state machine (kIJtoPos /
-  kPosToOrientation tables, initial orientation = face & 1). Vectorized
-  numpy for Arrow-batch UDF use. Locality: consecutive positions at a
-  level are edge-adjacent cells — asserted by tests/test_s2.py, which
-  also round-trips every cell of a full level through the center decode.
+- **quad id** (`s2_quad_id_expr`, `with_s2_quad`): face << 2L |
+  morton(i, j). Pure native column expressions end to end
+  (cos/sin/sqrt/floor/bit ops), zero Python — the 100 TB bucketing path.
+  Morton order preserves the hierarchy (parent = id >> 2) and is exactly
+  reproducible in ANSI SQL (`s2_quad_id_sql`), so this id is
+  DuckDB-oracle-checked (`s2_cells` in `__spark_entry__.py`).
+- `_lonlat_to_face_ij` is the numpy twin of the (face, i, j) stage; the
+  tests compare the native expressions against it.
 
 Reference tie-in: the same Morton-family packing as the tiler's LOD grid
 key (functions/geometry.py xyz_to_key, reference distance.py:24-32) —
@@ -28,20 +24,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column, functions as F
-
-# S2 Hilbert state machine (s2geometry s2coords.cc):
-# kIJtoPos[orientation][2*i_bit + j_bit] -> child position on the curve,
-# kPosToOrientation[pos] -> orientation XOR for descending into the child
-# (kSwapMask=1, kInvertMask=2).
-_IJ_TO_POS = np.array([[0, 1, 3, 2],
-                       [0, 3, 1, 2],
-                       [2, 3, 1, 0],
-                       [2, 1, 3, 0]], dtype=np.int64)
-_POS_TO_IJ = np.array([[0, 1, 3, 2],
-                       [0, 2, 3, 1],
-                       [3, 2, 0, 1],
-                       [3, 1, 0, 2]], dtype=np.int64)
-_POS_TO_ORIENT = np.array([1, 0, 0, 3], dtype=np.int64)
 
 MAX_LEVEL = 30
 
@@ -121,8 +103,8 @@ def s2_quad_id_expr(level: int, lon_col: str = "x",
 
     Level cap: face (3 bits, faces 4-5 need all three) sits at bit
     positions [2*level, 2*level+2], which must stay below the sign bit
-    (position 63) of a signed long — 2*level+2 <= 62, i.e. level <= 30,
-    same bound as s2_cell_id's [0, MAX_LEVEL]."""
+    (position 63) of a signed long — 2*level+2 <= 62, i.e. level in
+    [0, MAX_LEVEL]."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
     face, i, j = s2_face_ij_exprs(level, lon_col, lat_col)
@@ -199,7 +181,7 @@ def s2_quad_id_sql(level: int, lon_sql: str, lat_sql: str) -> str:
     return f"(CAST({face} AS BIGINT) << {2 * level}) | ({morton})"
 
 
-# ------------------------------------------------------------ numpy kernel --
+# --------------------------------------------------------- numpy reference --
 
 def _lonlat_to_face_ij(lon, lat, level: int):
     lon = np.radians(np.asarray(lon, dtype=np.float64))
@@ -226,115 +208,3 @@ def _lonlat_to_face_ij(lon, lat, level: int):
         return np.clip(np.floor(ss * lim).astype(np.int64), 0, lim - 1)
 
     return face.astype(np.int64), ij(st(u)), ij(st(v))
-
-
-def _face_ij_to_pos(face, i, j, level: int):
-    """Hilbert curve position of (i, j) on `face` at `level` — the S2
-    state machine run MSB-first, vectorized over rows."""
-    orient = face & 1                      # initial orientation: swap bit
-    pos = np.zeros_like(i)
-    for k in range(level - 1, -1, -1):
-        ij2 = ((i >> k) & 1) * 2 + ((j >> k) & 1)
-        p = _IJ_TO_POS[orient, ij2]
-        pos = (pos << 2) | p
-        orient = orient ^ _POS_TO_ORIENT[p]
-    return pos
-
-
-def _pos_to_face_ij(pos, face, level: int):
-    orient = face & 1
-    i = np.zeros_like(pos)
-    j = np.zeros_like(pos)
-    for k in range(level - 1, -1, -1):
-        p = (pos >> (2 * k)) & 3
-        ij2 = _POS_TO_IJ[orient, p]
-        i = (i << 1) | (ij2 >> 1)
-        j = (j << 1) | (ij2 & 1)
-        orient = orient ^ _POS_TO_ORIENT[p]
-    return i, j
-
-
-def s2_cell_id(lon, lat, level: int):
-    """True S2-layout cell ids: face (3 bits) | Hilbert position (2*level
-    bits) | sentinel 1 | zeros — i.e. face << 61 | pos << (61-2L) |
-    1 << (60-2L), the standard 64-bit S2 encoding. Vectorized numpy; use
-    inside a pandas UDF / mapInPandas for the distributed path.
-
-    Signed-interop caveat: canonical S2 ids are uint64, but Spark LongType
-    is signed int64, so ids on faces 4-5 set the sign bit and come out
-    negative here. The BIT PATTERN is identical to s2geometry's uint64
-    (``ids.view(np.uint64)`` or :func:`s2_id_uint64` recovers it exactly);
-    only numeric comparisons differ. For canonical uint64 ORDER under a
-    signed sort/range-partition, order by :func:`s2_sort_key` (sign-bit
-    flip, the standard order-preserving uint64<->int64 map) instead of the
-    raw id."""
-    if not 0 <= level <= MAX_LEVEL:
-        raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
-    face, i, j = _lonlat_to_face_ij(lon, lat, level)
-    pos = _face_ij_to_pos(face, i, j, level)
-    shift = 2 * (MAX_LEVEL - level) + 1
-    return (face << (2 * MAX_LEVEL + 1)) | (pos << shift) | (1 << (shift - 1))
-
-
-def s2_id_uint64(ids) -> np.ndarray:
-    """Canonical uint64 view of signed int64 S2 ids (bit-identical
-    reinterpret) — use when comparing against real s2geometry libraries."""
-    return np.ascontiguousarray(np.asarray(ids, dtype=np.int64)) \
-        .view(np.uint64)
-
-
-def s2_sort_key(ids) -> np.ndarray:
-    """Signed int64 key whose < order equals canonical uint64 S2 order:
-    flip the sign bit (x ^ 2^63). Use for sorting / range-partitioning by
-    cell id in Spark, where LongType comparisons are signed."""
-    return np.asarray(ids, dtype=np.int64) ^ np.int64(-0x8000000000000000)
-
-
-def s2_cell_level(ids) -> np.ndarray:
-    """Level of each id (position of the lowest set bit)."""
-    ids = np.asarray(ids, dtype=np.int64)
-    lsb = ids & (-ids)
-    # sentinel bit sits at position 2*(MAX_LEVEL - level)
-    return (MAX_LEVEL - np.round(np.log2(lsb.astype(np.float64)))
-            .astype(np.int64) // 2).astype(np.int64)
-
-
-def s2_parent(ids, level: int):
-    """Parent cell id at `level` (must be <= the ids' level)."""
-    ids = np.asarray(ids, dtype=np.int64)
-    shift = 2 * (MAX_LEVEL - level) + 1
-    lsb = np.int64(1) << (shift - 1)
-    return (ids & ~(2 * lsb - 1)) | lsb
-
-
-def s2_cell_center(ids, level: int):
-    """(lon_deg, lat_deg) of each cell's center — the decode inverse used
-    by the round-trip tests."""
-    ids = np.asarray(ids, dtype=np.int64)
-    shift = 2 * (MAX_LEVEL - level) + 1
-    # ids use the full 64-bit pattern (faces 4-5 set the sign bit, as in
-    # s2geometry's uint64); mask after the arithmetic shift
-    face = (ids >> (2 * MAX_LEVEL + 1)) & 7
-    pos = (ids >> shift) & ((np.int64(1) << (2 * level)) - 1)
-    i, j = _pos_to_face_ij(pos, face, level)
-    lim = 1 << level
-    s = (i.astype(np.float64) + 0.5) / lim
-    t = (j.astype(np.float64) + 0.5) / lim
-
-    def st2uv(ss):
-        return np.where(ss >= 0.5, (4.0 * ss * ss - 1.0) / 3.0,
-                        (1.0 - 4.0 * (1.0 - ss) * (1.0 - ss)) / 3.0)
-
-    u, v = st2uv(s), st2uv(t)
-    one = np.ones_like(u)
-    # FaceUVtoXYZ (inverse of the per-face table above)
-    xyz = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [np.stack([one, u, v]), np.stack([-u, one, v]),
-         np.stack([-u, -v, one]), np.stack([-one, -v, -u]),
-         np.stack([v, -one, -u])],
-        default=np.stack([v, u, -one]))
-    x, y, z = xyz[0], xyz[1], xyz[2]
-    lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
-    lon = np.degrees(np.arctan2(y, x))
-    return lon, lat

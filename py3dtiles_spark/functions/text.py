@@ -28,16 +28,6 @@ def token_count(text_col: str = "text") -> Column:
     return F.size(tokens(text_col))
 
 
-def bpe_ish_token_count(text_col: str = "text") -> Column:
-    """BPE-ish subword estimate: split on word boundaries AND digit/punct
-    transitions (regex), i.e. what a byte-pair tokenizer roughly yields."""
-    return F.size(F.filter(
-        F.split(F.regexp_replace(F.col(text_col),
-                                 r"([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+)", r"$1"),
-                ""),
-        lambda t: F.trim(t) != ""))
-
-
 def stopword_ratio(text_col: str = "text", lang: str = "en") -> Column:
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     toks = tokens(text_col)
@@ -48,12 +38,6 @@ def stopword_ratio(text_col: str = "text", lang: str = "en") -> Column:
 def punct_ratio(text_col: str = "text") -> Column:
     stripped = F.regexp_replace(F.col(text_col), r"[^.,;:!?'\"()-]", "")
     return F.length(stripped) / F.greatest(F.length(text_col), F.lit(1))
-
-
-def mean_token_len(text_col: str = "text") -> Column:
-    toks = tokens(text_col)
-    return (F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-            / F.greatest(F.size(toks), F.lit(1)))
 
 
 def quality_score(text_col: str = "text") -> Column:
@@ -199,12 +183,15 @@ def substring_dup_stats(docs, shingle_tokens: int = 8,
     exact text occurs at >= 2 positions anywhere in the corpus (any doc,
     including repeats within the same doc).
 
-    Physical shape at 100 TB: explode the rolling windows, hash each
-    to a fixed-width md5 map-side (the shuffle ships 32 hex chars per
-    position, never window text), one map-side-combined groupBy(hash) for
-    corpus counts, equi-join back, per-doc agg. No pair materialization,
-    so a shingle shared by 10^6 positions costs one counter, not 10^12
-    pairs — hot-shingle skew is bounded by construction.
+    Physical shape: explode the rolling windows as xxhash64 keys (the
+    shuffle ships 8 bytes per position, never window text), count each
+    key's positions with a count window over partitionBy(h), then one
+    per-doc agg. No pair materialization, so a shingle shared by 10^6
+    positions costs one counter, not 10^12 pairs. The window has no
+    map-side combine, though: every exploded position crosses the
+    exchange, and all positions of one hot shingle (boilerplate such as
+    a shared footer) land on ONE task, whose input grows with that
+    shingle's corpus frequency.
 
     Short docs (< shingle_tokens tokens) contribute one whole-doc window,
     matching `fingerprint`'s semantics.

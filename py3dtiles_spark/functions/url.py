@@ -1,7 +1,7 @@
 """URL analysis operators for web-corpus curation — all native column
 expressions (regexp + string ops inside whole-stage codegen), mirroring
 what a Common-Crawl-scale pipeline runs before any text processing:
-host/registrable-domain/TLD/path extraction, domain blocklist filtering,
+host/registrable-domain extraction, domain blocklist filtering,
 and per-domain crawl stats.
 
 Scale notes:
@@ -15,8 +15,9 @@ Scale notes:
   two-level-agg case, so the cardinality-reducing agg runs BEFORE any
   join against domain metadata.
 
-Every helper has an ANSI-SQL twin shape (same regex) so the driver gate
-can oracle-check the entries in DuckDB.
+The `domain_stats` query in `__spark_entry__.py` cross-checks the regex
+extraction: its DuckDB oracle derives host and domain from the URL
+construction arithmetic instead of parsing.
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 # scheme://host[:port]/path... — host is everything after the optional
 # scheme and userinfo up to the first :, / or end
 _HOST_RE = r"^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?(?:[^/@]*@)?([^:/?#]+)"
-_PATH_RE = r"^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?[^/?#]*(/[^?#]*)?"
 # multi-label public suffixes a heuristic registrable-domain needs (the
 # common two-label suffixes; a production run ships the full PSL as a
 # broadcast dim table — same join shape)
@@ -39,16 +39,6 @@ _TWO_LABEL_SUFFIXES = (
 def url_host(url_col: str = "url") -> Column:
     """Hostname, lowercased."""
     return F.lower(F.regexp_extract(F.col(url_col), _HOST_RE, 1))
-
-
-def url_path(url_col: str = "url") -> Column:
-    """Path component ('' when absent)."""
-    return F.regexp_extract(F.col(url_col), _PATH_RE, 1)
-
-
-def url_tld(url_col: str = "url") -> Column:
-    """Last label of the host."""
-    return F.element_at(F.split(url_host(url_col), r"\."), -1)
 
 
 def registrable_domain(url_col: str = "url") -> Column:
@@ -88,13 +78,3 @@ def domain_stats(df: DataFrame, url_col: str = "url",
     if chars_col:
         aggs.append(F.sum("_c").alias("total_chars"))
     return g.groupBy("domain").agg(*aggs)
-
-
-# SQL twins (DuckDB regexp_extract is group-index based like Spark's)
-
-def url_host_sql(url_sql: str) -> str:
-    return f"lower(regexp_extract({url_sql}, '{_HOST_RE}', 1))"
-
-
-def url_path_sql(url_sql: str) -> str:
-    return f"regexp_extract({url_sql}, '{_PATH_RE}', 1)"

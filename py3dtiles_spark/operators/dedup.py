@@ -2,8 +2,7 @@
 
 All exact-hash paths are pure built-in expressions (JVM-side, whole-stage
 codegen); MinHash AND SimHash use native xxhash64 aggregations over exploded
-tokens/shingles (map-side partial agg keeps the shuffle at |docs| rows);
-embedding near-dup uses an Arrow-batched numpy kernel (matmul per bucket).
+tokens/shingles (map-side partial agg keeps the shuffle at |docs| rows).
 
 Scale notes:
 - exact_dedup: one hash shuffle on the digest; identical to a groupBy.
@@ -16,8 +15,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -232,42 +229,3 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
     return (cand.withColumn("hamming", ham)
                 .filter(F.col("hamming") <= max_hamming)
                 .select("a", "b", "hamming"))
-
-
-def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
-                             n_planes: int = 8, seed: int = 42,
-                             max_bucket_size: int | None = None) -> DataFrame:
-    """Embedding-cosine near-dup: LSH-bucket (random hyperplanes), exact
-    pairwise cosine within buckets. Returns (a, b, cos) with a < b.
-
-    max_bucket_size: skew guard — buckets above the cap (embedding-space
-    hubs) are dropped so no single task holds a quadratic matmul; None
-    keeps exact bucket behavior."""
-    from py3dtiles_spark.operators.knn import lsh_signature_expr
-    from pyspark.sql.types import LongType, StructField, StructType
-    dim = len(emb.select("embedding").first()[0])
-    out_schema = StructType(list(emb.schema.fields)
-                            + [StructField("bucket", LongType())])
-    bucketed = emb.mapInPandas(lsh_signature_expr(dim, n_planes, seed),
-                               schema=out_schema)
-    if max_bucket_size is not None:
-        ok = (bucketed.groupBy("bucket")
-              .agg(F.count("*").alias("_bsz"))
-              .filter(F.col("_bsz") <= max_bucket_size).drop("_bsz"))
-        bucketed = bucketed.join(ok, "bucket")
-
-    def pairwise(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(m, axis=1)
-        norms[norms == 0] = 1.0
-        m = m / norms[:, None]
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        sims = m @ m.T
-        ii, jj = np.where(np.triu(sims >= threshold, k=1))
-        lo = np.minimum(ids[ii], ids[jj])
-        hi = np.maximum(ids[ii], ids[jj])
-        return pd.DataFrame({"a": lo, "b": hi, "cos": sims[ii, jj]})
-
-    return (bucketed.groupBy("bucket")
-            .applyInPandas(pairwise, schema="a long, b long, cos double")
-            .dropDuplicates(["a", "b"]))

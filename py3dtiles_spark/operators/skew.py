@@ -5,7 +5,7 @@ engine enables AQE in session.get_spark); these are the deterministic,
 plan-time tools for when a key is ALWAYS hot and you don't want to rely
 on runtime stats — e.g. a known head-domain join at 100 TB.
 
-Both helpers are pure DataFrame composition (no UDF, no shuffle beyond
+`salted_join` is pure DataFrame composition (no UDF, no shuffle beyond
 the salted exchange itself) and deterministic: the salt is
 pmod(xxhash64(row-identity), n_salt), never rand().
 """
@@ -44,22 +44,3 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
             F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))))
     out = b.join(s, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def two_stage_agg(df: DataFrame, key: str, agg_col: str,
-                  n_salt: int = 8) -> DataFrame:
-    """sum(agg_col) per key with an EXPLICIT two-stage (salted partial ->
-    final) shape: stage 1 aggregates on (key, salt) so a hot key's input
-    spreads over n_salt reducers, stage 2 folds the n_salt partials.
-
-    Note Spark's hash aggregate already does map-side partial combine —
-    this helper exists for the case where stage-1 output must itself be
-    repartitioned/persisted (e.g. iterative rollups) or where the partial
-    cardinality is the product you want. Result == groupBy(key).sum."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
-                        F.lit(n_salt)).cast("int"))
-    partial = (salted.groupBy(key, "_salt")
-               .agg(F.sum(agg_col).alias("_partial")))
-    return (partial.groupBy(key)
-            .agg(F.sum("_partial").alias(f"sum_{agg_col}")))

@@ -5,16 +5,12 @@ Reference semantics being generalized (SURVEY.md §2.4):
   (export.py:19-21, 141-160) drives quadtree placement
 - J3 tileset->quadrant routing by center containment (merger.py:113-114)
 - north_rule "point-in-polygon joins against tile boundaries": exact
-  polygon PIP = coarse-cell equi-join prefilter + vectorized ray-cast
+  polygon PIP = bbox prefilter + vectorized even-odd ray-cast
 
-Physical strategy at scale:
-- small polygon set (dims, admin boundaries): broadcast + bbox prefilter
-  inside the ray-cast UDF — zero shuffle on the points side.
-- large polygon set: both sides mapped to coarse grid cells (polygons via
-  bbox cover, points directly — native exprs), equi-join on cell_id (a
-  shuffle that AQE salts if skewed), then the exact test on the residual
-  candidates. Filter selectivity comes from the grid, exactness from the
-  ray-cast.
+Physical strategy: the polygon set is dimension-table sized (admin
+boundaries, tile footprints), so it is collected and broadcast; a bbox
+prefilter and the exact even-odd ray cast run inside one Arrow-batched
+mapInPandas over the points — zero shuffle on the points side.
 """
 
 from __future__ import annotations
@@ -126,193 +122,6 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     schema = ", ".join(
         f"{c} {dict(points.dtypes)[c]}" for c in keep) + ", geom_id long"
     return points.mapInPandas(run, schema=schema)
-
-
-def grid_cell_cover(xmin, ymin, xmax, ymax, cell_deg: float):
-    """All coarse cells intersecting a bbox (driver/UDF helper)."""
-    import math
-    cells = []
-    cx0 = math.floor(xmin / cell_deg)
-    cx1 = math.floor(xmax / cell_deg)
-    cy0 = math.floor(ymin / cell_deg)
-    cy1 = math.floor(ymax / cell_deg)
-    for cx in range(cx0, cx1 + 1):
-        for cy in range(cy0, cy1 + 1):
-            cells.append(cx * 100000 + cy)
-    return cells
-
-
-def point_cell_id(cell_deg: float):
-    """Native expression: the coarse grid cell of a point — the scale path's
-    equi-join key (same Morton/H3-family quantization as the LOD grid)."""
-    return (F.floor(F.col("x") / cell_deg) * 100000
-            + F.floor(F.col("y") / cell_deg)).alias("cell_id")
-
-
-def polygon_cell_cover(xs: np.ndarray, ys: np.ndarray,
-                       cell_deg: float, holes=None) -> set:
-    """EXACT cell cover of one polygon: the set of grid cells whose square
-    intersects the polygon interior/boundary — the tight replacement for
-    the bbox cover when polygons are thin or diagonal (a country-sized
-    diagonal polygon's bbox cover can be many times its true cover).
-    `holes`: optional list of (hxs, hys) hole rings — hole boundaries join
-    the supercover and interior centers use the even-odd rule, so cells
-    strictly inside a hole drop out of the cover (they can hold no hit).
-
-    Construction (exact, no heuristics):
-    1. edge supercover — grid DDA over every boundary edge (exterior AND
-       hole rings) marks every cell the boundary passes through (always
-       in the cover);
-    2. every remaining bbox cell contains NO boundary, so it is entirely
-       inside or entirely outside — its center decides via the same
-       even-odd ray-cast the exact join uses.
-    """
-    cells: set = set()
-    rings = [(xs, ys)] + [(np.asarray(hx, dtype=np.float64),
-                           np.asarray(hy, dtype=np.float64))
-                          for hx, hy in (holes or [])]
-    for rxs, rys in rings:
-        _edge_supercover(rxs, rys, cell_deg, cells)
-    # 2. interior cells: even-odd center-inside among non-boundary cells
-    cx0 = int(np.floor(xs.min() / cell_deg))
-    cx1 = int(np.floor(xs.max() / cell_deg))
-    cy0 = int(np.floor(ys.min() / cell_deg))
-    cy1 = int(np.floor(ys.max() / cell_deg))
-    gx, gy = np.meshgrid(np.arange(cx0, cx1 + 1), np.arange(cy0, cy1 + 1))
-    gx, gy = gx.ravel(), gy.ravel()
-    boundary = np.array([(int(a), int(b)) in cells
-                         for a, b in zip(gx, gy)])
-    centers_x = (gx + 0.5) * cell_deg
-    centers_y = (gy + 0.5) * cell_deg
-    inside = even_odd_mask(centers_x, centers_y, rings) & ~boundary
-    cells.update(zip(gx[inside].tolist(), gy[inside].tolist()))
-    return cells
-
-
-def _edge_supercover(xs: np.ndarray, ys: np.ndarray,
-                     cell_deg: float, cells: set) -> None:
-    n = len(xs)
-    # 1. boundary supercover: exact Amanatides-Woo grid traversal per
-    # edge — visits precisely the cells the segment passes through; on an
-    # exact corner crossing both axis-neighbors are added (conservative)
-    for i in range(n):
-        x0, y0 = float(xs[i]), float(ys[i])
-        x1, y1 = float(xs[(i + 1) % n]), float(ys[(i + 1) % n])
-        cx, cy = int(np.floor(x0 / cell_deg)), int(np.floor(y0 / cell_deg))
-        ex_, ey_ = int(np.floor(x1 / cell_deg)), int(np.floor(y1 / cell_deg))
-        cells.add((cx, cy))
-        dx, dy = x1 - x0, y1 - y0
-        step_x = 1 if dx > 0 else -1
-        step_y = 1 if dy > 0 else -1
-        tmax_x = (np.inf if dx == 0 else
-                  ((cx + (step_x > 0)) * cell_deg - x0) / dx)
-        tmax_y = (np.inf if dy == 0 else
-                  ((cy + (step_y > 0)) * cell_deg - y0) / dy)
-        tdx = np.inf if dx == 0 else cell_deg / abs(dx)
-        tdy = np.inf if dy == 0 else cell_deg / abs(dy)
-        for _ in range(abs(ex_ - cx) + abs(ey_ - cy) + 4):
-            if (cx, cy) == (ex_, ey_):
-                break
-            if tmax_x == tmax_y:          # exact corner: take both paths
-                cells.add((cx + step_x, cy))
-                cells.add((cx, cy + step_y))
-                cx += step_x
-                cy += step_y
-                tmax_x += tdx
-                tmax_y += tdy
-            elif tmax_x < tmax_y:
-                cx += step_x
-                tmax_x += tdx
-            else:
-                cy += step_y
-                tmax_y += tdy
-            cells.add((cx, cy))
-
-
-def point_in_polygon_join_large(points: DataFrame, polygons: DataFrame,
-                                cell_deg: float = 5.0,
-                                keep_cols=("point_id",),
-                                exact_cover: bool = False) -> DataFrame:
-    """PIP for polygon sets too big to broadcast whole: equi-join points to
-    polygon bbox cell covers on a coarse grid, then exact ray-cast per
-    candidate pair inside applyInPandas grouped by (geom_id, cell_id).
-
-    The default bbox cover is a pure expression (explode of two integer
-    sequences — no Python on the polygon side), and the exact kernel
-    groups by (geom_id, cell_id) rather than geom_id alone: the ray cast
-    is per-point, so a country-sized polygon's candidates run as one task
-    per covered cell instead of serializing on a single worker — the
-    hot-polygon skew answer at 10^12 points.
-
-    exact_cover=True replaces the bbox cover with polygon_cell_cover
-    (boundary supercover + center-decided interior, Arrow-batched on the
-    polygon side): identical join results — both covers are supersets of
-    every cell holding a hit — but thin/diagonal polygons produce far
-    fewer candidate rows, at the price of Python on the (small) polygon
-    side.
-
-    Hole rings (`hxs`/`hys` array<array<double>> columns, optional)
-    travel with the polygon through the equi-join and the exact kernel
-    applies the even-odd rule across all rings; with exact_cover the
-    hole boundaries join the supercover and hole interiors drop out of
-    the cover entirely."""
-    has_holes = "hxs" in polygons.columns and "hys" in polygons.columns
-    ring_cols = ["xs", "ys"] + (["hxs", "hys"] if has_holes else [])
-    ring_schema = "xs array<double>, ys array<double>" + (
-        ", hxs array<array<double>>, hys array<array<double>>"
-        if has_holes else "")
-    if exact_cover:
-        def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for t in pdf.itertuples(index=False):
-                    xs64 = np.asarray(t.xs, dtype=np.float64)
-                    ys64 = np.asarray(t.ys, dtype=np.float64)
-                    holes = (list(zip(t.hxs, t.hys))
-                             if has_holes and t.hxs is not None else None)
-                    for ccx, ccy in polygon_cell_cover(xs64, ys64, cell_deg,
-                                                       holes=holes):
-                        rows.append((int(t.geom_id), ccx * 100000 + ccy)
-                                    + tuple(getattr(t, c) for c in ring_cols))
-                yield pd.DataFrame(rows, columns=["geom_id", "cell_id"]
-                                   + ring_cols)
-
-        poly_cells = polygons.select("geom_id", *ring_cols).mapInPandas(
-            cover, schema=f"geom_id long, cell_id long, {ring_schema}")
-    else:
-        cx = F.explode(F.sequence(
-            F.floor(F.array_min("xs") / cell_deg).cast("long"),
-            F.floor(F.array_max("xs") / cell_deg).cast("long"))).alias("cx")
-        poly_cells = (polygons
-                      .select("geom_id", *ring_cols, cx)
-                      .select("geom_id", *ring_cols, "cx",
-                              F.explode(F.sequence(
-                                  F.floor(F.array_min("ys") / cell_deg)
-                                  .cast("long"),
-                                  F.floor(F.array_max("ys") / cell_deg)
-                                  .cast("long"))).alias("cy"))
-                      .withColumn("cell_id",
-                                  F.col("cx") * 100000 + F.col("cy")))
-    pts = points.withColumn("cell_id", point_cell_id(cell_deg))
-    cand = pts.join(poly_cells.select("geom_id", "cell_id", *ring_cols),
-                    "cell_id")
-    keep = list(keep_cols)
-    schema = ", ".join(
-        f"{c} {dict(points.dtypes)[c]}" for c in keep) + ", geom_id long"
-
-    def exact(pdf: pd.DataFrame) -> pd.DataFrame:
-        rings = [(np.asarray(pdf["xs"].iat[0], dtype=np.float64),
-                  np.asarray(pdf["ys"].iat[0], dtype=np.float64))]
-        if has_holes and pdf["hxs"].iat[0] is not None:
-            rings += [(np.asarray(hx, dtype=np.float64),
-                       np.asarray(hy, dtype=np.float64))
-                      for hx, hy in zip(pdf["hxs"].iat[0], pdf["hys"].iat[0])]
-        hit = even_odd_mask(pdf["x"].to_numpy(np.float64),
-                            pdf["y"].to_numpy(np.float64), rings)
-        out = pdf.loc[hit, keep + ["geom_id"]]
-        return out
-
-    return cand.groupBy("geom_id", "cell_id").applyInPandas(exact, schema=schema)
 
 
 def route_to_quadrant(items: DataFrame, aabb) -> DataFrame:

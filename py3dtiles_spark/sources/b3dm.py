@@ -183,25 +183,28 @@ def b3dm_bytes(glb: bytes, batch_table: dict | None = None) -> bytes:
 
 def parse_b3dm(buf: bytes) -> dict:
     """Decode a b3dm tile: header fields + glTF JSON header (+ft/bt JSON).
-    Read-side S5 operator; handles legacy tiles with feature-table JSON."""
+    Read-side S5 operator; handles legacy tiles with feature-table JSON.
+    Raises ValueError on a short header, wrong magic or missing glb."""
+    if len(buf) < B3DM_HEADER_LEN:
+        raise ValueError(f"b3dm header needs {B3DM_HEADER_LEN} bytes, "
+                         f"got {len(buf)}")
     magic, version, total, ftj, ftb, btj, btb = struct.unpack(
         "<4sIIIIII", buf[:B3DM_HEADER_LEN])
-    assert magic == b"b3dm", magic
+    if magic != b"b3dm":
+        raise ValueError(f"not a b3dm tile: magic {magic!r}")
     off = B3DM_HEADER_LEN
     ft = json.loads(buf[off:off + ftj]) if ftj else None
     off += ftj + ftb
     bt = json.loads(buf[off:off + btj]) if btj else None
     off += btj + btb
     glb = buf[off:]
-    g_magic, g_version, g_len = struct.unpack("<III", glb[:12])
+    if len(glb) < 16:
+        raise ValueError("no glb chunk")
+    g_magic, g_version, g_len, json_len = struct.unpack("<IIII", glb[:16])
     if g_magic != GLB_MAGIC:
         raise ValueError("no glb chunk")
-    if g_version >= 2:
-        json_len = struct.unpack("<I", glb[12:16])[0]
-        gltf = json.loads(glb[20:20 + json_len])
-    else:                      # glTF 1.0 (dragon_low fixture)
-        json_len = struct.unpack("<I", glb[12:16])[0]
-        gltf = json.loads(glb[20:20 + json_len])
+    # glTF 1.0 (dragon_low fixture) and 2.0 both put the JSON at byte 20
+    gltf = json.loads(glb[20:20 + json_len])
     return {"version": version, "tile_byte_length": total,
             "ft_json_byte_length": ftj, "ft_bin_byte_length": ftb,
             "bt_json_byte_length": btj, "bt_bin_byte_length": btb,

@@ -57,12 +57,21 @@ def decode_pnts(buf: bytes, apply_rtc: bool = True):
     POSITION (f32) or POSITION_QUANTIZED (u16 dequantized by
     QUANTIZED_VOLUME_SCALE/OFFSET), RGB or RGBA (alpha dropped), and
     RTC_CENTER added to positions (in f64, then narrowed) when apply_rtc.
-    Returns (xyz f32 (N,3), rgb u8 (N,3) | None, feature_table dict)."""
+    Returns (xyz f32 (N,3), rgb u8 (N,3) | None, feature_table dict).
+    Raises ValueError on a short header, wrong magic, a version other
+    than 1, or a declared byte length that differs from len(buf)."""
+    if len(buf) < PNTS_HEADER_LEN:
+        raise ValueError(f"pnts header needs {PNTS_HEADER_LEN} bytes, "
+                         f"got {len(buf)}")
     magic, version, total, ftj, ftb, btj, btb = struct.unpack(
         "<4sIIIIII", buf[:PNTS_HEADER_LEN])
-    assert magic == _MAGIC, magic
-    assert version == 1
-    assert total == len(buf), (total, len(buf))
+    if magic != _MAGIC:
+        raise ValueError(f"not a pnts tile: magic {magic!r}")
+    if version != 1:
+        raise ValueError(f"unsupported pnts version {version}")
+    if total != len(buf):
+        raise ValueError(f"pnts header declares {total} bytes, "
+                         f"buffer holds {len(buf)}")
     ft = json.loads(buf[PNTS_HEADER_LEN:PNTS_HEADER_LEN + ftj])
     body = buf[PNTS_HEADER_LEN + ftj:PNTS_HEADER_LEN + ftj + ftb]
     n = ft["POINTS_LENGTH"]
@@ -124,7 +133,8 @@ def relpath_to_name(path: str) -> str:
     """Inverse of name_to_relpath: '.../06/r63.pnts' -> '0663'."""
     parts = path.replace("\\", "/").split("/")
     tail = parts[-1]
-    assert tail.endswith(".pnts"), path
+    if not tail.endswith(".pnts"):
+        raise ValueError(f"not a .pnts path: {path}")
     if not tail.startswith("r"):
         # third-party tileset (not reference-sharded): tile id = file stem
         return tail[:-len(".pnts")]
@@ -145,9 +155,6 @@ def pnts_scan(spark, root_dir: str) -> DataFrame:
     r*.pnts + an Arrow-batched decode (reference TileContentReader,
     utils.py:15-32 + feature_table.py:208-265). One output row per point:
     (tile_id, point_idx, x, y, z, r, g, b)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.pnts")
              .option("recursiveFileLookup", "true")

@@ -103,15 +103,6 @@ def test_accept_mask_per_cell_independent():
     assert mask.tolist() == [True, True]
 
 
-def test_make_aabb_cubic():
-    import numpy as np
-    from py3dtiles_spark.functions.geometry import make_aabb_cubic
-    aabb = np.array([[0.0, 0.0, 0.0], [4.0, 2.0, 1.0]])
-    cubic = make_aabb_cubic(aabb)
-    np.testing.assert_allclose(cubic[1], [4.0, 4.0, 4.0])
-    np.testing.assert_allclose(aabb[1], [4.0, 2.0, 1.0])  # input untouched
-
-
 def test_postgis_module_import_safe():
     from py3dtiles_spark.sources.postgis import postgis_features
     assert callable(postgis_features)

@@ -4,8 +4,8 @@ import numpy as np
 import pytest
 
 from py3dtiles_spark.operators.dedup import (
-    dedup_by_pairs, embedding_near_dup_pairs, exact_dedup, minhash_lsh_pairs,
-    ngram_jaccard_pairs, simhash_near_dup_pairs)
+    dedup_by_pairs, exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs,
+    simhash_near_dup_pairs)
 from py3dtiles_spark.operators.knn import (
     ann_lsh_embeddings, knn_embeddings, knn_points, lod_budget_select)
 
@@ -104,18 +104,6 @@ def test_simhash_near_dups(spark):
     assert (0, 1) in got and (3, 4) in got
     hams = {(r.a, r.b): r.hamming for r in pairs.collect()}
     assert hams[(0, 1)] == 0 and hams[(3, 4)] == 0
-
-
-def test_embedding_near_dup_pairs(spark):
-    rng = np.random.default_rng(5)
-    m = rng.standard_normal((50, 8))
-    m[10] = m[4] + 1e-4          # planted near-dup
-    m[20] = m[9] * 1.5           # same direction = cos 1
-    rows = [(int(i), m[i].astype(np.float32).tolist()) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = {(r.a, r.b) for r in
-             embedding_near_dup_pairs(df, threshold=0.999, n_planes=4).collect()}
-    assert (4, 10) in pairs and (9, 20) in pairs
 
 
 def test_ann_multiprobe_recall(spark):

@@ -81,19 +81,6 @@ def test_salted_join_matches_plain(spark):
     assert "_salt" not in got.columns
 
 
-def test_two_stage_agg_matches_groupby(spark):
-    from py3dtiles_spark.operators.skew import two_stage_agg
-    from pyspark.sql import functions as F
-    df = spark.range(0, 10000).select(
-        F.pmod("id", F.lit(5)).cast("long").alias("k"),
-        (F.col("id") % 97).cast("double").alias("v"))
-    got = {r.k: r.sum_v for r in two_stage_agg(df, "k", "v").collect()}
-    want = {r.k: r["sum(v)"] for r in df.groupBy("k").sum("v").collect()}
-    assert got.keys() == want.keys()
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-6
-
-
 def test_zorder_layout_prunes_files(spark, tmp_path):
     """Z-order clustering must (a) keep rows identical and (b) make
     per-file x/y min-max boxes tight enough that a small box predicate

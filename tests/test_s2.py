@@ -1,72 +1,11 @@
-"""S2 cell index: state-machine correctness (full-level round trip,
-Hilbert adjacency), hierarchy, and native-expr/numpy agreement."""
+"""S2 cell index: the native quad-id expressions against the numpy
+(face, i, j) reference, level guards, and staged/composed agreement."""
 
 import numpy as np
 import pytest
 
 from py3dtiles_spark.functions.s2 import (
-    MAX_LEVEL, _face_ij_to_pos, _lonlat_to_face_ij, _pos_to_face_ij,
-    s2_cell_center, s2_cell_id, s2_cell_level, s2_face_ij_exprs, s2_parent,
-    s2_quad_id_expr)
-
-
-def test_full_level_roundtrip():
-    """Every cell of level 4 (6 faces x 256): id -> center -> id is the
-    identity. Exercises the Hilbert tables both directions plus the
-    face/uv/st geometry and its inverse."""
-    level = 4
-    shift = 2 * (MAX_LEVEL - level) + 1
-    face = np.repeat(np.arange(6, dtype=np.int64), 4 ** level)
-    pos = np.tile(np.arange(4 ** level, dtype=np.int64), 6)
-    ids = (face << (2 * MAX_LEVEL + 1)) | (pos << shift) | (1 << (shift - 1))
-    lon, lat = s2_cell_center(ids, level)
-    back = s2_cell_id(lon, lat, level)
-    np.testing.assert_array_equal(back, ids)
-
-
-def test_hilbert_positions_are_adjacent():
-    """Consecutive curve positions within a face are edge-adjacent cells
-    (|di| + |dj| == 1) — the locality property that makes contiguous id
-    ranges spatially compact; fails for any wrong state-machine table."""
-    level = 5
-    for face in range(6):
-        pos = np.arange(4 ** level, dtype=np.int64)
-        f = np.full_like(pos, face)
-        i, j = _pos_to_face_ij(pos, f, level)
-        step = np.abs(np.diff(i)) + np.abs(np.diff(j))
-        assert (step == 1).all(), f"face {face}"
-
-
-def test_pos_ij_inverse():
-    rng = np.random.default_rng(3)
-    level = 12
-    i = rng.integers(0, 1 << level, 500)
-    j = rng.integers(0, 1 << level, 500)
-    face = rng.integers(0, 6, 500)
-    pos = _face_ij_to_pos(face, i, j, level)
-    i2, j2 = _pos_to_face_ij(pos, face, level)
-    np.testing.assert_array_equal(i, i2)
-    np.testing.assert_array_equal(j, j2)
-
-
-def test_parent_and_level():
-    rng = np.random.default_rng(5)
-    lon = rng.uniform(-180, 180, 300)
-    lat = rng.uniform(-89, 89, 300)
-    deep = s2_cell_id(lon, lat, 10)
-    np.testing.assert_array_equal(s2_cell_level(deep), 10)
-    par = s2_parent(deep, 4)
-    np.testing.assert_array_equal(s2_cell_level(par), 4)
-    # the parent is what you get by encoding the same points coarser
-    np.testing.assert_array_equal(par, s2_cell_id(lon, lat, 4))
-    # s2 range containment: the parent id sits at the middle of its
-    # children's id range [par - (lsb-1), par + (lsb-1)]
-    lsb = par & (-par)
-    assert (deep >= par - (lsb - 1)).all()
-    assert (deep <= par + (lsb - 1)).all()
-    # and parenthood is prefix equality on face + position bits
-    shift = 2 * (MAX_LEVEL - 4) + 1
-    np.testing.assert_array_equal(deep >> shift, par >> shift)
+    _lonlat_to_face_ij, s2_face_ij_exprs, s2_quad_id_expr)
 
 
 def test_every_point_gets_exactly_one_cell():
@@ -101,27 +40,6 @@ def test_exprs_match_numpy(spark):
         morton |= (((i >> k) & 1) << (2 * k + 1)) | (((j >> k) & 1) << (2 * k))
     np.testing.assert_array_equal(out["s2_quad"].to_numpy(),
                                   (face << (2 * level)) | morton)
-
-
-def test_uint64_interop_and_sort_key():
-    """ADVICE r3: faces 4-5 set the sign bit. The uint64 view must be
-    bit-identical to the canonical encoding, and s2_sort_key must order
-    signed ids in canonical uint64 order (faces 0..5 monotone)."""
-    from py3dtiles_spark.functions.s2 import s2_id_uint64, s2_sort_key
-    lons = np.array([0.0, 90.0, 179.0, -179.0, -90.0, 10.0])
-    lats = np.array([0.0, 0.0, 0.0, 0.0, 0.0, 89.0])
-    ids = s2_cell_id(lons, lats, 8)
-    assert (ids < 0).any()                      # faces 4-5 present
-    u = s2_id_uint64(ids)
-    assert u.dtype == np.uint64
-    np.testing.assert_array_equal(u, ids.view(np.uint64))
-    # sort by signed key == sort by canonical uint64 value
-    key_order = np.argsort(s2_sort_key(ids), kind="stable")
-    uint_order = np.argsort(u, kind="stable")
-    np.testing.assert_array_equal(key_order, uint_order)
-    # face field increases along canonical order for equator walk
-    faces = (u >> np.uint64(61)) & np.uint64(7)
-    assert list(faces[uint_order]) == sorted(faces)
 
 
 def test_quad_id_level_guard():

@@ -1,8 +1,10 @@
 """The scaling harnesses' child-process plumbing (scripts/scaling_gate.py),
-and the documented cluster launch path (scripts/make_pyfiles_zip.py +
-spark-submit --py-files)."""
+the documented cluster launch path (scripts/make_pyfiles_zip.py +
+spark-submit --py-files), and the engine reachability guard."""
 
+import ast
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -53,3 +55,97 @@ def test_spark_submit_py_files_convert(tmp_path):
         cwd=work, env=env, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert (out / "tileset.json").is_file()
+
+
+# ------------------------------------------------------ reachability guard --
+
+# names that only tests reach, kept on purpose
+REACH_ALLOWED_NAMES = {
+    # independent oracles the CRS tests check the native exprs against
+    "lcc_forward": "oracle for the LCC native exprs (test_crs_lcc)",
+    "tm_forward": "oracle for the TM native exprs (test_crs_tm)",
+    "projected_to_geodetic": "oracle for the inverse projections",
+    "ivf_recall": "recall oracle for the IVF search path",
+    # the only check of the per-row byte-identical `text` invariant
+    "tile_pages": "text-invariant path (test_pipeline_end_to_end)",
+}
+REACH_ALLOWED_MODULES = {
+    # holds the only b3dm/pnts byte-length goldens; needs reference fixtures
+    "py3dtiles_spark.compat": "reference-API facade with the codec goldens",
+}
+
+
+def _non_test_sources():
+    """{path: text} of every source the engine may be reached from."""
+    paths = [os.path.join(REPO, f)
+             for f in ("__spark_entry__.py", "bench.py", "cli.py")]
+    for base in ("py3dtiles_spark", "scripts", "perfbench"):
+        for d, _, files in os.walk(os.path.join(REPO, base)):
+            paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    out = {}
+    for p in sorted(paths):
+        with open(p, encoding="utf-8") as f:
+            out[p] = f.read()
+    return out
+
+
+def _module_name(path):
+    mod = os.path.relpath(path, REPO)[:-len(".py")].replace(os.sep, ".")
+    return mod[:-len(".__init__")] if mod.endswith(".__init__") else mod
+
+
+def _imported_names(path, tree):
+    """Dotted names a module imports, plus string constants (a module
+    started by name, e.g. the Python worker daemon)."""
+    mod = _module_name(path)
+    pkg = mod if path.endswith("__init__.py") else mod.rpartition(".")[0]
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = pkg.split(".")[:len(pkg.split(".")) - node.level + 1]
+                base = ".".join(parts + ([base] if base else []))
+            out.add(base)
+            out.update(f"{base}.{a.name}" for a in node.names)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            out.add(node.value)
+    return out
+
+
+def test_engine_code_is_reachable_from_non_test_sources():
+    """Every public top-level def/class in py3dtiles_spark/ is named in a
+    non-test source outside its own definition, and every engine module
+    is imported by one. A name check only — what the engine reaches by
+    calls is measured with a `sys.setprofile` census — but it catches code
+    whose only callers are tests. Pure ast and text; no Spark."""
+    sources = _non_test_sources()
+    trees = {p: ast.parse(t, p) for p, t in sources.items()}
+    engine = [p for p in sources
+              if p.startswith(os.path.join(REPO, "py3dtiles_spark") + os.sep)]
+    unnamed = []
+    for path in engine:
+        if _module_name(path) in REACH_ALLOWED_MODULES:
+            continue
+        lines = sources[path].splitlines()
+        for node in trees[path].body:
+            if (not isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    or node.name.startswith("_")
+                    or node.name in REACH_ALLOWED_NAMES):
+                continue
+            word = re.compile(rf"\b{node.name}\b")
+            start = node.lineno - 1 - len(node.decorator_list)
+            rest = "\n".join(lines[:start] + lines[node.end_lineno:])
+            if not (word.search(rest) or any(
+                    word.search(t) for p, t in sources.items() if p != path)):
+                unnamed.append(f"{_module_name(path)}.{node.name}")
+    imported = set()
+    for path, tree in trees.items():
+        imported |= _imported_names(path, tree)
+    unimported = [m for m in map(_module_name, engine)
+                  if m not in REACH_ALLOWED_MODULES and m not in imported
+                  and not any(i.startswith(m + ".") for i in imported)]
+    assert not unnamed, f"named only by tests or by nothing: {unnamed}"
+    assert not unimported, f"imported by no non-test source: {unimported}"

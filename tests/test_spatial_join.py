@@ -1,8 +1,8 @@
 import numpy as np
 
 from py3dtiles_spark.operators.spatial_join import (
-    point_in_polygon_join, point_in_polygon_join_large, point_in_rect_join,
-    ray_cast_mask, route_to_quadrant)
+    point_in_polygon_join, point_in_rect_join, ray_cast_mask,
+    route_to_quadrant)
 
 
 def test_ray_cast_square_and_concave():
@@ -48,55 +48,6 @@ def test_pip_join_broadcast_matches_oracle(spark):
     out = point_in_polygon_join(points, _polys(spark))
     got = {(r.point_id, r.geom_id) for r in out.collect()}
     assert got == _oracle(xy)
-
-
-def test_pip_join_large_matches_broadcast(spark):
-    points, xy = _pts(spark)
-    out = point_in_polygon_join_large(points, _polys(spark), cell_deg=4.0)
-    got = {(r.point_id, r.geom_id) for r in out.collect()}
-    assert got == _oracle(xy)
-
-
-def test_pip_join_large_exact_cover_matches_bbox(spark):
-    """exact_cover=True must return the identical join result (both
-    covers are supersets of every hit cell), while covering far fewer
-    cells for a thin diagonal polygon."""
-    from py3dtiles_spark.operators.spatial_join import polygon_cell_cover
-    points, xy = _pts(spark)
-    out = point_in_polygon_join_large(points, _polys(spark), cell_deg=4.0,
-                                      exact_cover=True)
-    got = {(r.point_id, r.geom_id) for r in out.collect()}
-    assert got == _oracle(xy)
-
-    # thin diagonal sliver: exact cover ~ O(length), bbox cover ~ O(area)
-    t = np.linspace(0.0, 100.0, 50)
-    xs = np.concatenate([t, t[::-1]])
-    ys = np.concatenate([t + 0.01, t[::-1] - 0.01])
-    cover = polygon_cell_cover(xs, ys, 1.0)
-    bbox_cells = (int(np.floor(xs.max()) - np.floor(xs.min())) + 1) ** 2
-    assert len(cover) < bbox_cells / 10
-    # correctness floor: every cell whose center is inside, and every
-    # vertex cell, is covered
-    for vx, vy in zip(xs, ys):
-        assert (int(np.floor(vx)), int(np.floor(vy))) in cover
-
-
-def test_polygon_cell_cover_dense_point_superset():
-    """Ground-truth check: no point inside the polygon may fall in a cell
-    outside the cover (dense random sampling incl. negative coords)."""
-    from py3dtiles_spark.operators.spatial_join import polygon_cell_cover
-    rng = np.random.default_rng(3)
-    th = np.sort(rng.uniform(0, 2 * np.pi, 24))
-    r = rng.uniform(2.0, 9.0, 24)
-    xs = r * np.cos(th) - 3.0
-    ys = r * np.sin(th) + 1.5
-    cover = polygon_cell_cover(xs, ys, 1.7)
-    px = rng.uniform(xs.min(), xs.max(), 20000)
-    py = rng.uniform(ys.min(), ys.max(), 20000)
-    inside = ray_cast_mask(px, py, xs, ys)
-    cellx = np.floor(px[inside] / 1.7).astype(int)
-    celly = np.floor(py[inside] / 1.7).astype(int)
-    assert set(zip(cellx.tolist(), celly.tolist())) <= cover
 
 
 def test_point_in_rect_halfopen(spark):
@@ -160,27 +111,3 @@ def test_pip_donut_broadcast_matches_oracle(spark):
     out = point_in_polygon_join(points, _donut_polys(spark))
     got = {(r.point_id, r.geom_id) for r in out.collect()}
     assert got == _donut_oracle(xy)
-
-
-def test_pip_donut_large_both_covers_match(spark):
-    points, xy = _pts(spark)
-    want = _donut_oracle(xy)
-    for exact in (False, True):
-        out = point_in_polygon_join_large(points, _donut_polys(spark),
-                                          cell_deg=3.0, exact_cover=exact)
-        got = {(r.point_id, r.geom_id) for r in out.collect()}
-        assert got == want, f"exact_cover={exact}"
-
-
-def test_polygon_cell_cover_hole_interior_dropped():
-    """Cells strictly inside a hole leave the exact cover; hole-boundary
-    cells stay (they can hold ring points)."""
-    from py3dtiles_spark.operators.spatial_join import polygon_cell_cover
-    xs = np.array([0.0, 10.0, 10.0, 0.0])
-    ys = np.array([0.0, 0.0, 10.0, 10.0])
-    hole = ([3.0, 7.0, 7.0, 3.0], [3.0, 3.0, 7.0, 7.0])
-    full = polygon_cell_cover(xs, ys, 1.0)
-    holed = polygon_cell_cover(xs, ys, 1.0, holes=[hole])
-    assert (5, 5) in full and (5, 5) not in holed   # deep inside the hole
-    assert (3, 3) in holed                          # hole boundary cell
-    assert holed < full

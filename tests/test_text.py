@@ -49,13 +49,6 @@ def test_fingerprint_deterministic_and_shift_sensitive(spark):
     assert fps[0] == fps[1]
 
 
-def test_bpe_ish_token_count(spark):
-    df = spark.createDataFrame([(0, "hello world42 foo-bar")],
-                               "doc_id long, text string")
-    n = df.select(T.bpe_ish_token_count().alias("n")).collect()[0].n
-    assert n >= 4  # hello, world, 42, foo, -, bar split
-
-
 def test_substring_dup_stats_hand_computed(spark):
     # shingle_tokens=2 corpus, dup = shingle string at >=2 positions
     # ANYWHERE (cross-doc "a b", cross-doc short-doc "z", within-doc
