@@ -259,6 +259,20 @@ def q_count_invariant(spark, sf_dir):
                         F.count("*").cast("long").alias("n_cells"))
 
 
+def _ntok():
+    """Space-separated token count of `text`."""
+    return F.size(F.split("text", " ")).cast("long")
+
+
+def _quality_gate(df: DataFrame) -> DataFrame:
+    """The curation quality gate corpus_curation and llm_pipeline share:
+    length >= 80, >= 10 tokens, punctuation ratio <= 0.2."""
+    punct = F.length(F.regexp_replace("text", "[^.,;:!?'\"()-]", ""))
+    return df.filter((F.length("text") >= 80) & (_ntok() >= 10)
+                     & ((punct / F.greatest(F.length("text"), F.lit(1)))
+                        <= 0.2))
+
+
 def q_dedup_stats(spark, sf_dir):
     d = _docs(spark, sf_dir)
     return d.agg(
@@ -268,8 +282,7 @@ def q_dedup_stats(spark, sf_dir):
 
 def q_token_stats(spark, sf_dir):
     d = _docs(spark, sf_dir)
-    ntok = F.size(F.split("text", " ")).cast("long")
-    return (d.select("lang", ntok.alias("ntok"))
+    return (d.select("lang", _ntok().alias("ntok"))
             .groupBy("lang")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("ntok").alias("sum_tokens"),
@@ -281,7 +294,7 @@ def q_quality_metrics(spark, sf_dir):
     d = _docs(spark, sf_dir).filter("doc_id < 100")
     return d.select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        _ntok().alias("n_tokens"),
         F.length(F.regexp_replace("text", "[^.,;:!?'\"()-]", "")).cast("long")
         .alias("punct_len"),
         F.length("text").cast("long").alias("text_len"),
@@ -317,26 +330,15 @@ def q_repetition_stats(spark, sf_dir):
 def q_corpus_curation(spark, sf_dir):
     """End-to-end training-data curation in one declarative plan:
     quality gate (length + token floor + punctuation-density ceiling) ->
-    exact dedup (keep the min doc_id per identical text, window rank —
-    the hash-groupBy family) -> per-language kept-doc and token budget.
-    Every step is a built-in expression; the DuckDB twin replays the
-    identical pipeline."""
-    d = _docs(spark, sf_dir)
-    ntok = F.size(F.split("text", " ")).cast("long")
-    punct = F.length(F.regexp_replace("text", "[^.,;:!?'\"()-]", ""))
-    q = (d.filter((F.length("text") >= 80) & (ntok >= 10)
-                  & ((punct / F.greatest(F.length("text"), F.lit(1)))
-                     <= 0.2))
-         # dedup key = md5(text), computed map-side so the window
-         # exchange ships 32 hex chars, not the document body (the
-         # 100 TB shuffle-width fix; md5 collisions are the only
-         # divergence from text equality and the DuckDB twin applies
-         # the identical rule)
-         .select("doc_id", "lang", ntok.alias("ntok"),
-                 F.md5(F.encode("text", "UTF-8")).alias("_th")))
-    w = Window.partitionBy("_th").orderBy("doc_id")
-    kept = (q.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1))
+    exact dedup (keep the min doc_id per md5(text), window rank —
+    operators/dedup.py exact_dedup) -> per-language kept-doc and token
+    budget. Every step is a built-in expression; the DuckDB twin replays
+    the identical pipeline."""
+    from py3dtiles_spark.operators.dedup import exact_dedup
+    gated = _quality_gate(_docs(spark, sf_dir)).withColumn("ntok", _ntok())
+    # selecting `text` away above the dedup prunes it below the window's
+    # exchange: the shuffle ships the 32-hex-char md5 key, not the body
+    kept = exact_dedup(gated).select("doc_id", "lang", "ntok")
     return (kept.groupBy("lang")
             .agg(F.count(F.lit(1)).alias("kept_docs"),
                  F.sum("ntok").alias("token_budget"),
@@ -358,25 +360,14 @@ def q_llm_pipeline(spark, sf_dir):
     nothing else — the zorder key is pure expressions, the geocode re-
     derivation avoids a join, and the lang join broadcasts the 36-row
     result side, so no stage adds a shuffle at a seam."""
+    from py3dtiles_spark.operators.dedup import exact_dedup
     from py3dtiles_spark.operators.knn import knn_join_points
     from py3dtiles_spark.operators.layout import zorder_key_expr
-    g = _geo(spark, sf_dir)
-    ntok = F.size(F.split("text", " ")).cast("long")
-    punct = F.length(F.regexp_replace("text", "[^.,;:!?'\"()-]", ""))
-    gated = (g.filter((F.length("text") >= 80) & (ntok >= 10)
-                      & ((punct / F.greatest(F.length("text"), F.lit(1)))
-                         <= 0.2))
-             # r6: dedup key = md5(text) computed map-side — the window
-             # exchange ships 32 hex chars per row instead of the full
-             # document body (the dominant shuffle width at 100 TB); the
-             # DuckDB twin dedups on the identical md5 rule
-             .select("doc_id", "lang", "x", "y", "z",
-                     F.md5(F.encode("text", "UTF-8")).alias("_th")))
-    w = Window.partitionBy("_th").orderBy("doc_id")
-    kept = (gated.withColumn("_rk", F.row_number().over(w))
-            .filter("_rk = 1").drop("_rk")
-            # the hash's job ends at the dedup window: select it away so
-            # the persisted frame (and the kNN inputs) stay narrow
+    # selecting `text` away above the dedup prunes it below the window's
+    # exchange: the shuffle ships the md5 key, never the document body
+    # (the dominant shuffle width at 100 TB), and the persisted frame (and
+    # the kNN inputs) stay narrow
+    kept = (exact_dedup(_quality_gate(_geo(spark, sf_dir)))
             .select("doc_id", "lang", "x", "y", "z"))
     if os.environ.get("SPARK_GRAFT_PLAN_AUDIT") != "1":
         # three consumers (points / queries / payload): compute the
@@ -1027,8 +1018,8 @@ def q_salted_join(spark, sf_dir):
 
 def q_zorder_key(spark, sf_dir):
     """Z-order layout key math as a gate row: the native Morton
-    interleave over quantized (x, y) — the same key zorder_layout range-
-    partitions files by — bucketed by its coarse prefix (top 8 of 16
+    interleave over quantized (x, y) — the key llm_pipeline buckets its
+    kNN queries by — bucketed by its coarse prefix (top 8 of 16
     interleaved bits), counted. The DuckDB twin rebuilds the identical
     bit arithmetic."""
     from py3dtiles_spark.operators.layout import zorder_key_expr

@@ -142,10 +142,11 @@ def main(argv=None) -> int:
     spark = get_spark("py3dtiles-spark-cli", cpus=args.cpus)
 
     if args.cmd == "curate":
-        from pyspark.sql import Window, functions as F
+        from pyspark.sql import functions as F
         from py3dtiles_spark.functions.text import (
             contamination_stats, lang_id, quality_score,
             substring_dup_stats, token_count, unigram_logprob)
+        from py3dtiles_spark.operators.dedup import exact_dedup
         docs = spark.read.parquet(args.input)
         base = docs.select("doc_id",
                            lang_id().alias("lang_guess"),
@@ -177,16 +178,13 @@ def main(argv=None) -> int:
             signals = signals.withColumn("is_contaminated",
                                          F.lit(0).cast("long"))
         if args.dedup == "exact":
-            # md5 key so the dedup window ships 32 hex chars, never
-            # document bodies (same rule as the gate/llm_pipeline path)
-            w = Window.partitionBy(F.md5(F.encode("text", "UTF-8"))) \
-                      .orderBy("doc_id")
-            first = (docs.select("doc_id",
-                                 F.row_number().over(w).alias("_rk"))
-                     .select("doc_id",
-                             (F.col("_rk") == 1).cast("long")
-                              .alias("is_canonical")))
-            signals = signals.join(first, "doc_id")
+            # selecting doc_id alone prunes `text` below the md5 exchange
+            canonical = (exact_dedup(docs)
+                         .select("doc_id",
+                                 F.lit(1).cast("long").alias("is_canonical")))
+            signals = (signals.join(canonical, "doc_id", "left")
+                       .withColumn("is_canonical",
+                                   F.coalesce("is_canonical", F.lit(0))))
         else:
             signals = signals.withColumn("is_canonical",
                                          F.lit(1).cast("long"))

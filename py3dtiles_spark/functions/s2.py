@@ -5,14 +5,14 @@ Implements the S2 construction from the published s2geometry scheme
 face (0-5) -> quadratic ST projection -> leaf (i, j) -> Morton
 curve position. One id:
 
-- **quad id** (`s2_quad_id_expr`, `with_s2_quad`): face << 2L |
-  morton(i, j). Pure native column expressions end to end
-  (cos/sin/sqrt/floor/bit ops), zero Python — the 100 TB bucketing path.
+- **quad id** (`with_s2_quad`): face << 2L | morton(i, j), built as
+  staged native projections (cos/sin/sqrt/floor/bit ops), zero Python —
+  the 100 TB bucketing path.
   Morton order preserves the hierarchy (parent = id >> 2) and is exactly
   reproducible in ANSI SQL (`s2_quad_id_sql`), so this id is
   DuckDB-oracle-checked (`s2_cells` in `__spark_entry__.py`).
 - `_lonlat_to_face_ij` is the numpy twin of the (face, i, j) stage; the
-  tests compare the native expressions against it.
+  tests compare `with_s2_quad` against it plus a Morton packing.
 
 Reference tie-in: the same Morton-family packing as the tiler's LOD grid
 key (functions/geometry.py xyz_to_key, reference distance.py:24-32) —
@@ -40,8 +40,7 @@ def _face_uv_from_xyz(x: Column, y: Column, z: Column):
     """(face, u, v) exprs from unit-sphere xyz Columns. Face selection
     mirrors s2geometry's LargestAbsComponent tie-breaking (x wins only
     strictly; then y; then z), and the per-face (u, v) formulas are the
-    published ValidFaceXYZtoUV table. Shared by the one-expression and
-    staged builders so the mapping exists exactly once."""
+    published ValidFaceXYZtoUV table."""
     ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
     axis = (F.when((ax > ay) & (ax > az), F.lit(0))
             .when(ay > az, F.lit(1)).otherwise(F.lit(2)))
@@ -74,13 +73,6 @@ def _morton_expr(i: Column, j: Column, level: int) -> Column:
     return morton
 
 
-def s2_face_uv_exprs(lon_col: str = "x", lat_col: str = "y"):
-    """(face, u, v) native columns from lon/lat degree columns."""
-    x, y, z = _lonlat_to_xyz(F.col(lon_col).cast("double"),
-                             F.col(lat_col).cast("double"))
-    return _face_uv_from_xyz(x, y, z)
-
-
 def _uv_to_st(u: Column) -> Column:
     # S2's quadratic projection: equal-area to within ~2.1x (vs ~5.2 for
     # linear), closed-form both ways
@@ -88,45 +80,26 @@ def _uv_to_st(u: Column) -> Column:
             .otherwise(1.0 - 0.5 * F.sqrt(1.0 - 3.0 * u))
 
 
-def s2_face_ij_exprs(level: int, lon_col: str = "x", lat_col: str = "y"):
-    """(face, i, j) native columns at `level` (i, j in [0, 2^level))."""
-    face, u, v = s2_face_uv_exprs(lon_col, lat_col)
-    return (face, _ij_expr(_uv_to_st(u), level),
-            _ij_expr(_uv_to_st(v), level))
-
-
-def s2_quad_id_expr(level: int, lon_col: str = "x",
-                    lat_col: str = "y") -> Column:
-    """face << 2L | morton(i, j) as one native column — hierarchical
+def with_s2_quad(df, level: int, lon_col: str = "x", lat_col: str = "y",
+                 out_col: str = "s2_quad"):
+    """`out_col` = face << 2L | morton(i, j) at `level` — hierarchical
     (parent cell = id >> 2), JVM-only, and reproducible in plain SQL
-    (the driver-gate oracle builds the identical arithmetic).
+    (`s2_quad_id_sql`, the driver-gate oracle).
+
+    Built as STAGED projections (xyz -> face/u/v -> st -> ij -> morton),
+    not one composed Column: composing duplicates subtrees
+    combinatorially — morton references i/j 2x per level, ij references
+    st 2x (clamp), st references u 3x (sign branch), and every u branch
+    embeds the xyz trig — ~70 copies of the trig tree at level 6, a huge
+    codegen unit (measured 5.6x slower than geohash on identical input at
+    sf0.1). Separate Projects keep each subexpression computed ONCE;
+    Catalyst's CollapseProject will not re-inline them because the
+    producers are non-cheap and multiply referenced.
 
     Level cap: face (3 bits, faces 4-5 need all three) sits at bit
     positions [2*level, 2*level+2], which must stay below the sign bit
     (position 63) of a signed long — 2*level+2 <= 62, i.e. level in
     [0, MAX_LEVEL]."""
-    if not 0 <= level <= MAX_LEVEL:
-        raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
-    face, i, j = s2_face_ij_exprs(level, lon_col, lat_col)
-    return (F.shiftleft(face, 2 * level)
-            .bitwiseOR(_morton_expr(i, j, level)).alias("s2_quad"))
-
-
-def with_s2_quad(df, level: int, lon_col: str = "x", lat_col: str = "y",
-                 out_col: str = "s2_quad"):
-    """`out_col` = the level-`level` quad id, built as STAGED projections
-    (face/u/v -> st -> ij -> morton) instead of one composed expression.
-
-    Why this exists next to s2_quad_id_expr: composing everything into a
-    single Column duplicates subtrees combinatorially — morton references
-    i/j 2x per level, ij references st 2x (clamp), st references u 3x
-    (sign branch), and every u branch embeds the xyz trig — ~70 copies of
-    the trig tree at level 6, a huge codegen unit (measured 5.6x slower
-    than geohash on identical input at sf0.1). Separate Projects keep
-    each subexpression computed ONCE; Catalyst's CollapseProject will not
-    re-inline them because the producers are non-cheap and multiply
-    referenced. Same result, same zero-Python plan, ~5x less expression
-    tree."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
     tmp = ["_s2x", "_s2y", "_s2z", "_s2f", "_s2u", "_s2v", "_s2i", "_s2j"]
@@ -146,7 +119,7 @@ def with_s2_quad(df, level: int, lon_col: str = "x", lat_col: str = "y",
 
 
 def s2_quad_id_sql(level: int, lon_sql: str, lat_sql: str) -> str:
-    """The DuckDB/ANSI twin of s2_quad_id_expr, as a SQL scalar expression
+    """The DuckDB/ANSI twin of with_s2_quad, as a SQL scalar expression
     string over lon/lat SQL sub-expressions — used by oracle_sql()."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}]")

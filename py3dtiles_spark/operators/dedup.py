@@ -5,12 +5,16 @@ codegen); MinHash AND SimHash use native xxhash64 aggregations over exploded
 tokens/shingles (map-side partial agg keeps the shuffle at |docs| rows).
 
 Scale notes:
-- exact_dedup: one hash shuffle on the digest; identical to a groupBy.
+- exact_dedup: the one "lowest doc_id per md5(text)" rule (`curate --dedup
+  exact`, `corpus_curation`, `llm_pipeline`). The window partitions by the
+  32-hex-char digest and Spark's WindowGroupLimit keeps rank 1 map-side,
+  so once the caller selects `text` away the exchange ships digests,
+  never document bodies.
 - minhash LSH: explode(shingles) is the big intermediate — shuffle is on
   doc_id (already the partition key after generation) and band buckets are
   tiny; candidate verification touches only bucket collisions.
-- near-dup pairs are emitted (a < b) so downstream "keep the smallest id"
-  removal is one anti-join.
+- near-dup pairs are emitted (a < b); connected_components turns them
+  into clusters keyed by the smallest id.
 """
 
 from __future__ import annotations
@@ -20,7 +24,9 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id row per distinct text (hash groupBy)."""
+    """Keep the lowest-id row per distinct md5(text); md5 collisions are
+    the only divergence from text equality, and the DuckDB twins apply the
+    identical rule. NULL texts share one group."""
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
     return (df.withColumn("_rn", F.row_number().over(w))
               .filter("_rn = 1").drop("_rn"))
@@ -102,20 +108,13 @@ def minhash_lsh_pairs(docs: DataFrame, num_perm: int = 16, bands: int = 4,
                 .select("a", "b", "jaccard"))
 
 
-def dedup_by_pairs(docs: DataFrame, pairs: DataFrame,
-                   id_col: str = "doc_id") -> DataFrame:
-    """Drop every doc that appears as the larger id of a near-dup pair
-    (one broadcast anti-join)."""
-    losers = pairs.select(F.col("b").alias(id_col)).distinct()
-    return docs.join(losers, id_col, "left_anti")
-
-
 def connected_components(pairs: DataFrame, max_iter: int = 25,
                          a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Near-dup pair list -> transitive clusters: (id, cluster_id) with
     cluster_id = min doc id reachable through the pair graph. The
     principled step between pair generation and canonical-doc selection
-    (dedup_by_pairs drops pair-locally and over/under-drops on chains).
+    (dropping each pair's larger id pair-locally over/under-drops on
+    chains).
 
     Min-label propagation: one equi-join + min-agg per round, labels
     persisted per round, early exit when no label moves. Converges in

@@ -1,5 +1,5 @@
-"""k-nearest-neighbor operators — LOD point-budget selection (north_star)
-generalized, plus embedding similarity search for training-data pipelines.
+"""k-nearest-neighbor operators: point kNN joins and embedding similarity
+search for training-data pipelines.
 
 Physical strategies:
 - knn_points / knn_embeddings (brute force): queries are broadcast; each
@@ -10,8 +10,10 @@ Physical strategies:
 - ann_lsh_embeddings: random-hyperplane signatures bucket both sides;
   exact re-rank inside buckets. Recall < 1, cost ~ bucket sizes — the
   100 TB scale path.
-- lod_budget_select: per-tile distance-ranked budget cap — the kNN-flavored
-  LOD selection the reference approximates with its spacing grid.
+- knn_join_points: both sides DataFrames, grid-cell equi-join with a
+  per-query completeness flag; knn_points is its brute-force reference,
+  and ann_recall / ivf_recall measure the approximate paths against the
+  exact one.
 """
 
 from __future__ import annotations
@@ -580,15 +582,3 @@ def ann_recall(emb: DataFrame, queries, k: int = 10, n_planes: int = 8,
                                           n_probes=n_probes,
                                           seed=seed).collect()}
     return len(exact & approx) / max(1, len(exact))
-
-
-def lod_budget_select(points_with_tiles: DataFrame, budget: int,
-                      seed: int = 42) -> DataFrame:
-    """Per-tile LOD budget: keep at most `budget` points per tile, ranked by
-    a deterministic pseudo-random order (reference merger.py:201-213 random
-    overview sampling, made reproducible via hash ordering). Pure window —
-    top-k per group, no UDF."""
-    w = Window.partitionBy("tile_id").orderBy(
-        F.xxhash64("point_id", F.lit(seed)).asc())
-    return (points_with_tiles.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= budget).drop("rk"))

@@ -1,25 +1,21 @@
-"""Data layout for scan pruning at 100 TB: Z-order (Morton) clustering.
+"""Z-order (Morton) key for scan pruning and spatial bucketing.
 
 Parquet/Iceberg data skipping works off per-file and per-row-group
 min/max statistics: a multi-dimensional predicate can only prune files if
-rows that are close in THAT space are close in file order. Linear sort
-orders cluster one column and shred the rest; interleaving the quantized
-bits of all predicate columns (Z-order — the same Morton construction as
-the tiler's grid key, functions/geometry xyz_to_key, and the S2 quad id)
-bounds every file to a small hyper-rectangle, so selective spatial/
-numeric predicates skip ~everything.
+rows that are close in THAT space are close in file order. Interleaving
+the quantized bits of all predicate columns (Z-order — the same Morton
+construction as the tiler's grid key, functions/geometry xyz_to_key, and
+the S2 quad id) bounds every key range to a small hyper-rectangle.
 
-Spark-first shape: the key is ONE native expression; the layout is
-`repartitionByRange(n, zkey)` (range exchange: equal-frequency key
-buckets via sampled quantiles — handles skew that fixed-width bucketing
-cannot) + `sortWithinPartitions(zkey)` so row groups inside each file
-are clustered too. No UDF anywhere; on Iceberg the same key feeds
-`sort_order`/OPTIMIZE.
+The key is ONE native expression, no UDF: `zorder_key_expr` feeds
+`repartitionByRange` + `sortWithinPartitions` for a clustered write (or
+Iceberg `sort_order`), and its coarse prefix is the spatial bucket of
+`zorder_key` and `llm_pipeline` in `__spark_entry__.py`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 MAX_TOTAL_BITS = 62        # signed long, sign bit free
 
@@ -53,18 +49,3 @@ def zorder_key_expr(cols: list[str], bounds: list[tuple[float, float]],
             key = key.bitwiseOR(F.shiftleft(
                 F.shiftright(qc, b).bitwiseAND(F.lit(1)), b * d + ci))
     return key
-
-
-def zorder_layout(df: DataFrame, cols: list[str],
-                  bounds: list[tuple[float, float]], n_files: int,
-                  bits: int = 16) -> DataFrame:
-    """Cluster `df` for data skipping on `cols`: range-partition into
-    `n_files` output partitions by the Morton key (sampled-quantile
-    splits — skew-proof) and sort within each, so both file-level and
-    row-group-level min/max stats are tight. Write the result with any
-    sink; rows are unchanged, only ordered."""
-    key = zorder_key_expr(cols, bounds, bits).alias("_zkey")
-    return (df.withColumn("_zkey", key)
-            .repartitionByRange(n_files, F.col("_zkey"))
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey"))

@@ -38,8 +38,9 @@ def build_merge_tree(tilesets: list[dict], aabb: np.ndarray | None = None,
     Returns the merged tileset root node (driver-side JSON-able dict).
 
     Every internal node carries `_node_path` (quadrant-digit string) and
-    `_member_uris` (the input tilesets under it) so merge_with_overviews
-    can attach an LOD overview pnts per internal node (merger.py:201-227).
+    `_member_uris` (the input tilesets under it); `_federate` pops both so
+    merge_with_overviews can attach an LOD overview pnts per internal node
+    (merger.py:201-227).
     """
     if aabb is None:
         aabb = union_aabb(tilesets)
@@ -189,26 +190,17 @@ def merge_with_overviews(spark, root_dir: str, out_dir: str,
         pnts_scan, tiles_to_pnts_df, write_pnts_files)
 
     tilesets = scan_tilesets(root_dir)
-    doc = merge_tilesets(tilesets, min_diag=min_diag)
+    doc, internal = _federate(tilesets, min_diag)
     os.makedirs(out_dir, exist_ok=True)
 
-    # collect internal nodes (path -> member uris) and per-node totals
+    # per internal node: its overview uri and member point total
     count_by_uri = {t["uri"]: t["point_count"] for t in tilesets}
     nodes = []
-
-    def walk(node):
-        if "_node_path" in node:
-            path = node.pop("_node_path")
-            members = node.pop("_member_uris")
-            total = sum(count_by_uri[u] for u in members)
-            if total > 0:
-                uri = f"r{path}.pnts" if path else "r.pnts"
-                node["content"] = {"uri": uri}
-                nodes.append((path, members, total))
-        for c in node.get("children", []):
-            walk(c)
-
-    walk(doc["root"])
+    for node, path, members in internal:
+        total = sum(count_by_uri[u] for u in members)
+        if total > 0:
+            node["content"] = {"uri": f"r{path}.pnts" if path else "r.pnts"}
+            nodes.append((path, members, total))
 
     if nodes:
         # one lazy scan per input tileset dir; the per-node unions below
@@ -259,6 +251,14 @@ def merge_with_overviews(spark, root_dir: str, out_dir: str,
 def merge_tilesets(tileset_rows, min_diag: float = 1.0) -> dict:
     """Entry point mirroring `py3dtiles merge`: rows/dicts with
     (tileset_id, uri, min_x..max_z or aabb, point_count, geometric_error)."""
+    return _federate(tileset_rows, min_diag)[0]
+
+
+def _federate(tileset_rows, min_diag: float):
+    """(tileset document, internal nodes). The bookkeeping keys that
+    build_merge_tree puts on internal nodes are removed here, so no merge
+    path writes them; each internal node comes back as (node dict,
+    quadrant path, member uris), in pre-order."""
     tilesets = []
     for r in tileset_rows:
         d = r.asDict() if hasattr(r, "asDict") else dict(r)
@@ -272,6 +272,16 @@ def merge_tilesets(tileset_rows, min_diag: float = 1.0) -> dict:
                          np.asarray(d["aabb"][1]) - np.asarray(d["aabb"][0]))))
         tilesets.append(d)
     root = build_merge_tree(tilesets, min_diag=min_diag)
-    return {"asset": {"version": "1.0"},
-            "geometricError": root["geometricError"] or 1.0,
-            "root": root}
+    internal = []
+
+    def walk(node):
+        if "_node_path" in node:
+            internal.append((node, node.pop("_node_path"),
+                             node.pop("_member_uris")))
+        for c in node.get("children", []):
+            walk(c)
+
+    walk(root)
+    return ({"asset": {"version": "1.0"},
+             "geometricError": root["geometricError"] or 1.0,
+             "root": root}, internal)

@@ -10,8 +10,6 @@ join like any other table, and empty sky costs nothing).
   (bounded sequence-explode per feature + center-in-rect rule). The
   fan-out per feature is area/cell_size^2, so partitions stay bounded by
   choosing cell_size; no driver involvement.
-- rasterize_triangles: the general vector path (any polygon after
-  triangulate_features) — Arrow-batched scanline over cell centers.
 - raster_pyramid: 2x2 rollup per level, one groupBy per level, map-side
   partial aggregation; the classic tile-pyramid build.
 - vectorize_raster: raster -> rectangle cover, ZERO Python: two cascaded
@@ -26,8 +24,6 @@ of its LOD pyramid (node.py geometricError halving per level).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -71,58 +67,6 @@ def rasterize_rects(rects: DataFrame, cell_size: float,
                                cell_size)
     return (cells.groupBy("cell_x", "cell_y")
             .agg(F.sum("_v").alias("value")))
-
-
-def rasterize_triangles(tris: DataFrame, cell_size: float,
-                        value_col: str | None = None) -> DataFrame:
-    """General vector->raster: triangles (columns ax, ay, bx, by, cx, cy
-    [+ value_col]) -> covered cells by center-in-triangle scanline.
-    Arrow-batched numpy; per-triangle cost is its bbox cell count."""
-    cols = ["ax", "ay", "bx", "by", "cx", "cy"]
-    vc = value_col
-
-    def scan(batches):
-        for pdf in batches:
-            out_x, out_y, out_v = [], [], []
-            vals = pdf[vc].to_numpy() if vc else np.ones(len(pdf))
-            a = pdf[["ax", "ay"]].to_numpy(dtype=np.float64)
-            b = pdf[["bx", "by"]].to_numpy(dtype=np.float64)
-            c = pdf[["cx", "cy"]].to_numpy(dtype=np.float64)
-            for t in range(len(pdf)):
-                p0, p1, p2 = a[t], b[t], c[t]
-                lo = np.minimum(np.minimum(p0, p1), p2)
-                hi = np.maximum(np.maximum(p0, p1), p2)
-                kx = np.arange(int(np.ceil(lo[0] / cell_size - 0.5)),
-                               int(np.ceil(hi[0] / cell_size - 0.5)))
-                ky = np.arange(int(np.ceil(lo[1] / cell_size - 0.5)),
-                               int(np.ceil(hi[1] / cell_size - 0.5)))
-                if not len(kx) or not len(ky):
-                    continue
-                gx, gy = np.meshgrid((kx + 0.5) * cell_size,
-                                     (ky + 0.5) * cell_size)
-                # barycentric sign test (inclusive on edges)
-                d0 = ((p1[0] - p0[0]) * (gy - p0[1])
-                      - (p1[1] - p0[1]) * (gx - p0[0]))
-                d1 = ((p2[0] - p1[0]) * (gy - p1[1])
-                      - (p2[1] - p1[1]) * (gx - p1[0]))
-                d2 = ((p0[0] - p2[0]) * (gy - p2[1])
-                      - (p0[1] - p2[1]) * (gx - p2[0]))
-                inside = ((d0 >= 0) & (d1 >= 0) & (d2 >= 0)) | \
-                         ((d0 <= 0) & (d1 <= 0) & (d2 <= 0))
-                jy, jx = np.nonzero(inside)
-                out_x.append(kx[jx])
-                out_y.append(ky[jy])
-                out_v.append(np.full(len(jx), vals[t]))
-            if out_x:
-                yield pd.DataFrame({
-                    "cell_x": np.concatenate(out_x),
-                    "cell_y": np.concatenate(out_y),
-                    "_v": np.concatenate(out_v)})
-
-    sel = cols + ([vc] if vc else [])
-    cells = tris.select(*sel).mapInPandas(
-        scan, schema="cell_x long, cell_y long, _v double")
-    return cells.groupBy("cell_x", "cell_y").agg(F.sum("_v").alias("value"))
 
 
 def raster_pyramid(cells: DataFrame, levels: int,

@@ -90,6 +90,9 @@ from py3dtiles_spark.operators.replay import assign_subtree
 PENDING_SCHEMA = "point_id long, x float, y float, z float, tile_id string"
 KERNEL_SCHEMA = PENDING_SCHEMA + ", accepted boolean"
 ASSIGN_SCHEMA = "point_id long, tile_id string"
+# bound on the level loop; a build that still forwards points after this
+# many levels returns with counters["complete"] = False
+MAX_LEVELS = 32
 
 # node_meta as joined to pending (_route_nodes output minus cnt): mn* grid
 # aabb_min (float32, reference Grid constant); s* cell_count *
@@ -126,7 +129,6 @@ class TilingConfig:
     # independent of the core count (identical plans across cluster sizes,
     # required for apples-to-apples scaling measurements)
     plan_parallelism: Optional[int] = None
-    max_levels: int = 32
     # every level lands here as parquet (resumable, lineage-truncating):
     # the level snapshot is the recovery unit and feeds the final
     # assignment read. None = a fresh temporary directory.
@@ -475,7 +477,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
     spark.conf.set(_limit_key, "100000")
 
     try:
-        for level in range(start_level, cfg.max_levels):
+        for level in range(start_level, MAX_LEVELS):
             lv_dir = os.path.join(ckpt, f"level={level}")
             t0 = time.time()
             # per-node count + bbox in ONE agg pass: the bbox costs nothing

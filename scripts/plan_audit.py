@@ -167,7 +167,8 @@ CHECKS = {
         ("all-native gate+dedup pipeline, zero Python",
          "!FlatMap|ArrowEval|BatchEval"),
         ("window dedup on the md5 key, not document bodies",
-         r"Window[\s\S]*_th"),
+         r"Window[\s\S]*Exchange hashpartitioning\(_w0[\s\S]*"
+         r"md5\(cast\(text#\d+ as binary\)\) AS _w0"),
         ("map-side partial agg",
          r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
     ],

@@ -41,7 +41,7 @@ GATE_GBPS = 4.0          # healthy-window bar (bench.py sentinel doc)
 MAX_ATTEMPTS = 12
 
 CHILD = r"""
-import json, os, sys, tempfile, time
+import json, sys, tempfile, time
 sys.path.insert(0, "@@REPO@@")
 from py3dtiles_spark.session import get_spark
 from py3dtiles_spark.operators.tiling import (TilingConfig, build_tiling,
@@ -56,13 +56,10 @@ spark = get_spark("scaling-gate", cpus=cpus, shuffle_partitions=2 * cpus)
 points = pages_as_points(generate_pages(spark, n_docs), skew=True)
 
 def one_run():
-    # SPARK_GRAFT_LOCAL_HARD_CAP bounds the largest sequential accept
-    # task (default 300k); the SAME value applies to BOTH legs, so the
-    # plans stay identical — it tunes task granularity, not the plan
+    # plan_parallelism fixes the level plan, so both legs run identical
+    # plans whatever their core count
     cfg = TilingConfig(checkpoint_dir=tempfile.mkdtemp(),
-                       plan_parallelism=8,
-                       local_hard_cap=int(os.environ.get(
-                           "SPARK_GRAFT_LOCAL_HARD_CAP", "300000")))
+                       plan_parallelism=8)
     t0 = time.time()
     res = build_tiling(spark, points, cfg)
     dt = time.time() - t0

@@ -4,10 +4,10 @@ import numpy as np
 import pytest
 
 from py3dtiles_spark.operators.dedup import (
-    dedup_by_pairs, exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs,
+    exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs,
     simhash_near_dup_pairs)
 from py3dtiles_spark.operators.knn import (
-    ann_lsh_embeddings, knn_embeddings, knn_points, lod_budget_select)
+    ann_lsh_embeddings, knn_embeddings, knn_points)
 
 
 def _emb_df(spark, n=400, dim=16, seed=3):
@@ -51,18 +51,6 @@ def test_ann_lsh_contains_self_and_subset_of_bucket(spark):
     assert ann.collect()[0].n_id == got[0].n_id == 3
 
 
-def test_lod_budget_select(spark):
-    rows = [(i, "a" if i < 100 else "b") for i in range(150)]
-    df = spark.createDataFrame(rows, "point_id long, tile_id string")
-    out = lod_budget_select(df, budget=30)
-    counts = {r.tile_id: r["count"] for r in out.groupBy("tile_id").count().collect()}
-    assert counts == {"a": 30, "b": 30}
-    # deterministic
-    again = lod_budget_select(df, budget=30)
-    assert sorted(r.point_id for r in out.collect()) == \
-           sorted(r.point_id for r in again.collect())
-
-
 def _docs(spark):
     base = "the quick brown fox jumps over the lazy dog and runs far away today"
     rows = [
@@ -87,9 +75,9 @@ def test_minhash_lsh_finds_near_dups(spark):
     got = {(r.a, r.b) for r in pairs.collect()}
     assert (0, 1) in got and (3, 4) in got
     assert all(p[0] < p[1] for p in got)
-    deduped = dedup_by_pairs(_docs(spark), pairs)
-    kept = {r.doc_id for r in deduped.collect()}
-    assert 0 in kept and 1 not in kept and 4 not in kept
+    # "keep the smallest id" drops each pair's larger id
+    dropped = {b for _, b in got}
+    assert 0 not in dropped and {1, 4} <= dropped
 
 
 def test_ngram_jaccard_exact_dup_is_one(spark):

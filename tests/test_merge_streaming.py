@@ -49,3 +49,34 @@ def test_overview_sample_ratio_and_determinism(spark):
     assert s1.collect() == s2.collect()  # hash-ordered, reproducible
     half = overview_sample(df, total=10000, cap=999999).count()
     assert abs(half - 5000) < 400       # capped at 0.5
+
+
+def test_merge_cli_parquet_writes_no_bookkeeping_keys(spark, tmp_path):
+    """`merge --input <rows.parquet>` writes a clean tileset.json: the
+    merge tree's internal `_`-prefixed node keys never reach the file."""
+    import json
+
+    import pandas as pd
+
+    from py3dtiles_spark.__main__ import main
+
+    # a single parquet file: a directory input takes the scan-and-merge path
+    src = str(tmp_path / "rows.parquet")
+    pd.DataFrame(_six_tilesets()[:4]).to_parquet(src)
+    out = str(tmp_path / "out")
+    assert main(["merge", "--input", src, "--output", out,
+                 "--cpus", "4"]) == 0
+    with open(f"{out}/tileset.json") as f:
+        doc = json.load(f)
+
+    def keys(node):
+        if isinstance(node, dict):
+            for k, v in node.items():
+                yield k
+                yield from keys(v)
+        elif isinstance(node, list):
+            for v in node:
+                yield from keys(v)
+
+    assert doc["root"].get("children")        # internal nodes were built
+    assert not [k for k in keys(doc) if k.startswith("_")]

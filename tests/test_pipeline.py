@@ -81,62 +81,6 @@ def test_salted_join_matches_plain(spark):
     assert "_salt" not in got.columns
 
 
-def test_zorder_layout_prunes_files(spark, tmp_path):
-    """Z-order clustering must (a) keep rows identical and (b) make
-    per-file x/y min-max boxes tight enough that a small box predicate
-    touches a small fraction of files — the parquet data-skipping win a
-    linear sort cannot give on the second column."""
-    import pyarrow.parquet as pq
-    import glob
-    from py3dtiles_spark.operators.layout import zorder_layout
-    from pyspark.sql import functions as F
-    df = spark.range(0, 40000).select(
-        F.col("id"),
-        (F.pmod(F.xxhash64("id"), F.lit(10000)) / 100.0).alias("x"),
-        (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(10000)) / 100.0).alias("y"))
-    n_files = 16
-    zed = zorder_layout(df, ["x", "y"], [(0.0, 100.0), (0.0, 100.0)],
-                        n_files)
-    out = str(tmp_path / "z")
-    zed.write.parquet(out)
-    # rows unchanged
-    back = spark.read.parquet(out)
-    assert back.count() == 40000
-    assert back.exceptAll(df).count() == 0
-    # per-file bbox area: z-ordered files must be far tighter than the
-    # unclustered layout (each file ~ the full domain)
-    def file_boxes(path):
-        boxes = []
-        for f in glob.glob(path + "/part-*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            xmin = ymin = float("inf"); xmax = ymax = float("-inf")
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                for ci in range(row.num_columns):
-                    col = row.column(ci)
-                    name = col.path_in_schema
-                    st = col.statistics
-                    if st is None:
-                        continue
-                    if name == "x":
-                        xmin, xmax = min(xmin, st.min), max(xmax, st.max)
-                    if name == "y":
-                        ymin, ymax = min(ymin, st.min), max(ymax, st.max)
-            boxes.append((xmin, xmax, ymin, ymax))
-        return boxes
-    plain_out = str(tmp_path / "p")
-    df.repartition(n_files).write.parquet(plain_out)
-    area = lambda bs: sum((x1 - x0) * (y1 - y0) for x0, x1, y0, y1 in bs)
-    z_area, p_area = area(file_boxes(out)), area(file_boxes(plain_out))
-    assert z_area < p_area * 0.35        # >=65% tighter file bboxes
-    # a 10x10 box predicate overlaps few z-files, ~all plain files
-    def touched(bs):
-        return sum(1 for x0, x1, y0, y1 in bs
-                   if x1 >= 40 and x0 <= 50 and y1 >= 40 and y0 <= 50)
-    assert touched(file_boxes(out)) <= n_files // 2
-    assert touched(file_boxes(plain_out)) == n_files
-
-
 def test_read_pending_hive_checkpoint(spark, tmp_path):
     """A level checkpoint is hive-partitioned by `accepted`: pending rows
     come from the accepted=false subdir, and a fully-accepted level (no

@@ -1,12 +1,10 @@
 """Raster<->vector operators: coverage rule, pyramid conservation,
-rectangle-cover exactness, triangle scanline vs rect fast path."""
+and rectangle-cover exactness."""
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from py3dtiles_spark.operators.raster import (
-    rasterize_rects, rasterize_triangles, raster_pyramid, vectorize_raster)
+    rasterize_rects, raster_pyramid, vectorize_raster)
 
 
 def _rects(spark):
@@ -69,25 +67,6 @@ def test_vectorize_exact_cover(spark):
         " weight double")
     one = vectorize_raster(rasterize_rects(solo, 1.0)).collect()
     assert len(one) == 1 and one[0].n_cells == 64
-
-
-def test_triangles_match_rects_on_split_rectangle(spark):
-    """A rectangle split into its two triangles rasterizes to the same
-    cell set as the rect fast path (up to the shared-diagonal cells,
-    which both triangles claim — values may double there; compare keys)."""
-    rect = spark.createDataFrame(
-        [(0, 0.0, 0.0, 5.0, 3.0, 1.0)],
-        "geom_id long, x0 double, y0 double, x1 double, y1 double,"
-        " weight double")
-    tris = spark.createDataFrame(
-        [(0.0, 0.0, 5.0, 0.0, 5.0, 3.0),
-         (0.0, 0.0, 5.0, 3.0, 0.0, 3.0)],
-        "ax double, ay double, bx double, by double, cx double, cy double")
-    want = {(r.cell_x, r.cell_y) for r in
-            rasterize_rects(rect, 1.0).collect()}
-    got = {(r.cell_x, r.cell_y) for r in
-           rasterize_triangles(tris, 1.0).collect()}
-    assert got == want
 
 
 def test_vectorize_min_value_threshold(spark):

@@ -112,6 +112,17 @@ def test_contamination_stats_hand_computed(spark):
     assert got[9].is_contaminated == 1
 
 
+def _curate_docs(spark, path):
+    spark.createDataFrame(
+        [(0, "the cat sat on the mat and then sat some more today ok"),
+         (1, "the cat sat on the mat and then sat some more today ok"),
+         (2, "completely different words entirely unlike anything else"),
+         (3, "held out eval document with its own distinct words"),
+         (4, None)],   # NULL text: must appear in signals with kept=0,
+                       # not silently vanish from the outputs/counts
+        "doc_id long, text string").write.mode("overwrite").parquet(path)
+
+
 def test_curate_cli_end_to_end(spark, tmp_path, capsys):
     # the curate subcommand composes the curation operators into one job:
     # signals parquet + kept subset + scalar JSON summary
@@ -121,14 +132,7 @@ def test_curate_cli_end_to_end(spark, tmp_path, capsys):
 
     src = str(tmp_path / "docs.parquet")
     ev = str(tmp_path / "eval.parquet")
-    spark.createDataFrame(
-        [(0, "the cat sat on the mat and then sat some more today ok"),
-         (1, "the cat sat on the mat and then sat some more today ok"),
-         (2, "completely different words entirely unlike anything else"),
-         (3, "held out eval document with its own distinct words"),
-         (4, None)],   # NULL text: must appear in signals with kept=0,
-                       # not silently vanish from the outputs/counts
-        "doc_id long, text string").write.mode("overwrite").parquet(src)
+    _curate_docs(spark, src)
     spark.createDataFrame(
         [(0, "held out eval document with its own distinct words")],
         "doc_id long, text string").write.mode("overwrite").parquet(ev)
@@ -147,6 +151,60 @@ def test_curate_cli_end_to_end(spark, tmp_path, capsys):
     assert sig[4].kept == 0 and sig[4].logprob is None   # retained row
     kept = {r.doc_id for r in spark.read.parquet(f"{out}/kept").collect()}
     assert kept == {0, 2}
+
+    # --dedup none: every doc is canonical, so the exact dup 1 survives
+    out = str(tmp_path / "out_none")
+    rc = main(["curate", "--input", src, "--output", out,
+               "--eval-input", ev, "--dedup", "none", "--cpus", "4"])
+    assert rc == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["dups_dropped"] == 0 and summary["kept"] == 3
+    sig = spark.read.parquet(f"{out}/signals").collect()
+    assert len(sig) == 5 and all(r.is_canonical == 1 for r in sig)
+    kept = {r.doc_id for r in spark.read.parquet(f"{out}/kept").collect()}
+    assert kept == {0, 1, 2}
+
+
+def test_curate_dedup_shuffles_digests_not_text(spark, tmp_path):
+    """In the executed plans of `curate --dedup exact`, every exchange
+    keyed by the md5 digest sits on a partial WindowGroupLimit (rank 1 is
+    kept map-side) and its input carries no `text` attribute: the dedup
+    shuffle ships 32-hex-char keys, never document bodies."""
+    import re
+
+    from py3dtiles_spark.__main__ import main
+
+    src = str(tmp_path / "docs.parquet")
+    _curate_docs(spark, src)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(k) for k in range(seq.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    assert main(["curate", "--input", src, "--output",
+                 str(tmp_path / "out"), "--cpus", "4"]) == 0
+    # formatted explain: a tree of "Name (id)" lines, then one
+    # "(id) Name" block of Input/Output/Arguments lines per operator
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() > seen]
+    checked = 0
+    for plan in plans:
+        nodes = {int(m[1]): (m[2], m[3]) for m in re.finditer(
+            r"^\((\d+)\) (\w+)[^\n]*\n((?:.+\n?)*)", plan, re.M)}
+        digests = set(re.findall(r"md5\([^\n]*?\) AS (\w+#\d+)", plan))
+        for m in re.finditer(r"Exchange \((\d+)\)\n[ :|]*\+- (\w+) "
+                             r"\((\d+)\)", plan):
+            body = nodes[int(m[1])][1]
+            key = re.search(r"Arguments: hashpartitioning\((\w+#\d+)", body)
+            if not key or key[1] not in digests:
+                continue
+            child, child_body = nodes[int(m[3])]
+            assert child == "WindowGroupLimit" and "Partial" in child_body
+            assert "text#" not in re.search(r"Input \[\d+\]: (.*)", body)[1]
+            checked += 1
+    assert checked, "no md5-keyed exchange in curate's executed plans"
 
 
 def test_top_ngrams_hand_computed(spark):
