@@ -854,24 +854,47 @@ def q_vector_b3dm(spark, sf_dir):
 # ------------------------------- octree build (checkpoint-twin oracle, r6) --
 
 def _octree_ckpt_dir(sf_dir: str) -> str:
-    """Deterministic per-sf, PER-PROCESS checkpoint path for
-    q_tiling_octree, shared with its DuckDB twin (which reads the
-    accepted=true partitions in the SAME process — the driver gate and
-    check_oracle.py both run Spark query then oracle in one process, so
-    the pid suffix makes concurrent gate/bench/dev runs collide-free).
-    The dir is removed at interpreter exit."""
-    import atexit
+    """Deterministic per-sf checkpoint path for q_tiling_octree, shared
+    with its DuckDB twin, which reads the accepted=true partitions in the
+    SAME process (the driver gate and check_oracle.py both run the Spark
+    query, then the oracle). The path is the same in every process, so
+    oracle_sql() renders byte-identical text; the isolation of concurrent
+    gate/bench/dev runs is _own_octree_ckpt's lock, not the path."""
     import hashlib
-    import shutil
     tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:8]
-    path = f"/tmp/sg_octree_ckpt_{tag}_{os.getpid()}"
-    if path not in _OCTREE_CKPT_CLEANUP:
-        _OCTREE_CKPT_CLEANUP.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
+    return f"/tmp/sg_octree_ckpt_{tag}"
 
 
-_OCTREE_CKPT_CLEANUP: set = set()
+def _own_octree_ckpt(path: str, wait_s: float = 600.0) -> None:
+    """Hold `path` for the rest of this process: an exclusive lock on
+    `path`.lock, taken once, released by the OS when the process exits,
+    after the directory is removed at interpreter exit. While another
+    process holds it, wait up to `wait_s` seconds, then raise."""
+    if path in _OCTREE_CKPT_LOCKS:
+        return
+    import atexit
+    import fcntl
+    import shutil
+    import time
+    f = open(path + ".lock", "w")
+    deadline = time.monotonic() + wait_s
+    while True:
+        try:
+            fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            break
+        except BlockingIOError:
+            if time.monotonic() >= deadline:
+                f.close()
+                raise RuntimeError(
+                    f"octree checkpoint {path} is held by another process "
+                    f"(lock {path}.lock); it is freed when that process "
+                    "exits") from None
+            time.sleep(0.5)
+    _OCTREE_CKPT_LOCKS[path] = f
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+
+
+_OCTREE_CKPT_LOCKS: dict = {}
 
 
 def q_tiling_octree(spark, sf_dir):
@@ -887,6 +910,7 @@ def q_tiling_octree(spark, sf_dir):
     import shutil
     from py3dtiles_spark.operators.tiling import TilingConfig, build_tiling
     ckpt = _octree_ckpt_dir(sf_dir)
+    _own_octree_ckpt(ckpt)
     shutil.rmtree(ckpt, ignore_errors=True)
     pts = (_geo(spark, sf_dir)
            .select(F.col("doc_id").alias("point_id"), "x", "y", "z"))
@@ -1859,12 +1883,12 @@ def oracle_sql() -> dict[str, str]:
         # r6: the octree build's per-tile histogram, recomputed by DuckDB
         # straight from the accepted=true level-checkpoint partitions the
         # Spark query just wrote (the driver runs the Spark side first,
-        # which rebuilds the checkpoint at this deterministic per-process
-        # path). This pins returned-assignments == durably-written-
-        # checkpoint; the order-dependent accept itself stays pinned by
-        # the replay goldens. The sf dir defaults to the driver's sf0.01
-        # gate; SPARK_GRAFT_ORACLE_SF_DIR overrides it (check_oracle.py
-        # sets it so the twin follows any sf).
+        # which rebuilds the checkpoint at this fixed path under a lock
+        # its process holds until exit). This pins returned-assignments ==
+        # durably-written-checkpoint; the order-dependent accept itself
+        # stays pinned by the replay goldens. The sf dir defaults to the
+        # driver's sf0.01 gate; SPARK_GRAFT_ORACLE_SF_DIR overrides it
+        # (check_oracle.py sets it so the twin follows any sf).
         "tiling_octree": f"""
             SELECT tile_id, count(*)::BIGINT AS point_count
             FROM read_parquet(

@@ -14,6 +14,7 @@ Local: python -m py3dtiles_spark convert --n-docs 100000 --output /tmp/out
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import sys
@@ -57,7 +58,8 @@ def main(argv=None) -> int:
 
     m = sub.add_parser("merge", help="federate tilesets")
     m.add_argument("--input", required=True,
-                   help="parquet of tileset rows (tileset_id,min_x..max_z,point_count)")
+                   help="parquet of tileset rows (tileset_id,min_x..max_z,"
+                        "point_count), or a directory of */tileset.json")
     m.add_argument("--output", required=True)
     m.add_argument("--cpus", type=int,
                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
@@ -276,7 +278,11 @@ def main(argv=None) -> int:
         return 0
 
     if args.cmd == "merge":
-        if os.path.isdir(args.input):
+        # a rows parquet that Spark wrote is a directory too: its marker
+        # or part files tell it from a directory of tilesets
+        if os.path.isdir(args.input) and not (
+                os.path.exists(os.path.join(args.input, "_SUCCESS"))
+                or glob.glob(os.path.join(args.input, "*.parquet"))):
             # reference `py3dtiles merge <dir>`: scan */tileset.json,
             # federate, write the master tileset + root overview pnts
             from py3dtiles_spark.operators.merge import merge_with_overviews

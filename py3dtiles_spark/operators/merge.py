@@ -190,6 +190,8 @@ def merge_with_overviews(spark, root_dir: str, out_dir: str,
         pnts_scan, tiles_to_pnts_df, write_pnts_files)
 
     tilesets = scan_tilesets(root_dir)
+    if not tilesets:
+        raise ValueError(f"no */tileset.json under {root_dir}")
     doc, internal = _federate(tilesets, min_diag)
     os.makedirs(out_dir, exist_ok=True)
 

@@ -205,6 +205,33 @@ CONF_OVERRIDES = {
 }
 
 
+def session_builders(repo: str) -> list[tuple[str, int]]:
+    """(path, line) of every `SparkSession.builder` in a non-test module
+    other than py3dtiles_spark/session.py. get_spark is the one session
+    builder, so no entry point can start a session without its defaults
+    (the codegen cache size among them)."""
+    import ast
+    allowed = os.path.join("py3dtiles_spark", "session.py")
+    found = []
+    for dirpath, dirs, files in os.walk(repo):
+        dirs[:] = sorted(d for d in dirs
+                         if not d.startswith(".") and d != "tests")
+        for name in sorted(files):
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, repo)
+            if not name.endswith(".py") or rel == allowed:
+                continue
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), rel)
+            found += [(rel, node.lineno) for node in ast.walk(tree)
+                      if isinstance(node, ast.Attribute)
+                      and node.attr == "builder"
+                      and "SparkSession" in (getattr(node.value, "id", None),
+                                             getattr(node.value, "attr",
+                                                     None))]
+    return found
+
+
 def main():
     # queries that materialize intermediates (persist/localCheckpoint)
     # return a checkpoint-scan plan; this switch makes them hand back the
@@ -397,8 +424,17 @@ def main():
           f"({ex_allowed} collects audited)")
     lines.append("")
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    builders = session_builders(repo)
+    mark = "PASS" if not builders else "FAIL"
+    failures += len(builders)
+    lines.append("## sessions — one builder")
+    lines.append(f"- [{mark}] only py3dtiles_spark/session.py calls "
+                 f"SparkSession.builder ({len(builders)} other calls: "
+                 f"{builders})")
+    lines.append("")
+    print(f"{mark} sessions: one builder ({len(builders)} other calls)")
+
+    with open(os.path.join(repo, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("FAILURES:", failures)
     return 1 if failures else 0

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from py3dtiles_spark.operators.merge import merge_tilesets, overview_sample
@@ -15,6 +17,13 @@ def _six_tilesets():
     return rows
 
 
+def _content_uris(node):
+    if "content" in node:
+        yield node["content"]["uri"]
+    for c in node.get("children", []):
+        yield from _content_uris(c)
+
+
 def test_merge_routes_by_center_quadrant():
     doc = merge_tilesets(_six_tilesets(), min_diag=1.0)
     assert doc["asset"]["version"] == "1.0"
@@ -25,14 +34,8 @@ def test_merge_routes_by_center_quadrant():
         sum(c["geometricError"] for c in root["children"]))
 
     # every leaf content uri appears exactly once
-    uris = []
-    def walk(n):
-        if "content" in n:
-            uris.append(n["content"]["uri"])
-        for c in n.get("children", []):
-            walk(c)
-    walk(root)
-    assert sorted(uris) == [f"tileset_{i}.json" for i in range(6)]
+    assert sorted(_content_uris(root)) == [f"tileset_{i}.json"
+                                           for i in range(6)]
 
 
 def test_merge_single_tileset_is_leaf():
@@ -60,7 +63,6 @@ def test_merge_cli_parquet_writes_no_bookkeeping_keys(spark, tmp_path):
 
     from py3dtiles_spark.__main__ import main
 
-    # a single parquet file: a directory input takes the scan-and-merge path
     src = str(tmp_path / "rows.parquet")
     pd.DataFrame(_six_tilesets()[:4]).to_parquet(src)
     out = str(tmp_path / "out")
@@ -80,3 +82,36 @@ def test_merge_cli_parquet_writes_no_bookkeeping_keys(spark, tmp_path):
 
     assert doc["root"].get("children")        # internal nodes were built
     assert not [k for k in keys(doc) if k.startswith("_")]
+
+
+def test_merge_cli_spark_written_rows_take_the_rows_path(spark, tmp_path):
+    """A rows parquet Spark wrote is a directory of part files; it is
+    merged as rows, not scanned for */tileset.json."""
+    import json
+
+    import pandas as pd
+
+    from py3dtiles_spark.__main__ import main
+
+    src = str(tmp_path / "rows.parquet")
+    spark.createDataFrame(pd.DataFrame(_six_tilesets())).write.parquet(src)
+    out = str(tmp_path / "out")
+    assert main(["merge", "--input", src, "--output", out,
+                 "--cpus", "4"]) == 0
+    with open(f"{out}/tileset.json") as f:
+        doc = json.load(f)
+    assert sorted(_content_uris(doc["root"])) == [f"tileset_{i}.json"
+                                                  for i in range(6)]
+
+
+def test_merge_cli_dir_without_tilesets_names_it(spark, tmp_path):
+    import re
+
+    from py3dtiles_spark.__main__ import main
+
+    src = str(tmp_path / "empty")
+    os.makedirs(src)
+    with pytest.raises(ValueError,
+                       match=re.escape(f"no */tileset.json under {src}")):
+        main(["merge", "--input", src, "--output", str(tmp_path / "out"),
+              "--cpus", "4"])

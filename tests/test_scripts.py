@@ -14,6 +14,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
+import plan_audit  # noqa: E402
 import scaling_gate  # noqa: E402
 
 
@@ -55,6 +56,19 @@ def test_spark_submit_py_files_convert(tmp_path):
         cwd=work, env=env, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert (out / "tileset.json").is_file()
+
+
+def test_only_get_spark_builds_sessions(tmp_path):
+    """plan_audit's one-builder check passes on this repo and names a
+    non-test module that calls SparkSession.builder itself."""
+    assert plan_audit.session_builders(REPO) == []
+    (tmp_path / "py3dtiles_spark").mkdir()
+    (tmp_path / "tests").mkdir()
+    call = ("from pyspark.sql import SparkSession\n"
+            "s = SparkSession.builder.getOrCreate()\n")
+    for rel in ("py3dtiles_spark/session.py", "tests/t.py", "tool.py"):
+        (tmp_path / rel).write_text(call)
+    assert plan_audit.session_builders(str(tmp_path)) == [("tool.py", 2)]
 
 
 # ------------------------------------------------------ reachability guard --

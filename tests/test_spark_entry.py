@@ -50,3 +50,38 @@ def test_par_reads_suffixed_max_partition_bytes(spark, tmp_path):
         assert entrymod._par(df) is df
     finally:
         spark.conf.set(key, prev)
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _in_child(code: str, **kw):
+    import subprocess
+    return subprocess.Popen([sys.executable, "-c",
+                             "import __spark_entry__ as e\n" + code],
+                            cwd=_REPO, text=True, stdout=subprocess.PIPE,
+                            **kw)
+
+
+def test_octree_oracle_sql_is_identical_across_processes():
+    code = "print(e.oracle_sql()['tiling_octree'], end='')"
+    texts = [_in_child(code).communicate()[0] for _ in range(2)]
+    assert texts[0] == texts[1] == entrymod.oracle_sql()["tiling_octree"]
+
+
+def test_octree_checkpoint_is_held_by_one_process(tmp_path):
+    """Two processes never share the fixed checkpoint path: the second
+    waits for the first to exit (here: gives up at once)."""
+    import subprocess
+    path = str(tmp_path / "ckpt")
+    child = _in_child(f"e._own_octree_ckpt({path!r})\n"
+                      "print('held', flush=True)\ninput()",
+                      stdin=subprocess.PIPE)
+    try:
+        assert child.stdout.readline() == "held\n"
+        with pytest.raises(RuntimeError, match="held by another process"):
+            entrymod._own_octree_ckpt(path, wait_s=0)
+    finally:
+        child.communicate("\n")
+    entrymod._own_octree_ckpt(path, wait_s=0)
+    assert path in entrymod._OCTREE_CKPT_LOCKS
