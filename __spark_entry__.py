@@ -265,7 +265,7 @@ def _ntok():
 
 
 def _quality_gate(df: DataFrame) -> DataFrame:
-    """The curation quality gate corpus_curation and llm_pipeline share:
+    """llm_pipeline's curation quality gate:
     length >= 80, >= 10 tokens, punctuation ratio <= 0.2."""
     punct = F.length(F.regexp_replace("text", "[^.,;:!?'\"()-]", ""))
     return df.filter((F.length("text") >= 80) & (_ntok() >= 10)
@@ -324,25 +324,6 @@ def q_repetition_stats(spark, sf_dir):
             .agg(F.round(F.avg("f"), 6).alias("avg_dup3"),
                  F.max("f").alias("max_dup3"),
                  F.count(F.lit(1)).alias("n"))
-            .orderBy("lang"))
-
-
-def q_corpus_curation(spark, sf_dir):
-    """End-to-end training-data curation in one declarative plan:
-    quality gate (length + token floor + punctuation-density ceiling) ->
-    exact dedup (keep the min doc_id per md5(text), window rank —
-    operators/dedup.py exact_dedup) -> per-language kept-doc and token
-    budget. Every step is a built-in expression; the DuckDB twin replays
-    the identical pipeline."""
-    from py3dtiles_spark.operators.dedup import exact_dedup
-    gated = _quality_gate(_docs(spark, sf_dir)).withColumn("ntok", _ntok())
-    # selecting `text` away above the dedup prunes it below the window's
-    # exchange: the shuffle ships the 32-hex-char md5 key, not the body
-    kept = exact_dedup(gated).select("doc_id", "lang", "ntok")
-    return (kept.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("kept_docs"),
-                 F.sum("ntok").alias("token_budget"),
-                 F.min("doc_id").alias("first_doc"))
             .orderBy("lang"))
 
 
@@ -416,27 +397,6 @@ def q_substring_dup(spark, sf_dir):
     return substring_dup_stats(d, shingle_tokens=8).orderBy("doc_id")
 
 
-def q_top_ngrams(spark, sf_dir):
-    """Corpus-wide top-20 word bigrams (vocabulary induction): per-row
-    n-gram build -> explode -> map-side-combined count -> global top-k
-    as TakeOrderedAndProject (per-partition heaps, no full sort)."""
-    from py3dtiles_spark.functions.text import top_ngrams
-    d = _par(_docs(spark, sf_dir))
-    return top_ngrams(d, n=2, k=20)
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (GPT-3 appendix-C / Gopher 13-gram
-    style, here 8-token windows): per training doc, count of rolling
-    windows shared with a deterministic eval subset (doc_id % 41 = 0 of
-    the same corpus — no external data). Eval shingles distinct once ->
-    broadcast equi-join -> per-doc agg; zero Python."""
-    from py3dtiles_spark.functions.text import contamination_stats
-    d = _par(_docs(spark, sf_dir))
-    ev = d.filter("doc_id % 41 = 0")
-    return contamination_stats(d, ev, shingle_tokens=8).orderBy("doc_id")
-
-
 def q_unigram_logprob(spark, sf_dir):
     """Self-trained unigram-LM quality score (CCNet KenLM-filter
     analogue): add-one-smoothed corpus unigram model, per-doc mean token
@@ -479,20 +439,6 @@ def q_dedup_clusters(spark, sf_dir):
                               shingle_n=5)
     return (connected_components(pairs)
             .withColumnRenamed("id", "doc_id").orderBy("doc_id"))
-
-
-def q_knn_top5(spark, sf_dir):
-    """Brute-force cosine top-5 for two query vectors (rank output)."""
-    import numpy as np
-    from py3dtiles_spark.operators.knn import knn_embeddings
-    emb = _par(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-    qs = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-          for r in emb.filter("vec_id IN (0, 7)").collect()}
-    out = knn_embeddings(emb, [(k, v) for k, v in qs.items()], k=5)
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                           F.col("n_id").asc())
-    return (out.withColumn("rank", F.row_number().over(w).cast("long"))
-            .select("q_id", "n_id", "rank").orderBy("q_id", "rank"))
 
 
 def q_knn_join(spark, sf_dir):
@@ -549,56 +495,6 @@ def q_embedding_norms(spark, sf_dir):
             .groupBy("label")
             .agg(F.count("*").alias("n"), F.round(F.avg("norm"), 6).alias("avg_norm"))
             .orderBy("label"))
-
-
-def q_hourly_events(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (ev.groupBy(F.date_trunc("hour", "ts").alias("hour"))
-            .agg(F.count("*").alias("n_events"),
-                 F.round(F.sum("value"), 4).alias("sum_value"),
-                 F.countDistinct("user_id").alias("n_users"))
-            .orderBy("hour"))
-
-
-def q_top_users(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    total = ev.groupBy("user_id").agg(
-        F.round(F.sum("value"), 4).alias("total"),
-        F.count("*").alias("n"))
-    w = Window.orderBy(F.col("total").desc(), F.col("user_id").asc())
-    return (total.withColumn("rk", F.row_number().over(w).cast("long"))
-            .filter("rk <= 10").orderBy("rk"))
-
-
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-flavored scan+agg with filter pushdown (lineitem)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (li.filter(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum("l_quantity").alias("sum_qty"),
-                 F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-                 F.round(F.sum(F.col("l_extendedprice")
-                               * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-                 F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-                 F.count("*").alias("count_order"))
-            .orderBy("l_returnflag", "l_linestatus"))
-
-
-def q_lang_source_cube(spark, sf_dir):
-    d = _docs(spark, sf_dir)
-    return (d.groupBy("lang", "source").agg(F.count("*").alias("n"))
-            .orderBy("lang", "source"))
-
-
-def q_customer_order_join(spark, sf_dir):
-    """Broadcast dim join + agg: revenue per customer market segment."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .groupBy("c_mktsegment")
-            .agg(F.count("*").alias("n_orders"),
-                 F.round(F.sum("o_totalprice"), 2).alias("revenue"))
-            .orderBy("c_mktsegment"))
 
 
 def q_affine_transform(spark, sf_dir):
@@ -1084,14 +980,6 @@ def q_raster_vectorize(spark, sf_dir):
             .orderBy("x0", "x1", "y0"))
 
 
-def q_simhash_neardup_raw(spark, sf_dir):
-    """Raw SimHash near-dup pairs (bench timing target + pytest truth
-    table; the xxhash64 signature itself has no DuckDB twin)."""
-    from py3dtiles_spark.operators.dedup import simhash_near_dup_pairs
-    d = _docs(spark, sf_dir).filter("doc_id < 1500")
-    return simhash_near_dup_pairs(d, max_hamming=3).orderBy("a", "b")
-
-
 def q_simhash_neardup(spark, sf_dir):
     """SimHash near-dup INVARIANTS (VERDICT r3 #5: the raw pair list has
     no SQL twin because DuckDB lacks xxhash64, but the operator's contract
@@ -1231,11 +1119,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tfidf_terms": q_tfidf_terms,
         "repetition_stats": q_repetition_stats,
         "fingerprint": q_fingerprint,
-        # r6 late: substring-duplication rate + self-trained unigram-LM
-        # score (swapped in for knn_top5 / corpus_curation, which are
-        # physically subsumed by knn_join / llm_pipeline and retired to
-        # legacy_queries below — registry stays exactly the 50-entry
-        # checked window)
         "substring_dup": q_substring_dup,
         "unigram_logprob": q_unigram_logprob,
         "neardup_pairs": q_neardup_pairs,
@@ -1279,37 +1162,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # replay goldens + the tiling_invariants companion above
         "tiling_octree": q_tiling_octree,
     }
-    # r6: the registry is exactly the driver's verification window —
-    # every registered query is oracle-checked every round (VERDICT r5
-    # next-round #6). The redundant shapes that used to park past the
-    # window (plus the two r6-late rotations) live in legacy_queries()
-    # below: still
-    # benched and plan-audited, no longer separately gate-checked (each
-    # was rows+schema+hash green in r1-r4 and duplicates a physical shape
-    # already inside the window).
-
-
-def legacy_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Retired-from-gate queries: verified green in rounds 1-4, physically
-    redundant with shapes inside the checked window (plain partial-agg,
-    window top-k, broadcast dim join). Kept callable for bench.py and
-    scripts/plan_audit.py."""
-    return {
-        "hourly_events": q_hourly_events,
-        "top_users": q_top_users,
-        "pricing_summary": q_pricing_summary,
-        "lang_source_cube": q_lang_source_cube,
-        "customer_order_join": q_customer_order_join,
-        # r6 late rotation: green in r1-r6; knn_top5's broadcast-NLJ +
-        # two-stage top-k shape is knn_join's, corpus_curation's
-        # gate->md5-dedup->agg pipeline is llm_pipeline's prefix
-        "knn_top5": q_knn_top5,
-        "corpus_curation": q_corpus_curation,
-        # r6 late: new operators whose gate slots don't exist (window is
-        # full at 50) — verified by tests/test_legacy_parity.py instead
-        "decontaminate": q_decontaminate,
-        "top_ngrams": q_top_ngrams,
-    }
+    # the registry is exactly the oracle-checked window: every entry has
+    # an oracle_sql() twin, and every q_* def in this module is an entry
+    # (tests/test_spark_entry.py checks both)
 
 
 # shared CTE of the raster-family oracles — the exact SQL twin of
@@ -1898,114 +1753,4 @@ def oracle_sql() -> dict[str, str]:
                 || '/level=*/out/accepted=true/*.parquet',
                 hive_partitioning = 0)
             GROUP BY tile_id ORDER BY tile_id""",
-    }
-
-
-def legacy_oracle_sql() -> dict[str, str]:
-    """DuckDB twins for legacy_queries() — retired from the driver gate
-    (see legacy_queries docstring) but kept runnable so the pytest parity
-    test can still cross-check them any time."""
-    return {
-        "top_ngrams": """
-            WITH toks AS (
-                SELECT list_filter(string_split(text, ' '),
-                                   t -> t <> '') AS t
-                FROM documents),
-            g AS (
-                SELECT array_to_string(t[i.i:i.i + 1], ' ') AS ngram
-                FROM toks,
-                LATERAL unnest(generate_series(1, len(t) - 1)) AS i(i)
-                WHERE len(t) >= 2),
-            c AS (SELECT ngram, count(*)::BIGINT AS cnt
-                  FROM g GROUP BY ngram)
-            SELECT ngram, cnt,
-                   row_number() OVER (ORDER BY cnt DESC, ngram ASC)
-                       ::BIGINT AS rank
-            FROM c ORDER BY cnt DESC, ngram ASC LIMIT 20""",
-        "decontaminate": """
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(string_split(text, ' '),
-                                   t -> t <> '') AS t
-                FROM documents),
-            sh AS (
-                SELECT doc_id,
-                       md5(coalesce(array_to_string(
-                           t[g.i:g.i + 7], ' '), '')) AS h
-                FROM toks,
-                LATERAL unnest(generate_series(
-                    1, greatest(len(t) - 7, 1))) AS g(i)),
-            eh AS (SELECT DISTINCT h FROM sh WHERE doc_id % 41 = 0)
-            SELECT sh.doc_id,
-                   count(*)::BIGINT AS n_shingles,
-                   sum(CASE WHEN eh.h IS NOT NULL THEN 1 ELSE 0 END)
-                       ::BIGINT AS contaminated,
-                   CAST(sum(CASE WHEN eh.h IS NOT NULL THEN 1 ELSE 0 END)
-                        > 0 AS BIGINT) AS is_contaminated
-            FROM sh LEFT JOIN eh USING (h)
-            GROUP BY sh.doc_id ORDER BY sh.doc_id""",
-        "knn_top5": """
-            WITH q AS (SELECT vec_id AS q_id, embedding AS qv
-                       FROM embeddings WHERE vec_id IN (0, 7)),
-            sims AS (
-                SELECT q.q_id, e.vec_id AS n_id,
-                       list_cosine_similarity(q.qv, e.embedding) AS cos
-                FROM q CROSS JOIN embeddings e),
-            ranked AS (
-                SELECT q_id, n_id,
-                       row_number() OVER (PARTITION BY q_id
-                           ORDER BY cos DESC, n_id ASC)::BIGINT AS rank
-                FROM sims)
-            SELECT q_id, n_id, rank FROM ranked WHERE rank <= 5
-            ORDER BY q_id, rank""",
-        "corpus_curation": """
-            WITH q AS (
-                SELECT doc_id, lang, text,
-                       len(string_split(text, ' '))::BIGINT AS ntok,
-                       length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g'))
-                           ::DOUBLE / greatest(length(text), 1) AS punct_ratio
-                FROM documents
-                WHERE length(text) >= 80),
-            gated AS (
-                SELECT * FROM q WHERE ntok >= 10 AND punct_ratio <= 0.2),
-            kept AS (
-                SELECT * FROM (
-                    SELECT *, row_number() OVER (PARTITION BY md5(text)
-                                                 ORDER BY doc_id) AS rk
-                    FROM gated) WHERE rk = 1)
-            SELECT lang, count(*)::BIGINT AS kept_docs,
-                   sum(ntok)::BIGINT AS token_budget,
-                   min(doc_id) AS first_doc
-            FROM kept GROUP BY lang ORDER BY lang""",
-        "hourly_events": """
-            SELECT date_trunc('hour', ts) AS hour, count(*) AS n_events,
-                   round(sum(value), 4) AS sum_value,
-                   count(DISTINCT user_id) AS n_users
-            FROM events GROUP BY 1 ORDER BY hour""",
-        "top_users": """
-            SELECT user_id, total, n, rk FROM (
-                SELECT user_id, round(sum(value), 4) AS total,
-                       count(*) AS n,
-                       row_number() OVER (ORDER BY round(sum(value), 4) DESC,
-                                          user_id ASC)::BIGINT AS rk
-                FROM events GROUP BY user_id)
-            WHERE rk <= 10 ORDER BY rk""",
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   sum(l_quantity) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(avg(l_discount), 6) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus""",
-        "lang_source_cube": """
-            SELECT lang, source, count(*) AS n FROM documents
-            GROUP BY lang, source ORDER BY lang, source""",
-        "customer_order_join": """
-            SELECT c_mktsegment, count(*) AS n_orders,
-                   round(sum(o_totalprice), 2) AS revenue
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            GROUP BY c_mktsegment ORDER BY c_mktsegment""",
     }

@@ -3,14 +3,14 @@
 
 Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]:
-- flagship_tiling: docs/sec tiled end-to-end (geocode -> H3-style cell
-  encode -> octree assignment -> tiles table) over a deterministically
+- flagship_tiling: docs/sec through the engine's points -> tileset plan
+  (plans/pipeline.tile_points: geocode -> octree assignment -> small-tile
+  rollup -> tiles table -> tileset.json) over a deterministically
   generated Common-Crawl-style pages table ($SPARK_GRAFT_BENCH_DOCS rows,
   default 300000, 30% skewed into 3 megacity cells)
-- tileset_emit: BVH rollup + tileset.json from the flagship's output
-- neardup_pairs / knn_top5 / pip_polygon / pricing_summary /
-  hourly_events / tiling_octree / simhash_neardup / feature_quadtree /
-  vector_b3dm over the driver testdata tables
+- neardup_pairs / pip_polygon / tiling_octree / simhash_neardup /
+  feature_quadtree / vector_b3dm / ... : __spark_entry__.queries() entries
+  over the driver testdata tables
 """
 
 from __future__ import annotations
@@ -63,14 +63,9 @@ def main() -> None:
     # +25% on JVM-native stages, identical results) — must be set before
     # the JVM launches; export SPARK_GRAFT_PRETOUCH=0 to compare without
     os.environ.setdefault("SPARK_GRAFT_PRETOUCH", "1")
-    import numpy as np
-    from pyspark.sql import functions as F
-
     import __spark_entry__ as entrymod
-    from py3dtiles_spark.operators.tileset import (
-        build_tiles_df, build_tileset_json_distributed,
-        rollup_small_children)
-    from py3dtiles_spark.operators.tiling import TilingConfig, build_tiling
+    from py3dtiles_spark.operators.tiling import TilingConfig
+    from py3dtiles_spark.plans.pipeline import tile_points
     from py3dtiles_spark.session import get_spark
     from py3dtiles_spark.sources.pages import generate_pages, pages_as_points
 
@@ -79,13 +74,13 @@ def main() -> None:
     extra: dict[str, float] = {}
     sentinel: dict[str, float] = {"start": _sentinel()}
 
-    # ---- flagship: pages -> octree tiles --------------------------------
+    # ---- flagship: pages -> tileset.json --------------------------------
     # warmup: a small end-to-end build first (codegen, Python worker pool,
     # allocator high-water marks) so the timed run measures the steady
     # state a long-lived executor delivers, not JVM cold-start
     warm_pts = pages_as_points(generate_pages(spark, 30_000), skew=True)
     warm_ckpt = tempfile.mkdtemp()
-    build_tiling(spark, warm_pts, TilingConfig(checkpoint_dir=warm_ckpt))
+    tile_points(spark, warm_pts, TilingConfig(checkpoint_dir=warm_ckpt))
     spark.catalog.clearCache()
     shutil.rmtree(warm_ckpt, ignore_errors=True)
 
@@ -93,24 +88,14 @@ def main() -> None:
     sentinel["flagship_tiling"] = _sentinel()
     t0 = time.time()
     points = pages_as_points(generate_pages(spark, BENCH_DOCS), skew=True)
-    res = build_tiling(spark, points,
-                       TilingConfig(checkpoint_dir=ckpt,
-                                    in_kernel_threshold=40_000))
-    assert res.counters["points_assigned"] == BENCH_DOCS, res.counters
+    res = tile_points(spark, points,
+                      TilingConfig(checkpoint_dir=ckpt,
+                                   in_kernel_threshold=40_000))
+    counters = res.tiling.counters
+    assert counters["points_assigned"] == BENCH_DOCS, counters
+    assert "tileset.json" in res.tileset_docs
     timings["flagship_tiling"] = round(time.time() - t0, 3)
     extra["docs_per_sec"] = round(BENCH_DOCS / timings["flagship_tiling"], 1)
-
-    sentinel["tileset_emit"] = _sentinel()
-    t0 = time.time()
-    assigned = points.join(res.assignments, "point_id")
-    assigned = rollup_small_children(assigned)
-    tiles = build_tiles_df(assigned)
-    # r6: distributed assembly (subtree JSON built executor-side) — the
-    # scale path is now also the benched path
-    docs = build_tileset_json_distributed(tiles, res.root_aabb,
-                                          res.root_spacing)
-    assert "tileset.json" in docs
-    timings["tileset_emit"] = round(time.time() - t0, 3)
     shutil.rmtree(ckpt, ignore_errors=True)
 
     # ---- operator headliners over driver testdata -----------------------
@@ -119,19 +104,13 @@ def main() -> None:
     # r1->r2 "regression" on neardup_pairs was exactly this), then the
     # median of RUNS warm executions, min/max spread recorded
     RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # simhash_neardup's registry entry became an invariant wrapper (runs
-    # the operator twice + cross-checks); keep timing the RAW operator so
-    # round-over-round numbers stay comparable
-    qs = {**entrymod.queries(), **entrymod.legacy_queries(),
-          "simhash_neardup": entrymod.q_simhash_neardup_raw}
-    for name in ["neardup_pairs", "knn_top5", "pip_polygon",
-                 "pricing_summary", "hourly_events", "tiling_octree",
+    qs = entrymod.queries()
+    for name in ["neardup_pairs", "pip_polygon", "tiling_octree",
                  "simhash_neardup", "feature_quadtree", "vector_b3dm",
                  "s2_cells", "raster_cells", "knn_join",
                  "knn_join_bucketed", "geohash_cells", "tfidf_terms",
                  "utm_convert", "llm_pipeline", "substring_dup",
-                 "unigram_logprob", "corpus_curation", "decontaminate",
-                 "top_ngrams"]:
+                 "unigram_logprob"]:
         n = qs[name](spark, SF_DIR).count()          # warmup, keep rows
         sentinel[name] = _sentinel()
         ts = []

@@ -310,40 +310,6 @@ def unigram_logprob(docs, id_col: str = "doc_id", text_col: str = "text"):
                          / F.sum("tf"), 6).alias("logprob")))
 
 
-def top_ngrams(docs, n: int = 2, k: int = 20, text_col: str = "text"):
-    """Corpus-wide most frequent word n-grams — vocabulary induction /
-    boilerplate mining over the whole corpus. Deterministic tie-break
-    (count desc, ngram asc) so the result is SQL-oracle-checkable.
-
-    Physical shape at 100 TB: n-grams are built per-row with
-    transform+slice (no shuffle), one explode, a map-side-combined
-    groupBy(ngram), then a global top-k that Catalyst executes as
-    TakeOrderedAndProject — per-partition heaps of size k, never a full
-    sort — so the only full-width exchange is the vocab-sized count agg.
-
-    Returns (ngram, cnt, rank<=k).
-    """
-    toks = F.filter(tokens(text_col), lambda t: t != F.lit(""))
-
-    def _grams(t):
-        # let-bound token array (see _let): slice/join read the lambda
-        # variable, never re-split the document per position
-        c = F.greatest(F.size(t) - (n - 1), F.lit(0))
-        return F.when(c <= 0, F.array().cast("array<string>")).otherwise(
-            F.transform(F.sequence(F.lit(1), c),
-                        lambda i: F.array_join(F.slice(t, i, n), " ")))
-
-    grams = _let(toks, _grams)
-    from pyspark.sql import Window
-
-    counts = (docs.select(F.explode(grams).alias("ngram"))
-              .groupBy("ngram").agg(F.count(F.lit(1)).alias("cnt")))
-    top = (counts.orderBy(F.col("cnt").desc(), F.col("ngram").asc())
-           .limit(k))
-    w = Window.orderBy(F.col("cnt").desc(), F.col("ngram").asc())
-    return top.withColumn("rank", F.row_number().over(w).cast("long"))
-
-
 def dup_ngram_fraction(text_col: str = "text", n: int = 3) -> Column:
     """Gopher-style repetition signal: fraction of word n-grams that are
     duplicates of an earlier n-gram in the same document

@@ -6,7 +6,7 @@ tokens/shingles (map-side partial agg keeps the shuffle at |docs| rows).
 
 Scale notes:
 - exact_dedup: the one "lowest doc_id per md5(text)" rule (`curate --dedup
-  exact`, `corpus_curation`, `llm_pipeline`). The window partitions by the
+  exact`, `llm_pipeline`). The window partitions by the
   32-hex-char digest and Spark's WindowGroupLimit keeps rank 1 map-side,
   so once the caller selects `text` away the exchange ships digests,
   never document bodies.

@@ -19,20 +19,6 @@ from py3dtiles_spark.session import get_spark
 SF = "/root/testdata/sf0.01"
 
 CHECKS = {
-    "pricing_summary": [
-        ("filter pushed to the parquet scan", r"PushedFilters: \[.*LessThanOrEqual\(l_shipdate"),
-        ("column pruning (no l_comment etc.)", r"ReadSchema: [^\n]*l_returnflag"),
-        ("whole-stage codegen", r"WholeStageCodegen|\*\(\d+\)"),
-        ("partial aggregation before shuffle", r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
-    ],
-    "customer_order_join": [
-        ("small dim side broadcast", r"BroadcastHashJoin"),
-        ("scan prunes to join/agg columns", r"ReadSchema: [^\n]*c_mktsegment"),
-    ],
-    "hourly_events": [
-        ("partial agg (map-side combine)", r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
-        ("codegen", r"WholeStageCodegen|\*\(\d+\)"),
-    ],
     "pip_rect": [
         ("broadcast nested-loop on range predicate", r"Broadcast"),
     ],
@@ -104,6 +90,9 @@ CHECKS = {
          r"WindowGroupLimit[\s\S]*WindowGroupLimit"),
         ("payload joins back as a broadcast (no extra shuffle at the "
          "seam)", r"BroadcastHashJoin"),
+        ("window dedup on the md5 key, not document bodies",
+         r"Window[\s\S]*Exchange hashpartitioning\(_w0[\s\S]*"
+         r"md5\(cast\(text#\d+ as binary\)\) AS _w0"),
         # seam budget over the RAW lineage (audit mode disables the
         # production persist of `kept`), AQE final plan only: the dedup
         # window's hash-key exchange (duplicated subplans collapse to
@@ -152,42 +141,6 @@ CHECKS = {
         ("map-side partial agg on the exploded tokens",
          r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
     ],
-    # rotated-to-legacy entries keep their plan coverage here (the
-    # registry comment and SURVEY promise "still benched and
-    # plan-audited" for them)
-    "knn_top5": [
-        # brute-force baseline: one Arrow-batched numpy matmul per
-        # partition (the documented kernel shape), then a window re-rank
-        ("Arrow-batched matmul kernel (no row-at-a-time Python)",
-         r"MapInPandas|ArrowEval|mapInArrow"),
-        ("two-stage top-k window", r"Window"),
-        ("never a cartesian product", "!CartesianProduct"),
-    ],
-    "corpus_curation": [
-        ("all-native gate+dedup pipeline, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
-        ("window dedup on the md5 key, not document bodies",
-         r"Window[\s\S]*Exchange hashpartitioning\(_w0[\s\S]*"
-         r"md5\(cast\(text#\d+ as binary\)\) AS _w0"),
-        ("map-side partial agg",
-         r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
-    ],
-    "top_ngrams": [
-        ("all-native vocab mining, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
-        ("global top-k is TakeOrderedAndProject (heaps, no full sort)",
-         r"TakeOrderedAndProject"),
-        ("map-side partial agg on the exploded n-grams",
-         r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
-    ],
-    "decontaminate": [
-        ("all-native decontamination, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
-        ("eval shingle set joins by broadcast", r"BroadcastHashJoin"),
-        ("never a cartesian product", "!CartesianProduct"),
-        ("map-side partial agg on the per-doc rollup",
-         r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
-    ],
     "knn_join_bucketed": [
         ("bucket equi-join, never a cross product", "!CartesianProduct"),
         ("hash/merge equi-join on the bucket key",
@@ -232,13 +185,45 @@ def session_builders(repo: str) -> list[tuple[str, int]]:
     return found
 
 
+TAIL_CALLS = ("rollup_small_children", "build_tileset_json_distributed")
+
+
+def tail_callers(repo: str) -> list[tuple[str, int, str]]:
+    """(path, line, callee) of every call to a TAIL_CALLS function in the
+    engine, bench.py, cli.py or scripts/, outside py3dtiles_spark/plans/
+    pipeline.py. tile_points is the one points -> tileset plan, so no
+    entry point or harness can time or ship its own copy of the tail."""
+    import ast
+    allowed = os.path.join("py3dtiles_spark", "plans", "pipeline.py")
+    paths = [os.path.join(repo, f) for f in ("bench.py", "cli.py")]
+    for base in ("py3dtiles_spark", "scripts"):
+        for dirpath, _, files in os.walk(os.path.join(repo, base)):
+            paths += [os.path.join(dirpath, f) for f in files
+                      if f.endswith(".py")]
+    found = []
+    for path in sorted(paths):
+        rel = os.path.relpath(path, repo)
+        if rel == allowed or not os.path.isfile(path):
+            continue
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), rel)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            callee = (getattr(node.func, "id", None)
+                      or getattr(node.func, "attr", None))
+            if callee in TAIL_CALLS:
+                found.append((rel, node.lineno, callee))
+    return found
+
+
 def main():
     # queries that materialize intermediates (persist/localCheckpoint)
     # return a checkpoint-scan plan; this switch makes them hand back the
     # raw lineage so the windows/joins under audit are actually visible
     os.environ["SPARK_GRAFT_PLAN_AUDIT"] = "1"
     spark = get_spark("plan-audit", cpus=4)
-    qs = {**entrymod.queries(), **entrymod.legacy_queries()}
+    qs = entrymod.queries()
     lines = ["# PLANS — physical-plan audit (sf0.01, auto-generated by "
              "scripts/plan_audit.py)", ""]
     failures = 0
@@ -357,25 +342,10 @@ def main():
             if "tiles.collect()" in f.read():
                 ts_bad.append((rel, "tiles.collect() at a production "
                                     "call site"))
-    # one points -> tileset plan: inside the engine only plans/pipeline.py
-    # (tile_points) runs the assembly, so copies of the tail cannot return
-    pkg = os.path.join(repo, "py3dtiles_spark")
-    for dirpath, _, files in os.walk(pkg):
-        for name in files:
-            path = os.path.join(dirpath, name)
-            rel = os.path.relpath(path, repo)
-            if not name.endswith(".py") or rel == os.path.join(
-                    "py3dtiles_spark", "plans", "pipeline.py"):
-                continue
-            with open(path) as f:
-                calls = [n for n in ast.walk(ast.parse(f.read()))
-                         if isinstance(n, ast.Call)]
-            for node in calls:
-                callee = getattr(node.func, "id", None) or getattr(
-                    node.func, "attr", None)
-                if callee == "build_tileset_json_distributed":
-                    ts_bad.append((rel, node.lineno, "tileset assembly "
-                                   "outside plans/pipeline.py"))
+    # one points -> tileset plan: only plans/pipeline.py (tile_points)
+    # runs the rollup and the assembly, so copies of the tail cannot return
+    ts_bad += [(rel, line, f"{callee} outside plans/pipeline.py")
+               for rel, line, callee in tail_callers(repo)]
     mark = "PASS" if not ts_bad else "FAIL"
     if ts_bad:
         failures += len(ts_bad)

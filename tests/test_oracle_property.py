@@ -1,9 +1,11 @@
-"""Property-based validation of the text-curation DuckDB oracle twins
-(no SparkSession — fast): random small corpora -> an independent
-plain-Python reference implementation vs the EXACT committed oracle SQL
-run on an in-memory documents table. Together with the driver gate
+"""Property-based validation of the text-curation DuckDB oracle twins:
+random small corpora -> an independent plain-Python reference
+implementation vs the EXACT committed oracle SQL run on an in-memory
+documents table (no SparkSession — fast). Together with the driver gate
 (Spark == DuckDB at sf0.01) and the hand-computed Spark goldens in
 test_text.py this closes the Spark == DuckDB == reference triangle.
+`contamination_stats` is in no `queries()` entry (the `curate
+--eval-input` CLI reaches it), so its Spark == DuckDB leg is here too.
 """
 
 from __future__ import annotations
@@ -16,9 +18,37 @@ from collections import Counter
 import duckdb
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 import __spark_entry__ as entrymod
+# the driver gate's own comparison, imported so the two cannot diverge
+from check_oracle import normalize
+
+# DuckDB twin of functions/text.contamination_stats(d, d.filter("doc_id %
+# 41 = 0"), shingle_tokens=8): per doc, its 8-token windows and how many
+# of them occur in the doc_id % 41 = 0 eval subset
+DECONTAMINATE_SQL = """
+    WITH toks AS (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '), t -> t <> '') AS t
+        FROM documents),
+    sh AS (
+        SELECT doc_id,
+               md5(coalesce(array_to_string(t[g.i:g.i + 7], ' '), ''))
+                   AS h
+        FROM toks,
+        LATERAL unnest(generate_series(1, greatest(len(t) - 7, 1))) AS g(i)),
+    eh AS (SELECT DISTINCT h FROM sh WHERE doc_id % 41 = 0)
+    SELECT sh.doc_id,
+           count(*)::BIGINT AS n_shingles,
+           sum(CASE WHEN eh.h IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+               AS contaminated,
+           CAST(sum(CASE WHEN eh.h IS NOT NULL THEN 1 ELSE 0 END) > 0
+                AS BIGINT) AS is_contaminated
+    FROM sh LEFT JOIN eh USING (h)
+    GROUP BY sh.doc_id ORDER BY sh.doc_id"""
 
 token = st.sampled_from(["a", "b", "c", "ab", "z"])
 doc = st.lists(token, min_size=0, max_size=20).map(" ".join)
@@ -102,22 +132,29 @@ def test_decontaminate_oracle_matches_python_reference(texts):
         expected[i] = (len(ws), hit, 1 if hit else 0)
     con = _con(texts)
     got = {r[0]: (r[1], r[2], r[3])
-           for r in con.sql(entrymod.legacy_oracle_sql()["decontaminate"])
-                       .fetchall()}
+           for r in con.sql(DECONTAMINATE_SQL).fetchall()}
     assert got == expected
 
 
-@settings(max_examples=60, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(corpus)
-def test_top_ngrams_oracle_matches_python_reference(texts):
-    grams = Counter()
-    for t in texts:
-        toks = [x for x in t.split(" ") if x]
-        grams.update(" ".join(toks[i:i + 2]) for i in range(len(toks) - 1))
-    expected = sorted(grams.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-    expected = [(g, c, r + 1) for r, (g, c) in enumerate(expected)]
-    con = _con(texts)
-    got = [tuple(r) for r in
-           con.sql(entrymod.legacy_oracle_sql()["top_ngrams"]).fetchall()]
-    assert got == expected
+def test_contamination_stats_matches_duckdb_twin(spark):
+    """Spark == DuckDB for contamination_stats on the sf0.001 documents
+    (the driver gate's comparison, check_oracle.normalize), and the
+    executed plan keeps its shape: the eval shingle set joins by
+    broadcast, never a cartesian product, zero Python."""
+    from py3dtiles_spark.functions.text import contamination_stats
+    path = "/root/testdata/sf0.001/documents.parquet"
+    d = spark.read.parquet(path)
+    sdf = contamination_stats(d, d.filter("doc_id % 41 = 0"),
+                              shingle_tokens=8)
+    srows = [tuple(r) for r in sdf.collect()]
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    res = con.sql(DECONTAMINATE_SQL)
+    dcols, drows = list(res.columns), res.fetchall()
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert srows
+    assert normalize(srows, sdf.columns) == normalize(drows, dcols)
+    assert "BroadcastHashJoin" in plan
+    for node in ("CartesianProduct", "ArrowEval", "BatchEval", "FlatMap"):
+        assert node not in plan, node

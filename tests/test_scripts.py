@@ -71,6 +71,21 @@ def test_only_get_spark_builds_sessions(tmp_path):
     assert plan_audit.session_builders(str(tmp_path)) == [("tool.py", 2)]
 
 
+def test_only_tile_points_runs_the_tiling_tail(tmp_path):
+    """plan_audit's tail check passes on this repo and names a harness
+    that calls the rollup or the tileset assembly itself."""
+    assert plan_audit.tail_callers(REPO) == []
+    with open(os.path.join(REPO, "bench.py"), encoding="utf-8") as f:
+        src = f.read()
+    (tmp_path / "bench.py").write_text(
+        src + "\nrollup_small_children(None)\n"
+        "tileset.build_tileset_json_distributed(None)\n")
+    n = src.count("\n")
+    assert plan_audit.tail_callers(str(tmp_path)) == [
+        ("bench.py", n + 2, "rollup_small_children"),
+        ("bench.py", n + 3, "build_tileset_json_distributed")]
+
+
 # ------------------------------------------------------ reachability guard --
 
 # names that only tests reach, kept on purpose

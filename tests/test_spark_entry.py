@@ -1,5 +1,6 @@
 """Helpers of the driver contract module (__spark_entry__.py)."""
 
+import ast
 import os
 import sys
 
@@ -85,3 +86,27 @@ def test_octree_checkpoint_is_held_by_one_process(tmp_path):
         child.communicate("\n")
     entrymod._own_octree_ckpt(path, wait_s=0)
     assert path in entrymod._OCTREE_CKPT_LOCKS
+
+
+def _returned_dict(tree, name):
+    """The dict literal a top-level def of __spark_entry__ returns."""
+    fn = next(n for n in tree.body
+              if isinstance(n, ast.FunctionDef) and n.name == name)
+    return next(n.value for n in ast.walk(fn) if isinstance(n, ast.Return))
+
+
+def test_every_query_def_is_registered_and_oracle_checked():
+    """queries() is the only query registry: every top-level q_* def is
+    one of its values, and every entry has an oracle_sql() twin. Pure
+    ast, so an orphaned query fails here before anything runs."""
+    with open(os.path.join(_REPO, "__spark_entry__.py"),
+              encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    defs = {n.name for n in tree.body
+            if isinstance(n, ast.FunctionDef) and n.name.startswith("q_")}
+    registry = _returned_dict(tree, "queries")
+    registered = {v.id for v in registry.values}
+    orphans = sorted(defs - registered)
+    assert not orphans, f"q_* defs missing from queries(): {orphans}"
+    names = {k.value for k in registry.keys}
+    assert names == {k.value for k in _returned_dict(tree, "oracle_sql").keys}

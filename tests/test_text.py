@@ -205,14 +205,3 @@ def test_curate_dedup_shuffles_digests_not_text(spark, tmp_path):
             assert "text#" not in re.search(r"Input \[\d+\]: (.*)", body)[1]
             checked += 1
     assert checked, "no md5-keyed exchange in curate's executed plans"
-
-
-def test_top_ngrams_hand_computed(spark):
-    df = spark.createDataFrame(
-        [(0, "a b a b c"),   # bigrams: "a b" x2, "b a", "b c"
-         (1, "a b"),         # "a b"
-         (2, "z")],          # shorter than n: contributes nothing
-        "doc_id long, text string")
-    rows = T.top_ngrams(df, n=2, k=3).collect()
-    got = [(r.ngram, r.cnt, r.rank) for r in rows]
-    assert got == [("a b", 3, 1), ("b a", 1, 2), ("b c", 1, 3)]
