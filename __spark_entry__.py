@@ -1022,36 +1022,32 @@ def q_ann_lsh(spark, sf_dir):
     SQL-checkable: per-query result count == k, each query finds itself
     at cos ~1.0, every returned neighbour's signature lies in the probed
     bucket set (candidates ⊆ probed buckets, recomputed with the same
-    planes/seed), and recall@5 vs the exact DataFrame answer holds the
+    planes/seed), and recall@5 vs the exact knn_join answer holds the
     >= 0.8 floor (raw recall pytest: test_ann_recall_floor_sf001)."""
     import numpy as np
     from py3dtiles_spark.operators.knn import (
-        _probe_buckets, ann_lsh_embeddings, knn_embeddings,
-        lsh_signature_expr)
-    from pyspark.sql.types import LongType, StructField, StructType
+        _lsh_buckets, _lsh_planes, _probe_buckets, ann_lsh_embeddings,
+        knn_join)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = [(int(r.vec_id), np.array(r.embedding, dtype=np.float64))
-          for r in emb.filter("vec_id IN (0, 7)").collect()]
-    # 24/64 buckets probed: measured recall 0.9 for these two queries at
-    # sf0.01 (16 probes sits at 0.7 — below the 0.8 gate floor)
+    q = emb.filter("vec_id IN (0, 7)").select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
+    qs = [(int(r.q_id), np.array(r.qv, dtype=np.float64)) for r in q.collect()]
+    # 24 probes per query: measured recall 0.9 for these two queries at
+    # sf0.01 (16 probes sits at 0.7 — below the 0.8 gate floor). The two
+    # queries' probes cover 38 of the 64 buckets, and both queries are
+    # ranked against that whole union.
     n_planes, n_probes, seed, k = 6, 24, 42, 5
-    dim = len(qs[0][1])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
+    planes = _lsh_planes(n_planes, len(qs[0][1]), seed)
     wanted = sorted({b for _, v in qs
                      for b in _probe_buckets(planes @ v, n_planes, n_probes)})
     ann = ann_lsh_embeddings(emb, qs, k=k, n_planes=n_planes,
                              n_probes=n_probes, seed=seed)
-    exact = knn_embeddings(emb, qs, k=k)
-    out_schema = StructType(list(emb.schema.fields)
-                            + [StructField("bucket", LongType())])
-    bucketed = emb.mapInPandas(lsh_signature_expr(dim, n_planes, seed),
-                               schema=out_schema)
+    exact = knn_join(emb, q, k=k)
+    bucketed = _lsh_buckets(emb, planes, "vec_id", "embedding")
     s1 = ann.agg(
         F.count(F.lit(1)).alias("n_results"),
         F.sum((F.col("q_id") == F.col("n_id")).cast("long")).alias("self_found"))
-    s2 = (ann.join(bucketed.select(F.col("vec_id").alias("n_id"), "bucket"),
-                   "n_id")
+    s2 = (ann.join(bucketed.select("n_id", "bucket"), "n_id")
           .agg(F.coalesce(
               F.sum((~F.col("bucket").isin(wanted)).cast("long")),
               F.lit(0).cast("long")).alias("outside_bucket")))
@@ -1067,18 +1063,21 @@ def q_ann_ivf(spark, sf_dir):
     self found, candidates ⊆ probed lists (the n_probe nearest centroid
     lists, recomputed from the trained centroids), KMeans assignment
     deterministic for the fixed seed (two trainings agree), recall@5 vs
-    exact >= 0.85 floor (raw recall pytest: test_ivf_recall_floor_sf001)."""
+    the exact knn_join answer >= 0.85 floor (raw recall pytest:
+    test_ivf_recall_floor_sf001)."""
     import numpy as np
-    from py3dtiles_spark.operators.knn import (
-        ivf_index, ivf_search, knn_embeddings)
+    from py3dtiles_spark.operators.knn import ivf_index, ivf_search, knn_join
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = [(int(r.vec_id), np.array(r.embedding, dtype=np.float64))
-          for r in emb.filter("vec_id IN (0, 7)").collect()]
+    q = emb.filter("vec_id IN (0, 7)").select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
+    qs = [(int(r.q_id), np.array(r.qv, dtype=np.float64)) for r in q.collect()]
     k, n_lists, n_probe, seed = 5, 16, 2, 42
     assigned, cents = ivf_index(emb, n_lists=n_lists, seed=seed)
     assigned2, _ = ivf_index(emb, n_lists=n_lists, seed=seed)
     res = ivf_search(assigned, cents, qs, k=k, n_probe=n_probe)
-    exact = knn_embeddings(emb, qs, k=k)
+    exact = knn_join(emb, q, k=k)
+    # at sf0.01 the two queries' probes cover 4 of the 16 lists (184 of
+    # the 500 rows)
     wanted = sorted({
         int(l) for _, v in qs
         for l in np.argsort(((cents - v) ** 2).sum(axis=1))[:n_probe]})

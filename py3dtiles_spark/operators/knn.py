@@ -1,19 +1,22 @@
 """k-nearest-neighbor operators: point kNN joins and embedding similarity
 search for training-data pipelines.
 
-Physical strategies:
-- knn_points / knn_embeddings (brute force): queries are broadcast; each
-  input partition computes its local top-k per query in one Arrow batch
-  pass (numpy matmul), then a global top-k window reduces
-  partitions*k*q rows — the only shuffle is over candidate rows
-  (k * q * partitions), never the full table.
-- ann_lsh_embeddings: random-hyperplane signatures bucket both sides;
-  exact re-rank inside buckets. Recall < 1, cost ~ bucket sizes — the
-  100 TB scale path.
-- knn_join_points: both sides DataFrames, grid-cell equi-join with a
-  per-query completeness flag; knn_points is its brute-force reference,
-  and ann_recall / ivf_recall measure the approximate paths against the
-  exact one.
+knn_join is the one exact cosine ranker: per-side norms, a broadcast
+nested-loop join against the query table, cosine as a native
+expression, and a two-stage top-k whose only exchange carries
+(q_id, n_id, cos) rows. The approximate paths are candidate filters in
+front of it:
+- ann_lsh_embeddings: random-hyperplane LSH signatures on the table
+  side; the candidates are the rows in the union of every query's
+  multi-probe buckets.
+- ivf_search: the lists of an MLlib KMeans coarse quantizer
+  (ivf_index); the candidates are the rows in the union of every
+  query's n_probe nearest lists.
+ann_recall / ivf_recall measure them against knn_join. The batch joins
+keep both sides DataFrames: knn_join_bucketed meets each query with its
+own probed LSH buckets in an equi-join and ranks with knn_join's
+cosine, and knn_join_points is the xyz analogue, a grid-cell equi-join
+with a per-query completeness flag.
 """
 
 from __future__ import annotations
@@ -41,11 +44,35 @@ def _check_query_count(n: int):
             "equi-join).")
 
 
-def _topk_window(df: DataFrame, part_col: str, order_col: str, k: int) -> DataFrame:
-    w = Window.partitionBy(part_col).orderBy(F.col(order_col).asc(),
-                                             F.col("n_id").asc())
-    return (df.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= k).drop("rank"))
+def _driver_queries(spark, queries):
+    """The queries of the candidate-filter paths, given as (q_id, vector)
+    pairs or a DataFrame whose first two columns are those, in two forms:
+    float64 pairs on the driver for the filter to probe with, and the
+    `q_id long, qv array<double>` DataFrame knn_join ranks."""
+    if isinstance(queries, DataFrame):
+        queries = [(r[0], r[1]) for r in queries.collect()]
+    q = [(int(i), np.asarray(v, dtype=np.float64)) for i, v in queries]
+    _check_query_count(len(q))
+    qdf = spark.createDataFrame([(i, v.tolist()) for i, v in q],
+                                "q_id long, qv array<double>")
+    return q, qdf
+
+
+def _norm(c):
+    """L2 norm of an array column as a native expression. A zero vector
+    gets norm 1.0, so its cosine is 0.0, never NULL."""
+    n = F.sqrt(F.aggregate(c, F.lit(0.0),
+                           lambda a, x: a + x.cast("double") * x))
+    return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
+
+
+def _cosine():
+    """Cosine of the `_ev` and `_qv` vector columns, given their `_en` and
+    `_qn` norms."""
+    dot = F.aggregate(
+        F.zip_with("_ev", "_qv", lambda a, b: a.cast("double") * b),
+        F.lit(0.0), lambda acc, x: acc + x)
+    return dot / (F.col("_en") * F.col("_qn"))
 
 
 def _two_stage_topk(cand: DataFrame, order_cols, k: int) -> DataFrame:
@@ -75,114 +102,35 @@ def _two_stage_topk(cand: DataFrame, order_cols, k: int) -> DataFrame:
             .filter(F.col("rank") <= k))
 
 
-def knn_points(points: DataFrame, queries, k: int = 10) -> DataFrame:
-    """Exact kNN of each query (q_id, x, y, z) against a big point table
-    (point_id, x, y, z). queries: small list of tuples or DataFrame.
-    Returns (q_id, n_id, dist)."""
-    if isinstance(queries, DataFrame):
-        q = [(r.q_id, r.x, r.y, r.z) for r in queries.collect()]
-    else:
-        q = list(queries)
-    _check_query_count(len(q))
-    q_ids = np.array([t[0] for t in q], dtype=np.int64)
-    q_xyz = np.array([t[1:4] for t in q], dtype=np.float64)
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc_d = {int(i): np.full(k, np.inf) for i in q_ids}
-        acc_n = {int(i): np.full(k, -1, dtype=np.int64) for i in q_ids}
-        for pdf in batches:
-            xyz = pdf[["x", "y", "z"]].to_numpy(dtype=np.float64)
-            ids = pdf["point_id"].to_numpy(dtype=np.int64)
-            # (Q, N) squared distances in one matmul-free broadcast
-            d = ((q_xyz[:, None, :] - xyz[None, :, :]) ** 2).sum(axis=2)
-            for qi, qid in enumerate(q_ids):
-                dd = np.concatenate([acc_d[int(qid)], d[qi]])
-                nn = np.concatenate([acc_n[int(qid)], ids])
-                sel = np.argsort(dd, kind="stable")[:k]
-                acc_d[int(qid)] = dd[sel]
-                acc_n[int(qid)] = nn[sel]
-        rows = []
-        for qid in q_ids:
-            m = acc_n[int(qid)] >= 0
-            rows.append(pd.DataFrame({
-                "q_id": int(qid),
-                "n_id": acc_n[int(qid)][m],
-                "dist": np.sqrt(acc_d[int(qid)][m])}))
-        if rows:
-            yield pd.concat(rows, ignore_index=True)
-
-    cand = points.mapInPandas(local_topk, "q_id long, n_id long, dist double")
-    return _topk_window(cand, "q_id", "dist", k)
+def _lsh_planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
+    """The random hyperplanes of every LSH path: one seed threads through
+    the table and the query side, so signatures can never drift apart."""
+    return np.random.default_rng(seed).standard_normal((n_planes, dim))
 
 
-def knn_embeddings(emb: DataFrame, queries, k: int = 10) -> DataFrame:
-    """Exact top-k cosine similarity: emb (vec_id, embedding array<float>);
-    queries list of (q_id, vector) or DataFrame. Returns (q_id, n_id, cos).
-    One numpy matmul per Arrow batch — the brute-force baseline."""
-    if isinstance(queries, DataFrame):
-        q = [(r[0], np.asarray(r[1], dtype=np.float64)) for r in queries.collect()]
-    else:
-        q = [(i, np.asarray(v, dtype=np.float64)) for i, v in queries]
-    _check_query_count(len(q))
-    q_ids = np.array([t[0] for t in q], dtype=np.int64)
-    qm = np.stack([t[1] for t in q])
-    qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+def _signature(margins: np.ndarray) -> np.ndarray:
+    """LSH bucket of hyperplane margins (..., n_planes): bit b is set when
+    margin b > 0."""
+    bits = (margins > 0).astype(np.int64)
+    return (bits << np.arange(margins.shape[-1], dtype=np.int64)).sum(axis=-1)
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[int, tuple[np.ndarray, np.ndarray]] = {
-            int(i): (np.full(k, -np.inf), np.full(k, -1, dtype=np.int64))
-            for i in q_ids}
+
+def _lsh_buckets(emb: DataFrame, planes: np.ndarray, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """(n_id, _ev, bucket): every table row with its LSH bucket, one numpy
+    matmul per Arrow batch."""
+    def table_buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:       # np.stack rejects zero-row batches
                 continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0] = 1.0
-            m = m / norms[:, None]
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            sims = qm @ m.T                      # (Q, N)
-            for qi, qid in enumerate(q_ids):
-                ss, nn = acc[int(qid)]
-                alls = np.concatenate([ss, sims[qi]])
-                alln = np.concatenate([nn, ids])
-                sel = np.argsort(-alls, kind="stable")[:k]
-                acc[int(qid)] = (alls[sel], alln[sel])
-        rows = []
-        for qid in q_ids:
-            ss, nn = acc[int(qid)]
-            mask = nn >= 0
-            rows.append(pd.DataFrame(
-                {"q_id": int(qid), "n_id": nn[mask], "cos": ss[mask]}))
-        if rows:
-            yield pd.concat(rows, ignore_index=True)
+            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            yield pd.DataFrame({"n_id": pdf[id_col].to_numpy(),
+                                "_ev": pdf[vec_col],
+                                "bucket": _signature(m @ planes.T)})
 
-    cand = emb.mapInPandas(local_topk, "q_id long, n_id long, cos double")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(),
-                                           F.col("n_id").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k).drop("rank"))
-
-
-def lsh_signature_expr(dim: int, n_planes: int, seed: int = 42):
-    """Random-hyperplane LSH bucket as a deterministic numpy pandas kernel;
-    returns a mapInPandas function adding a `bucket` long column."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-
-    def add_bucket(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bits = (m @ planes.T) > 0
-            bucket = np.zeros(len(pdf), dtype=np.int64)
-            for b in range(n_planes):
-                bucket |= bits[:, b].astype(np.int64) << b
-            out = pdf.copy()
-            out["bucket"] = bucket
-            yield out
-
-    return add_bucket
+    vec_type = dict(emb.dtypes)[vec_col]
+    return emb.mapInPandas(
+        table_buckets, schema=f"n_id long, _ev {vec_type}, bucket long")
 
 
 def _probe_buckets(margins: np.ndarray, n_planes: int,
@@ -193,7 +141,7 @@ def _probe_buckets(margins: np.ndarray, n_planes: int,
     ranked by the summed |margin| of the flipped bits (single-bit-only
     probing plateaus at Hamming-1 recall). Subsets are drawn from the m
     smallest margins, m capped so candidate count stays tiny."""
-    base = int(sum(1 << i for i, b in enumerate(margins > 0) if b))
+    base = int(_signature(margins))
     if n_probes <= 1:
         return [base]
     import heapq
@@ -211,78 +159,59 @@ def _probe_buckets(margins: np.ndarray, n_planes: int,
 def ann_lsh_embeddings(emb: DataFrame, queries, k: int = 10,
                        n_planes: int = 8, dim: int | None = None,
                        n_probes: int = 1, seed: int = 42) -> DataFrame:
-    """Approximate kNN: restrict the exact scan to the query's LSH bucket.
-    At scale the bucket join is an equi-join shuffle of ~probes/2^planes of
-    the table per query instead of a full scan.
+    """Approximate kNN: an LSH candidate filter in front of knn_join.
+    emb (vec_id, embedding); queries a list of (q_id, vector) or a
+    DataFrame. Returns (q_id, n_id, cos).
 
-    Multi-probe: n_probes > 1 additionally scans the buckets whose
-    hyperplane margin is smallest (flip the least-confident bits) — the
-    standard recall repair for hyperplane LSH without extra tables. One
-    seed threads through both the table and query side so signatures can
-    never drift apart."""
-    if isinstance(queries, DataFrame):
-        q = [(r[0], np.asarray(r[1], dtype=np.float64)) for r in queries.collect()]
-    else:
-        q = [(i, np.asarray(v, dtype=np.float64)) for i, v in queries]
-    _check_query_count(len(q))
-    dim = dim or len(q[0][1])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-
+    Each query probes its own signature bucket and, with n_probes > 1,
+    the buckets whose hyperplane margins are smallest (flip the
+    least-confident bits) — the standard recall repair for hyperplane LSH
+    without extra tables. The candidates are the table rows in the UNION
+    of every query's probed buckets, and knn_join ranks every query
+    against all of them. So the scan grows with the query count: at 6
+    planes and 16 probes, the 10 queries of the sf0.01 recall floor
+    cover 59 of the 64 buckets, 469 of the 500 rows. knn_join_bucketed
+    is the path that restricts each query to its own buckets."""
+    q, qdf = _driver_queries(emb.sparkSession, queries)
+    planes = _lsh_planes(n_planes, dim or len(q[0][1]), seed)
     wanted = sorted({b for _, v in q
                      for b in _probe_buckets(planes @ v, n_planes, n_probes)})
-    from pyspark.sql.types import LongType, StructField, StructType
-    out_schema = StructType(list(emb.schema.fields)
-                            + [StructField("bucket", LongType())])
-    bucketed = emb.mapInPandas(lsh_signature_expr(dim, n_planes, seed),
-                               schema=out_schema)
-    cand = bucketed.filter(F.col("bucket").isin(wanted))
-    return knn_embeddings(cand.select("vec_id", "embedding"), q, k)
+    cand = (_lsh_buckets(emb, planes, "vec_id", "embedding")
+            .filter(F.col("bucket").isin(wanted)))
+    return (knn_join(cand, qdf, k, id_col="n_id", vec_col="_ev")
+            .select("q_id", "n_id", "cos"))
 
 
 def knn_join(emb: DataFrame, queries: DataFrame, k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
              q_id_col: str = "q_id", q_vec_col: str = "qv") -> DataFrame:
-    """Fully distributed EXACT kNN join: the query side stays a DataFrame
-    (no driver collect — the scalable companion to knn_embeddings when
-    queries are themselves a table). Physical shape: per-side norms
-    computed map-side, broadcast nested-loop join against the (small)
-    query table, cosine as a native zip_with/aggregate expression, then
-    TWO-STAGE top-k via Catalyst's WindowGroupLimit (Spark >= 3.5): the
-    row_number()<=k filter plants a PARTIAL WindowGroupLimit before the
-    exchange, so every map partition is cut to k rows per q_id with NO
-    shuffle, the single exchange on q_id then carries at most
-    k*partitions rows per query (skew-safe — no task ever receives ~N
-    rows), and the FINAL WindowGroupLimit + window rank the survivors.
-    (r6: this replaces a manual _pid pre-rank stage that shuffled ALL
-    candidates on (_pid, q_id) before the q_id exchange — one whole
-    exchange of the candidate set gone, same skew guarantee, pinned by
-    scripts/plan_audit.py's WindowGroupLimit checks.) The vector columns
-    are projected away before the exchange, so shuffles carry
-    (q_id, n_id, cos) triples, never embeddings. Zero Python.
+    """Fully distributed EXACT kNN join, the module's one exact cosine
+    ranker: the query side stays a DataFrame (no driver collect).
+    Physical shape: per-side norms computed map-side, broadcast
+    nested-loop join against the (small) query table, cosine as a native
+    zip_with/aggregate expression, then TWO-STAGE top-k via Catalyst's
+    WindowGroupLimit (Spark >= 3.5): the row_number()<=k filter plants a
+    PARTIAL WindowGroupLimit before the exchange, so every map partition
+    is cut to k rows per q_id with NO shuffle, the single exchange on
+    q_id then carries at most k*partitions rows per query (skew-safe — no
+    task ever receives ~N rows), and the FINAL WindowGroupLimit + window
+    rank the survivors (pinned by scripts/plan_audit.py's
+    WindowGroupLimit checks). The vector columns are projected away
+    before the exchange, so shuffles carry (q_id, n_id, cos) triples,
+    never embeddings. Zero Python.
 
     Broadcast bounds the query side by executor memory; for query sets
     too big to broadcast, use knn_join_bucketed (both sides stay
     DataFrames, LSH-bucket equi-join). Returns (q_id, n_id, cos,
     rank<=k)."""
-    def norm(c):
-        n = F.sqrt(F.aggregate(c, F.lit(0.0),
-                               lambda a, x: a + x.cast("double") * x))
-        # zero-vector guard, same convention as knn_embeddings
-        # (norms[norms == 0] = 1.0): cos becomes 0.0, never NULL
-        return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
-
     e = emb.select(F.col(id_col).alias("n_id"),
                    F.col(vec_col).alias("_ev"),
-                   norm(F.col(vec_col)).alias("_en"))
+                   _norm(F.col(vec_col)).alias("_en"))
     q = queries.select(F.col(q_id_col).alias("q_id"),
                        F.col(q_vec_col).alias("_qv"),
-                       norm(F.col(q_vec_col)).alias("_qn"))
-    dot = F.aggregate(
-        F.zip_with("_ev", "_qv", lambda a, b: a.cast("double") * b),
-        F.lit(0.0), lambda acc, x: acc + x)
+                       _norm(F.col(q_vec_col)).alias("_qn"))
     j = (e.crossJoin(F.broadcast(q))
-         .withColumn("cos", dot / (F.col("_en") * F.col("_qn")))
+         .withColumn("cos", _cosine())
          .select("q_id", "n_id", "cos"))
     return (_two_stage_topk(j, [F.col("cos").desc(), F.col("n_id").asc()], k)
             .select("q_id", "n_id", "cos", "rank"))
@@ -297,42 +226,29 @@ def knn_join_bucketed(emb: DataFrame, queries: DataFrame, k: int = 10,
     the scale path _check_query_count points at. BOTH sides stay
     DataFrames end to end:
 
-    1. table side gets its LSH bucket (one Arrow pass, lsh_signature_expr
-       planes, seed-shared);
+    1. table side gets its LSH bucket (one Arrow pass, _lsh_buckets);
     2. query side gets its n_probes multi-probe buckets (same planes,
        same seed — signatures can never drift), exploded to one row per
        (query, probed bucket);
     3. candidates = equi-join on bucket — a hash shuffle of
        ~n_probes/2^n_planes of the table per query region, never a cross
        product and never a driver collect;
-    4. exact cosine on candidates as native zip_with/aggregate exprs;
-       multi-probe duplicates collapse via groupBy(q_id, n_id) max (a
+    4. knn_join's exact cosine on the candidate pairs; multi-probe
+       duplicates collapse via groupBy(q_id, n_id) max (a
        map-side-combined agg, skipped when n_probes == 1 since buckets
        are then disjoint);
     5. the same partition-local-then-global two-stage top-k as knn_join.
 
     Exact within the probed buckets: with n_probes == 2**n_planes every
     bucket is probed and the result equals the exact kNN join (the
-    oracle-checked configuration); at production settings recall follows
-    ann_lsh_embeddings (same signatures, same probe sequence).
-    Returns (q_id, n_id, cos, rank<=k)."""
+    oracle-checked configuration). Below that, each query sees only its
+    OWN probed buckets, while ann_lsh_embeddings (same signatures, same
+    probe sequence) ranks every query against the union of all queries'
+    buckets, so recall here is at most ann_lsh_embeddings' at the same
+    settings. Returns (q_id, n_id, cos, rank<=k)."""
     if dim is None:
         dim = emb.select(F.size(vec_col)).first()[0]
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-
-    def table_buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:       # np.stack rejects zero-row batches
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (m @ planes.T) > 0
-            bucket = np.zeros(len(pdf), dtype=np.int64)
-            for b in range(n_planes):
-                bucket |= bits[:, b].astype(np.int64) << b
-            yield pd.DataFrame({"n_id": pdf[id_col].to_numpy(),
-                                "_ev": pdf[vec_col],
-                                "bucket": bucket})
+    planes = _lsh_planes(n_planes, dim, seed)
 
     def query_buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -349,17 +265,10 @@ def knn_join_bucketed(emb: DataFrame, queries: DataFrame, k: int = 10,
             yield pd.DataFrame({"q_id": qid, "_qv": qv,
                                 "bucket": np.array(bk, dtype=np.int64)})
 
-    vec_type = dict(emb.dtypes)[vec_col]
     q_vec_type = dict(queries.dtypes)[q_vec_col]
-    e_b = emb.mapInPandas(
-        table_buckets, schema=f"n_id long, _ev {vec_type}, bucket long")
+    e_b = _lsh_buckets(emb, planes, id_col, vec_col)
     q_b = queries.mapInPandas(
         query_buckets, schema=f"q_id long, _qv {q_vec_type}, bucket long")
-
-    def norm(c):
-        n = F.sqrt(F.aggregate(c, F.lit(0.0),
-                               lambda a, x: a + x.cast("double") * x))
-        return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
     # r7 (guide §2.5): the equi-join key has only 2**n_planes distinct
     # values, so at most that many reduce tasks ever run — at n_planes=3
@@ -387,14 +296,11 @@ def knn_join_bucketed(emb: DataFrame, queries: DataFrame, k: int = 10,
     # CANDIDATE PAIR — 3x the per-pair flops; computed once per row
     # map-side the join projection only multiplies two cached doubles.
     # Same expression over the same values, so cos is bit-identical.
-    e_b = e_b.withColumn("_en", norm(F.col("_ev")))
-    q_b = q_b.withColumn("_qn", norm(F.col("_qv")))
+    e_b = e_b.withColumn("_en", _norm(F.col("_ev")))
+    q_b = q_b.withColumn("_qn", _norm(F.col("_qv")))
 
-    dot = F.aggregate(
-        F.zip_with("_ev", "_qv", lambda a, b: a.cast("double") * b),
-        F.lit(0.0), lambda acc, x: acc + x)
     cand = (e_b.join(q_b, join_key)
-            .withColumn("cos", dot / (F.col("_en") * F.col("_qn")))
+            .withColumn("cos", _cosine())
             .select("q_id", "n_id", "cos"))
     if n_probes > 1:
         cand = cand.groupBy("q_id", "n_id").agg(F.max("cos").alias("cos"))
@@ -537,32 +443,30 @@ def ivf_index(emb: DataFrame, n_lists: int = 16, seed: int = 42,
 def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries,
                k: int = 10, n_probe: int = 4,
                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k over an IVF index: each query probes its n_probe nearest
-    centroid lists (euclidean, matching the KMeans objective), the scan
-    is an equi-join on list_id (~n_probe/n_lists of the table), and the
-    exact cosine ranking runs on the candidates only."""
-    if isinstance(queries, DataFrame):
-        q = [(r[0], np.asarray(r[1], dtype=np.float64))
-             for r in queries.collect()]
-    else:
-        q = [(i, np.asarray(v, dtype=np.float64)) for i, v in queries]
-    _check_query_count(len(q))
+    """ANN top-k over an IVF index: an IVF candidate filter in front of
+    knn_join. Each query probes its n_probe nearest centroid lists
+    (euclidean, matching the KMeans objective); the candidates are the
+    rows in the UNION of every query's probed lists, and knn_join ranks
+    every query against all of them. So the scan grows with the query
+    count: at 16 lists and 2 probes, the 10 queries of the sf0.01 recall
+    floor cover 11 lists, 465 of the 500 rows. Returns (q_id, n_id,
+    cos)."""
+    q, qdf = _driver_queries(assigned.sparkSession, queries)
     wanted = sorted({
         int(l)
         for _, v in q
         for l in np.argsort(((centroids - v) ** 2).sum(axis=1))[:n_probe]})
     cand = assigned.filter(F.col("list_id").isin(wanted))
-    # knn_embeddings hardcodes vec_id/embedding; alias custom names in
-    return knn_embeddings(
-        cand.select(F.col(id_col).alias("vec_id"),
-                    F.col(vec_col).alias("embedding")), q, k)
+    return (knn_join(cand, qdf, k, id_col=id_col, vec_col=vec_col)
+            .select("q_id", "n_id", "cos"))
 
 
 def ivf_recall(emb: DataFrame, queries, k: int = 10, n_lists: int = 16,
                n_probe: int = 4, seed: int = 42) -> float:
-    """Measured recall@k of the IVF path vs exact brute force (same
-    acceptance metric as ann_recall for the LSH path)."""
-    exact = {(r.q_id, r.n_id) for r in knn_embeddings(emb, queries, k).collect()}
+    """Measured recall@k of the IVF path vs the exact knn_join answer
+    (same acceptance metric as ann_recall for the LSH path)."""
+    _, qdf = _driver_queries(emb.sparkSession, queries)
+    exact = {(r.q_id, r.n_id) for r in knn_join(emb, qdf, k).collect()}
     assigned, cents = ivf_index(emb, n_lists=n_lists, seed=seed)
     approx = {(r.q_id, r.n_id)
               for r in ivf_search(assigned, cents, queries, k,
@@ -572,11 +476,11 @@ def ivf_recall(emb: DataFrame, queries, k: int = 10, n_lists: int = 16,
 
 def ann_recall(emb: DataFrame, queries, k: int = 10, n_planes: int = 8,
                n_probes: int = 1, seed: int = 42) -> float:
-    """Measured recall@k of the LSH path vs the exact brute-force answer —
+    """Measured recall@k of the LSH path vs the exact knn_join answer —
     the acceptance metric for tuning n_planes/n_probes on a sample before
     a full-table run."""
-    exact = {(r.q_id, r.n_id)
-             for r in knn_embeddings(emb, queries, k).collect()}
+    _, qdf = _driver_queries(emb.sparkSession, queries)
+    exact = {(r.q_id, r.n_id) for r in knn_join(emb, qdf, k).collect()}
     approx = {(r.q_id, r.n_id)
               for r in ann_lsh_embeddings(emb, queries, k, n_planes,
                                           n_probes=n_probes,

@@ -22,7 +22,7 @@ import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
 from py3dtiles_spark.functions.crs import (
-    ecef_alignment_rotation, geodetic_to_ecef, tileset_transform)
+    convert_to_ecef, ecef_alignment_rotation, tileset_transform)
 from py3dtiles_spark.functions.geometry import compute_spacing
 from py3dtiles_spark.operators.tiling import TilingConfig
 from py3dtiles_spark.plans.pipeline import TiledPoints, tile_points
@@ -87,10 +87,7 @@ def convert_files(spark: SparkSession, paths, out_dir: str | None = None,
         unproject = projection_for_epsg(int(srs_in))
 
         def _to_ecef(v):
-            if unproject is not None:
-                lon, lat = unproject.inverse(v[0], v[1])
-                return np.array(geodetic_to_ecef(lon, lat, v[2]))
-            return np.array(geodetic_to_ecef(*v))
+            return np.array(convert_to_ecef(*v, int(srs_in)))
 
         # reproject the aabb corners + avg_min (convert.py:387-405)
         bl = _to_ecef(aabb[0])

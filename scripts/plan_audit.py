@@ -18,38 +18,47 @@ from py3dtiles_spark.session import get_spark
 
 SF = "/root/testdata/sf0.01"
 
+# substrings of the executed-plan node names of Python stages in Spark
+# 4.1: grouped and cogrouped maps (FlatMapGroupsInPandas, ...), Python
+# and pandas UDFs (ArrowEvalPython, BatchEvalPython), mapInPandas,
+# mapInArrow, grouped pandas aggregates and pandas window functions.
+# A "zero Python" plan contains none of them.
+PYTHON_NODES = ("FlatMap", "ArrowEval", "BatchEval", "MapInPandas",
+                "MapInArrow", "ArrowAggregatePython", "ArrowWindowPython")
+ZERO_PYTHON = "!" + "|".join(PYTHON_NODES)
+
 CHECKS = {
     "pip_rect": [
         ("broadcast nested-loop on range predicate", r"Broadcast"),
     ],
     "octant_hist": [
-        ("pure native expressions, zero Python", "!FlatMap|ArrowEval|BatchEval"),
+        ("pure native expressions, zero Python", ZERO_PYTHON),
     ],
     "neardup_pairs": [
         ("band-bucket equi-join (not cross join)", r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
         ("no cartesian product anywhere", "!CartesianProduct"),
     ],
     "simhash_neardup": [
-        ("native xxhash64 votes, zero Python stages", "!FlatMap|ArrowEval|BatchEval"),
+        ("native xxhash64 votes, zero Python stages", ZERO_PYTHON),
     ],
     "feature_quadtree": [
         ("window rank per cell, no Python beyond the WKB-free path", r"Window"),
     ],
     "s2_cells": [
-        ("S2 encode is pure native exprs, zero Python", "!FlatMap|ArrowEval|BatchEval"),
+        ("S2 encode is pure native exprs, zero Python", ZERO_PYTHON),
         ("partial agg before the cell shuffle", r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
     ],
     "raster_cells": [
-        ("rasterize is native explode, zero Python", "!FlatMap|ArrowEval|BatchEval"),
+        ("rasterize is native explode, zero Python", ZERO_PYTHON),
         ("generator (sequence explode), not a join", r"Generate"),
     ],
     "raster_vectorize": [
-        ("gaps-and-islands windows, zero Python", "!FlatMap|ArrowEval|BatchEval"),
+        ("gaps-and-islands windows, zero Python", ZERO_PYTHON),
         ("two window passes", r"Window[\s\S]*Window"),
     ],
     "knn_join": [
         ("query side broadcast", r"Broadcast"),
-        ("native cosine, zero Python stages", "!FlatMap|ArrowEval|BatchEval"),
+        ("native cosine, zero Python stages", ZERO_PYTHON),
         # r6: the partition-local pre-rank is Catalyst's WindowGroupLimit
         # partial/final pair (replaces the manual _pid stage, which cost a
         # whole extra exchange of the candidate set)
@@ -65,7 +74,7 @@ CHECKS = {
     ],
     "repetition_stats": [
         ("per-row n-gram signal, zero Python and zero Generate/explode",
-         "!FlatMap|ArrowEval|BatchEval|Generate"),
+         ZERO_PYTHON + "|Generate"),
         ("map-side partial agg",
          r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
     ],
@@ -84,7 +93,7 @@ CHECKS = {
         ("composed pipeline never degrades to a cross product",
          "!CartesianProduct"),
         ("gate/dedup/zorder/kNN stages are all JVM-native, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
+         ZERO_PYTHON),
         ("kNN keeps the two-stage top-k through the composition "
          "(WindowGroupLimit partial/final)",
          r"WindowGroupLimit[\s\S]*WindowGroupLimit"),
@@ -104,17 +113,17 @@ CHECKS = {
     ],
     "zorder_key": [
         ("morton key is pure native exprs, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
+         ZERO_PYTHON),
     ],
     "geohash_cells": [
         ("geohash encode is pure native exprs, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
+         ZERO_PYTHON),
         ("partial agg before the cell shuffle",
          r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate"),
     ],
     "tfidf_terms": [
         ("all-native text pipeline, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
+         ZERO_PYTHON),
         ("doc-count side broadcast into the df join", r"Broadcast"),
         ("window top-k per doc", r"Window"),
         ("map-side partial agg on the exploded tokens",
@@ -122,7 +131,7 @@ CHECKS = {
     ],
     "substring_dup": [
         ("all-native shingle pipeline, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
+         ZERO_PYTHON),
         ("never a cartesian product", "!CartesianProduct"),
         ("single corpus scan (r7): corpus counts come from a count window "
          "over the 8-byte xxhash64 shingle key, not a groupBy+join-back "
@@ -135,7 +144,7 @@ CHECKS = {
     ],
     "unigram_logprob": [
         ("all-native LM scoring, zero Python",
-         "!FlatMap|ArrowEval|BatchEval"),
+         ZERO_PYTHON),
         ("never a cartesian product", "!CartesianProduct"),
         ("scalar (T, V) side is broadcast", r"Broadcast"),
         ("map-side partial agg on the exploded tokens",

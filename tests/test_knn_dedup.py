@@ -1,13 +1,19 @@
 import os
+import sys
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from py3dtiles_spark.operators.dedup import (
     exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs,
     simhash_near_dup_pairs)
 from py3dtiles_spark.operators.knn import (
-    ann_lsh_embeddings, knn_embeddings, knn_points)
+    ann_lsh_embeddings, ivf_index, ivf_search, knn_join, knn_join_bucketed)
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "scripts"))
+from plan_audit import PYTHON_NODES  # noqa: E402
 
 
 def _emb_df(spark, n=400, dim=16, seed=3):
@@ -17,36 +23,16 @@ def _emb_df(spark, n=400, dim=16, seed=3):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>"), m
 
 
-def test_knn_points_exact(spark):
-    rng = np.random.default_rng(1)
-    xyz = rng.uniform(0, 100, (3000, 3))
-    rows = [(int(i), *map(float, xyz[i])) for i in range(3000)]
-    df = spark.createDataFrame(rows, "point_id long, x double, y double, z double").repartition(6)
-    queries = [(0, 50.0, 50.0, 50.0), (1, 0.0, 0.0, 0.0)]
-    got = knn_points(df, queries, k=5).collect()
-    for qid, qx, qy, qz in queries:
-        d = np.sqrt(((xyz - np.array([qx, qy, qz])) ** 2).sum(axis=1))
-        exp = set(np.argsort(d, kind="stable")[:5].tolist())
-        mine = {r.n_id for r in got if r.q_id == qid}
-        assert mine == exp
-
-
-def test_knn_embeddings_exact(spark):
-    df, m = _emb_df(spark)
-    df = df.repartition(5)
-    q = [(7, m[7].astype(np.float64))]
-    got = [r.n_id for r in knn_embeddings(df, q, k=4).collect()]
-    mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-    sims = mn @ mn[7]
-    exp = np.argsort(-sims, kind="stable")[:4].tolist()
-    assert got == exp
-    assert got[0] == 7  # self is nearest
+def _queries(df, where):
+    """The table rows that match `where` as knn_join's query DataFrame."""
+    return df.filter(where).select(F.col("vec_id").alias("q_id"),
+                                   F.col("embedding").alias("qv"))
 
 
 def test_ann_lsh_contains_self_and_subset_of_bucket(spark):
     df, m = _emb_df(spark)
     q = [(3, m[3].astype(np.float64))]
-    got = knn_embeddings(df, q, k=1).collect()
+    got = knn_join(df, _queries(df, "vec_id = 3"), k=1).collect()
     ann = ann_lsh_embeddings(df, q, k=1, n_planes=4)
     assert ann.collect()[0].n_id == got[0].n_id == 3
 
@@ -111,28 +97,48 @@ def test_ann_multiprobe_recall(spark):
 
 def test_knn_join_matches_collected_path(spark):
     """The distributed kNN join (DataFrame queries, broadcast, native
-    cosine) must rank identically to knn_embeddings' driver-collected
-    path, and its plan must contain no Python stages."""
-    from py3dtiles_spark.operators.knn import knn_join
-    from pyspark.sql import functions as F
+    cosine) over a repartitioned table ranks exactly as a float64 numpy
+    cosine ranking of the collected vectors (ties by n_id), and its plan
+    contains no Python stage."""
     df, m = _emb_df(spark, n=200, dim=8, seed=13)
-    q = (df.filter("vec_id < 5")
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("qv")))
-    joined = knn_join(df, q, k=4)
+    joined = knn_join(df.repartition(5), _queries(df, "vec_id < 5"), k=4)
     got = {(r.q_id, r.rank): r.n_id for r in joined.collect()}
-    ref = knn_embeddings(df, [(i, m[i]) for i in range(5)], k=4)
-    w = __import__("pyspark.sql", fromlist=["Window"]).Window \
-        .partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id").asc())
-    ref = ref.withColumn("rank", F.row_number().over(w))
-    want = {(r.q_id, r.rank): r.n_id for r in ref.collect()}
+    mn = m.astype(np.float64)
+    mn /= np.linalg.norm(mn, axis=1, keepdims=True)
+    want = {(i, rank): int(n)
+            for i in range(5)
+            for rank, n in enumerate(
+                np.argsort(-(mn @ mn[i]), kind="stable")[:4], 1)}
     assert got == want
     # each query's nearest neighbour is itself (cos 1.0)
     for i in range(5):
         assert got[(i, 1)] == i
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    for marker in ("FlatMap", "ArrowEval", "BatchEval"):
+    for marker in PYTHON_NODES:
         assert marker not in plan
+
+
+def test_ivf_search_ranks_with_knn_join(spark):
+    """ivf_search is a list filter in front of knn_join: with every list
+    probed it returns knn_join's (q_id, n_id, cos) rows, on custom column
+    names, and its executed plan has no Python stage."""
+    df, m = _emb_df(spark, n=200, dim=8, seed=5)
+    df = df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
+    assigned, cents = ivf_index(df, n_lists=4, seed=1, vec_col="v")
+    qs = [(i, m[i]) for i in range(3)]
+    res = ivf_search(assigned, cents, qs, k=4, n_probe=4, id_col="id",
+                     vec_col="v")
+    got = {(r.q_id, r.n_id): r.cos for r in res.collect()}
+    q = df.filter("id < 3").select(F.col("id").alias("q_id"),
+                                   F.col("v").alias("qv"))
+    exact = {(r.q_id, r.n_id): r.cos
+             for r in knn_join(df, q, k=4, id_col="id", vec_col="v").collect()}
+    assert got.keys() == exact.keys()
+    for key, cos in exact.items():
+        assert got[key] == pytest.approx(cos, abs=1e-12)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    for marker in PYTHON_NODES:
+        assert marker not in plan, marker
 
 
 def test_knn_join_local_prerank_stage_present(spark):
@@ -145,12 +151,8 @@ def test_knn_join_local_prerank_stage_present(spark):
     after, exactly one candidate exchange, and no shuffle may carry the
     embedding arrays (the projection to (q_id, n_id, cos) happens
     map-side)."""
-    from py3dtiles_spark.operators.knn import knn_join
-    from pyspark.sql import functions as F
     df, _ = _emb_df(spark, n=200, dim=8, seed=13)
-    q = (df.filter("vec_id < 5")
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("qv")))
+    q = _queries(df, "vec_id < 5")
     joined = knn_join(df, q, k=4)
     plan = joined._jdf.queryExecution().executedPlan().toString()
     # assert the modes ON the WindowGroupLimit lines themselves — a bare
@@ -177,12 +179,8 @@ def test_knn_join_large_k_reinserts_manual_prerank(spark):
     q_id exchange never carries the full candidate set for a hot query.
     Pinned by shrinking the threshold below k and checking both the plan
     shape and that results equal the default-config run."""
-    from py3dtiles_spark.operators.knn import knn_join
-    from pyspark.sql import functions as F
     df, _ = _emb_df(spark, n=120, dim=8, seed=29)
-    q = (df.filter("vec_id < 3")
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("qv")))
+    q = _queries(df, "vec_id < 3")
     key = "spark.sql.optimizer.windowGroupLimitThreshold"
     prev = spark.conf.get(key, "1000")
     expected = [(r.q_id, r.rank, r.n_id)
@@ -203,12 +201,8 @@ def test_knn_join_bucketed_exhaustive_is_exact(spark):
     """knn_join_bucketed with n_probes = 2^n_planes probes every bucket,
     so it must equal the exact broadcast knn_join rank-for-rank — and the
     query side must never be collected (it stays a DataFrame)."""
-    from py3dtiles_spark.operators.knn import knn_join, knn_join_bucketed
-    from pyspark.sql import functions as F
     df, _ = _emb_df(spark, n=200, dim=8, seed=21)
-    q = (df.filter("vec_id < 30")
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("qv")))
+    q = _queries(df, "vec_id < 30")
     exact = {(r.q_id, r.rank): r.n_id for r in knn_join(df, q, k=4).collect()}
     got = {(r.q_id, r.rank): r.n_id
            for r in knn_join_bucketed(df, q, k=4, n_planes=3,
@@ -220,12 +214,8 @@ def test_knn_join_bucketed_recall_at_production_config(spark):
     """At a realistic probe budget (4 probes over 16 buckets = ~25%
     expected scan) the bucketed join must keep decent recall vs exact and
     must always find each query's self-neighbour at rank 1."""
-    from py3dtiles_spark.operators.knn import knn_join, knn_join_bucketed
-    from pyspark.sql import functions as F
     df, _ = _emb_df(spark, n=400, dim=16, seed=31)
-    q = (df.filter("vec_id < 10")
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("qv")))
+    q = _queries(df, "vec_id < 10")
     exact = {(r.q_id, r.n_id) for r in knn_join(df, q, k=5).collect()}
     approx_rows = knn_join_bucketed(df, q, k=5, n_planes=4,
                                     n_probes=4).collect()
@@ -244,10 +234,12 @@ SF001_EMB = "/root/testdata/sf0.01/embeddings.parquet"
 def test_ann_recall_floor_sf001(spark):
     """CI floor (VERDICT r2 #8): on the driver's sf0.01 embeddings the
     multi-probe path must hold recall@10 >= 0.8 at the documented
-    operating point (6 planes, 16 probes = 25% expected scan fraction),
-    and single-probe must stay clearly below it — so a silent multi-probe
-    regression (e.g. probes ignored) fails this test. Measured r3:
-    0.94 multi vs 0.19 single on this table."""
+    operating point (6 planes, 16 probes per query), and single-probe
+    must stay clearly below it — so a silent multi-probe regression (e.g.
+    probes ignored) fails this test. Each query probes 16 of the 64
+    buckets, but the scan is the union over the 10 queries: 59 of 64
+    buckets (469 of 500 rows) at 16 probes, 9 (66 rows) at 1 probe.
+    Measured: 0.94 multi vs 0.19 single on this table."""
     from py3dtiles_spark.operators.knn import ann_recall
     emb = spark.read.parquet(SF001_EMB)
     qs = [(int(r.vec_id), np.array(r.embedding, dtype=np.float64))
@@ -284,9 +276,11 @@ def test_connected_components_chains_and_stars(spark):
                     reason="driver testdata unavailable")
 def test_ivf_recall_floor_sf001(spark):
     """IVF (MLlib KMeans coarse quantizer) recall floor on the driver's
-    embeddings: >= 0.85 at 16 lists / 2 probes (12.5% scan fraction) —
-    measured 0.96 in r3. Also deterministic for a fixed seed."""
-    from py3dtiles_spark.operators.knn import ivf_index, ivf_recall
+    embeddings: >= 0.85 at 16 lists / 2 probes per query — measured 0.96.
+    Each query probes 2 of the 16 lists, but the scan is the union over
+    the 10 queries: 11 lists, 465 of the 500 rows. Also deterministic
+    for a fixed seed."""
+    from py3dtiles_spark.operators.knn import ivf_recall
     emb = spark.read.parquet(SF001_EMB)
     qs = [(int(r.vec_id), np.array(r.embedding, dtype=np.float64))
           for r in emb.filter("vec_id < 10").collect()]
@@ -311,10 +305,9 @@ def test_minhash_bucket_cap_keeps_multiband_pairs(spark):
 
 def test_knn_join_points_exact_when_complete(spark):
     """Grid-bucketed point kNN join: with rings wide enough every query
-    is flagged complete and the ranked ids equal brute-force knn_points;
+    is flagged complete and the ranked ids equal a numpy brute force;
     with a tiny cell the flag honestly reports incompleteness."""
-    from py3dtiles_spark.operators.knn import knn_join_points, knn_points
-    from pyspark.sql import functions as F
+    from py3dtiles_spark.operators.knn import knn_join_points
     rng = np.random.default_rng(17)
     xyz = rng.uniform(0, 100, (3000, 3))
     rows = [(int(i), *map(float, xyz[i])) for i in range(3000)]
@@ -327,13 +320,11 @@ def test_knn_join_points_exact_when_complete(spark):
     by_q = {}
     for r in got:
         by_q.setdefault(r.q_id, {})[r.rank] = r.n_id
-    exact = knn_points(pts, [(i, *map(float, xyz[i])) for i in range(8)], k=5)
-    w = __import__("pyspark.sql", fromlist=["Window"]).Window \
-        .partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id").asc())
-    ref = exact.withColumn("rank", F.row_number().over(w))
     want = {}
-    for r in ref.collect():
-        want.setdefault(r.q_id, {})[r.rank] = r.n_id
+    for i in range(8):
+        d = np.sqrt(((xyz - xyz[i]) ** 2).sum(axis=1))
+        want[i] = {rank: int(n) for rank, n in enumerate(
+            np.argsort(d, kind="stable")[:5], 1)}
     assert by_q == want
     # tiny cell: k-th neighbour provably can lie outside one ring
     tiny = knn_join_points(pts, q, k=5, cell_size=1.0, n_rings=1).collect()
@@ -341,7 +332,7 @@ def test_knn_join_points_exact_when_complete(spark):
     # plan stays native + equi-join
     plan = knn_join_points(pts, q, k=5, cell_size=12.0) \
         ._jdf.queryExecution().executedPlan().toString()
-    for marker in ("FlatMap", "ArrowEval", "BatchEval", "CartesianProduct"):
+    for marker in ("CartesianProduct",) + PYTHON_NODES:
         assert marker not in plan
 
 

@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.join(_REPO, "scripts"))
 import __spark_entry__ as entrymod
 # the driver gate's own comparison, imported so the two cannot diverge
 from check_oracle import normalize
+from plan_audit import PYTHON_NODES
 
 # DuckDB twin of functions/text.contamination_stats(d, d.filter("doc_id %
 # 41 = 0"), shingle_tokens=8): per doc, its 8-token windows and how many
@@ -156,5 +157,5 @@ def test_contamination_stats_matches_duckdb_twin(spark):
     assert srows
     assert normalize(srows, sdf.columns) == normalize(drows, dcols)
     assert "BroadcastHashJoin" in plan
-    for node in ("CartesianProduct", "ArrowEval", "BatchEval", "FlatMap"):
+    for node in ("CartesianProduct",) + PYTHON_NODES:
         assert node not in plan, node

@@ -96,17 +96,12 @@ REACH_ALLOWED_NAMES = {
     "projected_to_geodetic": "oracle for the inverse projections",
     "ivf_recall": "recall oracle for the IVF search path",
     "ann_recall": "recall oracle for the LSH search path",
-    "knn_points": "brute-force reference for knn_join_points",
     # collected-rows twins the distributed assemblies are byte-compared to
     "build_tileset_json": "oracle for build_tileset_json_distributed",
     "build_vector_tileset": "oracle for build_vector_tileset_distributed",
     # the only check of the per-row byte-identical `text` invariant
     "tile_pages": "text-invariant path (test_pipeline_end_to_end)",
     "verify_text_invariant": "the invariant's measure (same test)",
-}
-REACH_ALLOWED_MODULES = {
-    # holds the only b3dm/pnts byte-length goldens; needs reference fixtures
-    "py3dtiles_spark.compat": "reference-API facade with the codec goldens",
 }
 
 
@@ -200,8 +195,6 @@ def test_engine_code_is_reachable_from_non_test_sources():
               if p.startswith(os.path.join(REPO, "py3dtiles_spark") + os.sep)]
     unnamed = []
     for path in engine:
-        if _module_name(path) in REACH_ALLOWED_MODULES:
-            continue
         for node in trees[path].body:
             if (not isinstance(node, (ast.FunctionDef, ast.ClassDef))
                     or node.name.startswith("_")
@@ -214,8 +207,7 @@ def test_engine_code_is_reachable_from_non_test_sources():
     imported = set()
     for path, tree in trees.items():
         imported |= _imported_names(path, tree)
-    unimported = [m for m in map(_module_name, engine)
-                  if m not in REACH_ALLOWED_MODULES and m not in imported
+    unimported = [m for m in map(_module_name, engine) if m not in imported
                   and not any(i.startswith(m + ".") for i in imported)]
     assert not unnamed, f"referenced only by tests or docstrings: {unnamed}"
     assert not unimported, f"imported by no non-test source: {unimported}"
