@@ -21,6 +21,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from py3dtiles_spark.session import local_frame
+
 U32 = 4294967296
 
 # ---------------------------------------------------------------- geocode --
@@ -173,8 +175,10 @@ _RECTS = [(1, -90.0, -45.0, 0.0, 0.0), (2, 0.0, 0.0, 180.0, 85.0),
 def q_pip_rect(spark, sf_dir):
     """P7/J2 half-open point-in-rectangle containment join."""
     from py3dtiles_spark.operators.spatial_join import point_in_rect_join
-    rects = spark.createDataFrame(
-        _RECTS, "rect_id long, xmin double, ymin double, xmax double, ymax double")
+    rects = local_frame(
+        spark, dict(zip(("rect_id", "xmin", "ymin", "xmax", "ymax"),
+                        zip(*_RECTS))),
+        "rect_id long, xmin double, ymin double, xmax double, ymax double")
     pts = _geo(spark, sf_dir).select("doc_id", "x", "y")
     j = point_in_rect_join(pts, rects)
     return j.groupBy("rect_id").agg(F.count("*").alias("hits")).orderBy("rect_id")
@@ -190,17 +194,19 @@ _DONUT = {"geom_id": 8,
           "hys": [[-30.0, -30.0, 30.0, 30.0]]}
 
 
+# the triangle (no hole rings: null hxs/hys) and the donut, by column
+_PIP_POLYGONS = {c: [p.get(c) for p in (_TRI, _DONUT)]
+                 for c in ("geom_id", "xs", "ys", "hxs", "hys")}
+_PIP_POLYGON_DDL = ("geom_id long, xs array<double>, ys array<double>, "
+                    "hxs array<array<double>>, hys array<array<double>>")
+
+
 def q_pip_polygon(spark, sf_dir):
     """J2 exact point-in-polygon (even-odd ray cast UDF) vs an independent
     SQL oracle: a convex triangle (half-plane signs) AND a donut polygon
     (outer-rect AND NOT hole-rect) — hole rings exercised end to end."""
     from py3dtiles_spark.operators.spatial_join import point_in_polygon_join
-    polys = spark.createDataFrame(
-        [(_TRI["geom_id"], _TRI["xs"], _TRI["ys"], None, None),
-         (_DONUT["geom_id"], _DONUT["xs"], _DONUT["ys"],
-          _DONUT["hxs"], _DONUT["hys"])],
-        "geom_id long, xs array<double>, ys array<double>, "
-        "hxs array<array<double>>, hys array<array<double>>")
+    polys = local_frame(spark, _PIP_POLYGONS, _PIP_POLYGON_DDL)
     pts = _geo(spark, sf_dir).select("doc_id", "x", "y")
     j = point_in_polygon_join(pts, polys, keep_cols=("doc_id",))
     return j.select("doc_id", "geom_id").orderBy("doc_id", "geom_id")
@@ -913,7 +919,7 @@ def q_domain_stats(spark, sf_dir):
         F.concat(F.lit("https://h"), (i % 7).cast("string"),
                  F.lit(".site"), (i % 3).cast("string"),
                  F.lit(".example/p/"), i.cast("string")).alias("url"))
-    bl = spark.createDataFrame([("site2.example",)], "domain string")
+    bl = local_frame(spark, {"domain": ["site2.example"]}, "domain string")
     kept = filter_domain_blocklist(urls, bl)
     return (domain_stats(kept, chars_col="n_chars").orderBy("domain"))
 

@@ -31,6 +31,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from py3dtiles_spark.sources.pnts import write_files
+
 MAX_TILE_SIZE = 2000.0      # export.py:112
 FEATURES_PER_TILE = 20      # export.py:113
 
@@ -224,27 +226,13 @@ def build_b3dm_tiles(assigned: DataFrame, transform=None,
 
 def write_b3dm_files(tiles: DataFrame, out_dir: str) -> int:
     """Materialize {level}_{cx}_{cy}.b3dm files from build_b3dm_tiles
-    output. Truly executor-side (mirrors sources/pnts.write_pnts_files):
-    each partition writes its own tiles via foreachPartition, so tile
-    bytes never stream through the driver (out_dir must be a shared
-    filesystem on a real cluster). Returns tiles written (accumulator,
-    one job)."""
-    import os as _os
-    _os.makedirs(out_dir, exist_ok=True)
-    acc = tiles.sparkSession.sparkContext.accumulator(0)
-
-    def write_partition(rows):
-        import os
-        n = 0
-        for row in rows:
-            name = row.node_id.replace("/", "_")
-            with open(os.path.join(out_dir, f"{name}.b3dm"), "wb") as f:
-                f.write(bytes(row.b3dm))
-            n += 1
-        acc.add(n)
-
-    tiles.select("node_id", "b3dm").foreachPartition(write_partition)
-    return acc.value
+    output, executor-side (sources/pnts.write_files). Returns tiles
+    written."""
+    import os
+    os.makedirs(out_dir, exist_ok=True)
+    return write_files(
+        tiles.select("node_id", "b3dm"),
+        lambda name: os.path.join(out_dir, name.replace("/", "_") + ".b3dm"))
 
 
 def node_boxes(assigned: DataFrame) -> DataFrame:

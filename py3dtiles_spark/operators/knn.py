@@ -27,6 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from py3dtiles_spark.session import local_frame
+
 
 # the query side is broadcast through the driver by design ("few queries
 # against a big table"); this bounds the driver memory footprint
@@ -53,8 +55,9 @@ def _driver_queries(spark, queries):
         queries = [(r[0], r[1]) for r in queries.collect()]
     q = [(int(i), np.asarray(v, dtype=np.float64)) for i, v in queries]
     _check_query_count(len(q))
-    qdf = spark.createDataFrame([(i, v.tolist()) for i, v in q],
-                                "q_id long, qv array<double>")
+    qdf = local_frame(spark, {"q_id": [i for i, _ in q],
+                              "qv": [v for _, v in q]},
+                      "q_id long, qv array<double>")
     return q, qdf
 
 

@@ -12,9 +12,12 @@ Per level, two phases:
      _route_nodes, maps those node aggregates to a mode per node, and for
      cell nodes to the float32 grid constants derived from the tile name
      (stateless, points/utils.py:83-88). Levels under node_broadcast_rows
-     call it driver-side on the probe rows (pure-JVM probe job,
-     LocalRelation broadcast — the fast common case); over-cap levels call
-     it on the executors through mapInPandas and the driver sees just the
+     call it driver-side on the probe rows (pure-JVM probe job), and the
+     routed node list goes back as an Arrow LocalRelation broadcast
+     (session.local_frame: a LocalTableScan, so no Python task and no
+     second worker daemon; measured on 4 cores, its broadcast job takes
+     7-9 ms per level) — the fast common case; over-cap levels call it on
+     the executors through mapInPandas and the driver sees just the
      <=4-row per-mode histogram. Modes:
        leaf    count < 20000 or spacing floor -> accept all (node.py:70-73)
        express big node whose bbox sits in ONE child octant (megacity
@@ -93,6 +96,7 @@ from py3dtiles_spark.functions.geometry import (
     compute_spacing,
 )
 from py3dtiles_spark.operators.replay import assign_subtree
+from py3dtiles_spark.session import local_frame
 
 PENDING_SCHEMA = "point_id long, x float, y float, z float, tile_id string"
 KERNEL_SCHEMA = PENDING_SCHEMA + ", accepted boolean"
@@ -503,12 +507,13 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             # (every sandbox level; most real levels) comes back whole from
             # the ONE pure-JVM routing job — _route_nodes runs driver-side
             # over the O(cap) rows (exact level_total, r4-identical plans),
-            # node list re-shipped as a LocalRelation broadcast (no
-            # broadcast-exchange job, no Arrow stage). Over-cap levels never
-            # reach the driver: _route_nodes runs on the executors through
-            # mapInPandas, only the per-mode histogram is collected, and
-            # node_meta joins to pending by shuffle (a GB-sized node list
-            # has no business being broadcast anyway).
+            # node list re-shipped as an Arrow LocalRelation (local_frame:
+            # a LocalTableScan under the broadcast — pickled rows would add
+            # a Python task per core and a second worker daemon). Over-cap
+            # levels never reach the driver: _route_nodes runs on the
+            # executors through mapInPandas, only the per-mode histogram
+            # is collected, and node_meta joins to pending by shuffle (a
+            # GB-sized node list has no business being broadcast anyway).
             cap = int(cfg.node_broadcast_rows)
             node_meta_full = None
             # persisted so the over-cap path's routing pass reads the
@@ -554,10 +559,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
 
             t0 = time.time()
             if broadcast_path:
-                node_meta = spark.createDataFrame(
-                    list(routed.drop(columns="cnt")
-                         .itertuples(index=False, name=None)),
-                    _NODE_META_SCHEMA)
+                node_meta = local_frame(spark, routed, _NODE_META_SCHEMA)
                 tagged = pending.join(F.broadcast(node_meta), "tile_id")
             else:
                 tagged = pending.join(node_meta_full.drop("cnt"), "tile_id")
@@ -642,7 +644,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         from functools import reduce
         assignments = reduce(DataFrame.unionByName, parts)
     else:
-        assignments = spark.createDataFrame([], ASSIGN_SCHEMA)
+        assignments = local_frame(spark, {}, ASSIGN_SCHEMA)
 
     counters["points_total"] = (counters["levels"][0]["points_in"]
                                 if counters["levels"] else 0)
@@ -675,7 +677,7 @@ def _read_pending(spark, out_dir: str) -> DataFrame:
             "start_level / checkpoint_dir?")
     p = os.path.join(out_dir, "accepted=false")
     if not os.path.isdir(p):
-        return spark.createDataFrame([], PENDING_SCHEMA)
+        return local_frame(spark, {}, PENDING_SCHEMA)
     return spark.read.schema(PENDING_SCHEMA).parquet(p)
 
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # generated classes Spark's codegen cache holds (see get_spark)
 CODEGEN_CACHE_ENTRIES = 2000
@@ -120,3 +120,50 @@ def get_spark(app_name: str = "py3dtiles-spark", cpus: int | None = None,
         .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, columns, ddl: str) -> DataFrame:
+    """A DataFrame of driver-side values that plans as a `LocalTableScan`.
+
+    `columns` maps each column of the DDL schema `ddl` to its values (a
+    list, numpy array or pandas Series); an empty mapping gives an empty
+    frame. The values become a `pyarrow.Table` typed by that schema, so
+    float32 and float64 columns keep their bits and nested arrays may hold
+    nulls. The engine builds every frame of driver rows here; plan_audit's
+    `rdd_python_calls` check rejects any other `createDataFrame`.
+
+    One Python worker pool. pyspark keys its worker daemons by the
+    workers' environment, and an RDD-level Python function (the pickled
+    rows of `createDataFrame(list)` or of an empty pandas frame,
+    `foreachPartition`) runs without the `SPARK_SIMPLIFIED_TRACEBACK`
+    variable that SQL Python stages carry. One such call per session
+    starts a second daemon with workers of its own, which then sit idle
+    next to the SQL pool's. An Arrow table reaches the JVM without Python
+    tasks and plans as a LocalRelation, and the tile writers are SQL
+    Python stages (sources/pnts.write_files). The process tree at the RSS
+    peak of a perfbench `tile_skew` run (seed 7, 4 cores, pyspark 4.1.2),
+    with each level's routed node list built by `createDataFrame(list)`
+    and by this function:
+
+        process                       RSS each   list    local_frame
+        JVM (driver and executors)    2.6-2.7 GB    1          1
+        driver Python                  171-175 MB   1          1
+        SQL pool: daemon                    47 MB   1          1
+        SQL pool: busy workers         115-117 MB   4          4
+        RDD pool: daemon                    47 MB   1          0
+        RDD pool: idle workers              35 MB   4          0
+
+    Over 10 alternating perfbench pairs, `tile_skew`'s `peak_rss_mb`
+    median fell from 3563 to 3390 MB, and over 5 pairs `query_mix`'s
+    (whose `q_pip_polygon` built its polygons from a list) from 3288 to
+    3108 MB (BENCH.md).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.table([pa.array(columns[f.name] if len(columns) else [],
+                               type=f.type) for f in arrow], schema=arrow)
+    return spark.createDataFrame(table, schema)

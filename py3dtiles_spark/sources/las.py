@@ -33,6 +33,8 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from py3dtiles_spark.session import local_frame
+
 # record length and RGB byte offset per LAS point format id
 _FORMAT_RGB_OFFSET = {0: None, 1: None, 2: 20, 3: 28}
 _FORMAT_LEN = {0: 20, 1: 28, 2: 26, 3: 34}
@@ -158,9 +160,10 @@ def las_scan(spark, paths, offset=None, scale=None, matrix=None,
     mat = None if matrix is None else np.asarray(matrix, dtype=np.float64)
     hdr_by_path = {h.path: h for h in info["headers"]}
 
-    portions_df = spark.createDataFrame(
-        pd.DataFrame(info["portions"],
-                     columns=["path", "lo", "hi", "base_id"]))
+    portions_df = local_frame(
+        spark, pd.DataFrame(info["portions"],
+                            columns=["path", "lo", "hi", "base_id"]),
+        "path string, lo long, hi long, base_id long")
 
     def read_portions(batches):
         for pdf in batches:

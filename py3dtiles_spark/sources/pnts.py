@@ -22,7 +22,9 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark import TaskContext
+from pyspark.sql import DataFrame, functions as F
 
 PNTS_HEADER_LEN = 28
 _MAGIC = b"pnts"
@@ -181,26 +183,43 @@ def pnts_scan(spark, root_dir: str) -> DataFrame:
                        "z float, r smallint, g smallint, b smallint")
 
 
-def write_pnts_files(pnts_df: DataFrame, out_dir: str) -> int:
-    """Materialize r<name>.pnts files with reference sharding.
+def write_files(files: DataFrame, path_of) -> int:
+    """Write each row of `files` (name string, data binary) to the file
+    `path_of(name)` and return the number of files written.
 
-    Truly executor-side: each partition writes its own tiles via
-    foreachPartition, so tile bytes never stream through the driver
-    (out_dir must be a shared filesystem on a real cluster — local/NFS).
-    Returns tiles written (counted with an accumulator, one job total)."""
-    os.makedirs(out_dir, exist_ok=True)
-    acc = pnts_df.sparkSession.sparkContext.accumulator(0)
-
-    def write_partition(rows):
-        import os as _os
+    Executor-side: one SQL Python stage (mapInArrow) writes a partition's
+    files and yields their count, and one sum collects the counts, so file
+    bytes never stream through the driver (the paths must be on a shared
+    filesystem on a real cluster — local/NFS). Being a SQL stage, it runs
+    in the session's one Python worker pool (see session.local_frame).
+    Each file is written to `<path>.<partition>-<attempt>.tmp`, then moved
+    onto its path with os.replace: a killed task leaves no torn file under
+    a final name, and two attempts of one task never write the same
+    file."""
+    def write(batches):
+        ctx = TaskContext.get()
+        suffix = f".{ctx.partitionId()}-{ctx.attemptNumber()}.tmp"
         n = 0
-        for row in rows:
-            path = _os.path.join(out_dir, name_to_relpath(row.tile_id))
-            _os.makedirs(_os.path.dirname(path) or out_dir, exist_ok=True)
-            with open(path, "wb") as f:
-                f.write(row.pnts)
-            n += 1
-        acc.add(n)
+        for batch in batches:
+            names = batch.column(0).to_pylist()
+            data = batch.column(1)
+            for i, name in enumerate(names):
+                path = path_of(name)
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                with open(path + suffix, "wb") as f:
+                    f.write(data[i].as_buffer())
+                os.replace(path + suffix, path)
+            n += len(names)
+        yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
 
-    pnts_df.select("tile_id", "pnts").foreachPartition(write_partition)
-    return acc.value
+    written = files.mapInArrow(write, "n long").agg(F.sum("n")).collect()
+    return int(written[0][0] or 0)
+
+
+def write_pnts_files(pnts_df: DataFrame, out_dir: str) -> int:
+    """Materialize r<name>.pnts files with reference sharding
+    (write_files). Returns tiles written."""
+    os.makedirs(out_dir, exist_ok=True)
+    return write_files(
+        pnts_df.select("tile_id", "pnts"),
+        lambda name: os.path.join(out_dir, name_to_relpath(name)))

@@ -24,6 +24,7 @@ import os
 import numpy as np
 import pandas as pd
 
+from py3dtiles_spark.session import local_frame
 from py3dtiles_spark.sources.las import POINTS_SCHEMA
 
 DEFAULT_CHUNK = 64 * 1024 * 1024
@@ -107,8 +108,9 @@ def xyz_scan(spark, paths, offset=None, scale=None, matrix=None,
     sc = np.ones(3) if scale is None else np.asarray(scale, dtype=np.float64)
     mat = None if matrix is None else np.asarray(matrix, dtype=np.float64)
     chunks = xyz_chunks(paths, chunk_bytes)
-    chunks_df = spark.createDataFrame(
-        pd.DataFrame(chunks, columns=["path", "start", "end", "ordinal"]))
+    chunks_df = local_frame(
+        spark, pd.DataFrame(chunks, columns=["path", "start", "end", "ordinal"]),
+        "path string, start long, end long, ordinal long")
 
     def read_chunks(batches):
         for pdf in batches:

@@ -194,6 +194,17 @@ def session_builders(repo: str) -> list[tuple[str, int]]:
     return found
 
 
+def _sources(repo: str, top_files) -> list[str]:
+    """Sorted paths of the existing `top_files` of the repo root and of
+    every .py under py3dtiles_spark/ and scripts/."""
+    paths = [os.path.join(repo, f) for f in top_files]
+    for base in ("py3dtiles_spark", "scripts"):
+        for dirpath, _, files in os.walk(os.path.join(repo, base)):
+            paths += [os.path.join(dirpath, f) for f in files
+                      if f.endswith(".py")]
+    return sorted(p for p in paths if os.path.isfile(p))
+
+
 TAIL_CALLS = ("rollup_small_children", "build_tileset_json_distributed")
 
 
@@ -204,15 +215,10 @@ def tail_callers(repo: str) -> list[tuple[str, int, str]]:
     entry point or harness can time or ship its own copy of the tail."""
     import ast
     allowed = os.path.join("py3dtiles_spark", "plans", "pipeline.py")
-    paths = [os.path.join(repo, f) for f in ("bench.py", "cli.py")]
-    for base in ("py3dtiles_spark", "scripts"):
-        for dirpath, _, files in os.walk(os.path.join(repo, base)):
-            paths += [os.path.join(dirpath, f) for f in files
-                      if f.endswith(".py")]
     found = []
-    for path in sorted(paths):
+    for path in _sources(repo, ("bench.py", "cli.py")):
         rel = os.path.relpath(path, repo)
-        if rel == allowed or not os.path.isfile(path):
+        if rel == allowed:
             continue
         with open(path, encoding="utf-8") as f:
             tree = ast.parse(f.read(), rel)
@@ -223,6 +229,34 @@ def tail_callers(repo: str) -> list[tuple[str, int, str]]:
                       or getattr(node.func, "attr", None))
             if callee in TAIL_CALLS:
                 found.append((rel, node.lineno, callee))
+    return found
+
+
+RDD_PYTHON = ("foreachPartition", "rdd", "parallelize")
+
+
+def rdd_python_calls(repo: str) -> list[tuple[str, int, str]]:
+    """(path, line, name) of every `foreachPartition`, `.rdd` or
+    `parallelize`, and of every `createDataFrame` outside
+    session.local_frame, in the engine, __spark_entry__.py, bench.py,
+    cli.py or scripts/. Each runs Python as an RDD function, which pyspark
+    serves from a second worker daemon (see session.local_frame), so the
+    session keeps one Python worker pool only while none is left."""
+    import ast
+    helper = (os.path.join("py3dtiles_spark", "session.py"), "local_frame")
+    found = []
+    for path in _sources(repo, ("__spark_entry__.py", "bench.py", "cli.py")):
+        rel = os.path.relpath(path, repo)
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), rel)
+        allowed = {id(node) for fn in ast.walk(tree)
+                   if (rel, getattr(fn, "name", None)) == helper
+                   for node in ast.walk(fn)}
+        found += [(rel, node.lineno, node.attr) for node in ast.walk(tree)
+                  if isinstance(node, ast.Attribute)
+                  and (node.attr in RDD_PYTHON
+                       or (node.attr == "createDataFrame"
+                           and id(node) not in allowed))]
     return found
 
 
@@ -412,6 +446,18 @@ def main():
                  f"{builders})")
     lines.append("")
     print(f"{mark} sessions: one builder ({len(builders)} other calls)")
+
+    rdd_calls = rdd_python_calls(repo)
+    mark = "PASS" if not rdd_calls else "FAIL"
+    failures += len(rdd_calls)
+    lines.append("## python workers — one pool")
+    lines.append(f"- [{mark}] no RDD-level Python: no foreachPartition, "
+                 f".rdd or parallelize, and createDataFrame only in "
+                 f"session.local_frame ({len(rdd_calls)} other calls: "
+                 f"{rdd_calls})")
+    lines.append("")
+    print(f"{mark} python workers: one pool ({len(rdd_calls)} RDD-level "
+          "calls)")
 
     with open(os.path.join(repo, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")

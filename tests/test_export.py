@@ -208,6 +208,7 @@ def test_export_cli_parquet_offset(spark, tmp_path):
     assert ts["root"]["transform"][12:15] == [100.0, 200.0, 300.0]
     assert ts["root"]["transform"][0] == 1.0
     tiles = os.listdir(os.path.join(out, "tiles"))
+    # all(...) also rules out a writer's leftover *.tmp files
     assert tiles and all(t.endswith(".b3dm") for t in tiles)
     # every feature landed in some tile
     with open(os.path.join(os.path.join(out, "tiles"), tiles[0]), "rb") as f:

@@ -86,6 +86,26 @@ def test_only_tile_points_runs_the_tiling_tail(tmp_path):
         ("bench.py", n + 3, "build_tileset_json_distributed")]
 
 
+def test_no_rdd_level_python(tmp_path):
+    """plan_audit's one-pool check passes on this repo, allows
+    createDataFrame inside session.local_frame only, and names each
+    RDD-level Python call planted in a copy of the engine."""
+    assert plan_audit.rdd_python_calls(REPO) == []
+    shutil.copytree(os.path.join(REPO, "py3dtiles_spark"),
+                    tmp_path / "py3dtiles_spark")
+    knn = tmp_path / "py3dtiles_spark" / "operators" / "knn.py"
+    src = knn.read_text()
+    knn.write_text(src + "\ndf.foreachPartition(print)\n"
+                   "n = df.rdd.getNumPartitions()\n"
+                   "sc.parallelize([1])\n"
+                   "spark.createDataFrame([(1,)], 'a long')\n")
+    n = src.count("\n")
+    rel = os.path.join("py3dtiles_spark", "operators", "knn.py")
+    assert sorted(plan_audit.rdd_python_calls(str(tmp_path))) == [
+        (rel, n + 2, "foreachPartition"), (rel, n + 3, "rdd"),
+        (rel, n + 4, "parallelize"), (rel, n + 5, "createDataFrame")]
+
+
 # ------------------------------------------------------ reachability guard --
 
 # names that only tests reach, kept on purpose

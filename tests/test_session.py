@@ -1,5 +1,6 @@
 """The session's codegen cache holds the engine's working set: a warm
-rerun of the same plan compiles no generated class again."""
+rerun of the same plan compiles no generated class again. Frames of
+driver-side values (local_frame) plan as local relations."""
 
 import pandas as pd
 
@@ -64,3 +65,76 @@ def test_warm_queries_compile_nothing(spark, tmp_path):
             qs[name](spark, str(tmp_path)).collect()
 
     assert _warm_rerun_compiles(spark, run) == 0
+
+
+# ------------------------------------------------------------ local_frame --
+
+def _root_node(df) -> str:
+    return df._jdf.queryExecution().executedPlan().nodeName()
+
+
+def _routed():
+    """_route_nodes output with leaf, local and cell nodes: cell rows carry
+    nonzero float32 mn* and float64 s* grid constants."""
+    import numpy as np
+
+    from py3dtiles_spark.functions.geometry import compute_spacing
+    from py3dtiles_spark.operators.tiling import _route_nodes
+    aabb = np.array([[0.1, -0.3, 0.7], [100.3, 99.9, 101.1]],
+                    dtype=np.float32)
+    counts = pd.DataFrame({
+        "tile_id": ["0", "1", "2", "3", "7"],
+        "cnt": [5, 300, 5000, 9000, 12],
+        "bx0": [0.0, 0.0, 0.0, 1.0, 50.0], "by0": [0.0, 50.0, 0.0, 0.5, 50.0],
+        "bz0": [0.0, 0.0, 50.0, 50.0, 50.0],
+        "bx1": [49.0, 49.0, 49.9, 49.0, 99.0],
+        "by1": [49.0, 99.0, 49.9, 49.3, 99.0],
+        "bz1": [49.0, 49.0, 99.9, 99.7, 99.0]})
+    cfg = TilingConfig(split_threshold=10, in_kernel_threshold=100)
+    return _route_nodes(counts, cfg, aabb, compute_spacing(aabb), 1000)
+
+
+def test_local_frame_node_meta_is_a_local_relation(spark):
+    """The routed node list plans as a LocalTableScan, and its rows equal
+    the tuple path's (`createDataFrame(list)`, a Scan ExistingRDD) bit for
+    bit: float32 grid minima, float64 scales."""
+    import struct
+
+    from py3dtiles_spark.operators.tiling import _NODE_META_SCHEMA
+    from py3dtiles_spark.session import local_frame
+    routed = _routed()
+    assert set(routed["mode"]) == {"leaf", "local", "cell"}
+    assert (routed["mnx"] != 0).any() and (routed["sx"] != 0).any()
+    df = local_frame(spark, routed, _NODE_META_SCHEMA)
+    assert _root_node(df) == "LocalTableScan"
+    old = spark.createDataFrame(
+        list(routed.drop(columns="cnt").itertuples(index=False, name=None)),
+        _NODE_META_SCHEMA)
+
+    def bits(rows):
+        return sorted((r[0], r[1]) + tuple(struct.pack("<d", v) for v in r[2:])
+                      for r in rows)
+
+    assert bits(df.collect()) == bits(old.collect())
+    assert df.schema == old.schema
+
+
+def test_local_frame_empty_is_a_local_relation(spark):
+    from py3dtiles_spark.operators.tiling import PENDING_SCHEMA
+    from py3dtiles_spark.session import local_frame
+    df = local_frame(spark, {}, PENDING_SCHEMA)
+    assert _root_node(df) == "LocalTableScan"
+    assert df.collect() == []
+    assert df.columns == ["point_id", "x", "y", "z", "tile_id"]
+
+
+def test_local_frame_nested_arrays_with_nulls(spark):
+    """q_pip_polygon's polygons: array<array<double>> hole rings, null for
+    the triangle."""
+    from py3dtiles_spark.session import local_frame
+    df = local_frame(spark, entry._PIP_POLYGONS, entry._PIP_POLYGON_DDL)
+    assert _root_node(df) == "LocalTableScan"
+    rows = {r.geom_id: r for r in df.collect()}
+    assert rows[7].hxs is None and rows[7].hys is None
+    assert rows[8].hxs == [[-50.0, 50.0, 50.0, -50.0]]
+    assert rows[8].ys == [-60.0, -60.0, 60.0, 60.0]

@@ -293,6 +293,7 @@ def test_root_pnts_keeps_rolled_up_points(spark, tmp_path):
     world = local.astype(np.float64) @ m[:3, :3].T + m[:3, 3]
     nearest = np.abs(world[None] - small[:, None]).max(axis=2).min(axis=1)
     assert (nearest < 1e-3).all(), f"{(nearest >= 1e-3).sum()} of 40 missing"
+    assert not list(out.rglob("*.tmp"))      # every pnts write committed
 
 
 def test_cli_resume_xyz_keeps_checkpoint(spark, tmp_path):

@@ -168,3 +168,96 @@ def test_workers_start_without_pythonpath(tmp_path):
     got = json.loads(out[-1])
     assert set(got["modes"]) - {"leaf"}, got
     assert got["assigned"] == got["total"] == 60_000, got
+
+
+def test_one_python_worker_pool(tmp_path):
+    """Every Python stage the engine runs shares one worker daemon: a
+    skewed build whose kernel runs, its pnts files, the b3dm writer and an
+    LSH query (driver-side queries) leave exactly one worker_daemon child
+    of the JVM. Before the driver-built frames became Arrow local
+    relations and the writers SQL Python stages, this found two: pyspark
+    keys daemons by the workers' environment, and RDD-level Python
+    functions start their own. The writers leave no temporary files."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from py3dtiles_spark.functions.wkb import make_wkb_multipolygon
+    squares = [[np.array([[x, y, 0], [x + 10, y, 0], [x + 10, y + 10, 0],
+                          [x, y + 10, 0]], dtype=np.float64)]
+               for x, y in ((50.0 * (i % 8), 50.0 * (i // 8))
+                            for i in range(40))]
+    pq.write_table(pa.table({
+        "geom_id": pa.array(range(40), pa.int64()),
+        "wkb": [make_wkb_multipolygon([s]) for s in squares],
+        "weight": [float(i) for i in range(40)]}),
+        str(tmp_path / "feats.parquet"))
+    script = textwrap.dedent(f"""
+        import json, os, sys
+        sys.path.insert(0, {REPO!r})
+        import numpy as np
+        from pyspark.sql import functions as F
+        from py3dtiles_spark.operators.export import (
+            assign_quadtree, build_b3dm_tiles, triangulate_features,
+            write_b3dm_files)
+        from py3dtiles_spark.operators.knn import ann_lsh_embeddings
+        from py3dtiles_spark.operators.tiling import TilingConfig
+        from py3dtiles_spark.plans.pipeline import tile_points
+        from py3dtiles_spark.session import get_spark
+        from py3dtiles_spark.sources.pages import (
+            generate_pages, pages_as_points)
+
+        def worker_daemons():
+            procs = {{}}
+            for pid in filter(str.isdigit, os.listdir("/proc")):
+                try:
+                    with open(f"/proc/{{pid}}/stat") as f:
+                        ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+                    with open(f"/proc/{{pid}}/cmdline", "rb") as f:
+                        argv = f.read().split(b"\\0")
+                except OSError:
+                    continue
+                procs[int(pid)] = (ppid, argv)
+            jvms = [p for p, (pp, argv) in procs.items()
+                    if pp == os.getpid() and argv[0].endswith(b"java")]
+            return jvms, [p for p, (pp, argv) in procs.items()
+                          if pp in jvms
+                          and b"py3dtiles_spark.worker_daemon" in argv]
+
+        spark = get_spark("one-worker-pool", cpus=2)
+        res = tile_points(
+            spark, pages_as_points(generate_pages(spark, 60_000), skew=True),
+            TilingConfig(split_threshold=5000),
+            out_dir={str(tmp_path / "tiles")!r}, write_pnts=True)
+        feats = spark.read.parquet({str(tmp_path / "feats.parquet")!r})
+        n_b3dm = write_b3dm_files(
+            build_b3dm_tiles(assign_quadtree(triangulate_features(feats))),
+            {str(tmp_path / "b3dm")!r})
+        emb = spark.range(300).select(
+            F.col("id").alias("vec_id"),
+            F.array(*[F.sin(F.col("id") * (k + 1))
+                      for k in range(8)]).alias("embedding"))
+        q = np.sin(5.0 * np.arange(1, 9))
+        n_knn = len(ann_lsh_embeddings(emb, [(0, q)], k=3,
+                                       n_planes=2).collect())
+        jvms, daemons = worker_daemons()
+        print(json.dumps({{
+            "modes": [m for lv in res.tiling.counters["levels"]
+                      for m in lv["modes"]],
+            "b3dm": n_b3dm, "knn": n_knn, "jvms": len(jvms),
+            "daemons": len(daemons)}}))
+        spark.stop()
+    """)
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    got = json.loads(out[-1])
+    assert set(got["modes"]) - {"leaf"}, got      # the kernel ran
+    assert got["b3dm"] > 0 and got["knn"] == 3, got
+    assert got["jvms"] == 1, got
+    assert got["daemons"] == 1, got
+    assert (tmp_path / "tiles" / "r.pnts").is_file()
+    assert not list(tmp_path.rglob("*.tmp"))
