@@ -88,9 +88,7 @@ def main() -> None:
     sentinel["flagship_tiling"] = _sentinel()
     t0 = time.time()
     points = pages_as_points(generate_pages(spark, BENCH_DOCS), skew=True)
-    res = tile_points(spark, points,
-                      TilingConfig(checkpoint_dir=ckpt,
-                                   in_kernel_threshold=40_000))
+    res = tile_points(spark, points, TilingConfig(checkpoint_dir=ckpt))
     counters = res.tiling.counters
     assert counters["points_assigned"] == BENCH_DOCS, counters
     assert "tileset.json" in res.tileset_docs

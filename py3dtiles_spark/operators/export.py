@@ -184,7 +184,6 @@ def assign_quadtree(features: DataFrame,
 
 def build_b3dm_tiles(assigned: DataFrame, transform=None,
                      id_col: str = "geom_id",
-                     with_batch_table: bool = True,
                      texture_uri: str | None = None) -> DataFrame:
     """(features + node_id) -> one row per node: (node_id, n_features,
     b3dm binary). Executor-side packing, tile-sized rows out.
@@ -214,11 +213,10 @@ def build_b3dm_tiles(assigned: DataFrame, transform=None,
             gids.append(int(getattr(r, id_col)))
         glb = gltf_from_arrays(arrays, tf, batched=True,
                                texture_uri=texture_uri)
-        bt = {"id": gids} if with_batch_table else None
         return pd.DataFrame({
             "node_id": [pdf["node_id"].iat[0]],
             "n_features": [len(arrays)],
-            "b3dm": [b3dm_bytes(glb, bt)]})
+            "b3dm": [b3dm_bytes(glb, {"id": gids})]})
 
     return assigned.groupBy("node_id").applyInPandas(
         pack, schema="node_id string, n_features long, b3dm binary")

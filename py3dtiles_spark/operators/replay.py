@@ -88,7 +88,7 @@ def _assign(xyz, idx, tile_id, root_aabb, root_spacing, scale,
             return
         pts = xyz[idx]
 
-        # tight-cluster express descent (exact): when the whole point set's
+        # tight-cluster descent (exact): when the whole point set's
         # bounding box (a) fits in ONE grid cell, (b) has diameter safely
         # under the spacing, and (c) fits in ONE child octant, the accept
         # loop provably keeps only the FIRST point and forwards the rest to

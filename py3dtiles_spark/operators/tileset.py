@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from py3dtiles_spark.functions.geometry import SMALL_CHILD_MERGE
+from py3dtiles_spark.sources.pnts import write_task_file
 
 TILESET_JSON_SPILL_CHARS = 100_000
 
@@ -77,7 +78,7 @@ def rollup_small_children(assignments: DataFrame,
 
 def _node_json(tid: str, info: dict, prefixes, docs: dict,
                root_aabb, root_spacing: float, scale: float,
-               spill_chars: Optional[int], content_uri,
+               spill_chars: Optional[int],
                subtree_overrides: Optional[dict] = None) -> dict:
     """The BVH node recursion shared by the driver-side and distributed
     assemblies. `subtree_overrides` maps a tile_id to an already-built
@@ -93,7 +94,7 @@ def _node_json(tid: str, info: dict, prefixes, docs: dict,
     if d is not None:
         aabb_min = np.array([d["min_x"], d["min_y"], d["min_z"]], dtype=float)
         aabb_max = np.array([d["max_x"], d["max_y"], d["max_z"]], dtype=float)
-        t["content"] = {"uri": content_uri(tid)}
+        t["content"] = {"uri": f"r{tid}.pnts"}
     else:
         # internal node with no own points (shouldn't happen, but the
         # octree-theoretic box is the correct fallback)
@@ -105,7 +106,7 @@ def _node_json(tid: str, info: dict, prefixes, docs: dict,
         child = tid + digit
         if child in prefixes:
             cj = _node_json(child, info, prefixes, docs, root_aabb,
-                            root_spacing, scale, spill_chars, content_uri,
+                            root_spacing, scale, spill_chars,
                             subtree_overrides)
             children.append(cj)
             cb = cj["boundingVolume"]["box"]
@@ -155,7 +156,6 @@ def _finalize_root(root: dict, docs: dict, root_aabb, scale: float,
 def build_tileset_json(tiles_rows, root_aabb: np.ndarray, root_spacing: float,
                        scale: float = 1.0,
                        spill_chars: Optional[int] = TILESET_JSON_SPILL_CHARS,
-                       content_uri=lambda tid: f"r{tid}.pnts",
                        transform: Optional[list] = None) -> dict:
     """Driver-side BVH assembly from collected tiles rows — the
     byte-identity oracle for build_tileset_json_distributed.
@@ -184,7 +184,7 @@ def build_tileset_json(tiles_rows, root_aabb: np.ndarray, root_spacing: float,
 
     docs: dict = {}
     root = _node_json("", info, prefixes, docs, root_aabb, root_spacing,
-                      scale, spill_chars, content_uri)
+                      scale, spill_chars)
     return _finalize_root(root, docs, root_aabb, scale, transform)
 
 
@@ -192,7 +192,6 @@ def build_tileset_json_distributed(
         tiles: DataFrame, root_aabb: np.ndarray, root_spacing: float,
         scale: float = 1.0,
         spill_chars: Optional[int] = TILESET_JSON_SPILL_CHARS,
-        content_uri=lambda tid: f"r{tid}.pnts",
         transform: Optional[list] = None,
         subtree_depth: int = 2,
         output_dir: Optional[str] = None) -> dict:
@@ -210,11 +209,12 @@ def build_tileset_json_distributed(
     driver merge.
 
     output_dir: when given, spilled subtree documents are written
-    executor-side (shared filesystem on a real cluster — the same
-    contract as write_pnts_files) and returned as {name: None}; only
-    stubs travel to the driver. When None, spill bodies are returned in
-    the dict like the driver-side API (they still travel once, straight
-    from the kernel, never amplified through a tiles-table collect).
+    executor-side through the pnts writer's rule (write_task_file: a
+    shared filesystem on a real cluster, a tmp file moved into place)
+    and returned as {name: None}; only stubs travel to the driver.
+    When None, spill bodies are returned in the dict like the driver-side
+    API (they still travel once, straight from the kernel, never
+    amplified through a tiles-table collect).
 
     Pick subtree_depth so 8^k is >= cluster parallelism; k=2 (64
     subtrees) suits hundreds of cores, k=3 (512) a large cluster.
@@ -227,7 +227,6 @@ def build_tileset_json_distributed(
     spacing_f, scale_f = float(root_spacing), float(scale)
     aabb = np.asarray(root_aabb, dtype=float)
     spill = spill_chars
-    uri_fn = content_uri
     out_dir = output_dir
     if out_dir is not None:
         os.makedirs(out_dir, exist_ok=True)
@@ -246,12 +245,12 @@ def build_tileset_json_distributed(
                 prefixes.add(t[:i])
         docs: dict = {}
         stub = _node_json(root_tid, info, prefixes, docs, aabb, spacing_f,
-                          scale_f, spill, uri_fn)
+                          scale_f, spill)
         rows = []
         for name, doc in docs.items():
             if out_dir is not None:
-                with open(os.path.join(out_dir, name), "w") as f:
-                    json.dump(doc, f)
+                write_task_file(os.path.join(out_dir, name),
+                                json.dumps(doc).encode())
                 rows.append((name, None))
             else:
                 rows.append((name, json.dumps(doc)))
@@ -269,14 +268,13 @@ def build_tileset_json_distributed(
     tiles = tiles.persist()
     try:
         return _assemble_distributed(tiles, k, subtree_kernel, aabb,
-                                     spacing_f, scale_f, spill, uri_fn,
-                                     transform)
+                                     spacing_f, scale_f, spill, transform)
     finally:
         tiles.unpersist()
 
 
 def _assemble_distributed(tiles, k, subtree_kernel, aabb, spacing_f,
-                          scale_f, spill, uri_fn, transform):
+                          scale_f, spill, transform):
     # one shuffle: applyInPandas hash-partitions on the depth-k prefix
     deep = tiles.filter(F.length("tile_id") >= k)
     kernel_rows = (deep
@@ -306,7 +304,7 @@ def _assemble_distributed(tiles, k, subtree_kernel, aabb, spacing_f,
     prefixes.add("")
 
     root = _node_json("", info, prefixes, docs, aabb, spacing_f, scale_f,
-                      spill, uri_fn, subtree_overrides=overrides)
+                      spill, subtree_overrides=overrides)
     return _finalize_root(root, docs, aabb, scale_f, transform)
 
 

@@ -7,21 +7,19 @@ build is a level-synchronous iteration (SURVEY.md §3.1 "Spark shape").
 
 Per level, two phases:
 
-  1. routing: groupBy(tile_id).agg(count, bbox) — one row per live node,
+  1. routing: groupBy(tile_id).agg(count) — one row per live node,
      fetched through a BOUNDED limit probe (r5). One vectorized function,
-     _route_nodes, maps those node aggregates to a mode per node, and for
-     cell nodes to the float32 grid constants derived from the tile name
-     (stateless, points/utils.py:83-88). Levels under node_broadcast_rows
-     call it driver-side on the probe rows (pure-JVM probe job), and the
-     routed node list goes back as an Arrow LocalRelation broadcast
+     _route_nodes, maps each node's count to a mode, and for cell nodes to
+     the float32 grid constants derived from the tile name (stateless,
+     points/utils.py:83-88). Levels under NODE_BROADCAST_ROWS call it
+     driver-side on the probe rows (pure-JVM probe job), and the routed
+     node list goes back as an Arrow LocalRelation broadcast
      (session.local_frame: a LocalTableScan, so no Python task and no
      second worker daemon; measured on 4 cores, its broadcast job takes
      7-9 ms per level) — the fast common case; over-cap levels call it on
      the executors through mapInPandas and the driver sees just the
-     <=4-row per-mode histogram. Modes:
+     <=3-row per-mode histogram. Modes:
        leaf    count < 20000 or spacing floor -> accept all (node.py:70-73)
-       express big node whose bbox sits in ONE child octant (megacity
-               cluster) -> accept and descend in-task while it stays there
        local   count <= local cutoff -> one task recurses the WHOLE
                subtree (the reference's depth-limited pipelining,
                node_process.py:82-90, taken to its limit: zero further
@@ -32,13 +30,14 @@ Per level, two phases:
                of serializing on one worker — the skew answer for megacity
                cells at 10^12 docs.
 
-  2. kernel: ONE shuffle on (tile_id, group_key) — group_key is the grid
-     cell for 'cell' nodes (computed NATIVELY in float32 column arithmetic,
+  2. kernel: leaf rows are final as-is (a JVM filter); the rest take ONE
+     shuffle on (tile_id, group_key) — group_key is the grid cell for
+     'cell' nodes (computed NATIVELY in float32 column arithmetic,
      bit-identical to the numpy kernel; no Python pre-pass) and 0 otherwise
-     — into ONE applyInPandas kernel handling all four modes, written ONCE
-     to parquet. That parquet is the per-level checkpoint: resumable,
-     lineage-truncating; accepted rows and next-level forwards are both
-     filters over it (no extra writes).
+     — into ONE applyInPandas kernel handling local and cell groups, and
+     both halves are written ONCE to parquet. That parquet is the per-level
+     checkpoint: resumable, lineage-truncating; accepted rows and
+     next-level forwards are both filters over it (no extra writes).
 
 A phase is not one Spark job: AQE runs each shuffle stage as its own job.
 A traced perfbench `tile_skew` build (150k skewed pages, 2 levels, 4
@@ -51,8 +50,8 @@ Points are carried NARROW through the loop (point_id + xyz float32 only);
 payload columns (url, html, text...) are joined back once at the end — at
 100 TB you never shuffle the html through the tree.
 
-Driver traffic is BOUNDED by node_broadcast_rows (~12 MB at the default
-200k): at 10^12 docs a level can hold ~5e7 live nodes, which would make
+Driver traffic is BOUNDED by NODE_BROADCAST_ROWS (~12 MB at 200k rows):
+at 10^12 docs a level can hold ~5e7 live nodes, which would make
 an unbounded driver collect the reference master's State-dict bottleneck
 reborn (convert.py:217-239) — those levels stay distributed (shuffled
 node_meta join; only the per-mode histogram is collected for loop
@@ -89,7 +88,6 @@ from py3dtiles_spark.functions.geometry import (
     GRID_INITIAL_CELL_COUNT,
     MIN_SPACING,
     SPLIT_THRESHOLD,
-    cell_keys_for_node,
     node_frame,
     sequential_accept,
     child_index_for_node,
@@ -104,6 +102,18 @@ ASSIGN_SCHEMA = "point_id long, tile_id string"
 # bound on the level loop; a build that still forwards points after this
 # many levels returns with counters["complete"] = False
 MAX_LEVELS = 32
+# bound on any single local task's rows (see TilingConfig): a megacity
+# node as one task is a multi-second straggler that caps scaling, so
+# nodes above it fan out per cell
+LOCAL_HARD_CAP = 300_000
+# levels whose routed node list fits in this many rows ride to the
+# executors as a LocalRelation broadcast (no extra job, no broadcast
+# exchange — the sandbox/common case); bigger levels NEVER reach the
+# driver: their node_meta stays a distributed frame and joins to pending
+# with a shuffled join (at ~5e7 nodes the list is GBs, far past broadcast
+# territory). 200k rows ~= 12 MB driver-side, a hard bound independent
+# of data scale.
+NODE_BROADCAST_ROWS = 200_000
 
 # node_meta as joined to pending (_route_nodes output minus cnt): mn* grid
 # aabb_min (float32, reference Grid constant); s* cell_count *
@@ -119,22 +129,16 @@ class TilingConfig:
     scale: float = 1.0
     split_threshold: int = SPLIT_THRESHOLD
     # nodes at or below this size finish their whole subtree in one task;
-    # keep near 2x split_threshold so big nodes keep fanning out per-cell
-    in_kernel_threshold: int = 40_000
-    # once a level has enough nodes to saturate the cluster, nodes up to
-    # this many rows resolve their whole subtree in-task (local mode)
-    # instead of paying shuffle+Arrow plumbing for every remaining level.
-    # The effective local cutoff is
+    # keep near 2x split_threshold so big nodes keep fanning out per-cell.
+    # Once a level has enough nodes to saturate the cluster, bigger nodes
+    # resolve in-task too instead of paying shuffle+Arrow plumbing for
+    # every remaining level. The effective local cutoff is
     #   max(in_kernel_threshold,
-    #       min(local_hard_cap, level_points / defaultParallelism))
+    #       min(LOCAL_HARD_CAP, level_points / defaultParallelism))
     # i.e. one local task's rows ~= one core's fair share, which measured
     # strictly better than half of it at 1.6M docs/skew: level count 5 -> 2
-    # (megacity nodes resolve their whole chain in-task via express descent
-    # instead of shuffling every level) and 8-core wall time -23%. The hard
-    # cap bounds any single local task (a megacity node as one task = a
-    # multi-second straggler that caps scaling); nodes above it fan out per
-    # cell.
-    local_hard_cap: int = 300_000
+    # and 8-core wall time -23%.
+    in_kernel_threshold: int = 40_000
     # parallelism used for the local-cutoff rule. None = the session's
     # defaultParallelism; set a fixed value to make the level plan
     # independent of the core count (identical plans across cluster sizes,
@@ -144,14 +148,6 @@ class TilingConfig:
     # the level snapshot is the recovery unit and feeds the final
     # assignment read. None = a fresh temporary directory.
     checkpoint_dir: Optional[str] = None
-    # levels whose routed node list fits in this many rows ride to the
-    # executors as a LocalRelation broadcast (no extra job, no broadcast
-    # exchange — the sandbox/common case); bigger levels NEVER reach the
-    # driver: their node_meta stays a distributed frame and joins to
-    # pending with a shuffled join (the right call anyway — at ~5e7 nodes
-    # the list is GBs, far past broadcast territory). 200k rows ~= 12 MB
-    # driver-side, a hard bound independent of data scale.
-    node_broadcast_rows: int = 200_000
     # explicit root geometry (float64 (2,3) + spacing). The LAS/XYZ convert
     # plan passes the header-derived float64 aabb here for exact reference
     # parity (convert.py:420-437); None = one agg pass over the points.
@@ -181,18 +177,13 @@ def compute_root_aabb(points: DataFrame):
 
 
 def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
-    """One grouped-map kernel for all three node modes. The group is
+    """One grouped-map kernel for the local and cell modes (leaf rows are
+    final before the shuffle and never reach it). The group is
     (tile_id, group_key); `mode` rides as a column (constant per group)."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        mode = pdf["mode"].iat[0]
         tile_id = pdf["tile_id"].iat[0]
-        base = pdf[["point_id", "x", "y", "z", "tile_id"]]
-        if mode == "leaf":
-            out = base.copy()
-            out["accepted"] = True
-            return out
-        if mode == "local":
+        if pdf["mode"].iat[0] == "local":
             pdf = pdf.sort_values("point_id", kind="stable")
             ids = pdf["point_id"].to_numpy()
             xyz = pdf[["x", "y", "z"]].to_numpy(dtype=np.float32)
@@ -203,69 +194,9 @@ def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
                 "point_id": ids,
                 "x": xyz[:, 0], "y": xyz[:, 1], "z": xyz[:, 2],
                 "tile_id": tiles, "accepted": True})
-        if mode == "express":
-            # single-child descent for hot clustered nodes (megacities):
-            # this group holds the node's ENTIRE point set, and as long as
-            # every remaining point maps to ONE child octant, descendants
-            # of tid can receive points only from here — so the kernel may
-            # run the per-level accept AND descend in-task, level after
-            # level, until the cluster finally spreads over >1 child. At
-            # that point the remainder re-emits as pending and the normal
-            # cell/local fan-out parallelizes it. Collapses the reference's
-            # deep hot-cell chains (one shuffle round TOTAL instead of one
-            # per level) without a multi-second monolithic local task.
-            from py3dtiles_spark.functions.geometry import accept_mask_for_cells
-            pdf = base.sort_values("point_id", kind="stable").reset_index(drop=True)
-            ids = pdf["point_id"].to_numpy()
-            xyz = pdf[["x", "y", "z"]].to_numpy(dtype=np.float32)
-            n = len(pdf)
-            out_tiles = np.empty(n, dtype=object)
-            acc = np.zeros(n, dtype=bool)
-            tid = tile_id
-            live = np.arange(n)
-            while live.size:
-                frame = node_frame(tid, root_aabb, root_spacing)
-                spacing = frame.spacing
-                if (live.size < cfg.split_threshold
-                        or spacing <= MIN_SPACING * cfg.scale):
-                    out_tiles[live] = tid
-                    acc[live] = True
-                    break
-                if live.size <= cfg.in_kernel_threshold:
-                    out_tiles[live] = assign_subtree(
-                        ids[live], xyz[live], tid, root_aabb,
-                        root_spacing, cfg.scale, cfg.split_threshold)
-                    acc[live] = True
-                    break
-                pts = xyz[live]
-                corners = np.stack([pts.min(axis=0),
-                                    pts.max(axis=0)]).astype(np.float32)
-                cd = child_index_for_node(corners, frame)
-                single_child = cd[0] == cd[1]
-                if not single_child and tid != tile_id:
-                    out_tiles[live] = tid        # pending at spread depth
-                    break
-                keys = cell_keys_for_node(pts, frame)
-                mask = accept_mask_for_cells(pts, keys, spacing * spacing)
-                out_tiles[live[mask]] = tid
-                acc[live[mask]] = True
-                rej = live[~mask]
-                if rej.size == 0:
-                    break
-                if single_child:
-                    live = rej
-                    tid = tid + str(cd[0])
-                    continue
-                # first level already spreads: route per child and emit
-                digits = child_index_for_node(xyz[rej], frame)
-                out_tiles[rej] = [tid + str(d) for d in digits]
-                live = np.empty(0, dtype=np.int64)
-            return pd.DataFrame({
-                "point_id": ids,
-                "x": xyz[:, 0], "y": xyz[:, 1], "z": xyz[:, 2],
-                "tile_id": out_tiles, "accepted": acc})
         # cell mode: canonical-order accept within one grid cell
-        pdf = base.sort_values("point_id", kind="stable").reset_index(drop=True)
+        pdf = (pdf[["point_id", "x", "y", "z", "tile_id"]]
+               .sort_values("point_id", kind="stable").reset_index(drop=True))
         frame = node_frame(tile_id, root_aabb, root_spacing)
         xyz = pdf[["x", "y", "z"]].to_numpy(dtype=np.float32)
         accept = sequential_accept(xyz, frame.spacing * frame.spacing)
@@ -282,43 +213,34 @@ def _unified_kernel(cfg: TilingConfig, root_aabb, root_spacing):
 
 def _route_nodes(pdf: pd.DataFrame, cfg: TilingConfig, root_aabb,
                  root_spacing, local_cutoff: int) -> pd.DataFrame:
-    """The per-level routing rule: node aggregates (tile_id, cnt,
-    bx0..bz1) -> (tile_id, mode, mnx, mny, mnz, sx, sy, sz, cnt).
+    """The per-level routing rule: node counts (tile_id, cnt) ->
+    (tile_id, mode, mnx, mny, mnz, sx, sy, sz, cnt). A node's mode depends
+    on its count alone:
 
-      leaf     cnt < split_threshold or spacing <= floor -> accept all
-               (reference node.py:70-73)
-      express  big node (cnt > in_kernel_threshold) whose bbox sits in ONE
-               child octant (megacity cluster): accept AND descend in-task
-      local    cnt <= local_cutoff -> whole subtree in one task
-      cell     fan out per LOD-grid cell
+      leaf   cnt < split_threshold or spacing <= floor -> accept all
+             (reference node.py:70-73)
+      local  cnt <= local_cutoff -> whole subtree in one task
+      cell   fan out per LOD-grid cell
 
     Cell nodes carry the reference Grid constants: mn* = aabb_min float32,
     s* = cell_count * inv_aabb_size, int32 * float32 -> float64
     (node.py:30, distance.py:24-27); other modes carry zeros. The leaf test
     and mode choice are numpy over the whole batch; the name-fold geometry
-    runs only on the big-node rows. Node-count sized, never point-count."""
+    runs only on the cell rows. Node-count sized, never point-count."""
     tids = pdf["tile_id"].to_numpy()
     cnt = pdf["cnt"].to_numpy(dtype=np.int64)
     n = len(pdf)
     spacing = root_spacing * np.power(0.5, pdf["tile_id"].str.len()
                                       .to_numpy(dtype=np.int64))
     leaf = (cnt < cfg.split_threshold) | (spacing <= MIN_SPACING * cfg.scale)
-    express = np.zeros(n, dtype=bool)
     mn = np.zeros((n, 3), dtype=np.float32)
     sc = np.zeros((n, 3), dtype=np.float64)
-    bbox = pdf[["bx0", "by0", "bz0", "bx1", "by1", "bz1"]].to_numpy(
-        dtype=np.float32)
     cells = np.full(3, GRID_INITIAL_CELL_COUNT, dtype=np.int32)
-    for i in np.flatnonzero(~leaf & (cnt > cfg.in_kernel_threshold)):
+    for i in np.flatnonzero(~leaf & (cnt > local_cutoff)):
         frame = node_frame(tids[i], root_aabb, root_spacing)
-        cd = child_index_for_node(bbox[i].reshape(2, 3), frame)
-        if cd[0] == cd[1]:
-            express[i] = True
-        elif cnt[i] > local_cutoff:
-            mn[i] = frame.aabb[0]
-            sc[i] = cells * (np.float32(1.0) / frame.size)
-    mode = np.select([leaf, express, cnt <= local_cutoff],
-                     ["leaf", "express", "local"], "cell")
+        mn[i] = frame.aabb[0]
+        sc[i] = cells * (np.float32(1.0) / frame.size)
+    mode = np.select([leaf, cnt <= local_cutoff], ["leaf", "local"], "cell")
     return pd.DataFrame({
         "tile_id": tids, "mode": mode,
         "mnx": mn[:, 0], "mny": mn[:, 1], "mnz": mn[:, 2],
@@ -340,7 +262,7 @@ def _local_cutoff(cfg: TilingConfig, est_total: Optional[int],
     if est_total is None:
         return cfg.in_kernel_threshold
     return max(cfg.in_kernel_threshold,
-               min(cfg.local_hard_cap, est_total // max(1, parallelism)))
+               min(LOCAL_HARD_CAP, est_total // max(1, parallelism)))
 
 
 def _root_route_expr(root_aabb, root_spacing):
@@ -491,19 +413,10 @@ def build_tiling(spark: SparkSession, points: DataFrame,
         for level in range(start_level, MAX_LEVELS):
             lv_dir = os.path.join(ckpt, f"level={level}")
             t0 = time.time()
-            # per-node count + bbox in ONE agg pass: the bbox costs nothing
-            # extra (same shuffle) and lets the routing spot tight-cluster
-            # nodes (megacities) whose whole point set sits within one spacing
-            # — those get 'express' mode instead of a multi-second local task
-            counts = (pending.groupBy("tile_id")
-                      .agg(F.count("*").alias("cnt"),
-                           F.min("x").alias("bx0"), F.min("y").alias("by0"),
-                           F.min("z").alias("bz0"),
-                           F.max("x").alias("bx1"), F.max("y").alias("by1"),
-                           F.max("z").alias("bz1")))
+            counts = pending.groupBy("tile_id").agg(F.count("*").alias("cnt"))
             parallelism = (cfg.plan_parallelism
                            or spark.sparkContext.defaultParallelism)
-            # BOUNDED probe: a level with <= node_broadcast_rows live nodes
+            # BOUNDED probe: a level with <= NODE_BROADCAST_ROWS live nodes
             # (every sandbox level; most real levels) comes back whole from
             # the ONE pure-JVM routing job — _route_nodes runs driver-side
             # over the O(cap) rows (exact level_total, r4-identical plans),
@@ -514,7 +427,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
             # executors through mapInPandas, only the per-mode histogram
             # is collected, and node_meta joins to pending by shuffle (a
             # GB-sized node list has no business being broadcast anyway).
-            cap = int(cfg.node_broadcast_rows)
+            cap = NODE_BROADCAST_ROWS
             node_meta_full = None
             # persisted so the over-cap path's routing pass reads the
             # cached node rows instead of re-running the full groupBy over
@@ -614,7 +527,7 @@ def build_tiling(spark: SparkSession, points: DataFrame,
                 json.dump(lv_stats, f)
             counters["levels"].append(lv_stats)
 
-            if modes.get("cell", 0) == 0 and modes.get("express", 0) == 0:
+            if modes.get("cell", 0) == 0:
                 # leaf/local groups fully resolve their points — nothing forwards
                 complete = True
                 break

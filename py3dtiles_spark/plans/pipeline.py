@@ -63,6 +63,16 @@ def tile_points(spark: SparkSession, points: DataFrame,
     # persisted for the count; the assembly reuses the cache and releases it
     tiles = build_tiles_df(assigned).persist()
     n_tiles = tiles.count()
+    if out_dir and write_pnts:
+        rgb = {"r", "g", "b"} <= set(points.columns)
+        rows = assigned.select(["point_id", "x", "y", "z", "tile_id"]
+                               + (["r", "g", "b"] if rgb else []))
+        # r.pnts has one writer: the root's own rows (depth-1 tiles
+        # rolled up into it) plus the overview of the depth-1 tiles
+        overview = root_overview(rows, tiling.root_aabb,
+                                 tiling.root_spacing, include_rgb=rgb)
+        rows = rows.unionByName(overview.withColumn("tile_id", F.lit("")))
+        write_pnts_files(tiles_to_pnts_df(rows, include_rgb=rgb), out_dir)
     # spilled subtree docs are written executor-side straight into out_dir
     # (None markers); the driver writes only the root-composition docs
     docs = build_tileset_json_distributed(tiles, tiling.root_aabb,
@@ -71,20 +81,12 @@ def tile_points(spark: SparkSession, points: DataFrame,
                                           output_dir=out_dir or None)
     docs["tileset.json"]["root"]["content"] = {"uri": "r.pnts"}
     if out_dir:
-        for name, doc in docs.items():
-            if doc is not None:
+        # tileset.json is the commit marker: written after every file it
+        # references, so a run that stops early leaves none
+        for name in sorted(docs, key=lambda name: name == "tileset.json"):
+            if docs[name] is not None:
                 with open(os.path.join(out_dir, name), "w") as f:
-                    json.dump(doc, f)
-        if write_pnts:
-            rgb = {"r", "g", "b"} <= set(points.columns)
-            rows = assigned.select(["point_id", "x", "y", "z", "tile_id"]
-                                   + (["r", "g", "b"] if rgb else []))
-            # r.pnts has one writer: the root's own rows (depth-1 tiles
-            # rolled up into it) plus the overview of the depth-1 tiles
-            overview = root_overview(rows, tiling.root_aabb,
-                                     tiling.root_spacing, include_rgb=rgb)
-            rows = rows.unionByName(overview.withColumn("tile_id", F.lit("")))
-            write_pnts_files(tiles_to_pnts_df(rows, include_rgb=rgb), out_dir)
+                    json.dump(docs[name], f)
     return TiledPoints(assigned=assigned, tiles=tiles, n_tiles=n_tiles,
                        tileset_docs=docs, tiling=tiling)
 

@@ -183,32 +183,36 @@ def pnts_scan(spark, root_dir: str) -> DataFrame:
                        "z float, r smallint, g smallint, b smallint")
 
 
+def write_task_file(path: str, data) -> None:
+    """Write `data` (bytes-like) to `path` from inside a Spark task: first
+    to `<path>.<partition>-<attempt>.tmp`, then moved onto `path` with
+    os.replace, so a killed task leaves no torn file under a final name
+    and two attempts of one task never write the same file."""
+    ctx = TaskContext.get()
+    tmp = f"{path}.{ctx.partitionId()}-{ctx.attemptNumber()}.tmp"
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(tmp, "wb") as f:
+        f.write(data)
+    os.replace(tmp, path)
+
+
 def write_files(files: DataFrame, path_of) -> int:
     """Write each row of `files` (name string, data binary) to the file
-    `path_of(name)` and return the number of files written.
+    `path_of(name)` (write_task_file) and return the number of files
+    written.
 
     Executor-side: one SQL Python stage (mapInArrow) writes a partition's
     files and yields their count, and one sum collects the counts, so file
     bytes never stream through the driver (the paths must be on a shared
     filesystem on a real cluster — local/NFS). Being a SQL stage, it runs
-    in the session's one Python worker pool (see session.local_frame).
-    Each file is written to `<path>.<partition>-<attempt>.tmp`, then moved
-    onto its path with os.replace: a killed task leaves no torn file under
-    a final name, and two attempts of one task never write the same
-    file."""
+    in the session's one Python worker pool (see session.local_frame)."""
     def write(batches):
-        ctx = TaskContext.get()
-        suffix = f".{ctx.partitionId()}-{ctx.attemptNumber()}.tmp"
         n = 0
         for batch in batches:
             names = batch.column(0).to_pylist()
             data = batch.column(1)
             for i, name in enumerate(names):
-                path = path_of(name)
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-                with open(path + suffix, "wb") as f:
-                    f.write(data[i].as_buffer())
-                os.replace(path + suffix, path)
+                write_task_file(path_of(name), data[i].as_buffer())
             n += len(names)
         yield pa.RecordBatch.from_pydict({"n": pa.array([n], pa.int64())})
 

@@ -139,7 +139,7 @@ def case_cloud(n, z_scale, seed):
 
 def case_skewed(n, seed=7):
     """Megacity-style skew: 30% of points inside three ~1e-3-wide hot
-    clusters (exercises deep single-child chains + express descent)."""
+    clusters (exercises deep single-child chains)."""
     rng = np.random.default_rng(seed)
     xyz = rng.uniform(0.0, 100.0, size=(n, 3)).astype(np.float32)
     xyz[:, 2] *= 0.01

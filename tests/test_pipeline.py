@@ -61,6 +61,24 @@ def test_pipeline_skew_variant(spark, tmp_path):
     assert counts[-1] > 3 * counts[len(counts) // 2]
 
 
+def test_failed_pnts_write_leaves_no_tileset(spark, tmp_path, monkeypatch):
+    """tileset.json is written last: a run whose pnts write fails leaves
+    no tileset.json pointing at missing tiles."""
+    from py3dtiles_spark.plans import pipeline
+    from py3dtiles_spark.sources.pages import pages_as_points
+
+    def fail(pnts_df, out_dir):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pipeline, "write_pnts_files", fail)
+    out = tmp_path / "out"
+    cfg = TilingConfig(split_threshold=500, in_kernel_threshold=1500)
+    with pytest.raises(OSError, match="disk full"):
+        pipeline.tile_points(spark, pages_as_points(generate_pages(spark, 2000)),
+                             cfg, out_dir=str(out), write_pnts=True)
+    assert not (out / "tileset.json").exists()
+
+
 def test_salted_join_matches_plain(spark):
     """Salted equi-join result == plain join on a zipfian-hot key, and
     the join runs on (key, _salt) so a hot key spreads across reducers."""

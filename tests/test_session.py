@@ -5,6 +5,7 @@ driver-side values (local_frame) plan as local relations."""
 import pandas as pd
 
 import __spark_entry__ as entry
+from py3dtiles_spark.operators import tiling
 from py3dtiles_spark.operators.tiling import TilingConfig
 from py3dtiles_spark.plans.pipeline import tile_points
 from py3dtiles_spark.session import CODEGEN_CACHE_ENTRIES
@@ -30,14 +31,15 @@ def test_codegen_cache_size_is_the_engine_default(spark):
             == str(CODEGEN_CACHE_ENTRIES))
 
 
-def test_warm_tile_points_compiles_nothing(spark, tmp_path):
+def test_warm_tile_points_compiles_nothing(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tiling, "LOCAL_HARD_CAP", 400)
     runs = iter(range(2))
 
     def run():
         # small thresholds give a two-level skewed build (cell and local
         # nodes), about 90 generated classes
         cfg = TilingConfig(split_threshold=200, in_kernel_threshold=400,
-                           local_hard_cap=400, plan_parallelism=4)
+                           plan_parallelism=4)
         points = pages_as_points(generate_pages(spark, 4000), skew=True)
         res = tile_points(spark, points, cfg,
                           out_dir=str(tmp_path / f"run{next(runs)}"))
@@ -84,12 +86,7 @@ def _routed():
                     dtype=np.float32)
     counts = pd.DataFrame({
         "tile_id": ["0", "1", "2", "3", "7"],
-        "cnt": [5, 300, 5000, 9000, 12],
-        "bx0": [0.0, 0.0, 0.0, 1.0, 50.0], "by0": [0.0, 50.0, 0.0, 0.5, 50.0],
-        "bz0": [0.0, 0.0, 50.0, 50.0, 50.0],
-        "bx1": [49.0, 49.0, 49.9, 49.0, 99.0],
-        "by1": [49.0, 99.0, 49.9, 49.3, 99.0],
-        "bz1": [49.0, 49.0, 99.9, 99.7, 99.0]})
+        "cnt": [5, 300, 5000, 9000, 12]})
     cfg = TilingConfig(split_threshold=10, in_kernel_threshold=100)
     return _route_nodes(counts, cfg, aabb, compute_spacing(aabb), 1000)
 

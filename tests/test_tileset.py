@@ -168,8 +168,8 @@ def test_distributed_tileset_shallow_only(spark):
 
 def test_distributed_tileset_executor_write(spark, tmp_path):
     """output_dir mode: spilled subtree docs are written executor-side,
-    byte-identical to the monolithic build's docs; the driver dict carries
-    None markers for them."""
+    byte-identical to the monolithic build's docs and with no tmp file
+    left behind; the driver dict carries None markers for them."""
     from py3dtiles_spark.operators.tileset import (
         build_tileset_json_distributed)
     tiles = _random_octree_tiles(spark, seed=11)
@@ -184,10 +184,11 @@ def test_distributed_tileset_executor_write(spark, tmp_path):
     assert deep_spills, "expected executor-written spill docs"
     for name in mono:
         if dist[name] is None:
-            with open(tmp_path / name) as f:
-                assert json.dumps(mono[name]) == json.dumps(json.load(f))
+            assert ((tmp_path / name).read_bytes()
+                    == json.dumps(mono[name]).encode()), name
         else:
             assert json.dumps(mono[name]) == json.dumps(dist[name])
+    assert not list(tmp_path.glob("*.tmp"))
 
 
 def test_root_overview_matches_numpy_replay(spark):

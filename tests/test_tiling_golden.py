@@ -5,6 +5,7 @@ the exact-tile-assignment requirement of BASELINE.json."""
 import numpy as np
 import pytest
 
+from py3dtiles_spark.operators import tiling
 from py3dtiles_spark.operators.replay import replay_tiling
 from py3dtiles_spark.operators.tiling import (
     TilingConfig, build_tiling, cleanup_checkpoint, compute_root_aabb)
@@ -131,8 +132,6 @@ def test_resume_from_checkpoint(spark, tmp_path, crash_level):
 def test_input_released_after_level_zero(spark, tmp_path, monkeypatch):
     """The cached input serves level 0 only: by the time level 1 reads its
     pending rows from parquet, no RDD the build persisted is left."""
-    from py3dtiles_spark.operators import tiling
-
     jsc = spark.sparkContext._jsc
     reads = []
     read_pending = tiling._read_pending
@@ -167,44 +166,51 @@ def _megacity_cloud():
     return np.arange(n, dtype=np.int64), xyz
 
 
-_MEGACITY_CFG = dict(split_threshold=500, in_kernel_threshold=1000,
-                     local_hard_cap=2000)
+_MEGACITY_CFG = dict(split_threshold=500, in_kernel_threshold=1000)
+# bound on one local task for the megacity cloud: its hot node stays far
+# above the local cutoff for several levels
+_MEGACITY_HARD_CAP = 2000
 
 
-def test_express_mode_matches_replay(spark, tmp_path):
-    """A megacity-style node far above the local cutoff goes through the
-    'express' kernel (chain + spread re-emit) — must equal the replay."""
+def test_megacity_chain_matches_replay(spark, tmp_path, monkeypatch):
+    """A megacity-style node far above the local cutoff whose points sit
+    in ONE child octant for several levels descends as a chain of cell
+    levels (9 levels in all; a single-child in-task descent, since
+    removed, took 7) — the routing uses only leaf, local and cell and the
+    result must equal the replay."""
+    monkeypatch.setattr(tiling, "LOCAL_HARD_CAP", _MEGACITY_HARD_CAP)
     ids, xyz = _megacity_cloud()
     expected, _, _ = replay_tiling(ids, xyz, split_threshold=500)
     cfg = TilingConfig(**_MEGACITY_CFG,
-                       checkpoint_dir=str(tmp_path / "exp"))
+                       checkpoint_dir=str(tmp_path / "chain"))
     got, res = _engine_assignments(spark, ids, xyz, cfg)
-    modes = [m for s in res.counters["levels"] for m in s["modes"]]
-    assert "express" in modes            # the hot cluster took the new path
+    modes = {m for s in res.counters["levels"] for m in s["modes"]}
+    assert modes <= {"leaf", "local", "cell"}, res.counters["levels"]
     assert all(got[int(i)] == t for i, t in zip(ids, expected))
     cleanup_checkpoint(res)
 
 
 # the modes each cloud must route on over-cap levels; the megacity cloud
-# alone covers all four
-@pytest.mark.parametrize("cloud,cfg_kw,over_cap_modes", [
+# covers all three
+@pytest.mark.parametrize("cloud,cfg_kw,hard_cap,over_cap_modes", [
     (lambda: ripple_cloud(30_000),
      dict(split_threshold=2000, in_kernel_threshold=6000),
-     {"leaf", "cell"}),
-    (_megacity_cloud, _MEGACITY_CFG,
-     {"leaf", "local", "cell", "express"}),
+     tiling.LOCAL_HARD_CAP, {"leaf", "cell"}),
+    (_megacity_cloud, _MEGACITY_CFG, _MEGACITY_HARD_CAP,
+     {"leaf", "local", "cell"}),
 ], ids=["ripple", "megacity"])
-def test_distributed_routing_over_cap(spark, tmp_path, cloud, cfg_kw,
-                                      over_cap_modes):
-    """node_broadcast_rows below the live-node count forces the fully
+def test_distributed_routing_over_cap(spark, tmp_path, monkeypatch, cloud,
+                                      cfg_kw, hard_cap, over_cap_modes):
+    """NODE_BROADCAST_ROWS below the live-node count forces the fully
     distributed routing path (_route_nodes through mapInPandas, shuffled
     node_meta join, histogram-only driver traffic) — must produce the
     exact same assignments as the replay."""
+    monkeypatch.setattr(tiling, "LOCAL_HARD_CAP", hard_cap)
+    monkeypatch.setattr(tiling, "NODE_BROADCAST_ROWS", 2)
     ids, xyz = cloud()
     expected, _, _ = replay_tiling(ids, xyz,
                                    split_threshold=cfg_kw["split_threshold"])
-    cfg = TilingConfig(**cfg_kw, node_broadcast_rows=2,
-                       checkpoint_dir=str(tmp_path / "overcap"))
+    cfg = TilingConfig(**cfg_kw, checkpoint_dir=str(tmp_path / "overcap"))
     got, res = _engine_assignments(spark, ids, xyz, cfg)
     exp = {int(i): t for i, t in zip(ids, expected)}
     mismatches = {i: (exp[i], got[i]) for i in exp if exp[i] != got[i]}
@@ -212,7 +218,7 @@ def test_distributed_routing_over_cap(spark, tmp_path, cloud, cfg_kw,
                            f"{list(mismatches.items())[:5]}"
     assert res.counters["points_assigned"] == len(ids)
     routed = {m for lv in res.counters["levels"]
-              if lv["nodes"] > cfg.node_broadcast_rows for m in lv["modes"]}
+              if lv["nodes"] > tiling.NODE_BROADCAST_ROWS for m in lv["modes"]}
     assert over_cap_modes <= routed, res.counters["levels"]
     cleanup_checkpoint(res)
 
