@@ -1,22 +1,22 @@
 """k-nearest-neighbor operators: point kNN joins and embedding similarity
 search for training-data pipelines.
 
-knn_join is the one exact cosine ranker: per-side norms, a broadcast
-nested-loop join against the query table, cosine as a native
-expression, and a two-stage top-k whose only exchange carries
-(q_id, n_id, cos) rows. The approximate paths are candidate filters in
-front of it:
-- ann_lsh_embeddings: random-hyperplane LSH signatures on the table
-  side; the candidates are the rows in the union of every query's
-  multi-probe buckets.
+Every embedding search ranks through one exact cosine top-k
+(_top_cosine: cosine of map-side norms as a native expression, then a
+two-stage top-k whose only exchange carries (q_id, n_id, cos) rows).
+The searches differ only in which (query, row) pairs reach it:
+- knn_join: every pair; the query table is broadcast to a nested-loop
+  join.
+- knn_join_bucketed: random-hyperplane LSH; each query meets the table
+  rows of its own multi-probe buckets in a bucket equi-join.
 - ivf_search: the lists of an MLlib KMeans coarse quantizer
-  (ivf_index); the candidates are the rows in the union of every
-  query's n_probe nearest lists.
-ann_recall / ivf_recall measure them against knn_join. The batch joins
-keep both sides DataFrames: knn_join_bucketed meets each query with its
-own probed LSH buckets in an equi-join and ranks with knn_join's
-cosine, and knn_join_points is the xyz analogue, a grid-cell equi-join
-with a per-query completeness flag.
+  (ivf_index); each query meets the rows of its own n_probe nearest
+  lists in a list_id equi-join.
+Both sides stay DataFrames, and each query's answer depends on that
+query and the table alone, never on the rest of its batch. ann_recall /
+ivf_recall measure the two indexes against knn_join. knn_join_points is
+the xyz analogue, a grid-cell equi-join with a per-query completeness
+flag.
 """
 
 from __future__ import annotations
@@ -30,52 +30,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 from py3dtiles_spark.session import local_frame
 
 
-# the query side is broadcast through the driver by design ("few queries
-# against a big table"); this bounds the driver memory footprint
-MAX_DRIVER_QUERIES = 100_000
-
-
-def _check_query_count(n: int):
-    if n > MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"{n} queries exceeds MAX_DRIVER_QUERIES={MAX_DRIVER_QUERIES}: "
-            "the query side is collected to the driver and broadcast. For "
-            "query sets this large use the join-based batch paths where "
-            "both sides stay DataFrames: knn_join_bucketed (embeddings, "
-            "LSH bucket equi-join) or knn_join_points (xyz, grid cell "
-            "equi-join).")
-
-
-def _driver_queries(spark, queries):
-    """The queries of the candidate-filter paths, given as (q_id, vector)
-    pairs or a DataFrame whose first two columns are those, in two forms:
-    float64 pairs on the driver for the filter to probe with, and the
-    `q_id long, qv array<double>` DataFrame knn_join ranks."""
-    if isinstance(queries, DataFrame):
-        queries = [(r[0], r[1]) for r in queries.collect()]
-    q = [(int(i), np.asarray(v, dtype=np.float64)) for i, v in queries]
-    _check_query_count(len(q))
-    qdf = local_frame(spark, {"q_id": [i for i, _ in q],
-                              "qv": [v for _, v in q]},
-                      "q_id long, qv array<double>")
-    return q, qdf
-
-
 def _norm(c):
     """L2 norm of an array column as a native expression. A zero vector
     gets norm 1.0, so its cosine is 0.0, never NULL."""
     n = F.sqrt(F.aggregate(c, F.lit(0.0),
                            lambda a, x: a + x.cast("double") * x))
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
-
-
-def _cosine():
-    """Cosine of the `_ev` and `_qv` vector columns, given their `_en` and
-    `_qn` norms."""
-    dot = F.aggregate(
-        F.zip_with("_ev", "_qv", lambda a, b: a.cast("double") * b),
-        F.lit(0.0), lambda acc, x: acc + x)
-    return dot / (F.col("_en") * F.col("_qn"))
 
 
 def _two_stage_topk(cand: DataFrame, order_cols, k: int) -> DataFrame:
@@ -103,6 +63,50 @@ def _two_stage_topk(cand: DataFrame, order_cols, k: int) -> DataFrame:
                 .filter(F.col("_lr") <= k).drop("_lr", "_pid"))
     return (cand.withColumn("rank", F.row_number().over(w).cast("long"))
             .filter(F.col("rank") <= k))
+
+
+def _top_cosine(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact top-k by cosine of each q_id over candidate pairs that carry
+    the vectors `_ev`, `_qv` and their norms `_en`, `_qn`; ties go to the
+    smaller n_id. The vectors are projected away before the top-k's
+    exchange. Returns (q_id, n_id, cos, rank<=k)."""
+    dot = F.aggregate(
+        F.zip_with("_ev", "_qv", lambda a, b: a.cast("double") * b),
+        F.lit(0.0), lambda acc, x: acc + x)
+    cand = (pairs.withColumn("cos", dot / (F.col("_en") * F.col("_qn")))
+            .select("q_id", "n_id", "cos"))
+    return (_two_stage_topk(cand, [F.col("cos").desc(), F.col("n_id").asc()], k)
+            .select("q_id", "n_id", "cos", "rank"))
+
+
+def _probe_join(table: DataFrame, probes: DataFrame, key: str,
+                n_keys: int, k: int) -> DataFrame:
+    """Exact top-k of each query over the table rows that share one of
+    its probed keys. table is (n_id, _ev, key); probes is (q_id, _qv,
+    key), one row per (query, probed key) with distinct keys per query,
+    so each (q_id, n_id) pair is produced at most once. key takes n_keys
+    distinct values. A query whose probed keys hold no table row gets no
+    rows. Returns (q_id, n_id, cos, rank<=k)."""
+    # norms once per row map-side: the join projection then multiplies
+    # two doubles per candidate pair instead of re-running two
+    # dim-element aggregates
+    table = table.withColumn("_en", _norm(F.col("_ev")))
+    probes = probes.withColumn("_qn", _norm(F.col("_qv")))
+    # with only n_keys distinct join keys, at most n_keys reduce tasks
+    # would run the join. Salt it: each table row gets a salt from its id
+    # (deterministic, so retry-safe; never rand()), and each probe row is
+    # replicated over every salt. salt_n is 1, a no-op, once n_keys
+    # reaches twice the session's parallelism.
+    par = table.sparkSession.sparkContext.defaultParallelism
+    salt_n = -(-2 * par // n_keys)
+    join_key = [key]
+    if salt_n > 1:
+        table = table.withColumn(
+            "_salt", F.pmod(F.xxhash64("n_id"), F.lit(salt_n)))
+        probes = probes.withColumn(
+            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1))))
+        join_key.append("_salt")
+    return _top_cosine(table.join(probes, join_key), k)
 
 
 def _lsh_planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
@@ -159,37 +163,11 @@ def _probe_buckets(margins: np.ndarray, n_planes: int,
     return [base] + [base ^ mask for _, mask in best]
 
 
-def ann_lsh_embeddings(emb: DataFrame, queries, k: int = 10,
-                       n_planes: int = 8, dim: int | None = None,
-                       n_probes: int = 1, seed: int = 42) -> DataFrame:
-    """Approximate kNN: an LSH candidate filter in front of knn_join.
-    emb (vec_id, embedding); queries a list of (q_id, vector) or a
-    DataFrame. Returns (q_id, n_id, cos).
-
-    Each query probes its own signature bucket and, with n_probes > 1,
-    the buckets whose hyperplane margins are smallest (flip the
-    least-confident bits) — the standard recall repair for hyperplane LSH
-    without extra tables. The candidates are the table rows in the UNION
-    of every query's probed buckets, and knn_join ranks every query
-    against all of them. So the scan grows with the query count: at 6
-    planes and 16 probes, the 10 queries of the sf0.01 recall floor
-    cover 59 of the 64 buckets, 469 of the 500 rows. knn_join_bucketed
-    is the path that restricts each query to its own buckets."""
-    q, qdf = _driver_queries(emb.sparkSession, queries)
-    planes = _lsh_planes(n_planes, dim or len(q[0][1]), seed)
-    wanted = sorted({b for _, v in q
-                     for b in _probe_buckets(planes @ v, n_planes, n_probes)})
-    cand = (_lsh_buckets(emb, planes, "vec_id", "embedding")
-            .filter(F.col("bucket").isin(wanted)))
-    return (knn_join(cand, qdf, k, id_col="n_id", vec_col="_ev")
-            .select("q_id", "n_id", "cos"))
-
-
 def knn_join(emb: DataFrame, queries: DataFrame, k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
              q_id_col: str = "q_id", q_vec_col: str = "qv") -> DataFrame:
-    """Fully distributed EXACT kNN join, the module's one exact cosine
-    ranker: the query side stays a DataFrame (no driver collect).
+    """Fully distributed EXACT kNN join: the query side stays a DataFrame
+    (no driver collect), and every pair reaches _top_cosine.
     Physical shape: per-side norms computed map-side, broadcast
     nested-loop join against the (small) query table, cosine as a native
     zip_with/aggregate expression, then TWO-STAGE top-k via Catalyst's
@@ -213,11 +191,7 @@ def knn_join(emb: DataFrame, queries: DataFrame, k: int = 10,
     q = queries.select(F.col(q_id_col).alias("q_id"),
                        F.col(q_vec_col).alias("_qv"),
                        _norm(F.col(q_vec_col)).alias("_qn"))
-    j = (e.crossJoin(F.broadcast(q))
-         .withColumn("cos", _cosine())
-         .select("q_id", "n_id", "cos"))
-    return (_two_stage_topk(j, [F.col("cos").desc(), F.col("n_id").asc()], k)
-            .select("q_id", "n_id", "cos", "rank"))
+    return _top_cosine(e.crossJoin(F.broadcast(q)), k)
 
 
 def knn_join_bucketed(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -225,30 +199,25 @@ def knn_join_bucketed(emb: DataFrame, queries: DataFrame, k: int = 10,
                       dim: int | None = None, seed: int = 42,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       q_id_col: str = "q_id", q_vec_col: str = "qv") -> DataFrame:
-    """Batch kNN join for query sets too big to broadcast or collect —
-    the scale path _check_query_count points at. BOTH sides stay
-    DataFrames end to end:
+    """Approximate kNN join through random-hyperplane LSH, for query
+    sets too big to broadcast. BOTH sides stay DataFrames end to end:
 
     1. table side gets its LSH bucket (one Arrow pass, _lsh_buckets);
     2. query side gets its n_probes multi-probe buckets (same planes,
-       same seed — signatures can never drift), exploded to one row per
-       (query, probed bucket);
-    3. candidates = equi-join on bucket — a hash shuffle of
-       ~n_probes/2^n_planes of the table per query region, never a cross
-       product and never a driver collect;
-    4. knn_join's exact cosine on the candidate pairs; multi-probe
-       duplicates collapse via groupBy(q_id, n_id) max (a
-       map-side-combined agg, skipped when n_probes == 1 since buckets
-       are then disjoint);
-    5. the same partition-local-then-global two-stage top-k as knn_join.
+       same seed — signatures can never drift), one row per (query,
+       probed bucket);
+    3. each query meets the table rows of its OWN buckets in a bucket
+       equi-join (a hash shuffle of ~n_probes/2^n_planes of the table per
+       query, never a cross product) and _probe_join ranks them with the
+       exact cosine top-k of knn_join.
 
     Exact within the probed buckets: with n_probes == 2**n_planes every
     bucket is probed and the result equals the exact kNN join (the
-    oracle-checked configuration). Below that, each query sees only its
-    OWN probed buckets, while ann_lsh_embeddings (same signatures, same
-    probe sequence) ranks every query against the union of all queries'
-    buckets, so recall here is at most ann_lsh_embeddings' at the same
-    settings. Returns (q_id, n_id, cos, rank<=k)."""
+    oracle-checked configuration). A query's answer depends on that query
+    and the table alone. A query whose probed buckets hold no table row
+    gets NO rows, the contract of knn_join_points: find such queries with
+    ``queries.join(result, "q_id", "left_anti")``. Returns (q_id, n_id,
+    cos, rank<=k)."""
     if dim is None:
         dim = emb.select(F.size(vec_col)).first()[0]
     planes = _lsh_planes(n_planes, dim, seed)
@@ -272,46 +241,7 @@ def knn_join_bucketed(emb: DataFrame, queries: DataFrame, k: int = 10,
     e_b = _lsh_buckets(emb, planes, id_col, vec_col)
     q_b = queries.mapInPandas(
         query_buckets, schema=f"q_id long, _qv {q_vec_type}, bucket long")
-
-    # r7 (guide §2.5): the equi-join key has only 2**n_planes distinct
-    # values, so at most that many reduce tasks ever run — at n_planes=3
-    # a 32-core session was idling 24 cores through the most expensive
-    # stage. Salt the key: the table side gets a deterministic salt from
-    # its id (retry-safe, never rand()), the query side replicates over
-    # all salts, and the join key becomes (bucket, _salt) with
-    # n_buckets * salt_n spread. salt_n derives from the session's
-    # parallelism and collapses to 1 (a no-op literal) once n_planes is
-    # sized for scale (2**n_planes >= cores), so production probe
-    # configs pay nothing.
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    salt_n = max(1, -(-2 * par // (2 ** n_planes)))
-    if salt_n > 1:
-        e_b = e_b.withColumn("_salt",
-                             F.pmod(F.xxhash64("n_id"), F.lit(salt_n)))
-        q_b = q_b.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1))))
-        join_key = ["bucket", "_salt"]
-    else:
-        join_key = ["bucket"]
-
-    # per-row norms hoisted out of the join projection (r7): the former
-    # inline norm(_ev)/norm(_qv) re-ran the 64-element aggregate once per
-    # CANDIDATE PAIR — 3x the per-pair flops; computed once per row
-    # map-side the join projection only multiplies two cached doubles.
-    # Same expression over the same values, so cos is bit-identical.
-    e_b = e_b.withColumn("_en", _norm(F.col("_ev")))
-    q_b = q_b.withColumn("_qn", _norm(F.col("_qv")))
-
-    cand = (e_b.join(q_b, join_key)
-            .withColumn("cos", _cosine())
-            .select("q_id", "n_id", "cos"))
-    if n_probes > 1:
-        cand = cand.groupBy("q_id", "n_id").agg(F.max("cos").alias("cos"))
-    # two-stage top-k: WindowGroupLimit partial/final inside the
-    # threshold, explicit pre-rank beyond it (see _two_stage_topk)
-    return (_two_stage_topk(cand,
-                            [F.col("cos").desc(), F.col("n_id").asc()], k)
-            .select("q_id", "n_id", "cos", "rank"))
+    return _probe_join(e_b, q_b, "bucket", 2 ** n_planes, k)
 
 
 def knn_join_points(points: DataFrame, queries: DataFrame, k: int = 10,
@@ -340,8 +270,8 @@ def knn_join_points(points: DataFrame, queries: DataFrame, k: int = 10,
     NOTE a query whose probed rings hold ZERO points produces NO output
     rows at all (an equi-join cannot emit it), so the incomplete set for
     the second pass is `filter(NOT complete)` PLUS the absent queries:
-    ``queries.join(result, "q_id", "left_anti")``. The same applies to
-    knn_join_bucketed at non-exhaustive probe counts.
+    ``queries.join(result, "q_id", "left_anti")``. The same holds for
+    knn_join_bucketed and ivf_search.
 
     SIZING CONTRACT: the grid spans ``[-cell_size * 2^20, cell_size *
     2^20)`` per axis; coordinates beyond that clamp into the boundary bin.
@@ -443,49 +373,66 @@ def ivf_index(emb: DataFrame, n_lists: int = 16, seed: int = 42,
     return assigned, centroids
 
 
-def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries,
-               k: int = 10, n_probe: int = 4,
+def ivf_search(assigned: DataFrame, centroids: np.ndarray,
+               queries: DataFrame, k: int = 10, n_probe: int = 4,
                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k over an IVF index: an IVF candidate filter in front of
-    knn_join. Each query probes its n_probe nearest centroid lists
-    (euclidean, matching the KMeans objective); the candidates are the
-    rows in the UNION of every query's probed lists, and knn_join ranks
-    every query against all of them. So the scan grows with the query
-    count: at 16 lists and 2 probes, the 10 queries of the sf0.01 recall
-    floor cover 11 lists, 465 of the 500 rows. Returns (q_id, n_id,
-    cos)."""
-    q, qdf = _driver_queries(assigned.sparkSession, queries)
-    wanted = sorted({
-        int(l)
-        for _, v in q
-        for l in np.argsort(((centroids - v) ** 2).sum(axis=1))[:n_probe]})
-    cand = assigned.filter(F.col("list_id").isin(wanted))
-    return (knn_join(cand, qdf, k, id_col=id_col, vec_col=vec_col)
-            .select("q_id", "n_id", "cos"))
+    """ANN top-k over an IVF index (ivf_index's assigned table and
+    centroids) for a (q_id, qv) query DataFrame. Each query probes its
+    n_probe nearest centroid lists (squared euclidean, matching the KMeans
+    objective; ties go to the smaller list_id), a native top-k over the
+    broadcast centroid table, then meets the rows of its OWN lists in a
+    list_id equi-join that _probe_join ranks with the exact cosine top-k
+    of knn_join. A query's answer depends on that query and the index
+    alone. A query whose probed lists hold no row gets NO rows, the
+    contract of knn_join_points: find such queries with
+    ``queries.join(result, "q_id", "left_anti")``. Returns (q_id, n_id,
+    cos, rank<=k)."""
+    cents = local_frame(assigned.sparkSession,
+                        {"list_id": np.arange(len(centroids)),
+                         "_c": list(centroids)},
+                        "list_id int, _c array<double>")
+
+    def sq(a, b):
+        d = a.cast("double") - b
+        return d * d
+
+    d2 = F.aggregate(F.zip_with("_qv", "_c", sq), F.lit(0.0),
+                     lambda acc, x: acc + x)
+    near = (queries.select("q_id", F.col("qv").alias("_qv"))
+            .crossJoin(F.broadcast(cents))
+            .withColumn("_d2", d2))
+    probes = (_two_stage_topk(near, [F.col("_d2").asc(),
+                                     F.col("list_id").asc()], n_probe)
+              .select("q_id", "_qv", "list_id"))
+    table = assigned.select(F.col(id_col).alias("n_id"),
+                            F.col(vec_col).alias("_ev"), "list_id")
+    return _probe_join(table, probes, "list_id", len(centroids), k)
 
 
-def ivf_recall(emb: DataFrame, queries, k: int = 10, n_lists: int = 16,
-               n_probe: int = 4, seed: int = 42) -> float:
+def _recall(emb: DataFrame, queries: DataFrame, k: int,
+            approx: DataFrame) -> float:
+    """Share of knn_join's top-k (q_id, n_id) pairs that approx found."""
+    exact = {(r.q_id, r.n_id) for r in knn_join(emb, queries, k).collect()}
+    got = {(r.q_id, r.n_id) for r in approx.collect()}
+    return len(exact & got) / max(1, len(exact))
+
+
+def ivf_recall(emb: DataFrame, queries: DataFrame, k: int = 10,
+               n_lists: int = 16, n_probe: int = 4, seed: int = 42) -> float:
     """Measured recall@k of the IVF path vs the exact knn_join answer
-    (same acceptance metric as ann_recall for the LSH path)."""
-    _, qdf = _driver_queries(emb.sparkSession, queries)
-    exact = {(r.q_id, r.n_id) for r in knn_join(emb, qdf, k).collect()}
+    (same acceptance metric as ann_recall for the LSH path); queries is a
+    (q_id, qv) DataFrame."""
     assigned, cents = ivf_index(emb, n_lists=n_lists, seed=seed)
-    approx = {(r.q_id, r.n_id)
-              for r in ivf_search(assigned, cents, queries, k,
-                                  n_probe=n_probe).collect()}
-    return len(exact & approx) / max(1, len(exact))
+    return _recall(emb, queries, k,
+                   ivf_search(assigned, cents, queries, k, n_probe=n_probe))
 
 
-def ann_recall(emb: DataFrame, queries, k: int = 10, n_planes: int = 8,
-               n_probes: int = 1, seed: int = 42) -> float:
-    """Measured recall@k of the LSH path vs the exact knn_join answer —
-    the acceptance metric for tuning n_planes/n_probes on a sample before
-    a full-table run."""
-    _, qdf = _driver_queries(emb.sparkSession, queries)
-    exact = {(r.q_id, r.n_id) for r in knn_join(emb, qdf, k).collect()}
-    approx = {(r.q_id, r.n_id)
-              for r in ann_lsh_embeddings(emb, queries, k, n_planes,
-                                          n_probes=n_probes,
-                                          seed=seed).collect()}
-    return len(exact & approx) / max(1, len(exact))
+def ann_recall(emb: DataFrame, queries: DataFrame, k: int = 10,
+               n_planes: int = 8, n_probes: int = 1, seed: int = 42) -> float:
+    """Measured recall@k of the LSH path (knn_join_bucketed) vs the exact
+    knn_join answer — the acceptance metric for tuning n_planes/n_probes
+    on a sample before a full-table run; queries is a (q_id, qv)
+    DataFrame."""
+    return _recall(emb, queries, k,
+                   knn_join_bucketed(emb, queries, k, n_planes, n_probes,
+                                     seed=seed))

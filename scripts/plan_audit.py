@@ -156,6 +156,7 @@ CHECKS = {
          r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"),
         ("two-stage top-k (WindowGroupLimit partial/final)",
          r"WindowGroupLimit[\s\S]*WindowGroupLimit"),
+        ("no dedupe aggregate", "!HashAggregate"),
     ],
 }
 

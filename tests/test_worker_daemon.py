@@ -195,12 +195,11 @@ def test_one_python_worker_pool(tmp_path):
     script = textwrap.dedent(f"""
         import json, os, sys
         sys.path.insert(0, {REPO!r})
-        import numpy as np
         from pyspark.sql import functions as F
         from py3dtiles_spark.operators.export import (
             assign_quadtree, build_b3dm_tiles, triangulate_features,
             write_b3dm_files)
-        from py3dtiles_spark.operators.knn import ann_lsh_embeddings
+        from py3dtiles_spark.operators.knn import knn_join_bucketed
         from py3dtiles_spark.operators.tiling import TilingConfig
         from py3dtiles_spark.plans.pipeline import tile_points
         from py3dtiles_spark.session import get_spark
@@ -237,9 +236,9 @@ def test_one_python_worker_pool(tmp_path):
             F.col("id").alias("vec_id"),
             F.array(*[F.sin(F.col("id") * (k + 1))
                       for k in range(8)]).alias("embedding"))
-        q = np.sin(5.0 * np.arange(1, 9))
-        n_knn = len(ann_lsh_embeddings(emb, [(0, q)], k=3,
-                                       n_planes=2).collect())
+        q = emb.filter("vec_id = 5").select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
+        n_knn = len(knn_join_bucketed(emb, q, k=3, n_planes=2).collect())
         jvms, daemons = worker_daemons()
         print(json.dumps({{
             "modes": [m for lv in res.tiling.counters["levels"]
